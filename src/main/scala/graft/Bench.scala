@@ -8,8 +8,10 @@ import org.apache.spark.sql.SparkSession
   * Headline set = one representative per operator family (agg, join chain,
   * window, top-k, set ops, sessionize, fraud scoring, dedup×3, ANN×2,
   * text×2, multimodal) — the full 40+ query surface is exercised by
-  * Verify; bench keeps a stable, interpretable basket. `count()` forces
-  * full plan execution without collecting results to the driver.
+  * Verify; bench keeps a stable, interpretable basket. The timed action
+  * is `count()`, which collects nothing to the driver but lets Catalyst
+  * prune unused columns, windows and expressions, so a row can time a
+  * smaller plan than the one Verify checks (ROADMAP item 1).
   *
   * Measurement discipline (VERDICT r5: the committed r5 artifact was one
   * contended run showing a 12× phantom regression): each query runs

@@ -87,8 +87,8 @@ object Md5PrefixLong {
   * `transform(arr, x -> cast(conv(substring(md5(x), 1, nHex), 16, 10) as
   * bigint))`, whose lambda never enters whole-stage codegen (higher-order
   * functions are interpreted per ELEMENT — the WinnowFps lesson). One
-  * reused MessageDigest and digest buffer per call; null elements map to
-  * null exactly as the lambda did.
+  * reused MessageDigest and digest buffer per thread; null elements map
+  * to null exactly as the lambda did.
   */
 case class Md5PrefixLongArray(child: Expression, nHex: Int)
     extends UnaryExpression {
@@ -106,10 +106,14 @@ case class Md5PrefixLongArray(child: Expression, nHex: Int)
       s"md5_prefix_array(array<string>) with 1 <= nHex <= 15, got ${child.dataType} / $nHex")
   }
 
+  // one digest + buffer per thread, as in Md5PrefixLong.mdLocal
+  @transient private lazy val mdLocal: ThreadLocal[(MessageDigest, Array[Byte])] =
+    ThreadLocal.withInitial(() =>
+      (MessageDigest.getInstance("MD5"), new Array[Byte](16)))
+
   def hashAll(input: ArrayData): ArrayData = {
     val n = input.numElements()
-    val md = MessageDigest.getInstance("MD5")
-    val d = new Array[Byte](16)
+    val (md, d) = mdLocal.get()
     val out = new Array[Any](n)
     var i = 0
     while (i < n) {

@@ -3,10 +3,8 @@ package graft.ml
 import org.apache.spark.ml.classification.{LogisticRegression, LogisticRegressionModel}
 import org.apache.spark.ml.feature.VectorAssembler
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.model.FraudConstants
 import graft.operators.FraudRules
 
 /** MLlib scoring path (BASELINE.json `spark_approach`: "Structured
@@ -30,26 +28,20 @@ import graft.operators.FraudRules
 object FraudModel {
 
   /** Numeric feature columns from a transaction frame in the reference
-    * wire schema (same windows as the rule engine).
+    * wire schema, read off the rule engine's own timestamp parse and
+    * window step ([[FraudRules.withWindowColumns]]).
     */
   def featurize(tx: DataFrame): DataFrame = {
-    val withMs = tx.withColumn("event_millis",
-      unix_millis(to_timestamp(regexp_replace(col("timestamp"), "Z$", ""))))
-    val byKey = Window.partitionBy(col("card_id"))
-    val rangeW = byKey.orderBy(col("event_millis")).rangeBetween(-FraudConstants.RapidWindowMs, 0)
-    val lagW = byKey.orderBy(col("event_millis"), col("event_id"))
-    val prevLoc = lag(col("location"), 1).over(lagW)
-    val prevMs = lag(col("event_millis"), 1).over(lagW)
-    val dist = FraudRules.haversineKm(
-      FraudRules.latFor(prevLoc), FraudRules.lonFor(prevLoc),
-      FraudRules.latFor(col("location")), FraudRules.lonFor(col("location")))
-    withMs
+    val maxGapMs = lit(600000L)
+    FraudRules.withWindowColumns(FraudRules.withEventMillis(tx))
       .withColumn("f_amount", col("amount"))
-      .withColumn("f_recent_count", count(lit(1)).over(rangeW).cast("double"))
+      .withColumn("f_recent_count", col(FraudRules.RecentCount).cast("double"))
       .withColumn("f_gap_ms",
-        least(coalesce(col("event_millis") - prevMs, lit(600000L)), lit(600000L)).cast("double"))
-      .withColumn("f_travel_km", coalesce(dist, lit(0.0)))
+        least(coalesce(col("event_millis") - col(FraudRules.PrevMs), maxGapMs), maxGapMs)
+          .cast("double"))
+      .withColumn("f_travel_km", coalesce(FraudRules.travelKm(col("location")), lit(0.0)))
       .withColumn("label", when(col("event_type") =!= "NORMAL", 1.0).otherwise(0.0))
+      .drop(FraudRules.WindowColumns: _*)
   }
 
   val featureCols: Array[String] =

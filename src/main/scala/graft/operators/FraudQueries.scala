@@ -26,14 +26,10 @@ object FraudQueries {
       .withColumn(
         "location",
         // props is a tiny JSON blob {"k": <int>}; k mod 5 → one of the 5
-        // reference cities, exactly reproducible in DuckDB.
-        locCase(regexp_extract(col("props"), "(\\d+)", 1).cast("int") % 5)
+        // reference cities, exactly reproducible in DuckDB. One lookup on
+        // the index, so props is parsed once per row.
+        typedLit(Locations).getItem(regexp_extract(col("props"), "(\\d+)", 1).cast("int") % 5)
       )
-
-  private def locCase(idx: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    Locations.zipWithIndex.foldLeft(lit(null).cast("string")) { case (acc, (loc, i)) =>
-      when(idx === i, lit(loc)).otherwise(acc)
-    }
 
   private def scored(spark: SparkSession, sfDir: String, rapidCount: Int): DataFrame =
     FraudRules

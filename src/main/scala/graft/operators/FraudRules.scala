@@ -21,9 +21,12 @@ import graft.model.FraudConstants._
   *    > 500 km → +50 (fraud_detection.py:98-111) — `lag` over the same
   *    key partitioning.
   *
-  * Everything is built-in `functions._` (whole-stage-codegen'd); the two
-  * window specs share one hash partitioning on the key so Catalyst plans a
-  * single exchange. No UDFs, no custom expressions needed (SURVEY.md §7.3).
+  * Everything is built-in `functions._` (whole-stage-codegen'd). The
+  * scorer is one window pass: the lag and range-count columns are
+  * computed once ([[withWindowColumns]]) and every rule, the score and
+  * the status/severity/reasons read those columns, so the plan has two
+  * Window nodes (one per spec) over one Sort and one Exchange on the key.
+  * No UDFs, no custom expressions needed (SURVEY.md §7.3).
   */
 object FraudRules {
 
@@ -52,7 +55,51 @@ object FraudRules {
       when(loc === code, lit(pick(c))).otherwise(acc)
     }
 
-  /** Append rule/score/status columns to any keyed event frame.
+  /** Helper columns of [[withWindowColumns]]: the previous event's
+    * location and millis (`lag` in (millis, tieBreak) order) and the
+    * count of the key's events in the trailing 10 s (incl. the current).
+    */
+  val PrevLoc = "prev_loc"
+  val PrevMs = "prev_ms"
+  val RecentCount = "recent_count"
+  val WindowColumns: Seq[String] = Seq(PrevLoc, PrevMs, RecentCount)
+
+  /** The one window step every rule reads: appends [[WindowColumns]] in a
+    * single `select`, so Catalyst plans one Window node per spec over one
+    * Sort and one Exchange on the key. Downstream expressions refer to the
+    * columns, never to re-inlined `over(...)` expressions.
+    */
+  def withWindowColumns(
+      df: DataFrame,
+      key: String = "card_id",
+      millis: String = "event_millis",
+      location: String = "location",
+      tieBreak: String = "event_id"
+  ): DataFrame = {
+    val byKey = Window.partitionBy(col(key))
+    val rangeW = byKey.orderBy(col(millis)).rangeBetween(-RapidWindowMs, 0)
+    val lagW = byKey.orderBy(col(millis), col(tieBreak))
+    df.select(
+      col("*"),
+      lag(col(location), 1).over(lagW).as(PrevLoc),
+      lag(col(millis), 1).over(lagW).as(PrevMs),
+      count(lit(1)).over(rangeW).as(RecentCount))
+  }
+
+  /** Distance in km from the previous event's location to this one; null
+    * when either is outside the 5-city table. Reads [[PrevLoc]].
+    */
+  def travelKm(location: Column): Column = {
+    val prevLoc = col(PrevLoc)
+    haversineKm(latFor(prevLoc), lonFor(prevLoc), latFor(location), lonFor(location))
+  }
+
+  /** Append rule/score/status columns to any keyed event frame, in one
+    * window pass: [[withWindowColumns]] adds the lag and range-count
+    * columns, one projection derives the three rule booleans from them,
+    * and score, status, severity and reasons are computed from the rule
+    * columns. The helper columns are dropped, so the output is the input
+    * plus exactly the columns listed below.
     *
     * @param df        input with at least (key, millis, amount, location)
     * @param key       grouping key column name (card_id analogue)
@@ -75,54 +122,49 @@ object FraudRules {
       tieBreak: String = "event_id",
       rapidCount: Int = RapidTxCountV1
   ): DataFrame = {
-    val byKey = Window.partitionBy(col(key))
-    val rangeW = byKey.orderBy(col(millis)).rangeBetween(-RapidWindowMs, 0)
-    val lagW = byKey.orderBy(col(millis), col(tieBreak))
+    val loc = col(location)
+    val prevLoc = col(PrevLoc)
+    val travelHit = prevLoc.isNotNull && col(PrevMs).isNotNull &&
+      loc =!= prevLoc &&
+      (col(millis) - col(PrevMs)) <= ImpossibleTravelMs &&
+      latFor(loc).isNotNull && latFor(prevLoc).isNotNull &&
+      travelKm(loc) > TravelDistanceKm
 
-    val prevLoc = lag(col(location), 1).over(lagW)
-    val prevMs = lag(col(millis), 1).over(lagW)
-
-    val dist = haversineKm(latFor(prevLoc), lonFor(prevLoc), latFor(col(location)), lonFor(col(location)))
-
-    val highHit = col(amount) > MaxAmount
-    val rapidHit = count(lit(1)).over(rangeW) >= rapidCount
-    val travelHit = prevLoc.isNotNull && prevMs.isNotNull &&
-      col(location) =!= prevLoc &&
-      (col(millis) - prevMs) <= ImpossibleTravelMs &&
-      latFor(col(location)).isNotNull && latFor(prevLoc).isNotNull &&
-      dist > TravelDistanceKm
-
+    val high = col("rule_high_amount")
+    val rapid = col("rule_rapid")
+    val travel = col("rule_travel")
     val score =
-      when(highHit, HighAmountScore).otherwise(0) +
-        when(rapidHit, RapidScore).otherwise(0) +
-        when(travelHit, TravelScore).otherwise(0)
+      (when(high, HighAmountScore).otherwise(0) +
+        when(rapid, RapidScore).otherwise(0) +
+        when(travel, TravelScore).otherwise(0)).cast("int")
 
-    df.withColumn("rule_high_amount", highHit)
-      .withColumn("rule_rapid", rapidHit)
-      .withColumn("rule_travel", coalesce(travelHit, lit(false)))
-      .withColumn("score", score.cast("int"))
-      .withColumn("status", when(score >= FraudThreshold, "FRAUD").otherwise("LEGIT"))
-      .withColumn("severity", when(score >= HighSeverityThreshold, "HIGH").otherwise("NONE"))
-      .withColumn(
-        "reasons",
-        concat_ws(
-          ",",
-          when(highHit, ReasonHighAmount),
-          when(rapidHit, ReasonRapid),
-          when(coalesce(travelHit, lit(false)), ReasonTravel)
-        )
-      )
+    withWindowColumns(df, key, millis, location, tieBreak)
+      .select(
+        col("*"),
+        (col(amount) > MaxAmount).as("rule_high_amount"),
+        (col(RecentCount) >= rapidCount).as("rule_rapid"),
+        coalesce(travelHit, lit(false)).as("rule_travel"))
+      .drop(WindowColumns: _*)
+      .withColumn("score", score)
+      .select(
+        col("*"),
+        when(col("score") >= FraudThreshold, "FRAUD").otherwise("LEGIT").as("status"),
+        when(col("score") >= HighSeverityThreshold, "HIGH").otherwise("NONE").as("severity"),
+        concat_ws(",",
+          when(high, ReasonHighAmount),
+          when(rapid, ReasonRapid),
+          when(travel, ReasonTravel)).as("reasons"))
   }
 
-  /** Score a transaction frame in the reference's wire schema: parse the
-    * `Z`-suffixed ISO timestamp to epoch millis exactly as
-    * fraud_detection.py:85 does (strip Z, parse, session TZ pinned UTC).
+  /** The reference's timestamp parse (fraud_detection.py:85): strip the
+    * `Z`, parse the ISO string, epoch millis with the session TZ pinned
+    * to UTC. Adds `event_millis`.
     */
-  def scoreTransactions(tx: DataFrame, rapidCount: Int = RapidTxCountV1): DataFrame = {
-    val withMs = tx.withColumn(
-      "event_millis",
-      unix_millis(to_timestamp(regexp_replace(col("timestamp"), "Z$", "")))
-    )
-    withScores(withMs, rapidCount = rapidCount)
-  }
+  def withEventMillis(tx: DataFrame): DataFrame =
+    tx.withColumn("event_millis",
+      unix_millis(to_timestamp(regexp_replace(col("timestamp"), "Z$", ""))))
+
+  /** Score a transaction frame in the reference's wire schema. */
+  def scoreTransactions(tx: DataFrame, rapidCount: Int = RapidTxCountV1): DataFrame =
+    withScores(withEventMillis(tx), rapidCount = rapidCount)
 }

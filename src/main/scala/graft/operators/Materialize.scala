@@ -115,9 +115,9 @@ private[graft] object Materialize {
     * the input has ≥ parallelism splits and spreadScan is a no-op, so
     * the quantum only ever shapes small inputs.
     */
-  // read per-call like graft.spread.width, parsed tolerantly (ADVICE r20:
-  // the object-init bare toLong crashed the first spreadScan caller on a
-  // malformed prop, and a prop set after class load was silently ignored)
+  // read per-call, parsed tolerantly (ADVICE r20: the object-init bare
+  // toLong crashed the first spreadScan caller on a malformed prop, and a
+  // prop set after class load was silently ignored)
   private def spreadQuantumBytes: Long =
     sys.props.get("graft.spread.quantum").flatMap { v =>
       val parsed = scala.util.Try(v.toLong).toOption.filter(_ > 0)
@@ -135,15 +135,9 @@ private[graft] object Materialize {
     */
   def spreadScan(df: DataFrame, workFactor: Int = 1): DataFrame = {
     val par = df.sparkSession.sparkContext.defaultParallelism
-    // width override seam (r20 width sweep) > size-derived width
-    val width = sys.props.get("graft.spread.width")
-      .map(w => math.max(1, math.min(par, w.toInt)))
-      .getOrElse {
-        val quantum = spreadQuantumBytes
-        val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes * workFactor
-        val byQuantum = (bytes + quantum - 1) / quantum
-        byQuantum.min(BigInt(par)).max(BigInt(1)).toInt
-      }
+    val quantum = spreadQuantumBytes
+    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes * workFactor
+    val width = ((bytes + quantum - 1) / quantum).min(BigInt(par)).max(BigInt(1)).toInt
     // width 1 can never beat the input's own split count — short-circuit
     // before the df.rdd call (VERDICT r20 #6: driver-side RDD
     // instantiation per spreadScan call is planning-cost-only but adds up

@@ -1,5 +1,9 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.RegExpExtract
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.window.WindowExec
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model.{FraudConstants, Transaction}
@@ -9,7 +13,7 @@ import graft.streaming.FraudScoring
 /** Rule-threshold edges from FIXTURES.md §A: amount 200/200.01, 3 events at
   * a 10 000 ms span edge, travel gap 120 000 ms edge, unknown locations,
   * status/severity cutoffs — driven through the batch window-function
-  * pipeline.
+  * pipeline — plus the scorer's plan shape: one window pass.
   */
 class FraudRulesSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -94,5 +98,30 @@ class FraudRulesSpec extends AnyFunSuite {
         rapidCount = FraudConstants.RapidTxCountV2)
       .select("event_id", "score").collect().map(r => r.getString(0) -> r.getInt(1)).toMap
     assert(v2.values.forall(_ == 0))
+  }
+
+  /** (Window nodes, shuffle Exchanges) of a frame's physical plan. */
+  private def windowShape(df: DataFrame): (Int, Int) = {
+    val nodes = TestSpark.planNodes(df.queryExecution.executedPlan)
+    (nodes.count(_.isInstanceOf[WindowExec]), nodes.count(_.isInstanceOf[ShuffleExchangeExec]))
+  }
+
+  test("plan shape: one window pass (2 Window nodes, one shuffle) for the batch scorer") {
+    import spark.implicits._
+    val txs = Seq(
+      tx("c1", "2024-01-01T00:00:00Z", 10, "NY", "a"),
+      tx("c1", "2024-01-01T00:00:05Z", 300, "CA", "b"))
+    val scored = FraudRules.scoreTransactions(spark.createDataset(txs).toDF())
+    assert(windowShape(scored) == ((2, 1)), scored.queryExecution.executedPlan.treeString)
+  }
+
+  test("plan shape: fraud_score_v1 has one window pass and parses props once") {
+    assume(TestSpark.fixturesPresent, TestSpark.fixturesHint)
+    val q = SparkEntry.queries("fraud_score_v1")(spark, TestSpark.sf0001)
+    assert(windowShape(q) == ((2, 1)), q.queryExecution.executedPlan.treeString)
+    val extracts = q.queryExecution.optimizedPlan.collect { case p =>
+      p.expressions.map(_.collect { case r: RegExpExtract => r }.size).sum
+    }.sum
+    assert(extracts == 1, q.queryExecution.optimizedPlan.treeString)
   }
 }
