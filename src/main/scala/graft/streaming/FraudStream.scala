@@ -232,6 +232,10 @@ object FraudStream {
     * written once per micro-batch. The reference's accidental double main
     * emit (P3a, fraud_detector_TAG.py:132,146) is intentionally NOT
     * replicated.
+    *
+    * Installs [[LocalCheckpointFileManager]] on the session first (unless a
+    * checkpoint file manager class is already set), so this query and any
+    * started after it write their checkpoints without forking.
     */
   def fanOut(
       scored: Dataset[ScoredEvent],
@@ -239,7 +243,8 @@ object FraudStream {
       writeAlerts: DataFrame => Unit,
       writeAudit: DataFrame => Unit,
       checkpointDir: String
-  ): org.apache.spark.sql.streaming.StreamingQuery =
+  ): org.apache.spark.sql.streaming.StreamingQuery = {
+    LocalCheckpointFileManager.install(scored.sparkSession)
     scored.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
@@ -253,6 +258,7 @@ object FraudStream {
         } finally { df.unpersist(); () }
       }
       .start()
+  }
 
   /** v1 console wire format (F2 + P2h): `"FRAUD | {json}"` with the exact
     * field order of fraud_detection.py:113-123 (README.md:87-99 example).

@@ -20,6 +20,10 @@ import graft.model.FraudConstants._
   * exercisable in an environment with no Kafka — the same topologies are
   * driven through MemoryStream in MainSpec.
   *
+  * Every query it starts (v1, v2 fan-out, dead-letter) checkpoints through
+  * [[LocalCheckpointFileManager]] unless `spark.sql.streaming.checkpointFileManagerClass`
+  * is set, so `file:` checkpoints are written without forking.
+  *
   * Usage: sbt "runMain graft.streaming.Main [--variant v1|v2]
   *   [--brokers host:port] [--topic transactions] [--offsets latest|earliest]
   *   [--sink console|kafka] [--checkpoint dir] [--rapid-count n] [--dry-run]"
@@ -194,6 +198,7 @@ object Main {
     val ckpt =
       if (cfg.checkpointDir.nonEmpty) cfg.checkpointDir
       else java.nio.file.Files.createTempDirectory("graft_main_ckpt").toString
+    LocalCheckpointFileManager.install(spark)
 
     cfg.variant match {
       case "v1" =>
