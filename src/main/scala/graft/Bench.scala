@@ -135,7 +135,7 @@ object Bench {
   private def loadAvg(): Double =
     java.lang.management.ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
 
-  private def processCpuNs(): Long =
+  private[graft] def processCpuNs(): Long =
     java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
       case os: com.sun.management.OperatingSystemMXBean => os.getProcessCpuTime
       case _ => -1L
@@ -224,7 +224,7 @@ object Bench {
     * #4's second ask: a capture degraded by heap pressure shows a high
     * GC fraction even when the box is otherwise idle).
     */
-  private def gcTimeMs(): Long = {
+  private[graft] def gcTimeMs(): Long = {
     import scala.jdk.CollectionConverters._
     java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
       .asScala.map(b => math.max(0L, b.getCollectionTime)).sum
@@ -232,18 +232,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     // stderr: the driver's contract is ONE stdout JSON line (the total)
     System.err.println(
-      Conditions.row("bench", "sf_dir" -> sfDir, "master" -> s"local[$cpus]"))
+      Conditions.row("bench", "sf_dir" -> sfDir, "master" -> spark.sparkContext.master))
     // Warmup: JIT/codegen paths + parquet footers, so the first timed query
     // doesn't absorb one-time session costs.
     spark.read.parquet(s"$sfDir/lineitem.parquet")

@@ -1,14 +1,14 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Per-query job/stage profiler (optimization guide §1: measure first).
   *
   * Runs the named queries once each (same `.count()` action as Bench) under
   * a listener and prints, per query: wall seconds, number of Spark jobs,
   * summed in-stage task time, the max single-task time (straggler signal),
-  * total task count, and the DRIVER GAP — wall time not covered by any
+  * total task count, process CPU and GC seconds (JVM MXBean deltas over
+  * the run), and the DRIVER GAP — wall time not covered by any
   * running stage (planning, AQE re-optimization, broadcast collects,
   * checkpoint bookkeeping). The gap column is what separates "the plan
   * computes too much" from "the plan has too many sequential barriers",
@@ -16,7 +16,7 @@ import org.apache.spark.sql.SparkSession
   * tiny and fixed overheads dominate.
   *
   * `tools/jrun.sh graft.JobProf <sfDir> <q1> [q2 ...]` — defaults to the
-  * bench headline. Env: SPARK_GRAFT_CPUS (default 32), GRAFT_PROF_RUNS
+  * bench headline. Session from [[Session.local]]; env GRAFT_PROF_RUNS
   * (default 2; the LAST run is reported so one-time store builds / JIT
   * land outside the profile, mirroring Bench's median-of-3 discipline).
   */
@@ -67,36 +67,28 @@ object JobProf {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = if (args.length > 1) args.drop(1).toSeq else Bench.headline
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runs = math.max(1, sys.env.getOrElse("GRAFT_PROF_RUNS", "2").toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
     // same warmup as Bench
     spark.read.parquet(s"$sfDir/lineitem.parquet")
       .groupBy("l_returnflag").count().count()
     val queries = SparkEntry.queries
-    println(f"${"query"}%-36s ${"wall_s"}%7s ${"jobs"}%5s ${"stages"}%6s ${"tasks"}%6s ${"taskt_s"}%8s ${"maxt_s"}%6s ${"gap_s"}%6s")
+    println(f"${"query"}%-36s ${"wall_s"}%7s ${"jobs"}%5s ${"stages"}%6s ${"tasks"}%6s ${"taskt_s"}%8s ${"maxt_s"}%6s ${"cpu_s"}%7s ${"gc_s"}%6s ${"gap_s"}%6s")
     names.filter(queries.contains).foreach { n =>
       var last: String = null
       for (r <- 1 to runs) {
         val prof = new Prof
         spark.sparkContext.addSparkListener(prof)
         spark.sparkContext.setJobDescription(n)
-        val t0w = System.currentTimeMillis()
+        val t0w = System.currentTimeMillis(); val c0 = Bench.processCpuNs(); val g0 = Bench.gcTimeMs()
         try queries(n)(spark, sfDir).count()
         catch { case e: Throwable => System.err.println(s"[prof] $n failed: $e") }
-        val t1w = System.currentTimeMillis()
+        val t1w = System.currentTimeMillis(); val c1 = Bench.processCpuNs(); val g1 = Bench.gcTimeMs()
         spark.sparkContext.removeSparkListener(prof)
         import scala.jdk.CollectionConverters._
         val st = prof.stages.asScala.toSeq
         val gap = gapMs(prof.spans.asScala.toSeq, t0w, t1w)
-        last = f"$n%-36s ${(t1w - t0w) / 1e3}%7.2f ${prof.jobs.get}%5d ${st.size}%6d ${st.map(_.tasks).sum}%6d ${st.map(_.taskTimeMs).sum / 1e3}%8.2f ${prof.maxTaskMs.get / 1e3}%6.2f ${gap / 1e3}%6.2f"
+        last = f"$n%-36s ${(t1w - t0w) / 1e3}%7.2f ${prof.jobs.get}%5d ${st.size}%6d ${st.map(_.tasks).sum}%6d ${st.map(_.taskTimeMs).sum / 1e3}%8.2f ${prof.maxTaskMs.get / 1e3}%6.2f ${(c1 - c0) / 1e9}%7.2f ${(g1 - g0) / 1e3}%6.2f ${gap / 1e3}%6.2f"
         if (r == runs && sys.env.contains("GRAFT_PROF_STAGES")) {
           println(last); last = null
           prof.stageRows.forEach(r => println(r))

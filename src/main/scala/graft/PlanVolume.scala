@@ -10,9 +10,8 @@ package graft
   * and wall-clock — both of which an inverted gate preserves; a volume
   * counter cannot be fooled that way.
   *
-  * Existing instances of the idiom: the jaccard candidate-stage probe
-  * (`graft.jaccard.stage=cand`, Dedup) and the components fixpoint's
-  * per-round message-source counter (Dedup.CcProbe). This object is the
+  * Existing instance of the idiom outside this object: the components
+  * fixpoint's per-round message-source counter (Dedup.CcProbe). This object is the
   * REUSABLE seam for new gates: cheap when silent (callers only count
   * under their own probe property), driver-side, single-JVM — a test
   * seam, not telemetry.

@@ -195,25 +195,17 @@ object ScaleSmoke {
     // artifact label: "sf1" for the standard 10x run, "sf10" for the
     // 100-replica decade probe — lets one main serve both scale points
     val label = sys.env.getOrElse("GRAFT_SCALE_LABEL", "sf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Memory envelope (VERDICT r13 #8): shuffle.partitions=cpus keeps
-      // small-stage latency down, but at sf10 a 16-partition sort of the
-      // components edge pipeline needs ~2 GiB/partition and OOMs the
-      // default 8 GiB heap (r13 ran it at 32 GiB). Letting AQE START
-      // wide and coalesce down makes each sort partition fit-and-spill
-      // instead: measured, one-shot dedup_components at sf10 completes
-      // in 160 s wall / 1735 cpu-s with -Xmx8g and this setting — no
-      // 32 GiB provisioning rule needed. Coalescing folds the width back
-      // for the small stages, so sf1 rows are unaffected.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", 128)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
+    // Memory envelope (VERDICT r13 #8): shuffle.partitions=cpus keeps
+    // small-stage latency down, but at sf10 a 16-partition sort of the
+    // components edge pipeline needs ~2 GiB/partition and OOMs the
+    // default 8 GiB heap (r13 ran it at 32 GiB). Letting AQE START
+    // wide and coalesce down makes each sort partition fit-and-spill
+    // instead: measured, one-shot dedup_components at sf10 completes
+    // in 160 s wall / 1735 cpu-s with -Xmx8g and this setting — no
+    // 32 GiB provisioning rule needed. Coalescing folds the width back
+    // for the small stages, so sf1 rows are unaffected.
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.initialPartitionNum", 128L)
     println(Conditions.row(label, "base" -> base, "out_dir" -> outDir,
       "replicas" -> replicas.toString))
 

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Result peeker: collects and prints the named queries' rows (default
   * limit 30) — the dev loop's "just show me the output" counterpart to
   * [[Explain]]. `sbt "runMain graft.Show [sfDir] [query...]"`.
@@ -10,15 +8,7 @@ object Show {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.drop(1).toSeq else Seq("q1_agg")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
     names.foreach { n =>
       println(s"\n===== $n =====")
       SparkEntry.queries(n)(spark, sfDir).show(30, truncate = false)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.gen.TxGen
 import graft.operators.FraudRules
 
@@ -10,14 +8,7 @@ import graft.operators.FraudRules
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession
-      .builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
 
     val entry = SparkEntry.entry(spark).cache()
     println(s"ENTRY_ROWS=${entry.count()}")

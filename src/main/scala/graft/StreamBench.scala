@@ -111,8 +111,8 @@ object StreamBench {
     * `calib_eps` in that row's JSON. Its definition is FROZEN — it is
     * the denominator that turns cross-round STREAM comparisons into
     * ratio-of-ratios (measured rate ÷ same-instant calibration rate),
-    * cancelling host/tenant drift the way the batch side's interleaved
-    * AbProbe does: if a row's wall moved but its rate/calib ratio did
+    * cancelling host/tenant drift the way an interleaved batch A/B
+    * does: if a row's wall moved but its rate/calib ratio did
     * not, the box moved, not the code. Do NOT change CalibEvents, the
     * key width, or the state body: any edit invalidates cross-round
     * ratio reads (note it in the round log if ever necessary).
@@ -205,15 +205,7 @@ object StreamBench {
     // stage's scaling axis (a real corpus has millions of cards; wide=1
     // is the reference's own 8-card key space)
     val wide = args.drop(1).headOption.map(_.toInt).getOrElse(16)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .appName("graft-stream-bench")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     validateFilter()
     println(Conditions.row("stream"))
     calibSession = Some(spark)
@@ -405,14 +397,11 @@ object StreamBench {
     // can absorb a crawl without ever rescanning the base corpus.
     lazy val sigDocs = docRows.map(e =>
       graft.streaming.SigStream.DocInsert(e.doc_id + 10000000L, e.text))
-    // r20 (VERDICT r19 #6): the maintain workloads now run the store's
-    // own compaction policy DEFAULT-ON (maintenanceTick at the
-    // DefaultMaxBatchDirs=16 bound rides every absorb); -Dgraft.sb.policy=off
-    // pins the r19 never-compact arm for A/B. Rows carry policy_batch_dirs
-    // so each capture self-describes which arm it measured.
-    val policyDirs: Int =
-      if (sys.props.get("graft.sb.policy").contains("off")) 0
-      else graft.operators.SigStore.DefaultMaxBatchDirs
+    // the maintain workloads run the store's own compaction policy
+    // (maintenanceTick at the DefaultMaxBatchDirs bound rides every
+    // absorb); rows carry policy_batch_dirs so each capture
+    // self-describes the bound it measured.
+    val policyDirs = graft.operators.SigStore.DefaultMaxBatchDirs
     if (wanted("sigstore_maintain")) {
     def runSigMaintain(rows: Seq[graft.streaming.SigStream.DocInsert],
         batchSize: Int): Double = {
@@ -478,43 +467,6 @@ object StreamBench {
     val (ccCmpSecs, cpuCmp) = withCpu(runCcMaintain(ccDocs, 1000,
       maxBatchDirs = 8))
     println(f"""{"metric":"components_maintain_compact_docs_per_sec","value":${ccDocs.length / ccCmpSecs}%.0f,"unit":"docs/sec","docs":${ccDocs.length},"wall_sec":$ccCmpSecs%.3f,"batch_size":1000,"policy_batch_dirs":8${tele(cpuCmp)}}""")
-    // INTERLEAVED maintain A/B (r16, opt-in; generalized r17): the same
-    // JVM re-runs the identical absorb workload under a legacy arm,
-    // alternating default/legacy twice — the AbProbe discipline for a
-    // streaming row. `-Dgraft.sb.cc.ab=on` (or `=verify`) pins the r16
-    // distinct-first arm (graft.banded.verify=post);
-    // `-Dgraft.sb.cc.ab=sigdedup` pins the r17 pre-contraction arm
-    // (graft.cc.sigdedup=off — every doc probes for itself, no
-    // signature reps). The timed bodies and the default row above are
-    // untouched when the flag is off.
-    sys.props.get("graft.sb.cc.ab").foreach { abMode =>
-      // each arm is a (name, Option[propValue]) — r18: the sigdedup A/B
-      // pins BOTH arms explicitly ("on"/"off") because an unset prop now
-      // ROUTES on the measured collapse factor, and an A/B arm that the
-      // router could silently flip is no A/B at all
-      val (prop, arms) = abMode match {
-        case "sigdedup" =>
-          ("graft.cc.sigdedup", Seq("rep" -> Some("on"), "all" -> Some("off")))
-        case "on" | "verify" =>
-          ("graft.banded.verify", Seq("pre" -> None, "post" -> Some("post")))
-        // fail loud on anything else (self-review r17): "off" or a typo
-        // must not silently run 5 extra maintain passes under the wrong
-        // seam and emit mislabeled A/B rows
-        case other => throw new IllegalArgumentException(
-          s"graft.sb.cc.ab=$other: expected on|verify|sigdedup (unset to disable)")
-      }
-      arms.last._2.foreach(sys.props(prop) = _)
-      try runCcMaintain(ccDocs.take(math.min(2000, nDocs)), 1000) // warm arm B
-      finally sys.props.remove(prop)
-      for (r <- 1 to 2; (arm, value) <- arms) {
-        value.foreach(sys.props(prop) = _)
-        try {
-          System.gc()
-          val (s, c) = withCpu(runCcMaintain(ccDocs, 2500))
-          println(f"""{"metric":"components_maintain_ab","ab":"$abMode","arm":"$arm","round":$r,"value":${ccDocs.length / s}%.0f,"unit":"docs/sec","docs":${ccDocs.length},"wall_sec":$s%.3f${tele(c)}}""")
-        } finally sys.props.remove(prop)
-      }
-    }
     }
 
     // ---- streaming SEMANTIC dedup: vectors assigned to frozen centroids

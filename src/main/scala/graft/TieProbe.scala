@@ -120,14 +120,7 @@ object TieProbe {
       println("""{"warning":"no fixture dirs found — closed-form lines only"}""")
       return
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .appName("graft-tieprobe")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     try dirs.foreach { d =>
       val rows = probeDir(spark, d)
       rows.groupBy(r => (r._1, r._2)).toSeq.sortBy(_._1._1).foreach {

@@ -288,15 +288,7 @@ object WarmServe {
     val sfDir = if (args.length > 1) args(1) else
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val out = if (args.length > 2) args(2) else "/tmp/graft_warmserve.json"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     if (mode == "calib-a" || mode == "calib-b") {
       // the mechanical completeness calibration: sweep EVERY registered
       // query against a fresh COPY of the dataset (cold stores by

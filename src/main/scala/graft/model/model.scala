@@ -24,42 +24,6 @@ final case class Transaction(
     timestamp: String
 )
 
-/** v1 scored output record (flink/fraud_detection.py:113-123). */
-final case class ScoredTx(
-    event_id: String,
-    card_id: String,
-    amount: Double,
-    location: String,
-    ip_address: String,
-    score: Int,
-    status: String,
-    severity: String,
-    event_time: String
-)
-
-/** v2 scored output record (flink/fraud_detector_TAG.py:116-126):
-  * ip_address→ip, score→risk_score, +reasons, no severity.
-  */
-final case class ScoredTxV2(
-    event_id: String,
-    card_id: String,
-    amount: Double,
-    location: String,
-    ip: String,
-    risk_score: Int,
-    reasons: Seq[String],
-    event_time: String,
-    status: String
-)
-
-/** v2 risk-audit record (flink/fraud_detector_TAG.py:137-144). */
-final case class RiskAudit(
-    card_id: String,
-    score: Int,
-    rules_triggered: Seq[String],
-    event_time: String
-)
-
 /** Per-card streaming state (SURVEY.md §1.4): recent event-time millis for
   * the velocity rule + last location/time for the travel rule. One case
   * class replaces the reference's three TTL'd state slots

@@ -418,13 +418,13 @@ object Dedup {
     * maintain workload: 13× fewer edges, 2.9× docs/s). The ratio is
     * measured PER RUN from the frames at hand (the r14 stale-gate
     * lesson: never a cached constant), with approx_count_distinct — a
-    * one-pass map-side HLL whose ±2–4% error (measured,
-    * SigCollapseProbe) is two orders of magnitude inside the gap
+    * one-pass map-side HLL whose ±2–4% error (measured against
+    * exact distinct counts) is two orders of magnitude inside the gap
     * between the mostly-distinct regime (≈1.02) and the dup-heavy one
     * (≥2), so estimator noise cannot flip the route in practice.
     *
     * NOTE the r17 sf10 "contraction win" (1.24–1.33× cpu) was measured
-    * at collapse 1.016 — SigCollapseProbe shows the fixture's sigs are
+    * at collapse 1.016 — the fixture's sigs are
     * mostly distinct, so the win was never the 1.6% node reduction: it
     * was the rep arm materializing the simhash pass ONCE where the
     * legacy arm recomputed simhash48 on both sides of the banded
@@ -571,38 +571,10 @@ object Dedup {
             .select(col("node"), col("label2").as("label"), col("prev"))
             .transform(Materialize.once)
           Materialize.drop(relaxedM)
-          // `graft.cc.jump2=on`: a SECOND pointer jump per jump round
-          // (label := label[label] over the once-jumped frame) — the
-          // hash-to-min doubling evaluation seam (VERDICT r17 #5).
-          // Output-invariant: labels are node ids of touched nodes and
-          // only ever decrease toward the component min, so any number
-          // of extra jumps lands between one-jump and the fixpoint.
-          // EVALUATED AND REJECTED at sf10 (AB_r18): the doubling
-          // eliminates exactly ONE late relax-only round (8→7; changed
-          // trace 456791/424626/61940/263/37/7/1/0 vs .../372972/20543/
-          // 192/29/5/0) worth ~1.2 s, while the three expensive
-          // jump-active rounds are unchanged — measured parity 71.3 vs
-          // 72.4 s wall / 762 vs 766 cpu-s solo, 79–102 vs 87–90
-          // interleaved (inside host drift). The relax already halves
-          // chain length per round once seeded with neighbor minima, so
-          // diameters this small leave doubling nothing to compress.
-          // Seam retained for corpora with genuinely deep components.
-          if (sys.props.get("graft.cc.jump2").contains("on")) {
-            val jump2 = n1
-              .select(col("node").as("label"), col("label").as("label2"))
-            // LEFT join + coalesce (ADVICE r18): the inner-join form
-            // leaned on the every-label-is-a-node invariant a second
-            // time, and a violation would silently SHRINK the node set
-            // in this default-off arm rather than fail loudly — the
-            // left join makes any number of extra jumps a no-op for a
-            // label with no node row, safe by construction.
-            val n2 = n1.join(jump2, Seq("label"), "left")
-              .select(col("node"),
-                coalesce(col("label2"), col("label")).as("label"), col("prev"))
-              .transform(Materialize.once)
-            Materialize.drop(n1)
-            n2
-          } else n1
+          // One jump per round: a second (label := label[label]) was
+          // measured at sf10 and rejected (AB_r18) — it saves one late
+          // relax-only round and leaves the expensive rounds unchanged.
+          n1
         } else relaxed.transform(Materialize.once)
       changed = next.filter(col("label") < col("prev")).count()
       // superseded this round: the frame behind the previous `labels`
@@ -825,9 +797,6 @@ object Dedup {
       // The 1e-9 relative slack keeps the double-valued bound from
       // clipping an exactly-boundary pair (t/(1+t) is not exactly
       // representable); it loosens, never tightens, the filter.
-      // `-Dgraft.jaccard.ppjoin=off` disables both filters for
-      // interleaved same-JVM A/B (output is identical either way —
-      // they only prune candidates the verify stage would reject).
       //
       // FALSIFIED REFINEMENT (r14, kept out deliberately): PPJoin's
       // asymmetric INDEXING prefix — orienting pairs by (n_sh, doc_id)
@@ -845,34 +814,19 @@ object Dedup {
       // prefix ... AT the bound") is kept as an output-correctness
       // pin. Re-try only if the join input itself becomes the
       // measured bottleneck on a skewed-df corpus.
-      val ppjoinOn = !sys.props.get("graft.jaccard.ppjoin").contains("off")
       val posBound = lit(t) / (lit(1.0) + lit(t)) *
         (col("cn1") + col("cn2")) * (lit(1.0) - lit(1e-9))
-      val joined = prefix.select(col("doc_id").as("d1"), col("n_sh").as("cn1"),
+      val cand = prefix.select(col("doc_id").as("d1"), col("n_sh").as("cn1"),
           col("rk").as("rk1"), col("s"))
         .join(prefix.select(col("doc_id").as("d2"), col("n_sh").as("cn2"),
           col("rk").as("rk2"), col("s")), Seq("s"))
         .filter(col("d1") < col("d2"))
-      val filtered =
-        if (!ppjoinOn) joined
-        else joined
-          .filter(least(col("cn1"), col("cn2")).cast("double") >
-            lit(t) * greatest(col("cn1"), col("cn2")) * (lit(1.0) - lit(1e-9)))
-          .filter((lit(1) + least(col("cn1") - col("rk1"),
-            col("cn2") - col("rk2"))).cast("double") > posBound)
-      val cand = filtered
+        .filter(least(col("cn1"), col("cn2")).cast("double") >
+          lit(t) * greatest(col("cn1"), col("cn2")) * (lit(1.0) - lit(1e-9)))
+        .filter((lit(1) + least(col("cn1") - col("rk1"),
+          col("cn2") - col("rk2"))).cast("double") > posBound)
         .select("d1", "d2")
         .distinct()
-      // PROBE SEAM (default off, never set by any query path): with
-      // -Dgraft.jaccard.stage=cand (or env GRAFT_JACCARD_STAGE=cand —
-      // the env form survives sbt's fork boundary) the prefix pipeline
-      // returns the candidate set itself (jaccard stubbed 0), so
-      // AbProbe can time GENERATION alone and its `rows` field doubles
-      // as the candidate-volume counter for the PPJoin-filter A/B.
-      if (sys.props.get("graft.jaccard.stage")
-          .orElse(sys.env.get("GRAFT_JACCARD_STAGE")).contains("cand"))
-        cand.withColumn("jaccard", lit(0.0))
-      else {
       // TWO-STAGE VERIFY (r13, sf10-profiled): candidate volume at the
       // 0.6 threshold is tens of millions of pairs, and verifying each
       // against the STRING shingle arrays is ~100 UTF8 comparisons per
@@ -938,7 +892,6 @@ object Dedup {
         .filter(col("j4") > math.round(t * 10000))
         .withColumn("jaccard", col("j4") / lit(10000.0))
         .select("d1", "d2", "jaccard")
-      }
     }
   }
 
@@ -1336,15 +1289,6 @@ object Dedup {
       // survives banding (4 bands × 4 rows ⇒ ~1−(1−j⁴)⁴, ≈0.88 at
       // j=0.8) — the number that decides the band/row tradeoff before
       // a 100 TB run, measured here on the corpus itself.
-      // the truth arm rides the prefix pipeline below, whose stage=cand
-      // PROBE seam stubs jaccard to 0 — under that seam the ≥ 0.8 truth
-      // filter would silently empty and the eval would grade against
-      // nothing (self-review r16). Fail loud instead: the probe and the
-      // eval cannot run in the same invocation.
-      require(!sys.props.get("graft.jaccard.stage")
-          .orElse(sys.env.get("GRAFT_JACCARD_STAGE")).contains("cand"),
-        "dedup_eval_minhash: ground truth needs the full prefix pipeline; " +
-          "unset graft.jaccard.stage/GRAFT_JACCARD_STAGE=cand")
       val sh = withShingles(Materialize.spreadScan(Tables.documents(s, d)))
         .select("doc_id", "sh").transform(Materialize.once)
       // Ground truth via the PREFIX pipeline, not the exact uncapped
@@ -1372,7 +1316,7 @@ object Dedup {
       // 4.6–7.3 cpu-s (~50–70×), identical truth output — the candidate
       // term is real where shared-shingle df is high, and tighter-t is
       // never structurally slower (strictly fewer candidates, same
-      // shared stages). `runMain graft.JaccardProbe --truth` replays it.
+      // shared stages).
       val truth = jaccardPrefixPairs(s, d, 0.79)
         .filter(col("jaccard") >= 0.8).select("d1", "d2")
         .withColumn("in_truth", lit(1))
@@ -1413,8 +1357,8 @@ object Dedup {
       // dependent — so the exchange rows shrink too.
       // `-Dgraft.banded.verify=post` restores the legacy placement
       // (distinct over the full candidate set, THEN verify) as the
-      // interleaved same-JVM A/B arm — output identical either way, the
-      // ppjoin=off idiom. Under `-Dgraft.banded.probe=volume` each arm
+      // interleaved same-JVM A/B arm — output identical either way.
+      // Under `-Dgraft.banded.probe=volume` each arm
       // records its DISTINCT-INPUT row count into PlanVolume
       // ("banded.verify") — the tripwire that proves the arms differ
       // observably (legacy shuffles candidates, default shuffles true

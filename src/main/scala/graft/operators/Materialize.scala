@@ -103,8 +103,8 @@ private[graft] object Materialize {
     * repartition caveat).
     */
   /** Per-task input quantum for [[spreadScan]]'s width (bytes, from the
-    * scan's size estimate). Measured r20 on the fixture (QProf width
-    * sweep, warm runs): per-task cost has a real fixed component — the
+    * scan's size estimate). Measured r20 on the fixture (width sweep,
+    * warm runs): per-task cost has a real fixed component — the
     * bypass-merge shuffle writer opens `spark.sql.shuffle.partitions`
     * files per MAP task, so spread CPU grows ~linearly with width
     * (dedup_simhash_pairs 4.1 cpu-s at width 4 → 9.5 at 32; ngram
@@ -115,17 +115,7 @@ private[graft] object Materialize {
     * the input has ≥ parallelism splits and spreadScan is a no-op, so
     * the quantum only ever shapes small inputs.
     */
-  // read per-call, parsed tolerantly (ADVICE r20: the object-init bare
-  // toLong crashed the first spreadScan caller on a malformed prop, and a
-  // prop set after class load was silently ignored)
-  private def spreadQuantumBytes: Long =
-    sys.props.get("graft.spread.quantum").flatMap { v =>
-      val parsed = scala.util.Try(v.toLong).toOption.filter(_ > 0)
-      if (parsed.isEmpty)
-        System.err.println(
-          s"[materialize] ignoring malformed graft.spread.quantum='$v'; using default")
-      parsed
-    }.getOrElse(192L * 1024)
+  private val SpreadQuantumBytes = 192L * 1024
 
   /** `workFactor` scales the size-derived width for projections whose
     * per-byte cost is far above a plain scan's (md5-per-gram passes do
@@ -135,9 +125,8 @@ private[graft] object Materialize {
     */
   def spreadScan(df: DataFrame, workFactor: Int = 1): DataFrame = {
     val par = df.sparkSession.sparkContext.defaultParallelism
-    val quantum = spreadQuantumBytes
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes * workFactor
-    val width = ((bytes + quantum - 1) / quantum).min(BigInt(par)).max(BigInt(1)).toInt
+    val width = ((bytes + SpreadQuantumBytes - 1) / SpreadQuantumBytes).min(BigInt(par)).max(BigInt(1)).toInt
     // width 1 can never beat the input's own split count — short-circuit
     // before the df.rdd call (VERDICT r20 #6: driver-side RDD
     // instantiation per spreadScan call is planning-cost-only but adds up

@@ -651,13 +651,7 @@ object TrainingPipeline {
     val outDir = if (args.length > 1) args(1)
       else java.nio.file.Files.createTempDirectory("training_shards").toString
     val minQuality = if (args.length > 2) args(2).toDouble else 0.5
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     materialize(spark, sfDir, outDir, minQuality).show(truncate = false)
     println(s"SHARDS_AT=$outDir")
     spark.stop()

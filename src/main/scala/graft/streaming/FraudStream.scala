@@ -144,10 +144,17 @@ object FraudStream {
   /** JSON deserialization (S2) + 5 s watermark (S3): value bytes →
     * name-matched 13-field row; event time from the `timestamp` string.
     */
-  def parse(kafka: DataFrame): Dataset[Transaction] = {
-    import kafka.sparkSession.implicits._
-    kafka
-      .select(from_json(col("value").cast("string"), txSchema).as("tx"))
+  def parse(kafka: DataFrame): Dataset[Transaction] =
+    watermarked(kafka
+      .select(from_json(col("value").cast("string"), txSchema).as("tx")))
+
+  /** The step [[parse]] and [[parseWithDeadLetter]] share: a parsed `tx`
+    * struct → its 13 fields, event time from the `timestamp` string, the
+    * 5 s watermark on it, typed rows.
+    */
+  private def watermarked(parsed: DataFrame): Dataset[Transaction] = {
+    import parsed.sparkSession.implicits._
+    parsed
       .select("tx.*")
       .withColumn("event_time",
         to_timestamp(regexp_replace(col("timestamp"), "Z$", "")))
@@ -165,21 +172,14 @@ object FraudStream {
     * Returns (good, dead) — same upstream scan, two filtered views.
     */
   def parseWithDeadLetter(kafka: DataFrame): (Dataset[Transaction], DataFrame) = {
-    import kafka.sparkSession.implicits._
     val parsed = kafka
       .select(col("value").cast("string").as("raw"),
         from_json(col("value").cast("string"), txSchema).as("tx"))
     val bad = parsed.filter(
       col("tx").isNull || col("tx.card_id").isNull || col("tx.timestamp").isNull)
       .select(col("raw"), current_timestamp().as("rejected_at"))
-    val good = parsed.filter(
-      col("tx").isNotNull && col("tx.card_id").isNotNull && col("tx.timestamp").isNotNull)
-      .select("tx.*")
-      .withColumn("event_time",
-        to_timestamp(regexp_replace(col("timestamp"), "Z$", "")))
-      .withWatermark("event_time", "5 seconds")
-      .drop("event_time")
-      .as[Transaction]
+    val good = watermarked(parsed.filter(
+      col("tx").isNotNull && col("tx.card_id").isNotNull && col("tx.timestamp").isNotNull))
     (good, bad)
   }
 
