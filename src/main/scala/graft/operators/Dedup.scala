@@ -132,42 +132,25 @@ object Dedup {
       .withColumnRenamed("col", "band_bits")
 
   /** The banded-pigeonhole TRUE-pairs plan over a (doc_id, simhash)
-    * frame — shared by dedup_simhash_pairs (full corpus) and the
-    * contracted one-shot dedup_components (reps only), so the candidate
-    * join, the r16 verify-before-distinct placement, its
-    * `-Dgraft.banded.verify=post` legacy arm, and the
-    * `-Dgraft.banded.probe=volume` tripwire live in ONE place
-    * (self-review r17: the rep arm's first cut copy-pasted the plan and
-    * silently dropped the verify seam, so a verify-placement A/B with
-    * sigdedup on exercised only the default placement). Output:
-    * (d1, d2, hamming), d1 < d2, hamming ≤ 6, distinct — see
+    * frame — shared by dedup_simhash_pairs (full corpus) and the one-shot
+    * dedup_components (all docs or reps only), so the candidate join and
+    * the r16 verify-before-distinct placement live in ONE place
+    * (self-review r17: the rep arm's first cut copy-pasted the plan).
+    * Output: (d1, d2, hamming), d1 < d2, hamming ≤ 6, distinct — see
     * dedup_simhash_pairs' doc comment for the placement argument.
     */
-  private[graft] def bandedTruePairs(sh: DataFrame,
-      probeName: String = "banded.verify"): DataFrame = {
+  private[graft] def bandedTruePairs(sh: DataFrame): DataFrame = {
     val banded = banded7(sh)
     val a = banded.select(col("doc_id").as("d1"), col("simhash").as("s1"),
       col("band_id"), col("band_bits"))
     val b = banded.select(col("doc_id").as("d2"), col("simhash").as("s2"),
       col("band_id"), col("band_bits"))
-    val joined = a.join(b, Seq("band_id", "band_bits"))
+    a.join(b, Seq("band_id", "band_bits"))
       .filter(col("d1") < col("d2"))
-    val verifyPost = sys.props.get("graft.banded.verify").contains("post")
-    val pre =
-      if (verifyPost) joined.select("d1", "d2", "s1", "s2")
-      else joined
-        .withColumn("hamming", expr("cast(bit_count(s1 ^ s2) as int)"))
-        .filter(col("hamming") <= 6)
-        .select("d1", "d2", "hamming")
-    if (sys.props.get("graft.banded.probe").contains("volume"))
-      graft.PlanVolume.record(probeName,
-        if (verifyPost) "post" else "pre", pre.count())
-    if (verifyPost)
-      pre.distinct()
-        .withColumn("hamming", expr("cast(bit_count(s1 ^ s2) as int)"))
-        .filter(col("hamming") <= 6)
-        .select("d1", "d2", "hamming")
-    else pre.distinct()
+      .withColumn("hamming", expr("cast(bit_count(s1 ^ s2) as int)"))
+      .filter(col("hamming") <= 6)
+      .select("d1", "d2", "hamming")
+      .distinct()
   }
 
   /** All-pairs cosine — sf ≤ 0.1 CORRECTNESS BASELINE ONLY (O(n²) by
@@ -233,8 +216,8 @@ object Dedup {
     * sf10 included, to the direct join (its Σ df·(df−1) ≈ 2.3×postings
     * sat far under the 32× threshold). So the DEFAULT is now the prefix
     * pipeline unconditionally, with no df-stats probe job at all.
-    * The override (system property `graft.jaccard.prefix.ratio`, env
-    * `GRAFT_JACCARD_PREFIX_RATIO`): negative → prefix (explicit);
+    * The override (system property `graft.jaccard.prefix.ratio`):
+    * negative → prefix (explicit);
     * a positive value re-enables the legacy stats-based comparison —
     * the spec/A-B seam that forces the direct branch (huge ratio) and
     * exercises the stats path. Direct stays in-tree as the parity
@@ -243,7 +226,6 @@ object Dedup {
     */
   private[graft] def prefixRatioOverride: Option[Long] =
     sys.props.get("graft.jaccard.prefix.ratio")
-      .orElse(sys.env.get("GRAFT_JACCARD_PREFIX_RATIO"))
       .flatMap { v =>
         val parsed = scala.util.Try(v.toLong).toOption
         if (parsed.isEmpty)
@@ -427,8 +409,8 @@ object Dedup {
     * at collapse 1.016 — the fixture's sigs are
     * mostly distinct, so the win was never the 1.6% node reduction: it
     * was the rep arm materializing the simhash pass ONCE where the
-    * legacy arm recomputed simhash48 on both sides of the banded
-    * self-join. The routed low-collapse arm below keeps exactly that
+    * r17 all-docs plan recomputed simhash48 on both sides of the banded
+    * self-join. The all-docs arm now keeps exactly that
     * materialization (bandedTruePairs over the checkpointed sh) while
     * dropping the contraction machinery, so routing at 1.1 keeps the
     * sf10 win AND recovers small-scale parity.
@@ -448,7 +430,7 @@ object Dedup {
   /** Frontier row-count ceiling for broadcasting the frontier into the
     * message join (≈100 MB at 24 B/row worst case — comfortably inside
     * both the driver and a 1000-executor cluster's broadcast budget).
-    * Above it the message join shuffles, exactly as the legacy plan.
+    * Above it the message join shuffles.
     */
   private[graft] val CcBroadcastMaxFrontier = 4000000L
 
@@ -457,10 +439,9 @@ object Dedup {
     * #9): each distributed-fixpoint round records (message_sources,
     * changed) — message_sources is the frontier row count actually fed
     * into the round's message join, or -1 when the join fed ALL touched
-    * nodes (every legacy round; frontier-mode round 1). A spec asserts
-    * the frontier and legacy arms differ OBSERVABLY (late-round sources
-    * ≪ touched) rather than trusting the toggle wiring. Reset before a
-    * measured run; single-JVM test seam.
+    * nodes (round 1). A spec asserts the late rounds' sources are
+    * measured and ≪ touched. Reset before a measured run; single-JVM
+    * test seam.
     */
   private[graft] object CcProbe {
     // bounded (ADVICE-r14 planCache lesson applied preemptively): a
@@ -534,21 +515,18 @@ object Dedup {
     // Restricting the message join to last round's CHANGED nodes is
     // therefore output-invariant, and the late rounds — measured at sf10
     // as 4 × ~9 s of full-graph shuffles to propagate 289/13/4/0 changes
-    // — collapse to broadcast-join scans. `graft.cc.frontier=off` pins
-    // the legacy full-frontier plan as the interleaved A/B arm.
-    val legacy = sys.props.get("graft.cc.frontier").contains("off")
+    // — collapse to broadcast-join scans (AB_r15).
     var frontier = labels // round 1: all touched nodes (seed labels)
     var frontSize = Long.MaxValue // unknown until the first changed-count
     var changed = 1L
     while (changed > 0) {
-      val tRound = System.nanoTime()
       // Pointer jumping (label <- label(label)) collapses chains
       // exponentially but costs a |touched|-sized self-join shuffle per
       // round; once the frontier is small the relax-only rounds that
       // replace it are each far cheaper than one jump round.
-      val useJump = legacy || frontSize >= CcJumpMinFrontier
+      val useJump = frontSize >= CcJumpMinFrontier
       val fr =
-        if (!legacy && frontSize <= CcBroadcastMaxFrontier) broadcast(frontier)
+        if (frontSize <= CcBroadcastMaxFrontier) broadcast(frontier)
         else frontier
       // edge relaxation: each node takes the min label among itself and
       // the labels its (frontier) neighbors hold. The pre-relaxation
@@ -584,14 +562,9 @@ object Dedup {
       labels = next.select("node", "label")
       // next round's message sources: exactly the nodes that changed
       // (filter over the checkpointed frame — no extra job)
-      frontier =
-        if (legacy) labels
-        else next.filter(col("label") < col("prev")).select("node", "label")
-      CcProbe.record(
-        if (legacy || frontSize == Long.MaxValue) -1L else frontSize, changed)
+      frontier = next.filter(col("label") < col("prev")).select("node", "label")
+      CcProbe.record(if (frontSize == Long.MaxValue) -1L else frontSize, changed)
       frontSize = changed
-      if (sys.env.contains("GRAFT_CC_VERBOSE"))
-        System.err.println(f"[cc] round changed=$changed jump=$useJump wall=${(System.nanoTime() - tRound) / 1e9}%.2fs")
     }
     // the returned plan reads only `labels` (backed by the final round's
     // checkpoint, kept) and `nodes`
@@ -915,14 +888,7 @@ object Dedup {
     * cpu-s).
     */
   private def exactDedup(s: SparkSession, d: String): DataFrame = {
-    // `graft.exact.ckpt=off` pins the recompute arm (both consumers
-    // rescan documents and re-hash) for interleaved A/Bs of the
-    // checkpoint's worth — the skew-immune groupBy+join SHAPE is not
-    // up for debate (PlanShapeSpec rule 6), only the materialization.
-    val hashed0 = exactHashed(s, d)
-    val hashed =
-      if (sys.props.get("graft.exact.ckpt").contains("off")) hashed0
-      else hashed0.transform(Materialize.once)
+    val hashed = exactHashed(s, d).transform(Materialize.once)
     val stats = hashed.groupBy("text_hash").agg(
       count(lit(1)).as("dup_count"), min("doc_id").as("min_id"))
     hashed.join(stats, Seq("text_hash"))
@@ -951,15 +917,14 @@ object Dedup {
       // the edge set from Σ clique²/2 genuine pairs (sf10: 24.8 M) to the
       // rep graph, usually small enough for the driver union-find fast
       // path — the whole distributed fixpoint disappears.
-      // `-Dgraft.cc.sigdedup=off` pins the legacy all-docs arm (the same
-      // seam as the maintain path); under `-Dgraft.banded.probe=volume`
-      // each arm records its CC edge-input count into PlanVolume
+      // `-Dgraft.cc.sigdedup`: "off" pins the all-docs arm, "on" the
+      // contraction (the same seam as the maintain path); UNSET routes
+      // on the measured collapse factor (r18, VERDICT r17 #1) — see
+      // CcSigDedupMinCollapse. Under `-Dgraft.banded.probe=volume` each
+      // arm records its CC edge-input count into PlanVolume
       // ("cc.sigdedup.oneshot") — spec-pinned label-identical with strict
       // volume inequality on a dup-heavy fixture.
       val docs = Tables.documents(s, d).select(col("doc_id").as("node"))
-      // `-Dgraft.cc.sigdedup`: "off" pins the historical legacy arm,
-      // "on" pins the contraction; UNSET routes on the measured collapse
-      // factor (r18, VERDICT r17 #1) — see CcSigDedupMinCollapse.
       val mode = sys.props.get("graft.cc.sigdedup")
       val probeVol = sys.props.get("graft.banded.probe").contains("volume")
       // probe mode (test-only): count the CHECKPOINTED frame so the
@@ -981,63 +946,50 @@ object Dedup {
           Materialize.drop(m)
           edges
         }
+      // spread the leaf (r20): the checkpointed sh otherwise pins the
+      // banded probe side to the scan's one fixture split — the same
+      // serialization the rep arm's explicit repartition (below) was
+      // measured to fix; no-op at real scale
+      val sh = simhash(Materialize.spreadScan(Tables.documents(s, d)))
+        .transform(Materialize.once)
+      // ROUTING (r18, VERDICT r17 #1): measure this corpus's collapse
+      // factor from the checkpointed signature pass — one map-side
+      // count+HLL job, never a cached constant (the r14 stale-gate
+      // lesson) — and take the contraction only when it buys real node
+      // reduction. Both arms below share the materialized sh, which is
+      // where the r17 "sf10 contraction win" actually lived (see
+      // CcSigDedupMinCollapse).
+      val sigDedup = !mode.contains("off") && (mode.contains("on") || {
+        val row = sh.agg(count(lit(1)),
+          approx_count_distinct(col("simhash"))).head()
+        val (n, nSig) = (row.getLong(0), row.getLong(1))
+        val rep = nSig > 0 && n.toDouble / nSig >= CcSigDedupMinCollapse
+        if (probeVol)
+          graft.PlanVolume.record("cc.sigdedup.route",
+            if (rep) "rep" else "all", nSig)
+        rep
+      })
       val labels =
-        if (mode.contains("off")) {
-          // pinned historical legacy: the banded plan over an
-          // UNMATERIALIZED simhash pass (both self-join sides recompute
-          // simhash48) — kept byte-identical to the pre-r18 arm so
-          // cross-round A/Bs against it stay comparable
-          val pairs = probeCounted(
-            queries("dedup_simhash_pairs")(s, d).select("d1", "d2"), "all")
-          connectedComponents(docs, pairs)
+        if (!sigDedup) {
+          // all-docs arm: the SAME banded true-pairs plan as
+          // dedup_simhash_pairs, fed from the checkpointed sh (one
+          // simhash pass total — the materialization the rep arm proved
+          // out at sf10), no contraction machinery. CC has fully
+          // consumed sh by return time (its edge materialization is
+          // eager), so the checkpoint is freed here, not leaked.
+          val pairs = probeCounted(bandedTruePairs(sh).select("d1", "d2"), "all")
+          val cc = connectedComponents(docs, pairs)
+          Materialize.drop(sh)
+          cc
         } else {
-          // spread the leaf (r20): the checkpointed sh otherwise pins the
-          // banded probe side to the scan's one fixture split — the same
-          // serialization the rep arm's explicit repartition (below) was
-          // measured to fix; no-op at real scale
-          val sh = simhash(Materialize.spreadScan(Tables.documents(s, d)))
-            .transform(Materialize.once)
-          // ROUTING (r18, VERDICT r17 #1): measure this corpus's collapse
-          // factor from the checkpointed signature pass — one map-side
-          // count+HLL job, never a cached constant (the r14 stale-gate
-          // lesson) — and take the contraction only when it buys real
-          // node reduction. Both arms below share the materialized sh,
-          // which is where the r17 "sf10 contraction win" actually lived
-          // (see CcSigDedupMinCollapse).
-          val sigDedup = mode.contains("on") || {
-            val row = sh.agg(count(lit(1)),
-              approx_count_distinct(col("simhash"))).head()
-            val (n, nSig) = (row.getLong(0), row.getLong(1))
-            val rep = nSig > 0 && n.toDouble / nSig >= CcSigDedupMinCollapse
-            if (probeVol)
-              graft.PlanVolume.record("cc.sigdedup.route",
-                if (rep) "rep" else "all", nSig)
-            if (sys.env.contains("GRAFT_CC_PROF"))
-              System.err.println(f"[ccprof] oneshot route: n=$n nSig=$nSig collapse=${if (nSig == 0) 1.0 else n.toDouble / nSig}%.4f -> ${if (rep) "rep" else "all"}")
-            rep
-          }
-          if (!sigDedup) {
-            // routed low-collapse arm: the SAME banded true-pairs plan
-            // as dedup_simhash_pairs, fed from the checkpointed sh (one
-            // simhash pass total — the materialization the rep arm
-            // proved out at sf10), no contraction machinery. CC has
-            // fully consumed sh by return time (its edge materialization
-            // is eager), so the checkpoint is freed here, not leaked.
-            val pairs = probeCounted(
-              bandedTruePairs(sh, "banded.verify.oneshot")
-                .select("d1", "d2"), "all")
-            val cc = connectedComponents(docs, pairs)
-            Materialize.drop(sh)
-            cc
-          } else {
           // repartition INSIDE the materialization (measured, sf1
           // interleaved A/B): AQE coalesces this small groupBy to ONE
           // partition, and below the broadcast threshold the band
           // self-join keeps the probe side's source partitioning — the
           // whole candidate enumeration then ran on a single task (rep
-          // arm 61-63 s wall vs legacy 10.4-10.8 at sf1, CPU equal: pure
-          // serialization; sf10 was immune — shuffle join either way).
-          // Spreading the LEAF stores parallelism once for every
+          // arm 61-63 s wall vs all-docs 10.4-10.8 at sf1, CPU equal:
+          // pure serialization; sf10 was immune — shuffle join either
+          // way). Spreading the LEAF stores parallelism once for every
           // consumer; a per-consumer spreadScan re-runs its shuffle per
           // consumer (measured +20% cpu on the maintain row's analogous
           // site, SigStore.scala).
@@ -1045,17 +997,10 @@ object Dedup {
             .select("doc_id", "simhash")
             .repartition(s.sparkContext.defaultParallelism)
             .transform(Materialize.once)
-          // rep pairs: the SHARED banded true-pairs plan (pigeonhole
-          // candidates, r16 verify placement + its seam/tripwire) over
-          // reps only — repSh's leaf is already spread, so the probe
-          // side is parallel. Distinct probe channel (ADVICE r17, low):
-          // the default "banded.verify" name is the channel the
-          // dedup_simhash_pairs placement spec reads — recording the
-          // rep-pairs count there made spec safety depend on every spec
-          // resetting PlanVolume first.
+          // rep pairs: the SHARED banded true-pairs plan over reps only —
+          // repSh's leaf is already spread, so the probe side is parallel
           val repPairs = probeCounted(
-            bandedTruePairs(repSh, "banded.verify.oneshot")
-              .select("d1", "d2"), "rep")
+            bandedTruePairs(repSh).select("d1", "d2"), "rep")
           val repLabels = connectedComponents(
             repSh.select(col("doc_id").as("node")), repPairs)
           val memberLabels = sh
@@ -1066,8 +1011,8 @@ object Dedup {
             .select(col("doc_id").as("m_node"), col("label"))
           // memberLabels covers every doc (simhash48 is total over text),
           // but keep the left-join + coalesce convention so the arm stays
-          // output-identical to legacy BY CONSTRUCTION even if the
-          // signature pipeline ever filters rows.
+          // output-identical to the all-docs arm BY CONSTRUCTION even if
+          // the signature pipeline ever filters rows.
           val joined = docs
             .join(memberLabels, col("node") === col("m_node"), "left")
             .select(col("node"),
@@ -1076,14 +1021,13 @@ object Dedup {
             // 2-column corpus-sized write — so the corpus-sized sh and
             // repSh checkpoints can be reclaimed NOW instead of leaking
             // for the application lifetime (self-review r17: the maintain
-            // path drops repSh once its consumers are materialized,
-            // SigStore.scala:580; the first cut here left both alive
-            // because the returned plan read them lazily)
+            // path drops repSh once its consumers are materialized; the
+            // first cut here left both alive because the returned plan
+            // read them lazily)
             .transform(Materialize.once)
           Materialize.drop(sh)
           Materialize.drop(repSh)
           joined
-          }
         }
       // cluster_size via groupBy-count + equi-join back, NOT a
       // `count over (partition by cluster_id)` window (r18, VERDICT r17
@@ -1354,17 +1298,9 @@ object Dedup {
       // ≫ true pairs, so this is the difference between shuffling the
       // candidate set and shuffling the answer. The distinct key narrows
       // to (d1, d2, hamming) — same cardinality, hamming is functionally
-      // dependent — so the exchange rows shrink too.
-      // `-Dgraft.banded.verify=post` restores the legacy placement
-      // (distinct over the full candidate set, THEN verify) as the
-      // interleaved same-JVM A/B arm — output identical either way.
-      // Under `-Dgraft.banded.probe=volume` each arm
-      // records its DISTINCT-INPUT row count into PlanVolume
-      // ("banded.verify") — the tripwire that proves the arms differ
-      // observably (legacy shuffles candidates, default shuffles true
-      // pairs), per the r14 stale-gate mandate.
-      // (plan body lives in bandedTruePairs, shared with the contracted
-      // one-shot dedup_components — self-review r17)
+      // dependent — so the exchange rows shrink too (AB_r16).
+      // (plan body lives in bandedTruePairs, shared with the one-shot
+      // dedup_components — self-review r17)
       // spread the leaf (r20 JobProf: 5 stages / 5 TASKS — simhash48 and
       // the banded candidate verify both serialized on the single fixture
       // split; no-op at real scale, see Materialize.spreadScan)

@@ -490,7 +490,7 @@ object SigStore {
     * computes the metrics, so the collapse-factor routing decision
     * costs no separate Spark job (r19, VERDICT r18 #2: the +10% sf0.1
     * incremental residual WAS the router's own ~0.1 s count+HLL job
-    * per absorb; GRAFT_CC_PROF traces, AB_r18 route_cost_note).
+    * per absorb; AB_r18 route_cost_note).
     *
     * NAME-based observe, deliberately NOT the `Observation` helper: the
     * helper lazily initializes the session's ObservationManager — a
@@ -543,7 +543,7 @@ object SigStore {
     // plus the rep-graph — measured on the 25 k-doc maintain batch:
     // 2.98 M → ~30 k edges, edges-checkpoint 12.8 → sub-second — and
     // at 100 TB byte-identical re-crawls are the COMMON case.
-    // `-Dgraft.cc.sigdedup=off` pins the legacy all-docs arm for
+    // `-Dgraft.cc.sigdedup=off` pins the all-docs arm for
     // interleaved A/Bs, "on" pins the contraction; UNSET routes on the
     // DELTA's measured collapse factor (r18, VERDICT r17 #1): one
     // map-side count+HLL pass over the checkpointed deltaSh decides
@@ -563,8 +563,6 @@ object SigStore {
         // routing); a miss (or a legacy caller) pays the explicit
         // aggregate exactly as before
         val (n, nSig) = shStats().getOrElse {
-          if (sys.env.contains("GRAFT_CC_PROF"))
-            System.err.println("[ccprof] absorb route: observed stats miss, explicit agg")
           val row = deltaSh.agg(count(lit(1)),
             approx_count_distinct(col("simhash"))).head()
           (row.getLong(0), row.getLong(1))
@@ -573,8 +571,6 @@ object SigStore {
         if (sys.props.get("graft.banded.probe").contains("volume"))
           graft.PlanVolume.record("cc.sigdedup.route",
             if (rep) "rep" else "all", nSig)
-        if (sys.env.contains("GRAFT_CC_PROF"))
-          System.err.println(f"[ccprof] absorb route: n=$n nSig=$nSig -> ${if (rep) "rep" else "all"}")
         rep
     }
     // MATERIALIZED (r17 fix, same round): four consumers read the rep
@@ -600,8 +596,8 @@ object SigStore {
         .select("doc_id", "simhash")
         .repartition(s.sparkContext.defaultParallelism)
         .transform(Materialize.once)
-    // star edges: member → its signature's rep (absent under the legacy
-    // arm, where every member probes for itself). NO broadcast hint
+    // star edges: member → its signature's rep (absent under the
+    // all-docs arm, where every member probes for itself). NO broadcast hint
     // (self-review r17): repSh is |distinct sigs|-bounded, which on a
     // micro-batch is tiny but on the large one-shot deltas this same
     // function routes to the distributed fixpoint can be delta-sized —
@@ -631,31 +627,12 @@ object SigStore {
     // bit_count applied inside the join's codegen stage, only true pairs
     // reach the shuffle — measured on the components_maintain workload
     // (25 k-doc batch, identical 2.98 M-edge output): edge-pipeline
-    // checkpoint 16.3 → 10.8 s, row 938 → 1449 docs/s, 80.6 → 64.6 cpu-s.
-    // `-Dgraft.banded.verify=post` keeps the legacy placement as the
-    // interleaved same-JVM A/B arm, and `-Dgraft.banded.probe=volume`
-    // records each arm's distinct-input count into PlanVolume
-    // ("banded.verify.incr") — the Dedup.dedup_simhash_pairs seam,
-    // extended to the incremental arm (VERDICT r15 #6's tripwire ask).
-    val verifyPost = sys.props.get("graft.banded.verify").contains("post")
-    def volume(pre: DataFrame): Unit =
-      if (sys.props.get("graft.banded.probe").contains("volume"))
-        graft.PlanVolume.record("banded.verify.incr",
-          if (verifyPost) "post" else "pre", pre.count())
-    val hitsJoined = delta.join(store, Seq("band_id", "band_bits"))
-    val hits =
-      if (verifyPost) {
-        val preH = hitsJoined.select("delta_id", "base_id", "ds", "bs")
-        volume(preH)
-        preH.distinct()
-          .filter(expr("bit_count(ds ^ bs) <= 6"))
-          .select("delta_id", "base_id")
-      } else {
-        val preH = hitsJoined.filter(expr("bit_count(ds ^ bs) <= 6"))
-          .select("delta_id", "base_id")
-        volume(preH)
-        preH.distinct()
-      }
+    // checkpoint 16.3 → 10.8 s, row 938 → 1449 docs/s, 80.6 → 64.6 cpu-s
+    // (AB_r16).
+    val hits = delta.join(store, Seq("band_id", "band_bits"))
+      .filter(expr("bit_count(ds ^ bs) <= 6"))
+      .select("delta_id", "base_id")
+      .distinct()
     // distinct AFTER contraction to label space: a delta doc hitting a
     // k-member dup family produces k raw hits but ONE (delta, label)
     // edge — without this the edge set is |delta|×|family|, which a
@@ -681,26 +658,15 @@ object SigStore {
       col("band_id"), col("band_bits"))
     val dbb = delta.select(col("delta_id").as("d2"), col("ds").as("s2"),
       col("band_id"), col("band_bits"))
-    val ddJoined = da.join(dbb, Seq("band_id", "band_bits"))
+    val dd = da.join(dbb, Seq("band_id", "band_bits"))
       .filter(col("d1") < col("d2"))
-    val dd =
-      if (verifyPost) {
-        val preD = ddJoined.select("d1", "d2", "s1", "s2")
-        volume(preD)
-        preD.distinct()
-          .filter(expr("bit_count(s1 ^ s2) <= 6"))
-          .select("d1", "d2")
-      } else {
-        val preD = ddJoined.filter(expr("bit_count(s1 ^ s2) <= 6"))
-          .select("d1", "d2")
-        volume(preD)
-        preD.distinct()
-      }
+      .filter(expr("bit_count(s1 ^ s2) <= 6"))
+      .select("d1", "d2")
+      .distinct()
     // ONE materialization of the whole edge pipeline, tagged by origin so
     // nothing downstream re-derives from the store scan (the untagged
     // formulation recomputed the banded probe to find touched labels —
     // a second full store scan per absorb, measured)
-    val tProf0 = System.nanoTime()
     val edges = starEdges.foldLeft(
         db.withColumn("from_store", lit(true))
           .unionByName(dd.withColumn("from_store", lit(false))))(
@@ -709,8 +675,6 @@ object SigStore {
     if (sys.props.get("graft.banded.probe").contains("volume"))
       graft.PlanVolume.record("cc.sigdedup",
         if (sigDedup) "rep" else "all", edges.count())
-    if (sys.env.contains("GRAFT_CC_PROF"))
-      System.err.println(f"[ccprof] edges ckpt: ${(System.nanoTime() - tProf0) / 1e9}%.2f s")
     // The contracted graph is |delta|-bounded BY CONSTRUCTION (delta ids
     // + touched labels), so for micro-batch-sized deltas the whole
     // cluster step runs DRIVER-SIDE: one edges collect + one delta-id
@@ -719,7 +683,6 @@ object SigStore {
     // (local relations are immutable, so they are safe to use after the
     // store mutates). The count guard keeps huge one-shot deltas on the
     // distributed fixpoint; the collects are O(|delta|), never O(corpus).
-    val tProf1 = System.nanoTime()
     val nDelta = deltaSh.count()
     val nEdges = edges.count()
     val result =
@@ -755,8 +718,6 @@ object SigStore {
           .select(col("doc_id").as("node"), col("label"))
         (relabel.transform(Materialize.once), deltaOut.transform(Materialize.once))
       }
-    if (sys.env.contains("GRAFT_CC_PROF"))
-      System.err.println(f"[ccprof] contract ($nDelta d/$nEdges e): ${(System.nanoTime() - tProf1) / 1e9}%.2f s")
     // the contraction's intermediates are fully consumed: `result` is
     // either driver-local relations or its own checkpoints — free the
     // per-absorb probe/edge files so a maintained store's checkpoint dir
@@ -841,19 +802,12 @@ object SigStore {
     // partially-appended dirs; the replay's dynamic overwrite rewrites
     // them wholesale) and carry on. A require would wedge the stream.
     if (!f.exists(ready)) buildLabels(s, root)
-    def prof(tag: String)(body: => Unit): Unit = {
-      val t = System.nanoTime(); body
-      if (sys.env.contains("GRAFT_CC_PROF"))
-        System.err.println(f"[ccprof] $tag: ${(System.nanoTime()-t)/1e9}%.2f s")
-    }
     // ONE simhash pass over the delta, shared by the contraction and the
     // sig-bank write (the router's collapse stats ride it via observe —
     // r19, VERDICT r18 #2); materialize the contraction BEFORE mutating
     // the state it reads
     val (deltaSh, shStats) = materializeShWithStats(Dedup.simhash(deltaDocs))
-    var contractResult: (DataFrame, DataFrame) = null
-    prof("contractDelta") { contractResult = contractDeltaSh(s, root, deltaSh, shStats) }
-    val (relabel, deltaOut) = contractResult
+    val (relabel, deltaOut) = contractDeltaSh(s, root, deltaSh, shStats)
     val remapPath = new Path(root, "label_remap.parquet")
     val oldRemap =
       if (f.exists(remapPath)) s.read.parquet(remapPath.toString)
@@ -871,27 +825,24 @@ object SigStore {
         col("o.new_label") === col("r.old_label"), "left")
       .select(col("o.old_label"),
         coalesce(col("r.new_label"), col("o.new_label")).as("new_label"))
-    var newRemap: DataFrame = null
-    prof("remapCompose") {
-      newRemap = composed.unionByName(relabel).transform(Materialize.once)
-    }
+    val newRemap = composed.unionByName(relabel).transform(Materialize.once)
     // marker drops BEFORE any mutation: a crash mid-absorb must route
     // recovery to the full refixpoint, never leave stale labels looking
     // authoritative over a store that already holds the delta's sigs
     f.delete(ready, false)
-    prof("appendBatch")(appendSigRows(s, root,
+    appendSigRows(s, root,
       Dedup.banded7(deltaSh)
         .select(col("band_id"), col("band_bits"), col("doc_id"), col("simhash")),
-      batchId))
-    prof("labelNodesWrite")(graft.sources.Writers.writeShards(
+      batchId)
+    graft.sources.Writers.writeShards(
       deltaOut.withColumn("batch_id", lit(batchId)),
       new Path(root, "label_nodes.parquet").toString,
       partitionCols = Seq("batch_id"), sortCols = Seq("node"),
       mode = SaveMode.Overwrite,
-      options = Map("partitionOverwriteMode" -> "dynamic")))
+      options = Map("partitionOverwriteMode" -> "dynamic"))
     val remapTmp = new Path(root, "label_remap.tmp")
     f.delete(remapTmp, true)
-    prof("remapWrite")(newRemap.write.mode(SaveMode.Overwrite).parquet(remapTmp.toString))
+    newRemap.write.mode(SaveMode.Overwrite).parquet(remapTmp.toString)
     f.delete(remapPath, true)
     require(f.rename(remapTmp, remapPath), s"remap publish failed: $remapPath")
     // SIZE OVERRIDE (r19, VERDICT r18 #1): re-count exactly the clusters
@@ -921,15 +872,12 @@ object SigStore {
             org.apache.spark.sql.types.LongType, nullable = false),
           org.apache.spark.sql.types.StructField("cluster_size",
             org.apache.spark.sql.types.LongType, nullable = false))))
-    var newOv: DataFrame = null
-    prof("sizeOverride") {
-      newOv = oldOv
-        .join(broadcast(newRemap.select(col("old_label").as("label"))),
-          Seq("label"), "left_anti")
-        .join(broadcast(touched), Seq("label"), "left_anti")
-        .unionByName(newSizes)
-        .transform(Materialize.once)
-    }
+    val newOv = oldOv
+      .join(broadcast(newRemap.select(col("old_label").as("label"))),
+        Seq("label"), "left_anti")
+      .join(broadcast(touched), Seq("label"), "left_anti")
+      .unionByName(newSizes)
+      .transform(Materialize.once)
     val ovTmp = new Path(root, "size_override.tmp")
     f.delete(ovTmp, true)
     newOv.write.mode(SaveMode.Overwrite).parquet(ovTmp.toString)
@@ -959,19 +907,14 @@ object SigStore {
   private[graft] def serveComponentsStored(s: SparkSession, root: String): DataFrame = {
     require(fs(s, new Path(root)).exists(new Path(root, "_LABELS_READY")),
       s"label state not published (absorb in flight or torn): $root")
-    // `graft.cc.shape=inline` pins the r18 per-serve groupBy+join as the
-    // interleaved A/B arm; the default reads the PERSISTED sizes — a
-    // scan plus broadcast hops, zero corpus exchanges per serve.
-    if (sys.props.get("graft.cc.shape").contains("inline"))
-      withClusterShape(effectiveLabels(s, root)
-        .select(col("node").as("doc_id"), col("label").as("cluster_id")))
-    else {
-      ensureSized(s, root)
-      effectiveSizedLabels(s, root)
-        .select(col("node").as("doc_id"), col("label").as("cluster_id"),
-          col("cluster_size"),
-          (col("node") === col("label")).as("is_canonical"))
-    }
+    // reads the PERSISTED sizes — a scan plus broadcast hops, zero
+    // corpus exchanges per serve (the r18 per-serve groupBy+join lost,
+    // AB_r19)
+    ensureSized(s, root)
+    effectiveSizedLabels(s, root)
+      .select(col("node").as("doc_id"), col("label").as("cluster_id"),
+        col("cluster_size"),
+        (col("node") === col("label")).as("is_canonical"))
   }
 
   /** Legacy self-upgrade gate for the persisted sizes: a store published

@@ -245,17 +245,6 @@ object Similarity {
       .withColumnRenamed("pos", "band_id")
       .withColumnRenamed("col", "band_val")
 
-  /** 2 × 8-bit LSH band keys from the same 16-bit signature — the
-    * clique-density scale lever behind dedup_embedding_lsh_fine: 256
-    * values per band instead of 16 cuts Σ bucket² candidate volume
-    * ~16×, while a true near-dup (cosine → 1) flips each of the 16
-    * hyperplane bits with probability θ/π → 0, so the chance BOTH 8-bit
-    * bands differ stays negligible exactly where the operator's recall
-    * matters.
-    */
-  private def banded2x8(e: DataFrame): DataFrame =
-    bandedFine(e, 8)
-
   /** 2 × `bits`-bit band keys sliced from a (≥ 2·bits)-plane signature —
     * the derived-width banding behind [[fineBandBits]].
     */
@@ -306,39 +295,31 @@ object Similarity {
       // total — so the cached train step is reused; a derived k > 8 takes
       // its own hashSample pass, still an O(model) collect). The Lloyd
       // loop never mutates these arrays (next is built from clones).
-      val verbose = sys.env.contains("GRAFT_KMEANS_VERBOSE")
-      def timed[A](what: String)(f: => A): A = {
-        val t0 = System.nanoTime()
-        val r = f
-        if (verbose) System.err.println(
-          f"[kmeans] $what: ${(System.nanoTime() - t0) / 1e9}%.2fs")
-        r
-      }
-      var cents: Array[Array[Double]] = timed(s"init k=$k")(
+      var cents: Array[Array[Double]] =
         if (k <= 8) annIndex(e, d).centroids.take(k)
-        else hashSample(e, k))
+        else hashSample(e, k)
       // bounded training set (see kmeansTrainCap): the hash-ordered
       // cap-prefix — a SUPERSET of the k-prefix init above (same total
       // order), and the whole corpus wherever cap >= n. Materialized
       // once; the repartition spreads the sort-limit's single output
       // partition back across cores for the iteration scans.
       val cap = kmeansTrainCap(k)
-      val train = timed(s"train set cap=$cap")(e
+      val train = e
         .withColumn("h", expr(
           "cast(conv(substring(md5(cast(vec_id as string)), 1, 8), 16, 10) as bigint)"))
         .orderBy(col("h"), col("vec_id")).limit(cap)
         .select("vec_id", "emb")
         .repartition(s.sparkContext.defaultParallelism)
-        .transform(Materialize.once))
+        .transform(Materialize.once)
       for (it <- 1 to KmeansIters) {
         val fn = graft.functions.GraftFunctions.registerIvf(s, cents, 1)
-        val sums = timed(s"iter $it")(train
+        val sums = train
           .select(expr(s"element_at($fn(emb), 1)").as("cell"),
             posexplode(col("emb")).as(Seq("pos", "x")))
           .withColumn("q", round(col("x") * KmeansQuant).cast("long"))
           .groupBy("cell", "pos")
           .agg(sum("q").as("sq"), count(lit(1)).as("n"))
-          .collect())
+          .collect()
         val next = cents.map(_.clone()) // empty cluster -> previous centroid
         sums.foreach { r =>
           next(r.getAs[Int]("cell"))(r.getAs[Int]("pos")) =
@@ -407,14 +388,11 @@ object Similarity {
     * Bit-identical to training: the store was written from the trainer's
     * exact doubles (parquet round-trips IEEE754 exactly), and the JVM
     * cache is shared, so a session mixing store-loads and trainer calls
-    * can never hold two versions. `graft.sem.assign=inline` pins the
-    * trainer arm (the A/B seam ignores the store entirely); stores
-    * published before centroids existed fall back to the trainer.
+    * can never hold two versions. Stores published before centroids
+    * existed fall back to the trainer.
     */
   private def storedCentroids(s: SparkSession, d: String): Array[Array[Double]] =
-    if (sys.props.get("graft.sem.assign").contains("inline"))
-      trainedCentroids(s, d)
-    else kmeansCents.getOrElseUpdate(cacheKey(d), {
+    kmeansCents.getOrElseUpdate(cacheKey(d), {
       val (root, f) = semStoreRoot(s, d)
       val cdst = centroidsPath(root)
       val published = f.exists(new org.apache.hadoop.fs.Path(root, "_READY"))
@@ -994,8 +972,8 @@ object Similarity {
       // assignments come from the persisted store (r15): a fresh-JVM
       // serve is one narrow scan — no Lloyd trainer, no corpus × K
       // assignment pass. Values identical by construction (the store is
-      // written from the same trained-centroid expression the inline arm
-      // evaluates; graft.sem.assign=inline pins that arm).
+      // written from [[computeAssignment]], the trained-centroid
+      // expression).
       val w = Window.partitionBy(col("cluster_id"))
       assignedFrame(s, d)
         .select("vec_id", "cluster_id")
@@ -1439,21 +1417,12 @@ object Similarity {
     * once as (vec_id, cluster_id, emb, nrm) parquet — the docvec.parquet
     * idiom — and every later serve, including from a FRESH JVM, is a
     * narrow scan needing neither the Lloyd trainer nor the assignment
-    * flops. `graft.sem.assign=inline` pins the legacy in-plan compute as
-    * the interleaved A/B arm. Torn writes rebuild: the _READY marker is
-    * created only after the parquet commit.
+    * flops (the in-plan compute on every serve lost, AB_r15). Torn
+    * writes rebuild: the _READY marker is created only after the parquet
+    * commit.
     */
-  private def assignedFrame(s: SparkSession, d: String): DataFrame = {
-    def compute = {
-      val cents = trainedCentroids(s, d)
-      val fn = graft.functions.GraftFunctions.registerIvf(s, cents, 1)
-      withEmb(s, d)
-        .select(col("vec_id"), expr(s"element_at($fn(emb), 1)").as("cluster_id"),
-          col("emb"), sqrt(expr("dot_double(emb, emb)")).as("nrm"))
-    }
-    if (sys.props.get("graft.sem.assign").contains("inline"))
-      compute
-    else synchronized {
+  private def assignedFrame(s: SparkSession, d: String): DataFrame =
+    synchronized {
       // EVERY store operation — marker check/create, write, rename,
       // delete, read — goes through the SAME Hadoop FileSystem resolved
       // from the session config (ADVICE r15, medium): the previous
@@ -1475,12 +1444,12 @@ object Similarity {
         // need external coordination, as with every graft store).
         val tmp = new org.apache.hadoop.fs.Path(root, "assign.tmp")
         f.delete(root, true)
-        compute.write.mode("overwrite").parquet(tmp.toString)
+        computeAssignment(s, d).write.mode("overwrite").parquet(tmp.toString)
         require(f.rename(tmp, dst), s"assignment store publish failed: $dst")
         // centroid VALUES ride beside the assignments (r17, VERDICT r16
         // #4): a kilobyte of model state whose absence forced every
         // fresh-JVM prototypicality serve to re-run the full Lloyd
-        // trainer (sf10: 169 cpu-s for K=4 centroids). `compute` above
+        // trainer (sf10: 169 cpu-s for K=4 centroids). The assignment above
         // already trained them, so this is a free model-sized write —
         // published under the SAME _READY as the assignments they
         // produced, so the pair can never tear.
@@ -1523,9 +1492,19 @@ object Similarity {
       // for a single narrow scan contradicts the store's whole point.
       s.read.parquet(dst.toString)
     }
+
+  /** The (vec_id, cluster_id, emb, nrm) assignment the store persists:
+    * each vector's nearest trained centroid by cosine, plus its norm.
+    */
+  private[graft] def computeAssignment(s: SparkSession, d: String): DataFrame = {
+    val cents = trainedCentroids(s, d)
+    val fn = graft.functions.GraftFunctions.registerIvf(s, cents, 1)
+    withEmb(s, d)
+      .select(col("vec_id"), expr(s"element_at($fn(emb), 1)").as("cluster_id"),
+        col("emb"), sqrt(expr("dot_double(emb, emb)")).as("nrm"))
   }
 
-  private def semanticPairs(s: SparkSession, d: String): DataFrame = {
+  private[graft] def semanticPairs(s: SparkSession, d: String): DataFrame = {
     // BOTH self-join sides consume the assignment pass: materialize it
     // once HERE (the self-join caller), not inside assignedFrame — the
     // single-consumer riders (kmeans, prototypicality) read the bare
@@ -1563,7 +1542,7 @@ object Similarity {
     * join — the frame the pair-head store persists and `is_dup` derives
     * from.
     */
-  private def topPairsHead(pairs: DataFrame): DataFrame =
+  private[graft] def topPairsHead(pairs: DataFrame): DataFrame =
     twoStageTopKBy(pairs, SemanticTopK, col("cluster_id"),
       xxhash64(col("id1"), col("id2")),
       Seq(col("cosine").desc, col("id1"), col("id2")))
@@ -1593,45 +1572,35 @@ object Similarity {
     // STORE-FIRST (r18, VERDICT r17 #4): the ranked head is persisted
     // beside the assignments (same _READY), so a serve — warm OR from a
     // fresh JVM — reads K × SemanticTopK rows instead of re-running
-    // Σ|cluster|² pair cosines (the whole 170 cpu-s sf10 serve).
-    // `graft.sem.pairs=inline` pins the in-plan pair enumeration as the
-    // interleaved A/B arm; `graft.sem.assign=inline` (the whole-store
-    // bypass) implies it — the inline-assignment arm must not read ANY
-    // store.
-    val inline = sys.props.get("graft.sem.assign").contains("inline") ||
-      sys.props.get("graft.sem.pairs").contains("inline")
-    val head =
-      if (inline) topPairsHead(semanticPairs(s, d))
-      else {
-        assignedFrame(s, d): Unit // plan-only when published; builds
-                                  // (and publishes the pair head) if not
-        val (root, f) = semStoreRoot(s, d)
-        val pdst = topPairsPath(root)
-        if (!f.exists(pdst)) synchronized {
-          // a store published BEFORE the pair head existed self-upgrades,
-          // exactly like the legacy-centroid path: compute from the
-          // published assignments, tmp→rename, tolerate a lost cross-JVM
-          // race (the rows are deterministic — whichever writer wins
-          // published the same bytes).
-          if (!f.exists(pdst)) {
-            graft.ColdBuilds.record("sem_pairs_build")
-            val aM = s.read.parquet(
-              new org.apache.hadoop.fs.Path(root, "assign.parquet").toString)
-              .transform(Materialize.once)
-            val ptmp = new org.apache.hadoop.fs.Path(root, "toppairs.tmp")
-            topPairsHead(pairsFromAssigned(s, aM, embCount(s, d), embDim(s, d)))
-              .repartition(1).write.mode("overwrite").parquet(ptmp.toString)
-            Materialize.drop(aM)
-            if (!f.rename(ptmp, pdst)) {
-              require(f.exists(pdst), s"pair-head upgrade failed: $pdst")
-              f.delete(ptmp, true)
-            }
-          }
+    // Σ|cluster|² pair cosines (the whole 170 cpu-s sf10 serve; the
+    // in-plan enumeration on every serve lost, AB_r18).
+    assignedFrame(s, d): Unit // plan-only when published; builds
+                              // (and publishes the pair head) if not
+    val (root, f) = semStoreRoot(s, d)
+    val pdst = topPairsPath(root)
+    if (!f.exists(pdst)) synchronized {
+      // a store published BEFORE the pair head existed self-upgrades,
+      // exactly like the legacy-centroid path: compute from the
+      // published assignments, tmp→rename, tolerate a lost cross-JVM
+      // race (the rows are deterministic — whichever writer wins
+      // published the same bytes).
+      if (!f.exists(pdst)) {
+        graft.ColdBuilds.record("sem_pairs_build")
+        val aM = s.read.parquet(
+          new org.apache.hadoop.fs.Path(root, "assign.parquet").toString)
+          .transform(Materialize.once)
+        val ptmp = new org.apache.hadoop.fs.Path(root, "toppairs.tmp")
+        topPairsHead(pairsFromAssigned(s, aM, embCount(s, d), embDim(s, d)))
+          .repartition(1).write.mode("overwrite").parquet(ptmp.toString)
+        Materialize.drop(aM)
+        if (!f.rename(ptmp, pdst)) {
+          require(f.exists(pdst), s"pair-head upgrade failed: $pdst")
+          f.delete(ptmp, true)
         }
-        graft.ColdBuilds.record("sem_pairs_load")
-        s.read.parquet(pdst.toString)
       }
-    head
+    }
+    graft.ColdBuilds.record("sem_pairs_load")
+    s.read.parquet(pdst.toString)
       .withColumn("is_dup", col("cosine") >= SemanticDupThreshold)
       .select("cluster_id", "rank", "id1", "id2", "cosine", "is_dup")
   }

@@ -177,74 +177,66 @@ class DedupSimilaritySpec extends AnyFunSuite {
       10L -> 10L, 11L -> 10L, 20L -> 20L))
   }
 
-  test("connected components frontier arm: identical labels to legacy, observably smaller late rounds") {
+  test("connected components frontier fixpoint: labels equal the driver union-find, late rounds feed measured frontiers") {
     // VERDICT r14 #2 + #9: the frontier (delta) propagation must be
-    // output-identical to the legacy full-frontier plan, AND the two
-    // arms must differ OBSERVABLY through the CcProbe counter seam (the
-    // r14 stale-gate lesson: never trust a plan toggle whose arms were
-    // not seen to behave differently). driverMaxEdges=0 forces the
-    // distributed fixpoint; a diameter-9 chain plus a clique forces
-    // multiple rounds so the frontier actually shrinks.
+    // output-identical to an independent reference — the driver-side
+    // union-find fast path on the same graph — AND its late rounds must
+    // be seen, through the CcProbe counter seam, to feed shrunken
+    // measured frontiers. driverMaxEdges=0 forces the distributed
+    // fixpoint; a diameter-9 chain plus a clique forces multiple rounds
+    // so the frontier actually shrinks.
     import spark.implicits._
     val chain = (0 until 9).map(i => (100L + i, 101L + i))
     val clique = for (a <- 0 until 6; b <- a + 1 until 6) yield (a.toLong, b.toLong)
     val edges = (chain ++ clique).toDF("d1", "d2")
     val nodes = ((0 until 6).map(_.toLong) ++ (100 to 109).map(_.toLong) ++
       Seq(999L)).toDF("node")
-    def run(): (Map[Long, Long], Seq[(Long, Long)]) = {
-      Dedup.CcProbe.reset()
-      val out = Dedup.connectedComponents(nodes, edges, 0L)
+    def labels(driverMaxEdges: Long): Map[Long, Long] =
+      Dedup.connectedComponents(nodes, edges, driverMaxEdges)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-      (out, Dedup.CcProbe.rounds)
-    }
-    val (frontLabels, frontRounds) = run()
-    sys.props("graft.cc.frontier") = "off"
-    val (legacyLabels, legacyRounds) =
-      try run() finally sys.props.remove("graft.cc.frontier")
-    assert(frontLabels == legacyLabels)
+    Dedup.CcProbe.reset()
+    val frontLabels = labels(0L)
+    val frontRounds = Dedup.CcProbe.rounds
+    assert(frontLabels == labels(Long.MaxValue))
     assert(frontLabels(109L) == 100L && frontLabels(5L) == 0L &&
       frontLabels(999L) == 999L)
-    // observability: both arms ran multiple rounds; the frontier arm's
-    // message joins after round 1 fed measured, shrunken frontiers
-    // (recorded sizes ≥ 0), while every legacy round fed ALL touched
-    // nodes (the -1 full-frontier sentinel). This is the assertion that
-    // would have caught an inverted/stale toggle on day one.
-    assert(frontRounds.size >= 2 && legacyRounds.size >= 2)
+    // observability: the fixpoint ran multiple rounds, and its message
+    // joins after round 1 fed measured, shrunken frontiers (recorded
+    // sizes ≥ 0) rather than every touched node
+    assert(frontRounds.size >= 2)
     assert(frontRounds.head._1 == -1L) // round 1 is full-frontier by design
     assert(frontRounds.tail.map(_._1).forall(s => s >= 0L && s < 16L),
       s"frontier rounds after the first should be tiny measured frontiers: $frontRounds")
-    assert(legacyRounds.map(_._1).forall(_ == -1L),
-      s"legacy arm must feed the full frontier every round: $legacyRounds")
   }
 
-  test("banded verify placement: pre-distinct arm output-identical to legacy, observably smaller distinct input") {
-    // r16 (VERDICT r15 #6 plan audit): moving the bit_count hamming
-    // verify BEFORE the distinct exchange must not change output (the
-    // filter is a pure row predicate, so distinct∘filter ≡
-    // filter∘distinct) and must OBSERVABLY shrink what the exchange
-    // shuffles — the PlanVolume tripwire, per the r14 stale-gate mandate
-    // that every plan seam's arms be seen to differ.
-    def run(post: Boolean): (Set[(Long, Long, Int)], Long) = {
-      if (post) sys.props("graft.banded.verify") = "post"
-      sys.props("graft.banded.probe") = "volume"
-      graft.PlanVolume.reset()
-      try {
-        val out = Dedup.queries("dedup_simhash_pairs")(spark, sf)
-          .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-        val vol = graft.PlanVolume.records("banded.verify")
-        assert(vol.size == 1 && vol.head._1 == (if (post) "post" else "pre"))
-        (out, vol.head._2)
-      } finally {
-        sys.props.remove("graft.banded.verify")
-        sys.props.remove("graft.banded.probe")
-      }
-    }
-    val (preOut, preVol) = run(post = false)
-    val (postOut, postVol) = run(post = true)
-    assert(preOut == postOut, s"arms disagree: ${preOut.size} vs ${postOut.size}")
-    assert(preOut.nonEmpty)
-    assert(preVol < postVol,
-      s"verify-first must shuffle strictly fewer rows than the candidate set ($preVol vs $postVol)")
+  test("banded verify placement: dedup_simhash_pairs equals a driver-side all-pairs hamming scan, verify runs before the distinct") {
+    // r16 (VERDICT r15 #6 plan audit): the pigeonhole band join plus the
+    // bit_count verify must find exactly the all-pairs hamming ≤ 6 set
+    // over the dedup_simhash signatures (500 docs ≈ 125 k pairs, scanned
+    // on the driver), and the verify must sit BELOW the distinct so only
+    // true pairs reach its exchange.
+    import org.apache.spark.sql.catalyst.expressions.BitwiseCount
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Join}
+    val sigs = Dedup.queries("dedup_simhash")(spark, sf)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
+    val expected = (for {
+      i <- sigs.indices.iterator; j <- (i + 1 until sigs.length).iterator
+      h = java.lang.Long.bitCount(sigs(i)._2 ^ sigs(j)._2) if h <= 6
+    } yield (sigs(i)._1, sigs(j)._1, h)).toSet
+    val df = Dedup.queries("dedup_simhash_pairs")(spark, sf)
+    val got = df.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+    assert(got == expected, s"extra=${got -- expected}, missed=${expected -- got}")
+    assert(got.nonEmpty)
+    val aggs = df.queryExecution.optimizedPlan.collect { case a: Aggregate => a }
+    // the verify predicate may stay a Filter or be folded into the band
+    // join's condition; either way it must be under the Aggregate
+    def hasVerify(e: org.apache.spark.sql.catalyst.expressions.Expression) =
+      e.exists(_.isInstanceOf[BitwiseCount])
+    assert(aggs.nonEmpty && aggs.forall(_.child.exists {
+      case f: Filter => hasVerify(f.condition)
+      case j: Join => j.condition.exists(hasVerify)
+      case _ => false
+    }), s"the hamming verify must run below the distinct:\n${df.queryExecution.optimizedPlan}")
   }
 
   test("connected components under power-law skew: giant component stays correct, rounds bounded") {
@@ -322,7 +314,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     // PlanVolume tripwire proving the rep arm feeds CC strictly fewer
     // edges (the r14 stale-gate mandate: arms must differ observably).
     import spark.implicits._
-    // arm: "on" pins the contraction, "off" the legacy plan (r18: unset
+    // arm: "on" pins the contraction, "off" the all-docs plan (r18: unset
     // now ROUTES on the measured collapse factor — the routing has its
     // own spec below; the A/B here pins both arms explicitly)
     def runComponents(dir: String, arm: String)
@@ -349,7 +341,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val (repSf, _) = runComponents(sf, arm = "on")
     val (allSf, _) = runComponents(sf, arm = "off")
     assert(repSf == allSf && repSf.nonEmpty,
-      "contracted one-shot must be row-identical to the legacy arm on the sf corpus")
+      "contracted one-shot must be row-identical to the all-docs arm on the sf corpus")
     // (b) dup-heavy corpus: 6-member identical-text clique + isolated doc
     val tA = "alpha bravo charlie delta echo foxtrot golf hotel india juliet kilo lima"
     val tZ = "zulu yankee xray whiskey victor uniform tango sierra romeo quebec papa oscar"
@@ -375,7 +367,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     // corpus (empty groupBy, empty banded join, CC over zero edges), a
     // single doc (one rep, zero pairs, label = self), and an all-identical
     // corpus (the rep graph is ONE node — the whole corpus rides the
-    // member join; the legacy arm runs a C(n,2) clique through the
+    // member join; the all-docs arm runs a C(n,2) clique through the
     // fixpoint). Both arms must produce identical rows on each.
     import spark.implicits._
     val t = "november oscar papa quebec romeo sierra tango uniform victor whiskey xray yankee"
@@ -387,7 +379,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
       dir
     }
     // three arms per fixture (r18): pinned contraction ("on"), pinned
-    // legacy ("off"), and the ROUTED default (unset — takes whichever
+    // all-docs ("off"), and the ROUTED default (unset — takes whichever
     // arm the measured collapse factor picks, including the degenerate
     // n=0/nSig=0 empty-corpus route)
     def run(dir: String, arm: Option[String]): Set[(Long, Long, Long, Boolean)] = {
@@ -462,7 +454,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val distinctDir = fixture((0L until 16L).map(id =>
       (id, (0 until 12).map(j => s"w${id}x$j").mkString(" "))))
     val (dOut, dArm) = runRouted(distinctDir)
-    assert(dArm == "all", s"collapse-1 corpus must route to the legacy arm")
+    assert(dArm == "all", s"collapse-1 corpus must route to the all-docs arm")
     assert(dOut == runPinned(distinctDir, "on") && dOut == runPinned(distinctDir, "off"))
   }
 

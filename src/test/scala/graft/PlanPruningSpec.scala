@@ -15,12 +15,17 @@ class PlanPruningSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val sf = TestSpark.sf0001
 
-  private def readSchemas(df: org.apache.spark.sql.DataFrame): List[Set[String]] = {
+  private def scanSchemas(df: org.apache.spark.sql.DataFrame): List[Set[String]] = {
     val s = df.queryExecution.explainString(
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-    val schemas = "ReadSchema: struct<([^>]*)>".r.findAllMatchIn(s).map(_.group(1)).toList
+    "ReadSchema: struct<([^>]*)>".r.findAllMatchIn(s).map(_.group(1)).toList
+      .map(_.split(",").map(_.split(":")(0).trim).filter(_.nonEmpty).toSet)
+  }
+
+  private def readSchemas(df: org.apache.spark.sql.DataFrame): List[Set[String]] = {
+    val schemas = scanSchemas(df)
     assert(schemas.nonEmpty, "no parquet scan found in plan")
-    schemas.map(_.split(",").map(_.split(":")(0).trim).filter(_.nonEmpty).toSet)
+    schemas
   }
 
   test("text_tokens scans documents with only (doc_id, text)") {
@@ -51,20 +56,12 @@ class PlanPruningSpec extends AnyFunSuite {
   }
 
   // the helper assert above can't see a future exactDedup edit that joins
-  // extra document columns AFTER the hashed frame (ADVICE r18): pin
-  // graft.exact.ckpt=off so the scan stays in the SERVED query's plan and
-  // assert that plan's ReadSchema directly
-  test("dedup_exact served plan (ckpt=off) never reads lang/source/n_chars") {
-    val key = "graft.exact.ckpt"
-    val old = sys.props.get(key)
-    try {
-      sys.props(key) = "off"
-      readSchemas(Dedup.queries("dedup_exact")(spark, sf))
-        .foreach(cols => assert(cols.subsetOf(Set("doc_id", "text")), cols))
-    } finally old match {
-      case Some(v) => sys.props(key) = v
-      case None => sys.props.remove(key): Unit
-    }
+  // extra document columns AFTER the hashed frame (ADVICE r18): assert
+  // the SERVED query's plan too — every scan left in it (none while the
+  // hashed frame is checkpointed) reads only (doc_id, text)
+  test("dedup_exact served plan never reads lang/source/n_chars") {
+    scanSchemas(Dedup.queries("dedup_exact")(spark, sf))
+      .foreach(cols => assert(cols.subsetOf(Set("doc_id", "text")), cols))
   }
 
   // decontam_bloom builds its filter by hand; Spark can also INJECT one —

@@ -6,9 +6,10 @@ import graft.operators.Similarity
 
 /** The persisted k-means assignment store behind dedup_semantic /
   * embedding_kmeans / embedding_prototypicality (r15, VERDICT r14 #6):
-  * the stored arm must be row-identical to the legacy inline compute,
-  * and a torn write (missing _READY marker) must rebuild rather than
-  * serve partial state.
+  * the stored assignment must be row-identical to the computed one, the
+  * stored pair head to the head composed from the in-plan pair
+  * enumeration, and a torn write (missing _READY marker) must rebuild
+  * rather than serve partial state.
   */
 class SemAssignStoreSpec extends AnyFunSuite {
 
@@ -18,6 +19,17 @@ class SemAssignStoreSpec extends AnyFunSuite {
   private def rows(q: String): Seq[String] =
     Similarity.queries(q)(spark, sf)
       .collect().map(_.toString).sorted.toSeq
+
+  /** dedup_semantic composed in-plan: the ranked head of the
+    * intra-cluster pair enumeration, with the served `is_dup` column.
+    */
+  private def composedHead(): Seq[String] = {
+    import org.apache.spark.sql.functions.col
+    Similarity.topPairsHead(Similarity.semanticPairs(spark, sf))
+      .withColumn("is_dup", col("cosine") >= Similarity.SemanticDupThreshold)
+      .select("cluster_id", "rank", "id1", "id2", "cosine", "is_dup")
+      .collect().map(_.toString).sorted.toSeq
+  }
 
   private def rmTree(f: java.io.File): Unit = {
     Option(f.listFiles()).foreach(_.foreach(rmTree))
@@ -39,16 +51,19 @@ class SemAssignStoreSpec extends AnyFunSuite {
     else Nil
   }
 
-  test("stored arm == inline arm, row-identical, for all three store consumers") {
-    val stored = Seq("dedup_semantic", "embedding_kmeans",
-      "embedding_prototypicality").map(q => q -> rows(q)).toMap
-    sys.props("graft.sem.assign") = "inline"
-    try Seq("dedup_semantic", "embedding_kmeans", "embedding_prototypicality")
-      .foreach { q =>
-        assert(rows(q) == stored(q), s"$q: stored and inline arms diverge")
-        assert(stored(q).nonEmpty)
-      }
-    finally sys.props.remove("graft.sem.assign")
+  test("stored assignment == computed assignment, and dedup_semantic == the in-plan pair head") {
+    Seq("dedup_semantic", "embedding_kmeans", "embedding_prototypicality")
+      .foreach(q => assert(rows(q).nonEmpty, q)) // publishes the store
+    val roots = publishedOwnRoot("assign.parquet")
+    assert(roots.nonEmpty, "expected a published assignment store")
+    val stored = spark.read.parquet(new java.io.File(roots.head, "assign.parquet").toString)
+      .collect().map(_.toString).sorted.toSeq
+    val computed = Similarity.computeAssignment(spark, sf)
+      .collect().map(_.toString).sorted.toSeq
+    assert(stored == computed && stored.nonEmpty,
+      "assign.parquet diverges from the computed assignment")
+    assert(rows("dedup_semantic") == composedHead(),
+      "pair-head store and in-plan pair enumeration diverge")
   }
 
   test("warm restart serves centroid VALUES from the store, no trainer (VERDICT r16 #4)") {
@@ -90,10 +105,8 @@ class SemAssignStoreSpec extends AnyFunSuite {
       s"warm serve must NOT re-enumerate intra-cluster pairs, got: $builds")
     assert(again == stored)
     assert(stored.nonEmpty)
-    sys.props("graft.sem.pairs") = "inline"
-    try assert(rows("dedup_semantic") == stored,
-      "pair-head store and inline pair enumeration diverge")
-    finally sys.props.remove("graft.sem.pairs")
+    assert(stored == composedHead(),
+      "pair-head store and in-plan pair enumeration diverge")
   }
 
   test("a store published before the pair head existed self-upgrades once") {
@@ -108,9 +121,7 @@ class SemAssignStoreSpec extends AnyFunSuite {
     val mark2 = graft.ColdBuilds.mark()
     assert(rows("dedup_semantic") == upgraded) // upgrade is paid at most once
     assert(!graft.ColdBuilds.since(mark2).contains("sem_pairs_build"))
-    sys.props("graft.sem.pairs") = "inline"
-    try assert(rows("dedup_semantic") == upgraded)
-    finally sys.props.remove("graft.sem.pairs")
+    assert(upgraded == composedHead())
   }
 
   test("pair-head name encodes K + format version: a head under other params is a miss, never served (ADVICE r18)") {
@@ -135,9 +146,7 @@ class SemAssignStoreSpec extends AnyFunSuite {
     val upgraded = rows("dedup_semantic")
     assert(graft.ColdBuilds.since(mark).contains("sem_pairs_build"),
       "a parameter-mismatched head must be a miss that self-upgrades")
-    sys.props("graft.sem.pairs") = "inline"
-    try assert(rows("dedup_semantic") == upgraded)
-    finally sys.props.remove("graft.sem.pairs")
+    assert(upgraded == composedHead())
     published.foreach(r => rmTree(new java.io.File(r, "toppairs_k999_v0.parquet")))
   }
 

@@ -8,9 +8,10 @@ import graft.operators.SigStore
   * VERDICT r18 #1 — the pair-head idiom): `dedup_components_stored`'s
   * default serve reads cluster_size from the store (generation column +
   * broadcast override) instead of re-aggregating the corpus per serve.
-  * Pins: default arm ≡ `graft.cc.shape=inline` arm row-for-row, legacy
-  * stores self-upgrade exactly once, and the served plan never
-  * aggregates the corpus-sized label table.
+  * Pins: served rows ≡ a per-serve size aggregate this spec computes
+  * from the store's effective labels, row-for-row; legacy stores
+  * self-upgrade exactly once; and the served plan never aggregates the
+  * corpus-sized label table.
   */
 class SigSizeStoreSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -44,17 +45,30 @@ class SigSizeStoreSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
       .toSet
 
-  private def inlineArm[T](body: => T): T = {
-    sys.props("graft.cc.shape") = "inline"
-    try body finally sys.props.remove("graft.cc.shape"): Unit
+  /** The per-serve aggregate the persisted sizes replace, computed from
+    * the store's effective (node, label) rows: group by label, count,
+    * join back.
+    */
+  private def aggregated(root: String): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.functions.{col, count, lit}
+    val labels = SigStore.effectiveLabels(spark, root)
+    val sizes = labels.groupBy("label").agg(count(lit(1)).as("cluster_size"))
+    labels.join(sizes, Seq("label"))
+      .select(col("node"), col("label"), col("cluster_size"),
+        col("node") === col("label"))
   }
+
+  private def inline(root: String): Set[(Long, Long, Long, Boolean)] =
+    aggregated(root)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
+      .toSet
 
   test("stored sizes ≡ inline per-serve aggregation, row-identical (post-absorb store)") {
     val root = freshAbsorbedStore()
     val stored = served(root)
-    val inline = inlineArm(served(root))
-    assert(stored == inline && stored.nonEmpty,
-      s"persisted sizes diverge from the per-serve aggregate:\n$stored\nvs\n$inline")
+    val agg = inline(root)
+    assert(stored == agg && stored.nonEmpty,
+      s"persisted sizes diverge from the per-serve aggregate:\n$stored\nvs\n$agg")
     assert(stored == Set(
       (1L, 1L, 3L, true), (3L, 1L, 3L, false), (10L, 1L, 3L, false),
       (5L, 5L, 1L, true), (20L, 20L, 1L, true)))
@@ -70,7 +84,7 @@ class SigSizeStoreSpec extends AnyFunSuite {
       (11L, 1L, 4L, false),
       (5L, 5L, 1L, true), (20L, 20L, 1L, true), (30L, 30L, 1L, true))
     assert(served(root) == expected)
-    assert(inlineArm(served(root)) == expected)
+    assert(inline(root) == expected)
     // replay of the last batch: override recomposes to itself
     SigStore.absorbComponents(spark, root, docsOf(11L -> tE, 30L -> t30), 1L)
     assert(served(root) == expected, "absorb replay must leave sizes unchanged")
@@ -158,8 +172,8 @@ class SigSizeStoreSpec extends AnyFunSuite {
       SigStore.absorbComponents(spark, root, docsOf(batch: _*), batchId = b.toLong)
       absorbed += batch
       val stored = served(root)
-      val inline = inlineArm(served(root))
-      assert(stored == inline, s"batch $b: stored≡inline broken\n$stored\nvs\n$inline")
+      val agg = inline(root)
+      assert(stored == agg, s"batch $b: stored≡inline broken\n$stored\nvs\n$agg")
     }
   }
 
@@ -198,10 +212,10 @@ class SigSizeStoreSpec extends AnyFunSuite {
     val aggs = aggregatesOverLabels(SigStore.serveComponentsStored(spark, root))
     assert(aggs.isEmpty,
       s"stored serve aggregates the corpus label table:\n${aggs.mkString("\n")}")
-    // the inline arm DOES aggregate it — the probe proves the detector sees
-    val inlineAggs = inlineArm(
-      aggregatesOverLabels(SigStore.serveComponentsStored(spark, root)))
-    assert(inlineAggs.nonEmpty, "probe: inline arm must show the corpus aggregate")
+    // the per-serve aggregate DOES aggregate it — the probe proves the
+    // detector sees
+    assert(aggregatesOverLabels(aggregated(root)).nonEmpty,
+      "probe: the per-serve aggregate must show the corpus aggregate")
     // compacted store: no patches, no remap, no override — the serve is a
     // single generation scan with zero aggregates and zero joins
     SigStore.compactLabels(spark, root)

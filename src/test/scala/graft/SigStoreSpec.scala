@@ -55,43 +55,11 @@ class SigStoreSpec extends AnyFunSuite {
       "a delta absorb must read stored labels, never rebuild them")
   }
 
-  test("incremental banded verify placement: arms output-identical, pre-distinct volume observably smaller") {
-    // the dedup_simhash_pairs seam extended to the incremental arm
-    // (VERDICT r15 #6): contractDeltaSh's probe + delta self-join must
-    // shuffle only verified pairs by default, and the legacy
-    // distinct-first arm must remain output-identical — with the
-    // PlanVolume tripwire proving the arms differ where they should.
-    SigStore.deleteStore(spark, sf)
-    def run(post: Boolean): (Set[(Long, Long, Long, Boolean)], Long) = {
-      if (post) sys.props("graft.banded.verify") = "post"
-      sys.props("graft.banded.probe") = "volume"
-      graft.PlanVolume.reset()
-      try {
-        val out = SigStore.queries("dedup_components_incremental")(spark, sf)
-          .collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
-          .toSet
-        val vol = graft.PlanVolume.records("banded.verify.incr")
-        assert(vol.nonEmpty &&
-          vol.forall(_._1 == (if (post) "post" else "pre")))
-        (out, vol.map(_._2).sum)
-      } finally {
-        sys.props.remove("graft.banded.verify")
-        sys.props.remove("graft.banded.probe")
-      }
-    }
-    val (preOut, preVol) = run(post = false)
-    val (postOut, postVol) = run(post = true)
-    assert(preOut == postOut && preOut.nonEmpty)
-    assert(preVol < postVol,
-      s"verify-first must shuffle strictly fewer rows ($preVol vs $postVol)")
-  }
-
   test("signature contraction: rep arm label-identical to all-docs arm, observably fewer edges (VERDICT r16 #1)") {
     import spark.implicits._
     // dup-heavy delta: six %10 docs share ONE text (identical simhash →
     // one rep + five star edges) against a base holding the same text —
-    // the legacy arm materializes the full C(6,2) clique plus six store
+    // the all-docs arm materializes the full C(6,2) clique plus six store
     // edges; the contracted arm one rep probe plus the stars.
     val tA = "alpha bravo charlie delta echo foxtrot golf hotel india juliet kilo lima"
     val tZ = "zulu yankee xray whiskey victor uniform tango sierra romeo quebec papa oscar"
