@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+
 /** Garbage collector for the persisted store families under the system
   * temp dir (r20, VERDICT r19 #5). Stores have publish/compact/maintain
   * policies but had no reaper: superseded format generations (the
@@ -46,7 +48,7 @@ object StoreGc {
     * derivations the serving code resolves through, so a format-version
     * bump automatically orphans the old generation.
     */
-  private[graft] def liveNames(d: String): Map[String, Set[String]] = Map(
+  private[graft] def liveNames(s: SparkSession, d: String): Map[String, Set[String]] = Map(
     "graft_sigstore" -> {
       val k = base(graft.operators.SigStore.storeRoot(d))
       Set(k, k + "_absorbed")
@@ -54,11 +56,11 @@ object StoreGc {
     "graft_aggstate" ->
       Set(base(graft.operators.IncrementalStats.stateRoot(d))),
     "graft_bmstore" -> Set("full", "incr")
-      .map(v => base(graft.operators.BmStore.storeRoot(d, v))),
+      .map(v => base(graft.operators.BmStore.storeRoot(s, d, v))),
     "graft_ann_index" -> Set("full", "incr", "stream")
       .map(v => base(graft.operators.AnnIndexIO.indexRoot(d, v))),
     "graft_semassign" ->
-      Set(graft.operators.Similarity.semStoreKey(d)))
+      Set(graft.operators.Similarity.semStoreKey(s, d)))
 
   private def newestMtime(f: java.io.File): Long = {
     val own = f.lastModified()
@@ -80,7 +82,7 @@ object StoreGc {
     * can't be derived without the table fingerprints) — a WARNING, not
     * silent, since a typo'd path would otherwise orphan a live store.
     */
-  def sweep(liveDirs: Seq[String], minAgeMs: Long,
+  def sweep(s: SparkSession, liveDirs: Seq[String], minAgeMs: Long,
       dryRun: Boolean = false, tmpRoot: String = tmpDir,
       families: Seq[String] = Families): Seq[FamilySweep] = {
     // Provenance-derived liveness (r20, the SCALE_r20 cold-capture
@@ -104,7 +106,7 @@ object StoreGc {
       System.err.println(s"[storegc] WARNING: declared live dir missing, " +
         s"its stores will look orphaned: $d"))
     val live: Map[String, Set[String]] = families.map { fam =>
-      fam -> present.flatMap(d => liveNames(d).getOrElse(fam, Set.empty)).toSet
+      fam -> present.flatMap(d => liveNames(s, d).getOrElse(fam, Set.empty)).toSet
     }.toMap
     val now = System.currentTimeMillis()
     families.map { fam =>
@@ -132,7 +134,12 @@ object StoreGc {
     val liveDirs = pos(0).split(",").toSeq.filter(_.nonEmpty)
     val minAgeH = if (pos.length > 1) pos(1).toDouble else 24.0
     val dry = flags.contains("--dry-run")
-    val sweeps = sweep(liveDirs, (minAgeH * 3600 * 1000).toLong, dryRun = dry)
+    // the store keys fingerprint each dataset through the session's
+    // Hadoop configuration, the same derivation the serving code uses
+    val spark = Session.local()
+    val sweeps =
+      try sweep(spark, liveDirs, (minAgeH * 3600 * 1000).toLong, dryRun = dry)
+      finally spark.stop()
     sweeps.foreach { s =>
       println(s"""{"metric":"store_gc","family":"${s.family}","kept":${s.kept},"reaped":${s.reaped.size},"bytes":${s.bytes},"dry_run":$dry,"missing_root":${s.missing}}""")
     }

@@ -281,7 +281,7 @@ object WarmServe {
         "calib-a <sfDir> <tags.tsv> | calib-b <sfDir> <a-tags.tsv> | " +
         "gc <liveDir1,liveDir2,...> [minAgeHours] [--dry-run]")
     val mode = args(0)
-    if (mode == "gc") { // maintenance subcommand; no Spark session needed
+    if (mode == "gc") { // maintenance subcommand; StoreGc builds its session
       StoreGc.main(args.drop(1))
       return
     }

@@ -112,12 +112,12 @@ object BmStore {
     * query invocation, never per serving micro-batch (BmServe holds the
     * resolved root).
     */
-  private[graft] def storeRoot(d: String, variant: String): String = {
+  private[graft] def storeRoot(s: SparkSession, d: String, variant: String): String = {
     StoreRegistry.note(d)
     val canon = try new java.io.File(d).getCanonicalPath catch {
       case _: java.io.IOException => d
     }
-    val fp = Tables.tableFingerprint(d, "documents")
+    val fp = Tables.fingerprint(s, Tables.path(d, "documents"))
     new java.io.File(new java.io.File(
       sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_bmstore"),
       variant + "_" + md5hex(s"$canon:$fp:v$FormatVersion")).toString
@@ -128,13 +128,13 @@ object BmStore {
 
   private[graft] def deleteStore(s: SparkSession, d: String): Unit =
     Seq("full", "incr").foreach { v =>
-      val p = new Path(storeRoot(d, v))
+      val p = new Path(storeRoot(s, d, v))
       fs(s, p).delete(p, true)
-      frozenCache.remove(storeRoot(d, v))
-      metaCache.remove(storeRoot(d, v))
-      planCache.keySet.filter(_._1 == storeRoot(d, v))
+      frozenCache.remove(storeRoot(s, d, v))
+      metaCache.remove(storeRoot(s, d, v))
+      planCache.keySet.filter(_._1 == storeRoot(s, d, v))
         .foreach(planCache.remove)
-      verdictHistory.remove(storeRoot(d, v))
+      verdictHistory.remove(storeRoot(s, d, v))
     }
 
   private def tokBucket(c: Column): Column =
@@ -341,7 +341,7 @@ object BmStore {
   private[graft] def storeMeta(s: SparkSession, root: String): (Long, Long) =
     metaCache.getOrElseUpdate(root, {
       graft.ColdBuilds.record("bm_meta")
-      val m = s.read.parquet(new Path(root, "meta.parquet").toString).head()
+      val m = Tables.parquet(s, new Path(root, "meta.parquet").toString).head()
       (m.getLong(0), m.getLong(1))
     })
 
@@ -362,7 +362,7 @@ object BmStore {
         .select(col("doc_id").as("query_id"),
           explode(split(col("text"), " ")).as("token"))
         .distinct()
-      val dfT = s.read.parquet(new Path(root, "df.parquet").toString)
+      val dfT = Tables.parquet(s, new Path(root, "df.parquet").toString)
         .select("token", "df")
       val rows = qt.join(dfT, "token")
         .select("query_id", "token", "df").collect()
@@ -384,7 +384,7 @@ object BmStore {
     val qdf = queries
       .flatMap { case (id, ts) => ts.distinct.map(t => (id, t)) }
       .toDF("query_id", "token")
-    val dfT = s.read.parquet(new Path(root, "df.parquet").toString)
+    val dfT = Tables.parquet(s, new Path(root, "df.parquet").toString)
       .select("token", "df")
     val rows = qdf.join(dfT, "token")
       .select("query_id", "token", "df").collect()
@@ -402,7 +402,7 @@ object BmStore {
   private[graft] def syntheticStandingQueries(s: SparkSession, root: String,
       prefix: String, n: Int, termsPerQuery: Int = 8,
       idBase: Long = 1000000L): Seq[(Long, Seq[String])] = {
-    val vocab = s.read.parquet(new Path(root, "df.parquet").toString)
+    val vocab = Tables.parquet(s, new Path(root, "df.parquet").toString)
       .select("token").collect().map(_.getString(0)).sorted
     (0 until n).map { qid =>
       val terms = (0 until termsPerQuery).map(j => vocab(
@@ -443,7 +443,7 @@ object BmStore {
     val buckets = terms.toDF("token")
       .select(tokBucket(col("token")).as("b")).distinct()
       .as[Int].collect().sorted.toSeq
-    s.read.parquet(new Path(root, "postings.parquet").toString)
+    Tables.parquet(s, new Path(root, "postings.parquet").toString)
       .filter(col("tok_bucket").isin(buckets: _*))
       .filter(col("token").isin(terms: _*))
       .join(broadcast(queryTerms), "token")
@@ -765,7 +765,7 @@ object BmStore {
     val buckets = frozen.unionTerms.toDF("token")
       .select(tokBucket(col("token")).as("b")).distinct()
       .as[Int].collect().sorted.toSeq
-    val out = s.read.parquet(new Path(root, "postings.parquet").toString)
+    val out = Tables.parquet(s, new Path(root, "postings.parquet").toString)
       .filter(col("tok_bucket").isin(buckets: _*))
       .filter(col("token").isin(frozen.unionTerms: _*))
       .join(candsSide, "doc_id")
@@ -807,7 +807,7 @@ object BmStore {
     val (terms, termDf, termQueries) = Retrieval.invertedIndex(frozen)
     val fn = graft.functions.GraftFunctions.registerPercolateHitsDl(
       s, frozen.nDocs, frozen.sumDl, terms, termDf, termQueries)
-    s.read.parquet(new Path(root, "docvec.parquet").toString)
+    Tables.parquet(s, new Path(root, "docvec.parquet").toString)
       .withColumn("p", explode(expr(s"$fn(ws, dl)")))
       .filter(col("doc_id") =!= col("p.query_id"))
       .select(col("p.query_id").as("query_id"), col("doc_id"),
@@ -942,7 +942,7 @@ object BmStore {
   /** Build the full-corpus store once per dataset dir (crash-safe). */
   private[graft] def ensureFullBuilt(s: SparkSession, d: String): String =
     synchronized {
-      val root = storeRoot(d, "full")
+      val root = storeRoot(s, d, "full")
       if (!fs(s, new Path(root)).exists(new Path(root, "_STORE_READY")))
         buildFrom(s, root, Tables.documents(s, d))
       root
@@ -954,7 +954,7 @@ object BmStore {
     */
   private[graft] def ensureIncrBuilt(s: SparkSession, d: String): String =
     synchronized {
-      val root = storeRoot(d, "incr")
+      val root = storeRoot(s, d, "incr")
       val f = fs(s, new Path(root))
       if (!f.exists(new Path(root, "_STORE_READY")))
         buildFrom(s, root,
@@ -1116,7 +1116,7 @@ object BmStore {
       val canon = try new java.io.File(d).getCanonicalPath catch {
         case _: java.io.IOException => d
       }
-      s"$canon@${Tables.tableFingerprint(d, "embeddings")}"
+      s"$canon@${Tables.fingerprint(s, Tables.path(d, "embeddings"))}"
     }, {
       graft.ColdBuilds.record("hybrid_query_embs")
       Similarity.withEmb(s, d)

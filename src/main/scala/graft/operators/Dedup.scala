@@ -276,10 +276,10 @@ object Dedup {
     * fixture rewrite re-measures instead of serving a stale df histogram;
     * [[clearPlanStatsCache]] stays as the test seam.
     */
-  private def embKey(d: String): String =
-    s"$d@${Tables.tableFingerprint(d, "embeddings")}"
-  private def docKey(d: String): String =
-    s"$d@${Tables.tableFingerprint(d, "documents")}"
+  private def embKey(s: SparkSession, d: String): String =
+    s"$d@${Tables.fingerprint(s, Tables.path(d, "embeddings"))}"
+  private def docKey(s: SparkSession, d: String): String =
+    s"$d@${Tables.fingerprint(s, Tables.path(d, "documents"))}"
 
   private def embPairs(s: SparkSession, d: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
@@ -290,7 +290,7 @@ object Dedup {
     // runtime fence, not just a doc comment: one count on the frame
     // already in hand (column-pruned to zero columns → parquet footer
     // row counts), cached per dir so the fence costs one job ever
-    requireAllPairsSafe(fenceCounts.getOrElseUpdate(embKey(d), e.count()))
+    requireAllPairsSafe(fenceCounts.getOrElseUpdate(embKey(s, d), e.count()))
     val a = e.select(col("vec_id").as("id1"), col("emb").as("e1"))
     val b = e.select(col("vec_id").as("id2"), col("emb").as("e2"))
     a.join(b, col("id1") < col("id2"))
@@ -681,7 +681,7 @@ object Dedup {
     // stats gate (see [[prefixRatioOverride]] for the r14 retirement
     // measurements). The stats themselves stay cached per corpus.
     def corpusStats(): (Long, BigDecimal) =
-      prefixPlanStats.getOrElseUpdate(docKey(d), {
+      prefixPlanStats.getOrElseUpdate(docKey(s, d), {
       graft.ColdBuilds.record("jaccard_df_stats")
       val statsRow = df
         // The DOUBLED candidate sum Σ df·(df−1) aggregates as

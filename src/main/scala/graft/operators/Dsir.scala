@@ -111,7 +111,7 @@ object Dsir {
   private[graft] def clearModelCache(): Unit = modelCache.clear()
 
   private[graft] def modelRows(s: SparkSession, d: String): Array[(Long, Long, Long, Long)] =
-    modelCache.getOrElseUpdate(s"$d@${Tables.tableFingerprint(d, "documents")}", {
+    modelCache.getOrElseUpdate(s"$d@${Tables.fingerprint(s, Tables.path(d, "documents"))}", {
       graft.ColdBuilds.record("dsir_model")
       val counts = occ(s, d).groupBy("bucket").agg(
         sum(when(col("is_target"), 1L).otherwise(0L)).as("ct"),

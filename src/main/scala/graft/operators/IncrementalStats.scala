@@ -114,7 +114,7 @@ object IncrementalStats {
 
   private[graft] def readState(s: SparkSession, root: String): DataFrame = {
     graft.ColdBuilds.record("aggstate_load")
-    s.read.parquet(new Path(root, "state.parquet").toString)
+    Tables.parquet(s, new Path(root, "state.parquet").toString)
   }
 
   /** Advance the persisted state by one delta batch: one pass over the

@@ -161,7 +161,7 @@ object Layout {
       // a selective time-range scan against the range-clustered copy;
       // the result is layout-independent (oracle = plain lineitem), the
       // POINT is that the sorted layout answers it from ~1 of 8 files
-      s.read.parquet(ensureSorted(s, d))
+      Tables.parquet(s, ensureSorted(s, d))
         .filter(col("l_shipdate") >= lit("1995-06-01").cast("timestamp") &&
           col("l_shipdate") < lit("1995-09-01").cast("timestamp"))
         .groupBy("l_returnflag")
@@ -172,7 +172,7 @@ object Layout {
     "q_zorder_prune" -> ((s, d) => {
       // two-dimensional selective scan against the z-ordered copy; either
       // predicate alone already prunes row groups (ZorderLayoutSpec)
-      s.read.parquet(ensureZordered(s, d))
+      Tables.parquet(s, ensureZordered(s, d))
         .filter(col("l_partkey") >= 40 && col("l_partkey") <= 90 &&
           col("l_shipdate") >= lit("1994-01-01").cast("timestamp") &&
           col("l_shipdate") < lit("1997-01-01").cast("timestamp"))

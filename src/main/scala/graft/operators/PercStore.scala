@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{SaveMode, SparkSession}
 
 import graft.operators.Retrieval.FrozenIndexStats
-import graft.sources.Writers
+import graft.sources.{Tables, Writers}
 
 /** Persisted STANDING-QUERY registration for the percolator — the
   * registration half of prospective search, completing the lifecycle
@@ -69,7 +69,7 @@ object PercStore {
     val qdf = queries
       .flatMap { case (id, ts) => ts.distinct.map(t => (id, t)) }
       .toDF("query_id", "token")
-    val dfT = s.read.parquet(new Path(root, "df.parquet").toString)
+    val dfT = Tables.parquet(s, new Path(root, "df.parquet").toString)
       .select("token", "df")
     Writers.writeShards(
       qdf.join(dfT, "token")
@@ -209,7 +209,7 @@ object PercStore {
     deltaMergeCount.incrementAndGet()
     val delta = freshDirs.flatMap { dir =>
       val bid = dir.stripPrefix("batch_id=").toLong
-      s.read.parquet(new Path(standingPath(root), dir).toString)
+      Tables.parquet(s, new Path(standingPath(root), dir).toString)
         .select("query_id", "token", "df").collect()
         .map(r => (bid, r.getLong(0), r.getString(1), r.getLong(2)))
     }
@@ -263,7 +263,7 @@ object PercStore {
     val (nDocs, sumDl) = BmStore.storeMeta(s, root)
     if (!fs(s, standingPath(root)).exists(new Path(standingPath(root))))
       return Retrieval.assembleFrozen(Array.empty, nDocs, sumDl)
-    val reg = s.read.parquet(standingPath(root))
+    val reg = Tables.parquet(s, standingPath(root))
       .select("query_id", "token", "df", "batch_id")
     // newest registration batch per query (latest replaces), minus
     // queries whose newest tombstone is at least as new
@@ -272,7 +272,7 @@ object PercStore {
     val live =
       if (!fs(s, tombPath(root)).exists(new Path(tombPath(root)))) winner
       else {
-        val tomb = s.read.parquet(tombPath(root))
+        val tomb = Tables.parquet(s, tombPath(root))
           .groupBy("query_id").agg(max("batch_id").as("tb"))
         winner.join(tomb, Seq("query_id"), "left")
           .filter(col("tb").isNull || col("rb") > col("tb"))

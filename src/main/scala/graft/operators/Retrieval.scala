@@ -130,15 +130,15 @@ object Retrieval {
   private val standingQtCache = scala.collection.concurrent.TrieMap
     .empty[String, Array[(Long, String)]]
 
-  private def qtCacheKey(d: String): String = {
+  private def qtCacheKey(s: SparkSession, d: String): String = {
     val canon = try new java.io.File(d).getCanonicalPath catch {
       case _: java.io.IOException => d
     }
-    s"$canon@${Tables.tableFingerprint(d, "documents")}"
+    s"$canon@${Tables.fingerprint(s, Tables.path(d, "documents"))}"
   }
 
   private[graft] def standingQt(s: SparkSession, d: String): Array[(Long, String)] =
-    standingQtCache.getOrElseUpdate(qtCacheKey(d), {
+    standingQtCache.getOrElseUpdate(qtCacheKey(s, d), {
       graft.ColdBuilds.record("bm25_standing_queries")
       Tables.documents(s, d).filter(isQueryDoc(col("doc_id")))
         .select(col("doc_id").as("query_id"),

@@ -203,7 +203,7 @@ object SigStore {
     */
   private[graft] def serveAgainst(s: SparkSession, root: String,
       deltaDocs: DataFrame): DataFrame = {
-    val store = s.read.parquet(s"$root/sigs.parquet")
+    val store = Tables.parquet(s, s"$root/sigs.parquet")
       .select(col("doc_id").as("base_id"), col("simhash").as("bs"),
         col("band_id"), col("band_bits"))
     val deltaSh = Dedup.simhash(deltaDocs).transform(Materialize.once)
@@ -271,7 +271,7 @@ object SigStore {
     val f = fs(s, new Path(root))
     require(f.exists(new Path(root, "sigs.parquet")),
       s"no signature store at $root — run buildFrom before building labels")
-    val store = s.read.parquet(s"$root/sigs.parquet")
+    val store = Tables.parquet(s, s"$root/sigs.parquet")
     val a = store.select(col("doc_id").as("d1"), col("simhash").as("s1"),
       col("band_id"), col("band_bits"))
     val b = store.select(col("doc_id").as("d2"), col("simhash").as("s2"),
@@ -384,7 +384,7 @@ object SigStore {
     */
   private[graft] def effectiveLabels(s: SparkSession, root: String): DataFrame = {
     val f = fs(s, new Path(root))
-    val base = s.read.parquet(s"$root/labels.parquet").select("node", "label")
+    val base = Tables.parquet(s, s"$root/labels.parquet").select("node", "label")
     val nodesDir = new Path(root, "label_nodes.parquet")
     val all = if (f.exists(nodesDir)) {
       // Newest batch wins WITHIN the patches too: a doc re-sent under a
@@ -393,14 +393,14 @@ object SigStore {
       // possibly-stale label. max_by(label, batch_id) keeps exactly the
       // latest absorb's verdict; the aggregation is bounded by absorbed
       // patch volume, never the corpus.
-      val patches = s.read.parquet(nodesDir.toString)
+      val patches = Tables.parquet(s, nodesDir.toString)
         .groupBy("node").agg(expr("max_by(label, batch_id)").as("label"))
       base.join(patches.select("node"), Seq("node"), "left_anti")
         .unionByName(patches)
     } else base
     val remapPath = new Path(root, "label_remap.parquet")
     if (f.exists(remapPath)) {
-      val remap = s.read.parquet(remapPath.toString)
+      val remap = Tables.parquet(s, remapPath.toString)
       all.join(broadcast(remap), all("label") === remap("old_label"), "left")
         .select(col("node"),
           coalesce(col("new_label"), col("label")).as("label"))
@@ -432,11 +432,11 @@ object SigStore {
     */
   private[graft] def effectiveSizedLabels(s: SparkSession, root: String): DataFrame = {
     val f = fs(s, new Path(root))
-    val base = s.read.parquet(s"$root/labels.parquet")
+    val base = Tables.parquet(s, s"$root/labels.parquet")
       .select("node", "label", "cluster_size")
     val nodesDir = new Path(root, "label_nodes.parquet")
     val all = if (f.exists(nodesDir)) {
-      val patches = s.read.parquet(nodesDir.toString)
+      val patches = Tables.parquet(s, nodesDir.toString)
         .groupBy("node").agg(expr("max_by(label, batch_id)").as("label"))
         .withColumn("cluster_size", lit(null).cast("long"))
       base.join(patches.select("node"), Seq("node"), "left_anti")
@@ -444,7 +444,7 @@ object SigStore {
     } else base
     val remapPath = new Path(root, "label_remap.parquet")
     val remapped = if (f.exists(remapPath)) {
-      val remap = s.read.parquet(remapPath.toString)
+      val remap = Tables.parquet(s, remapPath.toString)
       all.join(broadcast(remap), all("label") === remap("old_label"), "left")
         .select(col("node"),
           coalesce(col("new_label"), col("label")).as("label"),
@@ -452,7 +452,7 @@ object SigStore {
     } else all
     val ovPath = sizeOverridePath(root)
     if (f.exists(ovPath)) {
-      val ov = s.read.parquet(ovPath.toString)
+      val ov = Tables.parquet(s, ovPath.toString)
         .select(col("label").as("ov_label"), col("cluster_size").as("ov_size"))
       remapped.join(broadcast(ov), remapped("label") === ov("ov_label"), "left")
         .select(col("node"), col("label"),
@@ -527,7 +527,7 @@ object SigStore {
       deltaSh: DataFrame,
       shStats: () => Option[(Long, Long)] = () => None): (DataFrame, DataFrame) = {
     val baseLabels = effectiveLabels(s, root)
-    val store = s.read.parquet(s"$root/sigs.parquet")
+    val store = Tables.parquet(s, s"$root/sigs.parquet")
       .select(col("doc_id").as("base_id"), col("simhash").as("bs"),
         col("band_id"), col("band_bits"))
     // SIGNATURE CONTRACTION before the banded probe (r17, VERDICT r16
@@ -810,7 +810,7 @@ object SigStore {
     val (relabel, deltaOut) = contractDeltaSh(s, root, deltaSh, shStats)
     val remapPath = new Path(root, "label_remap.parquet")
     val oldRemap =
-      if (f.exists(remapPath)) s.read.parquet(remapPath.toString)
+      if (f.exists(remapPath)) Tables.parquet(s, remapPath.toString)
       else s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField("old_label",
@@ -865,7 +865,7 @@ object SigStore {
       .groupBy("label").agg(count(lit(1)).as("cluster_size"))
     val ovPath = sizeOverridePath(root)
     val oldOv =
-      if (f.exists(ovPath)) s.read.parquet(ovPath.toString)
+      if (f.exists(ovPath)) Tables.parquet(s, ovPath.toString)
       else s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField("label",
@@ -927,7 +927,7 @@ object SigStore {
     */
   private def ensureSized(s: SparkSession, root: String): Unit = synchronized {
     val f = fs(s, new Path(root))
-    val hasSizes = s.read.parquet(s"$root/labels.parquet")
+    val hasSizes = Tables.parquet(s, s"$root/labels.parquet")
       .schema.fieldNames.contains("cluster_size")
     val legacyPatches = f.exists(new Path(root, "label_nodes.parquet")) &&
       !f.exists(sizeOverridePath(root))

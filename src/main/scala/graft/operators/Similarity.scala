@@ -139,21 +139,21 @@ object Similarity {
     * (SigStore, BmStore, AnnIndexIO, Upsert, IncrementalStats) already
     * canonicalizes; this was the one straggler.
     */
-  private def cacheKey(d: String): String = {
+  private def cacheKey(s: SparkSession, d: String): String = {
     val canon = try new java.io.File(d).getCanonicalPath catch {
       case _: java.io.IOException => d
     }
-    s"$canon@${Tables.tableFingerprint(d, "embeddings")}"
+    s"$canon@${Tables.fingerprint(s, Tables.path(d, "embeddings"))}"
   }
 
   private def embCount(s: SparkSession, d: String): Long =
-    embCounts.getOrElseUpdate(cacheKey(d), {
+    embCounts.getOrElseUpdate(cacheKey(s, d), {
       graft.ColdBuilds.record("emb_count")
       Tables.embeddings(s, d).select("vec_id").count()
     })
 
   private def embDim(s: SparkSession, d: String): Int =
-    embDims.getOrElseUpdate(cacheKey(d), {
+    embDims.getOrElseUpdate(cacheKey(s, d), {
       graft.ColdBuilds.record("emb_dim")
       Tables.embeddings(s, d).select(size(col("embedding"))).head.getInt(0)
     })
@@ -286,7 +286,7 @@ object Similarity {
     scala.collection.concurrent.TrieMap.empty[String, Array[Array[Double]]]
 
   private def trainedCentroids(s: SparkSession, d: String): Array[Array[Double]] =
-    kmeansCents.getOrElseUpdate(cacheKey(d), {
+    kmeansCents.getOrElseUpdate(cacheKey(s, d), {
       graft.ColdBuilds.record("kmeans_trainer")
       val e = withEmb(s, d)
       val k = kmeansKFor(embCount(s, d))
@@ -342,16 +342,16 @@ object Similarity {
   /** The semassign family's dir name for a dataset — exposed for
     * [[graft.StoreGc]]'s liveness derivation (r20, VERDICT r19 #5).
     */
-  private[graft] def semStoreKey(d: String): String = {
+  private[graft] def semStoreKey(s: SparkSession, d: String): String = {
     StoreRegistry.note(d)
     java.security.MessageDigest.getInstance("MD5")
-      .digest(cacheKey(d).getBytes("UTF-8")).map("%02x".format(_))
+      .digest(cacheKey(s, d).getBytes("UTF-8")).map("%02x".format(_))
       .mkString.take(12)
   }
 
   private[graft] def semStoreRoot(s: SparkSession, d: String)
       : (org.apache.hadoop.fs.Path, org.apache.hadoop.fs.FileSystem) = {
-    val key = semStoreKey(d)
+    val key = semStoreKey(s, d)
     val root = new org.apache.hadoop.fs.Path(new java.io.File(
       new java.io.File(sys.props.getOrElse("java.io.tmpdir", "/tmp"),
         "graft_semassign"), key).toString)
@@ -392,13 +392,13 @@ object Similarity {
     * existed fall back to the trainer.
     */
   private def storedCentroids(s: SparkSession, d: String): Array[Array[Double]] =
-    kmeansCents.getOrElseUpdate(cacheKey(d), {
+    kmeansCents.getOrElseUpdate(cacheKey(s, d), {
       val (root, f) = semStoreRoot(s, d)
       val cdst = centroidsPath(root)
       val published = f.exists(new org.apache.hadoop.fs.Path(root, "_READY"))
       if (published && f.exists(cdst)) {
         graft.ColdBuilds.record("kmeans_centroids_load")
-        val rows = s.read.parquet(cdst.toString)
+        val rows = Tables.parquet(s, cdst.toString)
           .orderBy("cluster_id").collect()
         require(rows.nonEmpty, s"published centroid store is empty: $cdst")
         rows.map(_.getSeq[Double](1).toArray)
@@ -478,7 +478,7 @@ object Similarity {
   }
 
   private[operators] def annIndex(e: DataFrame, d: String): AnnIndex =
-    annIndexCache.getOrElseUpdate(cacheKey(d), {
+    annIndexCache.getOrElseUpdate(cacheKey(e.sparkSession, d), {
       // the build probe stays keyed by the BARE dir: a content refresh
       // that legitimately retrains should count as a second build there
 
@@ -649,7 +649,7 @@ object Similarity {
 
   private def prodIndex(s: SparkSession, d: String)
       : (Array[Array[Double]], Array[Array[Array[Double]]]) =
-    prodIndexCache.getOrElseUpdate(cacheKey(d), {
+    prodIndexCache.getOrElseUpdate(cacheKey(s, d), {
       graft.ColdBuilds.record("ann_prod_train")
       // train on NORMALIZED vectors: the production index ranks by ADC-L2
       // but the ground truth (and the user's intent) is cosine; on unit
@@ -1473,7 +1473,7 @@ object Similarity {
         // the SAME _READY, so assignment and head can never tear; sized
         // K × SemanticTopK rows — kilobytes at any corpus scale.
         graft.ColdBuilds.record("sem_pairs_build")
-        val aM = s.read.parquet(dst.toString).transform(Materialize.once)
+        val aM = Tables.parquet(s, dst.toString).transform(Materialize.once)
         val ptmp = new org.apache.hadoop.fs.Path(root, "toppairs.tmp")
         // repartition(1), NOT coalesce(1): coalesce would fold the final
         // ranking stage into the single writer task; the extra shuffle
@@ -1490,7 +1490,7 @@ object Similarity {
       // embedding_kmeans / embedding_prototypicality each consume the
       // frame once, and localCheckpointing the full (emb, nrm) payload
       // for a single narrow scan contradicts the store's whole point.
-      s.read.parquet(dst.toString)
+      Tables.parquet(s, dst.toString)
     }
 
   /** The (vec_id, cluster_id, emb, nrm) assignment the store persists:
@@ -1586,7 +1586,7 @@ object Similarity {
       // published the same bytes).
       if (!f.exists(pdst)) {
         graft.ColdBuilds.record("sem_pairs_build")
-        val aM = s.read.parquet(
+        val aM = Tables.parquet(s, 
           new org.apache.hadoop.fs.Path(root, "assign.parquet").toString)
           .transform(Materialize.once)
         val ptmp = new org.apache.hadoop.fs.Path(root, "toppairs.tmp")
@@ -1600,7 +1600,7 @@ object Similarity {
       }
     }
     graft.ColdBuilds.record("sem_pairs_load")
-    s.read.parquet(pdst.toString)
+    Tables.parquet(s, pdst.toString)
       .withColumn("is_dup", col("cosine") >= SemanticDupThreshold)
       .select("cluster_id", "rank", "id1", "id2", "cosine", "is_dup")
   }

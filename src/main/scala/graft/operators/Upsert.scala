@@ -120,7 +120,7 @@ object Upsert {
       val docs = Tables.documents(s, d)
       Writers.mergeUpsert(s, work, deltaOf(docs),
         keyCols = Seq("doc_id"), partitionCol = "lang", sortCols = Seq("doc_id"))
-      s.read.parquet(work)
+      Tables.parquet(s, work)
         .groupBy("lang", "source")
         .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("sum_chars"))
     })

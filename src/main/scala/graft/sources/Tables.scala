@@ -1,16 +1,69 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Loaders for the driver's parquet testdata (TESTDATA.md). One parquet file
   * per table under `$sfDir/<name>.parquet`; schemas in FIXTURES.md §B.
-  * Plain `spark.read.parquet` keeps the scan a v2 `BatchScan` with full
-  * filter pushdown / column pruning — the 100 TB path is the same code with
-  * a bigger directory.
+  *
+  * Every plain parquet read in the engine goes through [[parquet]], which
+  * infers a file version's schema once. The scan is the V1
+  * `FileSourceScanExec` (`FileScan parquet … InMemoryFileIndex`) with filter
+  * pushdown and column pruning — the 100 TB path is the same code with a
+  * bigger directory.
   */
 object Tables {
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    parquet(spark, path(sfDir, name))
+
+  private[graft] def path(sfDir: String, name: String): String =
+    s"$sfDir/$name.parquet"
+
+  /** The parquet file or directory at `path` (a literal path, not a glob).
+    *
+    * A plain `spark.read.parquet(path)` runs a one-task Spark job to infer
+    * the schema on every call, even for a single file
+    * (`ParquetUtils.inferSchema` goes through `mergeSchemasInParallel`).
+    * This reader infers once per file version and afterwards reads with
+    * `spark.read.schema(cached).parquet(path)`: the same relation, scan and
+    * `ReadSchema`, without the job. The key is the path, its listing
+    * [[fingerprint]] (a rewrite in place has new part names or lengths, so
+    * it misses and is inferred again) and every session conf that steers
+    * parquet schema inference — [[eventsNormalized]] sets `nanosAsLong`
+    * before it reads, and the two settings infer different types.
+    */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    schemas.read(spark, path)
+
+  /** A bounded LRU of inferred schemas; see [[parquet]]. */
+  private[graft] final class SchemaCache(bound: Int) {
+    private type Key = (String, String, Map[String, String])
+    private val lru = new java.util.LinkedHashMap[Key, StructType](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[Key, StructType]): Boolean =
+        this.size() > bound
+    }
+
+    def size: Int = lru.synchronized(lru.size())
+
+    def read(spark: SparkSession, path: String): DataFrame = {
+      val key = (path, fingerprint(spark, path), inferenceConfs(spark))
+      lru.synchronized(Option(lru.get(key))) match {
+        case Some(schema) => spark.read.schema(schema).parquet(path)
+        case None =>
+          val df = spark.read.parquet(path)
+          lru.synchronized(lru.put(key, df.schema))
+          df
+      }
+    }
+  }
+
+  private val schemas = new SchemaCache(256)
+
+  private val InferencePrefixes = Seq("spark.sql.parquet.", "spark.sql.legacy.parquet.")
+
+  private def inferenceConfs(spark: SparkSession): Map[String, String] =
+    spark.conf.getAll.filter { case (k, _) => InferencePrefixes.exists(k.startsWith) }
 
   /** `events.ts` has shipped under two physical parquet types across fixture
     * generations: TIMESTAMP(NANOS) (which vanilla Spark refuses — readable
@@ -44,33 +97,26 @@ object Tables {
     }
   }
 
-  /** Cheap content fingerprint of one table's backing files (name, length,
-    * mtime per part file — no data read). Per-dir model caches
+  /** Cheap content fingerprint of a parquet path's backing files (name,
+    * length, mtime per part file — no data read). [[parquet]]'s schema
+    * cache and the per-dir model caches
     * ([[graft.operators.Similarity]]'s trained index/centroids/counts,
-    * [[graft.operators.Dedup]]'s plan-stats scalars) key on
-    * `dir@fingerprint` instead of the bare dir path, so a dataset dir
-    * REWRITTEN IN PLACE (long-running JVM serving a refreshed corpus,
-    * tests reusing a temp path) naturally misses the cache and retrains —
-    * previously the only invalidation path was the manual test seam
-    * (ADVICE r10). Listing a handful of part files is microseconds; the
-    * caches' getOrElseUpdate still bounds real work to once per content
-    * version.
+    * [[graft.operators.Dedup]]'s plan-stats scalars, the BmStore root) key
+    * on it instead of the bare path, so a dataset REWRITTEN IN PLACE
+    * (long-running JVM serving a refreshed corpus, tests reusing a temp
+    * path) naturally misses the cache and rebuilds. Listing a handful of
+    * part files is microseconds; the caches still bound real work to once
+    * per content version.
+    *
+    * The listing goes through Hadoop FS with the caller's session's
+    * configuration, so an HDFS/S3 dataset root resolves its own scheme (a
+    * local-File probe never sees those files, and the fingerprint would
+    * collapse to the constant "absent" hash).
     */
-  def tableFingerprint(sfDir: String, name: String): String = {
-    // Probe through Hadoop FS, not java.io.File (ADVICE r11 / the
-    // adbb42e overlap-store fix): on an HDFS/S3 dataset root a local-File
-    // probe never sees the files, the fingerprint collapses to the
-    // constant "absent" hash, and an in-place rewrite would serve stale
-    // cached models. The active session's hadoopConfiguration resolves
-    // the scheme; a bare Configuration covers the no-session case
-    // (file:// only — exactly where java.io.File was correct anyway).
-    val conf = SparkSession.getActiveSession
-      .orElse(SparkSession.getDefaultSession)
-      .map(_.sparkContext.hadoopConfiguration)
-      .getOrElse(new org.apache.hadoop.conf.Configuration())
-    val root = new org.apache.hadoop.fs.Path(s"$sfDir/$name.parquet")
-    val fs = root.getFileSystem(conf)
-    def walk(st: org.apache.hadoop.fs.FileStatus): Seq[org.apache.hadoop.fs.FileStatus] =
+  private[graft] def fingerprint(spark: SparkSession, path: String): String = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def walk(st: FileStatus): Seq[FileStatus] =
       if (st.isDirectory)
         fs.listStatus(st.getPath).sortBy(_.getPath.getName).toSeq.flatMap(walk)
       else Seq(st)

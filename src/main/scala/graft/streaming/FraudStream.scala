@@ -163,6 +163,9 @@ object FraudStream {
       .as[Transaction]
   }
 
+  private val rejectionTime =
+    udf(() => new java.sql.Timestamp(System.currentTimeMillis())).asNondeterministic()
+
   /** [[parse]] with a dead-letter channel: the reference's
     * `JsonRowDeserializationSchema` fails the task on malformed JSON; at
     * 100 TB/day a poison record must not kill the job. PERMISSIVE
@@ -170,6 +173,12 @@ object FraudStream {
     * null (or that lack the two fields scoring cannot proceed without)
     * route to a dead-letter frame carrying the raw payload for replay.
     * Returns (good, dead) — same upstream scan, two filtered views.
+    *
+    * `rejected_at` is each row's own rejection time, a timestamp. It is
+    * not `current_timestamp()`: streaming replaces that with a per-batch
+    * literal, codegen inlines the literal as a `long` constant, and every
+    * dead-letter batch would compile its projection anew, once on the
+    * driver and once in a task.
     */
   def parseWithDeadLetter(kafka: DataFrame): (Dataset[Transaction], DataFrame) = {
     val parsed = kafka
@@ -177,7 +186,7 @@ object FraudStream {
         from_json(col("value").cast("string"), txSchema).as("tx"))
     val bad = parsed.filter(
       col("tx").isNull || col("tx.card_id").isNull || col("tx.timestamp").isNull)
-      .select(col("raw"), current_timestamp().as("rejected_at"))
+      .select(col("raw"), rejectionTime().as("rejected_at"))
     val good = watermarked(parsed.filter(
       col("tx").isNotNull && col("tx.card_id").isNotNull && col("tx.timestamp").isNotNull))
     (good, bad)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
 import graft.operators.Overlap
+import graft.sources.Tables
 
 /** Stream-maintained per-source MinHash signatures for cross-source
   * overlap monitoring — the overlap family's ingest twin (SigStream :
@@ -73,7 +74,7 @@ object OverlapStream {
       require(fs.rename(tmp, hp), s"overlap store heal failed: $tmp")
     val stored: Array[(String, Int, Long)] =
       if (fs.exists(hp))
-        s.read.parquet(path).as[(String, Int, Long)].collect()
+        Tables.parquet(s, path).as[(String, Int, Long)].collect()
       else Array.empty
     val merged = (stored ++ batchSigs)
       .groupBy(r => (r._1, r._2))
@@ -102,5 +103,5 @@ object OverlapStream {
     */
   def estimates(s: SparkSession, root: String): DataFrame =
     Overlap.estimateFromSigl(
-      s.read.parquet(sigsPath(root)).select(col("source"), col("i"), col("v")))
+      Tables.parquet(s, sigsPath(root)).select(col("source"), col("i"), col("v")))
 }

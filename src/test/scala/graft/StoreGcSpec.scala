@@ -33,7 +33,7 @@ class StoreGcSpec extends AnyFunSuite {
     val live = mkStore(famRoot, liveName, ageMs = 10L * 24 * 3600 * 1000)
     val orphanOld = mkStore(famRoot, "deadbeef0000", ageMs = 10L * 24 * 3600 * 1000)
     val orphanYoung = mkStore(famRoot, "deadbeef1111")
-    val sweeps = StoreGc.sweep(Seq(sf), minAgeMs = 24L * 3600 * 1000,
+    val sweeps = StoreGc.sweep(spark, Seq(sf), minAgeMs = 24L * 3600 * 1000,
       tmpRoot = tmpRoot.toString, families = Seq("graft_sigstore"))
     val s = sweeps.head
     assert(s.reaped == Seq("deadbeef0000"))
@@ -48,20 +48,20 @@ class StoreGcSpec extends AnyFunSuite {
     val tmpRoot = java.nio.file.Files.createTempDirectory("gc_tmp").toFile
     val famRoot = new java.io.File(tmpRoot, "graft_semassign")
     val orphan = mkStore(famRoot, "feedface2222", ageMs = 10L * 24 * 3600 * 1000)
-    val s = StoreGc.sweep(Seq.empty, minAgeMs = 1000L, dryRun = true,
+    val s = StoreGc.sweep(spark, Seq.empty, minAgeMs = 1000L, dryRun = true,
       tmpRoot = tmpRoot.toString, families = Seq("graft_semassign")).head
     assert(s.reaped == Seq("feedface2222") && orphan.isDirectory)
   }
 
   test("liveness derivation matches every family's real key scheme") {
     assume(TestSpark.fixturesPresent, TestSpark.fixturesHint)
-    val names = StoreGc.liveNames(sf)
+    val names = StoreGc.liveNames(spark, sf)
     assert(names.keySet == StoreGc.Families.toSet)
     // spot-pin two derivations against the owning modules
     assert(names("graft_aggstate").head ==
       new java.io.File(graft.operators.IncrementalStats.stateRoot(sf)).getName)
     assert(names("graft_semassign").head ==
-      graft.operators.Similarity.semStoreKey(sf))
+      graft.operators.Similarity.semStoreKey(spark, sf))
     assert(names("graft_bmstore").exists(_.startsWith("full_")))
     assert(names("graft_ann_index").exists(_.startsWith("stream_")))
     assert(names("graft_sigstore").exists(_.endsWith("_absorbed")))
@@ -86,7 +86,7 @@ class StoreGcSpec extends AnyFunSuite {
     w.write(ds.getCanonicalPath + "\n" + deadDs.getCanonicalPath + "\n")
     w.close()
     assert(deadDs.delete(), "dead dataset dir teardown failed")
-    val s = StoreGc.sweep(Seq.empty, minAgeMs = 24L * 3600 * 1000,
+    val s = StoreGc.sweep(spark, Seq.empty, minAgeMs = 24L * 3600 * 1000,
       tmpRoot = tmpRoot.toString, families = Seq("graft_sigstore")).head
     assert(live.isDirectory,
       "registry-known store reaped despite its dataset existing")
@@ -108,7 +108,7 @@ class StoreGcSpec extends AnyFunSuite {
     // exists, then verify a zero-age sweep classifies it LIVE
     val root = graft.operators.SigStore.ensureBuilt(spark, sf)
     assert(new java.io.File(root, "_STORE_READY").exists())
-    val sweeps = StoreGc.sweep(Seq(sf), minAgeMs = 0L, dryRun = true,
+    val sweeps = StoreGc.sweep(spark, Seq(sf), minAgeMs = 0L, dryRun = true,
       families = Seq("graft_sigstore"))
     assert(new java.io.File(root, "_STORE_READY").exists())
     assert(!sweeps.head.reaped.contains(new java.io.File(root).getName),

@@ -135,4 +135,32 @@ class StreamingSpec extends AnyFunSuite {
     assert(dead.count() == 3)
     assert(dead.columns.contains("raw"))
   }
+
+  test("the dead-letter query compiles no new code once warm, rejected_at stays a timestamp") {
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val ms = MemoryStream[String]
+    val (_, dead) = FraudStream.parseWithDeadLetter(ms.toDF())
+    val q = dead.writeStream.format("memory").queryName("dead_letter_codegen")
+      .option("checkpointLocation", Files.createTempDirectory("dlq").toString)
+      .start()
+    try {
+      def batch(i: Int): Unit = {
+        ms.addData(s"not json $i", s"""{"card_id":"c$i"}""")
+        q.processAllAvailable()
+      }
+      (0 until 3).foreach(batch)
+      val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+      val warm = compiles.getCount
+      (3 until 8).foreach(batch)
+      assert(compiles.getCount == warm, "dead-letter batches recompiled their projection")
+    } finally q.stop()
+    val out = spark.table("dead_letter_codegen")
+    assert(out.count() == 16)
+    assert(out.schema("rejected_at").dataType == org.apache.spark.sql.types.TimestampType)
+    val json = out.select(org.apache.spark.sql.functions.to_json(
+      org.apache.spark.sql.functions.struct($"raw", $"rejected_at"))).as[String].collect()
+    assert(json.forall(_.matches(
+      """.*"rejected_at":"\d{4}-\d{2}-\d{2}T\d{2}:\d{2}:\d{2}\.\d{3}Z"}""")), json.head)
+  }
 }
