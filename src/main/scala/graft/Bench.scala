@@ -1,29 +1,26 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main: one JSON line with per-query wall seconds on
-  * `SPARK_GRAFT_SF_DIR` (driver runs sf0.1).
+  * `SPARK_GRAFT_SF_DIR` (default sf0.1). An outside driver parses the
+  * last stdout line, so its field names are fixed.
   *
-  * Headline set = one representative per operator family (agg, join chain,
-  * window, top-k, set ops, sessionize, fraud scoring, dedup×3, ANN×2,
-  * text×2, multimodal) — the full 40+ query surface is exercised by
-  * Verify; bench keeps a stable, interpretable basket. The timed action
-  * is `count()`, which collects nothing to the driver but lets Catalyst
-  * prune unused columns, windows and expressions, so a row can time a
-  * smaller plan than the one Verify checks (ROADMAP item 1).
+  * [[headline]] is a stable basket across every operator family; Verify
+  * covers the whole registered surface. Each timed run is [[timeQuery]],
+  * a `noop` write of the whole result, so a row times the plan Verify
+  * checks. `runMain graft.Bench q1 q2` times just those queries, and an
+  * unregistered name fails before the session starts.
   *
-  * Measurement discipline (VERDICT r5: the committed r5 artifact was one
-  * contended run showing a 12× phantom regression): each query runs
-  * GRAFT_BENCH_RUNS times (default 3, round-robin over the basket so
-  * back-to-back runs of one query don't share a warm page cache the
-  * others lack), `queries` reports per-query MEDIANS, and `spread`
-  * records each query's [min,max] so a contended sample is visible in
-  * the artifact instead of silently becoming the number.
+  * Each query runs GRAFT_BENCH_RUNS times (default 3), round-robin over
+  * the basket so back-to-back runs of one query don't share a warm page
+  * cache the others lack; `queries` reports per-query medians and the
+  * detail file's `spread` each query's [min,max], so a contended sample
+  * is visible instead of silently becoming the number.
   */
 object Bench {
 
-  /** Artifact-discipline helper shared with [[ScaleSmoke]]: write the
+  /** Artifact-discipline helper shared with [[WarmServe]]: write the
     * full per-query detail lines to `envVar`'s path (or the default) and
     * return that path for the short final-stdout-line summary. Failures
     * log and return the path anyway — a missing detail file must never
@@ -135,24 +132,22 @@ object Bench {
   private def loadAvg(): Double =
     java.lang.management.ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
 
-  private[graft] def processCpuNs(): Long =
+  private def processCpuNs(): Long =
     java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
       case os: com.sun.management.OperatingSystemMXBean => os.getProcessCpuTime
       case _ => -1L
     }
 
-  /** Frozen fixed-flop calibration arm (r18, VERDICT r17 #2) — the batch
-    * twin of StreamBench's `calib_eps`: a plan-stable, I/O-free,
-    * codegen'd arithmetic aggregation over `spark.range`, timed once per
-    * round-robin pass and emitted as `calib_rps` (median) +
-    * `calib_samples` beside cpu_total/loadavg. Cross-round artifact
-    * reads divide by it: if a row's wall moved but its rate/calib ratio
-    * did not, the box moved, not the code — this round's driver capture
-    * (BENCH_r17: 81.2 s at loadavg 2.67 vs 70–73 s local) needed
-    * judge-side forensics precisely because Bench had no such column.
-    * The definition is FROZEN (rows, expression, partitioning): any
-    * edit invalidates cross-round ratio reads — note it in the round
-    * log if ever necessary.
+  /** Frozen fixed-flop calibration arm (r18, VERDICT r17 #2): a
+    * plan-stable, I/O-free, codegen'd arithmetic aggregation over
+    * `spark.range`, timed once per round-robin pass and emitted as
+    * `calib_rps` (median) and `calib_samples` beside cpu_total/loadavg.
+    * Cross-round artifact reads divide by it: if a row's wall moved but
+    * its rate/calib ratio did not, the box moved, not the code (BENCH_r17:
+    * 81.2 s at loadavg 2.67 vs 70–73 s local needed judge-side forensics
+    * because Bench had no such column). The definition is FROZEN (rows,
+    * expression, partitioning): any edit invalidates cross-round ratio
+    * reads.
     */
   private val CalibRows = 1000L * 1000 * 1000
 
@@ -224,13 +219,29 @@ object Bench {
     * #4's second ask: a capture degraded by heap pressure shows a high
     * GC fraction even when the box is otherwise idle).
     */
-  private[graft] def gcTimeMs(): Long = {
+  private def gcTimeMs(): Long = {
     import scala.jdk.CollectionConverters._
     java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
       .asScala.map(b => math.max(0L, b.getCollectionTime)).sum
   }
 
+  /** One timed run of `q` to its full result through
+    * [[SparkEntry.runFull]]: (wall s, process CPU s or -1 where the JVM
+    * does not report CPU time). Building the frame is inside the timer,
+    * so eager work a query does while it is built is counted.
+    */
+  private[graft] def timeQuery(spark: SparkSession, sfDir: String,
+      q: (SparkSession, String) => DataFrame): (Double, Double) = {
+    val t0 = System.nanoTime()
+    val c0 = processCpuNs()
+    SparkEntry.runFull(q(spark, sfDir))
+    val wall = (System.nanoTime() - t0) / 1e9
+    val c1 = processCpuNs()
+    (wall, if (c0 >= 0 && c1 >= 0) (c1 - c0) / 1e9 else -1.0)
+  }
+
   def main(args: Array[String]): Unit = {
+    val basket = SparkEntry.registered(if (args.nonEmpty) args.toSeq else headline)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Session.local()
     // stderr: the driver's contract is ONE stdout JSON line (the total)
@@ -238,11 +249,9 @@ object Bench {
       Conditions.row("bench", "sf_dir" -> sfDir, "master" -> spark.sparkContext.master))
     // Warmup: JIT/codegen paths + parquet footers, so the first timed query
     // doesn't absorb one-time session costs.
-    spark.read.parquet(s"$sfDir/lineitem.parquet")
-      .groupBy("l_returnflag").count().count()
+    SparkEntry.runFull(spark.read.parquet(s"$sfDir/lineitem.parquet")
+      .groupBy("l_returnflag").count())
     val queries = SparkEntry.queries
-    // dev: `runMain graft.Bench q1 q2` times just those queries
-    val basket = (if (args.nonEmpty) args.toSeq else headline).filter(queries.contains)
     val runs = math.max(1, sys.env.getOrElse("GRAFT_BENCH_RUNS", "3").toInt)
     val errors = scala.collection.mutable.LinkedHashSet.empty[String]
     val samples = scala.collection.mutable.Map.empty[String, List[Double]]
@@ -279,27 +288,20 @@ object Bench {
           gcFracs += (gcNow - gcPrev) / ((wallNow - gcWallPrev) / 1e6)
         gcPrev = gcNow; gcWallPrev = wallNow
       }
-      val t0 = System.nanoTime()
-      val c0 = processCpuNs()
       val cb0 = graft.ColdBuilds.mark()
-      val ok =
-        try { queries(name)(spark, sfDir).count(); true }
-        catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] $name failed (run $r): $e")
-            errors += name
-            false
-        }
+      // a failed run contributes no sample, never its partial wall time
+      try {
+        val (wall, cpu) = timeQuery(spark, sfDir, queries(name))
+        samples(name) = samples(name) :+ wall
+        if (cpu >= 0) cpuSamples(name) = cpuSamples(name) :+ cpu
+      } catch {
+        case e: Throwable =>
+          System.err.println(s"[bench] $name failed (run $r): $e")
+          errors += name
+      }
       val colds = graft.ColdBuilds.since(cb0)
       if (colds.nonEmpty)
         coldBuilds(name) = coldBuilds.getOrElse(name, Seq.empty) ++ colds
-      // a failed run contributes no sample, never its partial wall time
-      if (ok) {
-        samples(name) = samples(name) :+ (System.nanoTime() - t0) / 1e9
-        val c1 = processCpuNs()
-        if (c0 >= 0 && c1 >= 0)
-          cpuSamples(name) = cpuSamples(name) :+ (c1 - c0) / 1e9
-      }
     }
     val loadEnd = loadAvg()
     def median(xs: List[Double]): Double = {

@@ -4,9 +4,9 @@ package graft
   * cache helper (Lloyd k-means trainer, ANN index train sample, BM25
   * store build / frozen-stats collect, jaccard df-histogram probe, …)
   * records a named event when it actually executes its BUILDING branch
-  * (a cache hit records nothing). Bench and ScaleSmoke snapshot the
-  * registry around each timed query and emit the cold builds that fired
-  * inside that timer into the artifact row (VERDICT r13 #2/#7): a
+  * (a cache hit records nothing). Bench snapshots the registry around
+  * each timed query and emits the cold builds that fired inside that
+  * timer into the artifact row, and WarmServe gates on it (VERDICT r13 #2/#7): a
   * cached-helper query whose first invocation pays a one-time build can
   * then never book that build into its own serve cost unnoticed — the
   * exact misread behind r12's embedding_kmeans "18.3 s" vs r13's honest

@@ -1,7 +1,7 @@
 package graft
 
 /** One-line JSON of the ACTUAL measurement conditions of this JVM —
-  * emitted by every bench/scale/stream main so an artifact can never
+  * emitted by Bench and by perfbench so an artifact can never
   * again be read against assumed conditions (r14: an env var that
   * silently failed to cross a process boundary would have shipped rows
   * measured at the wrong parallelism with nothing in the artifact to

@@ -36,6 +36,24 @@ object SparkEntry {
       Winnow.queries ++ BpeTrain.queries ++ Dsir.queries ++ QualityRules.queries ++
       Overlap.queries
 
+  /** Runs `df` to its full result: every row and column is computed and
+    * written to the `noop` sink, and nothing is collected to the driver.
+    * Unlike `count()`, which lets Catalyst prune the columns, windows and
+    * joins the count does not need, this executes the plan Verify checks.
+    * Bench's timed runs and WarmServe's serves both go through here.
+    */
+  private[graft] def runFull(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  /** `names`, after requiring that each one is a registered query; the
+    * error lists every unknown name.
+    */
+  private[graft] def registered(names: Seq[String]): Seq[String] = {
+    val unknown = names.filterNot(queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    names
+  }
+
   /** For each key in queries, equivalent SQL runnable by DuckDB on the same
     * parquet tables. Omit for non-SQL-expressible ops.
     */

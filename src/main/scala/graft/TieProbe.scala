@@ -27,7 +27,8 @@ import org.apache.spark.sql.functions._
   *  - MEASURED (per scale point): the mixture family's weight/upsample/
   *    rate columns depend on per-lang corpus counts through p^0.3
   *    (irrational) — measured at every fixture dir passed on the
-  *    command line (sf0.1 plus the generated sf1/sf10 ScaleSmoke dirs).
+  *    command line (sf0.1 plus the sf1/sf10 dirs that
+  *    [[graft.gen.ScaleFixture]] generates).
   *
   * `sbt "runMain graft.TieProbe <dir> [<dir> ...]"` — one JSON line per
   * (column, dir) plus the closed-form lines; redirect to

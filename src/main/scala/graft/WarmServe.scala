@@ -14,9 +14,12 @@ import org.apache.spark.sql.SparkSession
   *   2. (fresh JVM) `runMain graft.WarmServe serve <sfDir> [out.json]` —
   *      serves the same queries and asserts the ColdBuilds trace
   *      contains ONLY load-class entries (zero trainer/assign/build/
-  *      absorb/upgrade), emitting per-query serve wall/cpu as a JSON
-  *      artifact (the SCALE10 warm-restart block, generated instead of
-  *      hand-assembled) and exiting non-zero on any violation.
+  *      absorb/upgrade), emitting each query's cold-build tags as a JSON
+  *      artifact and exiting non-zero on any violation.
+  *
+  * Each query runs to its full result ([[SparkEntry.runFull]]), so the
+  * gate sees every store read of the plan Verify checks; the harness
+  * gates rebuilds and does not time anything.
   *
   * A deliberately torn marker (or any other silent store invalidation)
   * surfaces as the rebuild tag it causes — WarmServeSpec tears one and
@@ -92,25 +95,17 @@ object WarmServe {
       base.endsWith("_load") || WarmOk.contains(base)
     }
 
-  private def processCpuNs(): Long =
-    java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
-      case os: com.sun.management.OperatingSystemMXBean => os.getProcessCpuTime
-      case _ => -1L
-    }
-
-  /** Serve each named query once, returning (wall s, cpu s, cold tags). */
+  /** Serve each named query once to its full result, returning
+    * (name, cold tags).
+    */
   private[graft] def serveOnce(spark: SparkSession, sfDir: String,
       names: Seq[String],
       qs: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] =
-        SparkEntry.queries): Seq[(String, Double, Double, Seq[String])] =
+        SparkEntry.queries): Seq[(String, Seq[String])] =
     names.map { name =>
       val m = ColdBuilds.mark()
-      val t0 = System.nanoTime()
-      val c0 = processCpuNs()
-      qs(name)(spark, sfDir).count(): Unit
-      val wall = (System.nanoTime() - t0) / 1e9
-      val cpu = if (c0 >= 0) (processCpuNs() - c0) / 1e9 else -1.0
-      (name, wall, cpu, ColdBuilds.since(m))
+      SparkEntry.runFull(qs(name)(spark, sfDir))
+      (name, ColdBuilds.since(m))
     }
 
   // ---- mechanical completeness calibration (r20, VERDICT r19 #2) ----
@@ -157,7 +152,7 @@ object WarmServe {
       qs: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] =
         SparkEntry.queries): Map[String, Seq[String]] =
     serveOnce(spark, sfDir, calibOrder(qs.keySet), qs)
-      .map { case (n, _, _, tags) => n -> violations(tags) }.toMap
+      .map { case (n, tags) => n -> violations(tags) }.toMap
 
   /** One calibration sweep with RAW tags (load-class included) — calib-b
     * derives both builders (build tags) and readers (load tags) from the
@@ -166,8 +161,7 @@ object WarmServe {
   private[graft] def rawTagsByQuery(spark: SparkSession, sfDir: String,
       qs: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] =
         SparkEntry.queries): Map[String, Seq[String]] =
-    serveOnce(spark, sfDir, calibOrder(qs.keySet), qs)
-      .map { case (n, _, _, tags) => n -> tags }.toMap
+    serveOnce(spark, sfDir, calibOrder(qs.keySet), qs).toMap
 
   /** Queries whose builds PERSISTED across the JVM boundary: build tags
     * in sweep A, silent in fresh-JVM sweep B.
@@ -329,14 +323,14 @@ object WarmServe {
     val names = servedNames(SparkEntry.queries.keySet)
     val rows = serveOnce(spark, sfDir, names)
     if (mode == "build") {
-      val built = rows.flatMap(_._4)
+      val built = rows.flatMap(_._2)
       System.err.println(s"[warmserve] build phase cold builds: ${built.mkString(", ")}")
       println(s"""{"metric":"warmserve_build","queries":${names.size},"cold_builds":${built.size},"sf":"$sfDir"}""")
     } else {
-      val bad = rows.map(r => r._1 -> violations(r._4)).filter(_._2.nonEmpty)
-      val qJson = rows.map { case (n, w, c, tags) =>
-        "\"" + n + "\":{\"wall\":" + f"$w%.3f" + ",\"cpu\":" + f"$c%.3f" +
-          ",\"cold_builds\":" + tags.map("\"" + _ + "\"").mkString("[", ",", "]") + "}"
+      val bad = rows.map { case (n, tags) => n -> violations(tags) }.filter(_._2.nonEmpty)
+      val qJson = rows.map { case (n, tags) =>
+        "\"" + n + "\":{\"cold_builds\":" +
+          tags.map("\"" + _ + "\"").mkString("[", ",", "]") + "}"
       }.mkString("{", ",", "}")
       val vJson = bad.map { case (n, v) =>
         "\"" + n + "\":" + v.map("\"" + _ + "\"").mkString("[", ",", "]")

@@ -394,9 +394,9 @@ object BmStore {
   }
 
   /** Deterministic synthetic standing queries drawn from the store's
-    * vocabulary — the registration-path fixture shared by StreamBench's
-    * Q=1000 percolation rows and PercolateSpec's parity test (one
-    * definition so bench and spec cannot drift apart, self-review r12).
+    * vocabulary — the registration-path fixture shared by PercolateSpec's
+    * parity test and PercStoreSpec (one definition so the specs cannot
+    * drift apart, self-review r12).
     * floorMod, not abs: abs(Int.MinValue) is negative.
     */
   private[graft] def syntheticStandingQueries(s: SparkSession, root: String,

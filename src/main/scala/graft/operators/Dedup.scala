@@ -360,8 +360,7 @@ object Dedup {
     * would OOM collecting 3 M edges where the distributed fixpoint kept
     * only scalars): a third of `Runtime.maxMemory` at ~350 B/edge, never
     * above 3 M. `GRAFT_CC_DRIVER_MAX_EDGES` overrides for tuning (0
-    * forces the distributed path — how ScaleSmoke measures it as
-    * primary).
+    * forces the distributed path).
     */
   /** The raw env override, exposed so [[SigStore]]'s small-graph gate can
     * honor an operator-set bound (any value, not just the 0

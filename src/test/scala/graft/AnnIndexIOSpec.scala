@@ -131,6 +131,7 @@ class AnnIndexIOSpec extends AnyFunSuite {
       .filter(col("query_id").isin(qids: _*)).collect().map(key)
     assert(got.toSet == expect.toSet)
     assert(got.size == qids.size * 5)
+    assert(got.map(_._1).toSet == qids.toSet, "every streamed query is answered")
   }
 
   test("stream-maintained index equals the batch incremental build") {

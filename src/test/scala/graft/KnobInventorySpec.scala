@@ -29,12 +29,6 @@ class KnobInventorySpec extends AnyFunSuite {
     "GRAFT_BENCH_DETAIL",
     "GRAFT_BENCH_RUNS",
     "GRAFT_CC_DRIVER_MAX_EDGES",
-    "GRAFT_PROF_RUNS",
-    "GRAFT_PROF_STAGES",
-    "GRAFT_SCALE_DETAIL",
-    "GRAFT_SCALE_LABEL",
-    "GRAFT_SCALE_REPLICAS",
-    "GRAFT_STREAM_ONLY",
     "GRAFT_WARMSERVE_DETAIL",
     "SPARK_GRAFT_CPUS",
     "SPARK_GRAFT_ONLY",

@@ -114,8 +114,8 @@ class WarmServeSpec extends AnyFunSuite {
     // warm pass over an already-published store: zero violations
     graft.operators.Similarity.queries("dedup_semantic")(spark, sf).count(): Unit
     val warm = WarmServe.serveOnce(spark, sf, Seq("dedup_semantic"))
-    assert(warm.flatMap(r => WarmServe.violations(r._4)).isEmpty,
-      s"published store must serve warm: ${warm.flatMap(_._4)}")
+    assert(warm.flatMap(r => WarmServe.violations(r._2)).isEmpty,
+      s"published store must serve warm: ${warm.flatMap(_._2)}")
     // tear THIS dataset's assignment-store marker (scoped to its own
     // root — the r18 teardown lesson) and clear the JVM model caches to
     // simulate the silent-invalidation-then-restart sequence
@@ -124,7 +124,7 @@ class WarmServeSpec extends AnyFunSuite {
     assert(marker.exists() && marker.delete(), s"fixture marker tear failed: $marker")
     graft.operators.Similarity.clearAnnIndexCache()
     val torn = WarmServe.serveOnce(spark, sf, Seq("dedup_semantic"))
-    val flagged = torn.flatMap(r => WarmServe.violations(r._4))
+    val flagged = torn.flatMap(r => WarmServe.violations(r._2))
     assert(flagged.exists(_.startsWith("sem_assign_build")),
       s"torn marker must surface as a flagged rebuild, got: $flagged")
     // the rebuild republished the store — later suites see a valid root
