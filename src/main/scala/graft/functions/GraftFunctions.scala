@@ -535,97 +535,24 @@ case class StandingTf(child: Expression, terms: Seq[String])
     copy(child = newChild)
 }
 
-/** Count of an array's elements present in a FROZEN vocabulary — the
-  * membership-count sibling of [[StandingTf]] (which needs the full
-  * per-term count vector; a decontamination gate only needs "how many of
-  * this arrival's keys are in the eval set"). One hash-set probe per
-  * input element, O(|arr|) per row INDEPENDENT of vocabulary size —
-  * summing a StandingTf output would instead cost O(|vocab|) per row,
-  * which a benchmark-suite-sized vocabulary turns into the dominant
-  * per-arrival cost. Accepts array<string> (string vocab) or
-  * array<bigint> (long vocab — winnow fingerprints); the vocabulary
-  * rides in the expression instance like [[IvfTopCells]]'s centroids.
-  */
-case class StandingHits(child: Expression, strVocab: Seq[String],
-    longVocab: Seq[Long]) extends UnaryExpression {
-
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "standing_hits"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) if strVocab.nonEmpty => TypeCheckResult.TypeCheckSuccess
-    case ArrayType(LongType, _) if longVocab.nonEmpty => TypeCheckResult.TypeCheckSuccess
-    case _ => TypeCheckResult.TypeCheckFailure(
-      "standing_hits(array<string>|array<bigint>), matching nonempty vocab")
-  }
-
-  @transient private lazy val strSet: java.util.HashSet[UTF8String] = {
-    val s = new java.util.HashSet[UTF8String](strVocab.size * 2)
-    strVocab.foreach(t => s.add(UTF8String.fromString(t)))
-    s
-  }
-
-  /** Long vocab as a sorted primitive array: binarySearch probes are
-    * allocation-free, where a HashSet<Long> would box every input
-    * fingerprint in the per-arrival hot loop (self-review r12).
-    */
-  @transient private lazy val longArr: Array[Long] = {
-    val a = longVocab.toArray
-    java.util.Arrays.sort(a)
-    a
-  }
-
-  private val isStr = strVocab.nonEmpty
-
-  def hits(input: ArrayData): Int = {
-    var out = 0
-    var i = 0
-    val n = input.numElements()
-    if (isStr) {
-      while (i < n) {
-        if (strSet.contains(input.getUTF8String(i))) out += 1
-        i += 1
-      }
-    } else {
-      val v = longArr
-      while (i < n) {
-        if (java.util.Arrays.binarySearch(v, input.getLong(i)) >= 0) out += 1
-        i += 1
-      }
-    }
-    out
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    hits(input.asInstanceOf[ArrayData])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("standingHits", this, classOf[StandingHits].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $self.hits($c);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): StandingHits =
-    copy(child = newChild)
-}
-
 /** Whole-percolation scoring against a FROZEN standing-query index, as
   * one expression: tokenize-counted term frequencies (the [[StandingTf]]
   * HashMap probe), then a TERM→QUERIES inverted-index walk that touches
   * only the arrival's MATCHED terms — per-row cost O(|tokens| +
   * Σ_{matched terms} |queries(term)|), independent of the standing-query
-  * count Q. The explode-every-query formulation
-  * ([[graft.streaming.Percolate.score]]) pays Σ_q |terms_q| per arrival
-  * whether or not a query shares a term; at prospective-search scale
-  * (thousands of standing queries) almost all of that work is zero rows,
-  * and this inverted walk is the classic percolator fix (Elasticsearch
-  * percolate query indexes, pub-sub IR).
+  * count Q. Exploding every standing query instead pays Σ_q |terms_q|
+  * per arrival whether or not a query shares a term; at
+  * prospective-search scale (thousands of standing queries) almost all of
+  * that work is zero rows, and this inverted walk is the classic
+  * percolator fix (Elasticsearch percolate query indexes, pub-sub IR).
   *
   * Emits array<struct<query_id, n, s>> for queries sharing ≥1 term,
   * ascending query_id; per-term contributions replicate the batch BM25
   * expression tree operation-for-operation (same IEEE order, same
   * BigDecimal HALF_UP quantization Spark's `round` applies to doubles),
-  * so exploded rows are bit-identical to the batch scorer's —
-  * spec-proven in PercolateSpec.
+  * so exploded rows are bit-identical to the batch scorer's. Its only
+  * user is [[PercolateHitsDl]]; BmStoreSpec's docvec == exhaustive serve
+  * pins the scoring.
   */
 case class PercolateHits(child: Expression, nDocs: Long, sumDl: Long,
     terms: Seq[String], termDf: Seq[Long], termQueries: Seq[Seq[Long]])
@@ -778,8 +705,7 @@ case class PercolateHits(child: Expression, nDocs: Long, sumDl: Long,
   * its stored (token, tf) rows contains only standing-vocabulary tokens,
   * so the true `dl` (stored per posting at index-build time) must ride
   * in as a column, not be inferred from the array length. Scoring is the
-  * shared [[PercolateHits.hitsFor]] core, so stream-percolation parity
-  * (PercolateSpec) transfers verbatim.
+  * shared [[PercolateHits.hitsFor]] core.
   */
 case class PercolateHitsDl(tokens: Expression, dlExpr: Expression,
     nDocs: Long, sumDl: Long, terms: Seq[String], termDf: Seq[Long],
@@ -910,29 +836,6 @@ object GraftFunctions {
     name
   }
 
-  /** Register a [[PercolateHits]] bound to a frozen standing-query index
-    * and return its content-addressed session function name.
-    */
-  def registerPercolateHits(spark: SparkSession, nDocs: Long, sumDl: Long,
-      terms: Seq[String], termDf: Seq[Long],
-      termQueries: Seq[Seq[Long]]): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val bb = java.nio.ByteBuffer.allocate(16)
-    bb.putLong(nDocs); bb.putLong(sumDl)
-    md.update(bb.array())
-    terms.zip(termDf).zip(termQueries).foreach { case ((t, df), qs) =>
-      md.update(t.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      md.update(0.toByte)
-      val b = java.nio.ByteBuffer.allocate(8 * (qs.size + 1))
-      b.putLong(df); qs.foreach(b.putLong)
-      md.update(b.array())
-    }
-    val name = "percolate_hits_" + md.digest().map("%02x".format(_)).mkString
-    registerOnce(spark, name,
-      exprs => PercolateHits(exprs.head, nDocs, sumDl, terms, termDf, termQueries))
-    name
-  }
-
   /** Register a [[PercolateHitsDl]] (explicit-dl percolation scorer) and
     * return its content-addressed session function name.
     */
@@ -953,35 +856,6 @@ object GraftFunctions {
     val name = "percolate_hits_dl_" + md.digest().map("%02x".format(_)).mkString
     registerOnce(spark, name,
       exprs => PercolateHitsDl(exprs(0), exprs(1), nDocs, sumDl, terms, termDf, termQueries))
-    name
-  }
-
-  /** Register a string-vocabulary [[StandingHits]] and return its
-    * content-addressed session function name.
-    */
-  def registerStandingHitsStr(spark: SparkSession, vocab: Seq[String]): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    vocab.foreach { t =>
-      md.update(t.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      md.update(0.toByte)
-    }
-    val name = "standing_hits_s_" + md.digest().map("%02x".format(_)).mkString
-    registerOnce(spark, name,
-      exprs => StandingHits(exprs.head, vocab, Seq.empty))
-    name
-  }
-
-  /** Register a long-vocabulary [[StandingHits]] and return its
-    * content-addressed session function name.
-    */
-  def registerStandingHitsLong(spark: SparkSession, vocab: Seq[Long]): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val bb = java.nio.ByteBuffer.allocate(8 * vocab.size)
-    vocab.foreach(bb.putLong)
-    md.update(bb.array())
-    val name = "standing_hits_l_" + md.digest().map("%02x".format(_)).mkString
-    registerOnce(spark, name,
-      exprs => StandingHits(exprs.head, Seq.empty, vocab))
     name
   }
 

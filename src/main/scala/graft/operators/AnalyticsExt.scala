@@ -10,7 +10,7 @@ import graft.sources.Tables
   * reference's latent sql-client, SURVEY.md §2 X1), and the batch (lag)
   * formulation of CEP-style strict-contiguity sequence detection
   * (SURVEY.md §2 X2 — the reference ships flink-cep as an unused jar; here
-  * it is a real operator, streaming twin in graft.streaming.Cep).
+  * it is a real operator).
   */
 object AnalyticsExt {
 

@@ -25,17 +25,17 @@ import graft.sources.Tables
   * At 100 TB the same layout holds with more cells — each query touches
   * `nprobe/num_cells` of the corpus *files*, not just rows.
   *
-  * Build/publish is crash-safe in the compactShards style
-  * (sources/Writers.scala): write to a `.build_tmp` sibling, then one
+  * Build/publish is crash-safe in the Writers.compactPartitionInternal
+  * style: write to a `.build_tmp` sibling, then one
   * atomic rename publishes the whole index; a torn build is invisible.
   *
   * Incremental maintenance (`ann_ivfpq_incremental`): the model is FROZEN
   * from a hash-sample of the BASE corpus, so appending a delta batch never
   * re-encodes existing vectors — one pass over the delta emits its
   * (cell_id, codes) files straight into the partitioned layout, and a
-  * marker file makes the append idempotent (a retry is a no-op, the
-  * Ingest exactly-once idiom). This is `dedup_incremental`'s analog on the
-  * serving side: index growth costs O(|delta|), never O(|corpus|).
+  * marker file makes the append idempotent (a retry is a no-op). This is
+  * `dedup_incremental`'s analog on the serving side: index growth costs
+  * O(|delta|), never O(|corpus|).
   *
   * Derivation note: IVF/PQ/ADC are public-literature techniques (Jégou et
   * al., "Product Quantization for Nearest Neighbor Search", TPAMI 2011);
@@ -174,8 +174,8 @@ object AnnIndexIO {
     cents.indices.sortBy(i => (-cosine(q, cents(i)), -i)).take(nprobe)
 
   /** Serve a batch of arbitrary query vectors against the persisted index
-    * — the online-serving shape (streaming.AnnServe drives this per
-    * micro-batch). Cell probing and LUTs are pure driver arithmetic over
+    * — the online-serving shape (BmStore's hybrid fusion serve calls it).
+    * Cell probing and LUTs are pure driver arithmetic over
     * the O(model) artifacts; the literal `cell_id IN (…)` filter
     * statically prunes the partitioned code table to the union of probed
     * cells, and the scored side never touches raw vectors. Identical
@@ -286,9 +286,9 @@ object AnnIndexIO {
 
   /** Encode one batch of new vectors with the FROZEN model and commit it
     * under `batch_id=<id>` dirs inside each cell partition — dynamic
-    * partition overwrite, so replaying a micro-batch id rewrites exactly
-    * its own dirs (the streaming.Ingest exactly-once idiom; existing
-    * batches are never touched). One pass over the batch, O(|batch|).
+    * partition overwrite, so replaying a batch id rewrites exactly its
+    * own dirs (existing batches are never touched). One pass over the
+    * batch, O(|batch|).
     */
   private[graft] def appendBatch(s: SparkSession, root: String,
       batch: DataFrame, batchId: Long): Unit = {

@@ -50,10 +50,8 @@ import graft.sources.Tables
   * STORE — per-term df from `df.parquet`, corpus scalars from
   * `meta.parquet` — one O(query-vocab) driver collect at index-refresh
   * time, identical in role (and in type: [[FrozenIndexStats]]) to the
-  * batch [[Retrieval.frozenStats]] and to [[AnnServe]]'s frozen
-  * centroids. The streaming percolator serves from the same frozen
-  * object, so batch serve / incremental serve / percolation all score
-  * against one statistics snapshot.
+  * batch [[Retrieval.frozenStats]]. Batch serve and incremental serve
+  * score against one statistics snapshot.
   *
   * == Incremental growth ==
   *
@@ -109,8 +107,7 @@ object BmStore {
     * serving stale postings/df/meta until a manual [[deleteStore]].
     * Fingerprinting lists a handful of part files (microseconds), and
     * every caller goes through ensure*Built, so the probe runs once per
-    * query invocation, never per serving micro-batch (BmServe holds the
-    * resolved root).
+    * query invocation.
     */
   private[graft] def storeRoot(s: SparkSession, d: String, variant: String): String = {
     StoreRegistry.note(d)
@@ -190,7 +187,7 @@ object BmStore {
     val f = fs(s, rootPath)
     val tmp = new Path(root + ".build_tmp")
     val inputFp = inputFingerprint(baseDocs)
-    // Heal before building (ADVICE r12, the OverlapStream.absorb idiom):
+    // Heal before building (ADVICE r12):
     // a crash in the previous publish's swap window leaves a READY-marked
     // tmp and no (or an unmarked) root — adopt the finished build instead
     // of paying the corpus pass again. Adoption requires the tmp's
@@ -332,8 +329,7 @@ object BmStore {
 
   /** (n_docs, sum_dl) per store root — frozen for the store's lifetime
     * by contract, so the one-row meta read happens once per JVM instead
-    * of once per serving micro-batch (self-review r12: BmServe pays
-    * frozenStatsForQueries per batch).
+    * of once per [[frozenStatsForQueries]] call.
     */
   private val metaCache =
     scala.collection.concurrent.TrieMap.empty[String, (Long, Long)]
@@ -394,9 +390,7 @@ object BmStore {
   }
 
   /** Deterministic synthetic standing queries drawn from the store's
-    * vocabulary — the registration-path fixture shared by PercolateSpec's
-    * parity test and PercStoreSpec (one definition so the specs cannot
-    * drift apart, self-review r12).
+    * vocabulary — a spec fixture for the WAND gate.
     * floorMod, not abs: abs(Int.MinValue) is negative.
     */
   private[graft] def syntheticStandingQueries(s: SparkSession, root: String,
@@ -528,9 +522,10 @@ object BmStore {
   private val planCache =
     scala.collection.concurrent.TrieMap.empty[(String, String), String]
 
-  /** Driver-memory bound for [[planCache]] (ADVICE r14): the BmServe
-    * workload mints a NEW fingerprint every micro-batch, so unbounded
-    * putIfAbsent is a slow driver leak on long-running serve streams.
+  /** Driver-memory bound for [[planCache]] (ADVICE r14): a serving
+    * caller that freezes a new standing set per call mints a NEW
+    * fingerprint every time, so unbounded putIfAbsent is a slow driver
+    * leak on a long-running server.
     * Two defenses: converged adoptions are no longer cached at all (the
     * per-root [[verdictHistory]] answers them in O(1) without a per-
     * fingerprint entry), and real probed verdicts evict an arbitrary
@@ -547,9 +542,9 @@ object BmStore {
 
   /** PROBED verdict history per store root, newest first (bounded at
     * [[VerdictStickyAfter]]) — the convergence cache behind
-    * [[wideServed]]: a serving stream whose batches carry DIFFERENT
-    * standing sets each batch (BmServe's shape — per-batch freeze ⇒
-    * per-batch fingerprint) would otherwise pay a θ probe every batch
+    * [[wideServed]]: a serving caller whose batches carry DIFFERENT
+    * standing sets each batch (per-batch freeze ⇒ per-batch
+    * fingerprint) would otherwise pay a θ probe every batch
     * just to rediscover the docvec verdict its workload always gets.
     * Once the last [[VerdictStickyAfter]] probed verdicts agree, later
     * unseen fingerprints adopt that verdict probe-free; a workload
@@ -794,13 +789,12 @@ object BmStore {
     * postings by doc_id through a shuffle on EVERY serve call) and
     * scores all standing queries per doc in one
     * [[graft.functions.PercolateHitsDl]] pass — the TERM→QUERIES
-    * inverted walk measured 47× over the explode form in streaming
-    * percolation. ZERO shuffles: scan → expression → explode. The stored
+    * inverted walk measured 47× over the explode-every-query form.
+    * ZERO shuffles: scan → expression → explode. The stored
     * `dl` rides in explicitly, and the expression skips tokens outside
     * the standing vocabulary in O(1) per token (hash-index miss), so the
     * standing-agnostic layout costs Σ dl index probes, not a shuffle.
-    * Scoring core is shared with the percolator, so batch-parity
-    * transfers; still no documents scan.
+    * Still no documents scan.
     */
   private[graft] def servedDocVec(s: SparkSession, root: String,
       frozen: FrozenIndexStats): DataFrame = {
@@ -928,7 +922,7 @@ object BmStore {
   }
 
   /** Ranked results in the text_bm25_topk display shape (integer-space
-    * HALF_UP score) — shared by the batch serves and [[graft.streaming.BmServe]].
+    * HALF_UP score).
     */
   private[graft] def serveDisplay(s: SparkSession, root: String,
       frozen: FrozenIndexStats, k: Int): DataFrame =

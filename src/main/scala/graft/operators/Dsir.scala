@@ -69,21 +69,18 @@ object Dsir {
   private val targetsSql = TargetSources.map(s => s"'$s'").mkString(", ")
   private def isTarget = col("source").isin(TargetSources: _*)
 
-  /** SQL fragment hashing a token column into its feature bucket —
-    * shared VERBATIM with [[graft.streaming.DsirGate]] so the frozen
-    * gate's scores cannot drift from the batch formula.
-    */
-  private[graft] def bucketSql(tok: String): String =
+  /** SQL fragment hashing a token column into its feature bucket. */
+  private def bucketSql(tok: String): String =
     // native portable-hash prefix (r21) — bit-identical to
     // cast(conv(substring(md5(x),1,8),16,10) as bigint), which stays the
     // oracle form; consumers must have GraftFunctions.register'd their
-    // session (occ below and the frozen gate both do)
+    // session (occ below does)
     s"md5_prefix8($tok) % $Buckets"
 
-  /** 1e-6-quantized Gumbel noise from doc_id — shared VERBATIM with the
-    * gate for the same reason (u = (md5-prefix + 0.5)/2^32 ∈ (0,1)).
+  /** 1e-6-quantized Gumbel noise from doc_id
+    * (u = (md5-prefix + 0.5)/2^32 ∈ (0,1)).
     */
-  private[graft] val gumbelSql: String =
+  private val gumbelSql: String =
     "cast(round(-ln(-ln((md5_prefix8(concat('dsir:', " +
       "cast(doc_id as string))) + 0.5) " +
       "/ 4294967296.0)) * 1e6) as bigint)"
@@ -99,18 +96,14 @@ object Dsir {
 
   /** The fitted model rows (bucket, ct, cr, lam), cached per dataset-dir
     * CONTENT fingerprint (the kmeansCents idiom): the model is exactly
-    * [[Buckets]] rows — a bounded collect — and it feeds dsir_logratio,
-    * the weights join, AND the gate freeze, so without the cache every
-    * consumer re-paid the full token-stream aggregation (self-review
-    * r11: dsir_sample inside DsirGate.frozen re-scanned the corpus the
-    * logratio query had just aggregated).
+    * [[Buckets]] rows — a bounded collect — and it feeds both
+    * dsir_logratio and the weights join, so without the cache each
+    * consumer re-paid the full token-stream aggregation.
     */
   private val modelCache =
     scala.collection.concurrent.TrieMap.empty[String, Array[(Long, Long, Long, Long)]]
 
-  private[graft] def clearModelCache(): Unit = modelCache.clear()
-
-  private[graft] def modelRows(s: SparkSession, d: String): Array[(Long, Long, Long, Long)] =
+  private def modelRows(s: SparkSession, d: String): Array[(Long, Long, Long, Long)] =
     modelCache.getOrElseUpdate(s"$d@${Tables.fingerprint(s, Tables.path(d, "documents"))}", {
       graft.ColdBuilds.record("dsir_model")
       val counts = occ(s, d).groupBy("bucket").agg(

@@ -52,10 +52,9 @@ object Overlap {
     (0 until NumHashes).map(i => PortableHash.md5Int8(s"ovb:$i") % P)
 
   /** Distinct (source, shingle-hash) from ANY (source, text) frame —
-    * the shared universe of estimate and truth, and the per-micro-batch
-    * pass of the streamed maintainer ([[graft.streaming.OverlapStream]]).
+    * the shared universe of estimate and truth.
     */
-  private[graft] def shingleHashes(docs: DataFrame): DataFrame = {
+  private def shingleHashes(docs: DataFrame): DataFrame = {
     graft.functions.GraftFunctions.register(docs.sparkSession)
     docs
       .withColumn("sh", expr("word_shingles(text)"))
@@ -109,7 +108,7 @@ object Overlap {
     * streamed store's schema — signatures are a join-semilattice under
     * element-wise min, so stored and batch forms merge exactly.
     */
-  private[graft] def sigLong(sh: DataFrame): DataFrame = {
+  private def sigLong(sh: DataFrame): DataFrame = {
     val aggs = (0 until NumHashes).map(i =>
       min(expr(s"(${hashA(i)} * h + ${hashB(i)}) % $P")).as(s"m$i"))
     sh.groupBy("source").agg(aggs.head, aggs.tail: _*)
@@ -122,7 +121,7 @@ object Overlap {
     * freshly built): full pair domain over the sources present, so
     * zero-overlap pairs still appear.
     */
-  private[graft] def estimateFromSigl(sigl: DataFrame): DataFrame = {
+  private def estimateFromSigl(sigl: DataFrame): DataFrame = {
     val matches = sigl.select(col("source").as("source_a"), col("i"), col("v"))
       .join(sigl.select(col("source").as("source_b"), col("i"), col("v")),
         Seq("i", "v"))

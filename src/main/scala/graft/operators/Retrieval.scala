@@ -94,14 +94,12 @@ object Retrieval {
   private def docLen(text: org.apache.spark.sql.Column) =
     (length(text) - length(replace(text, lit(" "), lit(""))) + 1).cast("long")
 
-  /** Per-term document frequency of one standing query's terms, plus the
-    * corpus scalars — the FROZEN statistics the streaming percolator
-    * ([[graft.streaming.Percolate]]) scores arrivals against. Bounded by
-    * the query vocabulary (Q × terms + 2 scalars), never corpus-sized.
-    */
-  /** `idx` positions the term in [[FrozenIndexStats.unionTerms]], the
-    * deduplicated standing vocabulary the percolator's one-pass tf
-    * expression is aligned to.
+  /** Per-term document frequency of the standing queries' terms, plus
+    * the corpus scalars — the FROZEN statistics the BM25 serves score
+    * against. Bounded by the query vocabulary (Q × terms + 2 scalars),
+    * never corpus-sized. `idx` positions the term in
+    * [[FrozenIndexStats.unionTerms]], the deduplicated standing
+    * vocabulary the one-pass tf expression is aligned to.
     */
   final case class TermStat(term: String, idx: Int, df: Long)
   final case class QueryTerms(query_id: Long, terms: Seq[TermStat])
@@ -109,17 +107,16 @@ object Retrieval {
       unionTerms: Seq[String], queries: Seq[QueryTerms])
 
   /** Collect the frozen index statistics for the standing query set: the
-    * one O(query-vocab) driver materialization a percolation deployment
-    * performs at index-refresh time (identical role to AnnServe's frozen
-    * centroids). df here is the SAME df [[bmScored]] computes (distinct
-    * docs containing the token), so stream scores are bit-identical to
-    * batch scores against the same corpus snapshot.
+    * one O(query-vocab) driver materialization performed at
+    * index-refresh time. df here is the SAME df [[bmScored]] computes
+    * (distinct docs containing the token), so served scores are
+    * bit-identical to batch scores against the same corpus snapshot.
     */
   /** The standing query set's (query_id, term) pairs, collected once per
     * dataset content version per JVM (r21). This is the SAME bounded
-    * O(query-vocab) driver materialization [[frozenStats]] has always
-    * performed for the percolator — hoisted into a shared content-keyed
-    * cache so the batch scorer can bind the vocabulary into a
+    * O(query-vocab) driver materialization [[frozenStats]] performs —
+    * hoisted into a shared content-keyed cache so the batch scorer can
+    * bind the vocabulary into a
     * [[graft.functions.StandingTf]] expression: per-doc term frequencies
     * then compute in ONE codegen loop per row, the occurrence-level
     * explode + broadcast prune + tf shuffle disappear outright (guide
@@ -182,8 +179,8 @@ object Retrieval {
   private[graft] def assembleFrozen(rows: Array[(Long, String, Long)],
       nDocs: Long, sumDl: Long): FrozenIndexStats = {
     // deduplicated standing vocabulary + per-term positions: terms repeat
-    // heavily across queries, and the percolator counts each union term
-    // ONCE per arrival instead of once per (query, term)
+    // heavily across queries, and the tf expression counts each union
+    // term ONCE per document instead of once per (query, term)
     val union = rows.map(_._2).distinct.sorted.toSeq
     val idxOf = union.zipWithIndex.toMap
     val byQuery = rows.groupBy(_._1)
@@ -197,10 +194,9 @@ object Retrieval {
 
   /** Invert frozen standing-query statistics to the TERM→QUERIES index
     * layout `(terms, per-term df, per-term sorted query lists)` the
-    * percolation-style scorers consume ([[graft.functions.PercolateHits]]
-    * / PercolateHitsDl) — shared by the streaming percolator and the
-    * postings-store doc-vector serve, so both bind the identical index.
-    * df is term-level: every query sharing a term carries the same df.
+    * percolation-style scorer consumes ([[graft.functions.PercolateHitsDl]])
+    * in the postings-store doc-vector serve. df is term-level: every
+    * query sharing a term carries the same df.
     */
   private[graft] def invertedIndex(frozen: FrozenIndexStats)
       : (Seq[String], Seq[Long], Seq[Seq[Long]]) = {
@@ -213,8 +209,7 @@ object Retrieval {
 
   /** (query_id, doc_id, n_terms, sum_q): quantized BM25 partial sums for
     * every (query, candidate) pair sharing ≥1 term, self-pairs excluded.
-    * Shared by the standalone top-k, the hybrid fusion, and the
-    * percolation parity spec.
+    * Shared by the standalone top-k and the hybrid fusion.
     */
   private[graft] def bmScored(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
@@ -238,8 +233,7 @@ object Retrieval {
     // the per-(query, doc) aggregate over candidate postings. dl rides
     // the same split (size(ws), unchanged since r20). The standing
     // vocabulary is the SAME bounded driver materialization frozenStats
-    // has always collected for the percolator, now shared via
-    // [[standingQt]]'s content-keyed cache.
+    // collects, shared via [[standingQt]]'s content-keyed cache.
     val union = qtRows.map(_._2).distinct.sorted.toSeq
     val idxOf = union.zipWithIndex.toMap
     val tfFn = graft.functions.GraftFunctions.registerStandingTf(s, union)

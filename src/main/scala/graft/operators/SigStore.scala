@@ -21,7 +21,7 @@ import graft.sources.Tables
   * never read again. Serving a delta batch costs one simhash pass over
   * the DELTA plus the banded join: O(|delta|), never O(|base|).
   *
-  * Publish is crash-safe in the AnnIndexIO/compactShards style: build to
+  * Publish is crash-safe in the AnnIndexIO style: build to
   * a `.build_tmp` sibling, then one atomic rename; a torn build is
   * invisible and a replayed build is a no-op (SigStoreSpec asserts the
   * file set survives a second serve untouched).
@@ -94,13 +94,13 @@ object SigStore {
     require(f.rename(tmp, rootPath), s"atomic publish failed: $root")
   }
 
-  /** Grow a published store by one micro-batch of NEW base documents:
-    * the batch's signature rows land under their own `batch_id=<n>`
-    * sub-dirs inside the band partitions via dynamic partition overwrite,
-    * so a replayed micro-batch rewrites exactly its own dirs — the
-    * streaming.Ingest exactly-once idiom, identical to
+  /** Grow a published store by one batch of NEW base documents: the
+    * batch's signature rows land under their own `batch_id=<n>` sub-dirs
+    * inside the band partitions via dynamic partition overwrite, so a
+    * replayed batch rewrites exactly its own dirs — the same idiom as
     * AnnIndexIO.appendBatch. Growth costs one simhash pass over the
-    * batch: O(|batch|), never O(|store|).
+    * batch: O(|batch|), never O(|store|). Only specs call it, as a
+    * fixture; [[absorbComponents]] appends through [[appendSigRows]].
     */
   private[graft] def appendBatch(s: SparkSession, root: String,
       docsBatch: DataFrame, batchId: Long): Unit =
@@ -123,8 +123,8 @@ object SigStore {
     * bounded-file generation via the shared crash-safe protocol
     * (write-new generation → swap → manifest-healed delete; the hottest
     * batch dir stays protected so an in-flight replay remains
-    * idempotent) — the same code path as AnnIndexIO.compactCells and the
-    * ingest layout.
+    * idempotent) — the same code path as AnnIndexIO.compactCells and
+    * BmStore.compactBuckets.
     */
   private[graft] def compactBands(s: SparkSession, root: String)
       : Seq[graft.sources.Writers.CompactionStats] = {
@@ -139,22 +139,19 @@ object SigStore {
         sortCols = Seq("band_bits"), crashBeforeDelete = false)).toSeq
   }
 
-  /** The store's OWN maintenance policy (r19, VERDICT r18 #6): compact
-    * bands + labels once any band partition has accreted more than
-    * `maxBatchDirs` per-batch generations. Long-streamed growth
-    * otherwise holds one `batch_id=<n>` dir per micro-batch forever —
-    * file counts, the node-patch pile, and the remap all grow with the
-    * absorb horizon, and each is only reset by an explicit compaction.
-    * Callers (a maintain stream's foreachBatch, a nightly job) invoke
-    * this after absorbs; it is a no-op until the policy trips, so the
-    * amortized cost is one fold per `maxBatchDirs` batches. Returns
-    * whether a compaction ran.
-    */
-  /** The policy's conservative default bound — shared with the maintain
-    * stream's default-on wiring (r20, VERDICT r19 #6).
-    */
+  /** The policy's conservative default bound (r20, VERDICT r19 #6). */
   private[graft] val DefaultMaxBatchDirs = 16
 
+  /** The store's OWN maintenance policy (r19, VERDICT r18 #6): compact
+    * bands + labels once any band partition has accreted more than
+    * `maxBatchDirs` per-batch generations. Long-running growth otherwise
+    * holds one `batch_id=<n>` dir per batch forever — file counts, the
+    * node-patch pile, and the remap all grow with the absorb horizon,
+    * and each is only reset by an explicit compaction. A caller invokes
+    * this after absorbs; it is a no-op until the policy trips, so the
+    * amortized cost is one fold per `maxBatchDirs` batches. Returns
+    * whether a compaction ran. Only specs call it today.
+    */
   private[graft] def maintenanceTick(s: SparkSession, root: String,
       maxBatchDirs: Int = DefaultMaxBatchDirs): Boolean = {
     val sigs = new Path(root, "sigs.parquet")
@@ -886,8 +883,8 @@ object SigStore {
     f.create(ready).close()
     // every frame this absorb checkpointed is now persisted in the store
     // (sig bank, label_nodes, label_remap, size_override) — free the
-    // checkpointed state (files or blocks, per flavor) so a long-running
-    // maintainComponents stream holds O(1) checkpoints, not O(batches)
+    // checkpointed state (files or blocks, per flavor) so a long run of
+    // absorbs holds O(1) checkpoints, not O(batches)
     // (ADVICE r11; r15: the local flavor now unpersists eagerly too).
     // relabel/deltaOut are local relations on the small-graph path; drop
     // no-ops on those.

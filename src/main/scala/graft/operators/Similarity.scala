@@ -1371,16 +1371,8 @@ object Similarity {
     })
   )
 
-  /** The frozen trained centroids for a dataset dir — the model the
-    * streaming twin ([[graft.streaming.SemanticDedup]]) assigns arrivals
-    * against, identical to the batch operator's (same cache entry).
-    */
-  private[graft] def frozenCentroids(s: SparkSession, d: String): Array[Array[Double]] =
-    trainedCentroids(s, d)
-
-  /** Within-cluster candidate pairs with exact cosine — the shared core
-    * of dedup_semantic (top-K head) and the stream-parity reference
-    * ([[semanticDupPairs]]). Returns (cluster_id, id1, id2, cosine),
+  /** Within-cluster candidate pairs with exact cosine — the core of
+    * dedup_semantic (top-K head). Returns (cluster_id, id1, id2, cosine),
     * id1 < id2, cosine rounded to 4.
     *
     * Deliberately UNSALTED pair join, measured decision: the K-distinct
@@ -1604,13 +1596,6 @@ object Similarity {
       .withColumn("is_dup", col("cosine") >= SemanticDupThreshold)
       .select("cluster_id", "rank", "id1", "id2", "cosine", "is_dup")
   }
-
-  /** The full is_dup pair set (cosine ≥ [[SemanticDupThreshold]], no
-    * top-K truncation) — the batch side of the stream ≡ batch parity
-    * proof for [[graft.streaming.SemanticDedup]].
-    */
-  private[graft] def semanticDupPairs(s: SparkSession, d: String): DataFrame =
-    semanticPairs(s, d).filter(col("cosine") >= SemanticDupThreshold)
 
   private val planesSqlLit: String =
     planes.map(row => s"[${row.mkString(",")}]").mkString("[", ",", "]")

@@ -43,9 +43,8 @@ object TextOps {
 
   /** Adds `ws`, `n_words`, `n_distinct`, `stop_hits`, `quality_score` to
     * any frame with a `text` column — the shared quality gate used by the
-    * batch `text_quality` query, [[TrainingPipeline]], and the streaming
-    * ingest ([[graft.streaming.Ingest]]). Pure scalar column work, safe in
-    * both batch and streaming plans.
+    * batch `text_quality` query and [[TrainingPipeline]]. Pure scalar
+    * column work.
     */
   def withQuality(docs: DataFrame): DataFrame =
     docs

@@ -116,17 +116,7 @@ object Winnow {
     */
   private[graft] def fingerprints(s: SparkSession, d: String,
       gram: Int = GramLen, win: Int = WinSize): DataFrame =
-    fingerprintsOf(Tables.documents(s, d), gram, win)
-
-  /** Frame-accepting twin of [[fingerprints]] (ADVICE r12): a caller
-    * fingerprinting a SLICE (DecontamGate's eval side) filters the frame
-    * BEFORE the md5-per-gram projection, so build cost is structurally
-    * slice-sized — not an optimizer bet on the filter being pushed
-    * below the winnow projection and explode.
-    */
-  private[graft] def fingerprintsOf(docs: DataFrame,
-      gram: Int = GramLen, win: Int = WinSize): DataFrame =
-    withFps(docs, gram, win)
+    withFps(Tables.documents(s, d), gram, win)
       .select(col("doc_id"), explode(col("fps")).as("fp"))
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(

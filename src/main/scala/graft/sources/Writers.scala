@@ -52,10 +52,10 @@ object Writers {
       dir: String): DataFrame =
     spark.read.option("mergeSchema", "true").parquet(dir)
 
-  /** One lang-partition compaction outcome. `generation` is the negative
+  /** One partition-dir compaction outcome. `generation` is the negative
     * batch_id the compacted files were published under (0 = no-op).
     */
-  final case class CompactionStats(lang: String, dirsCompacted: Int,
+  final case class CompactionStats(partition: String, dirsCompacted: Int,
       filesBefore: Int, filesAfter: Int, generation: Long)
 
   /** Name of the per-generation manifest listing the source dirs a
@@ -64,74 +64,40 @@ object Writers {
     */
   private val ManifestFile = "_graft_compaction_sources"
 
-  /** Compact one lang partition of an [[graft.streaming.Ingest]] shard
-    * layout: the accumulated `batch_id=*` dirs (one per committed
-    * micro-batch — a long-running stream accretes thousands, each with
-    * few small files) are rewritten into ONE new generation dir of
-    * bounded-size files, and the old dirs are retired.
+  /** Compact one dir (`cell_id=3`, `band_id=7`, `tok_bucket=12`,
+    * `docvec.parquet`, …) whose children are `batch_id=<n>` commit dirs — the
+    * layout the AnnIndexIO, SigStore and BmStore appends write (one dir
+    * per committed batch; a long-running append accretes thousands, each
+    * with few small files). The dirs are rewritten into ONE new
+    * generation dir of bounded-size files, and the old dirs are retired.
     *
     * Protocol (write-new → swap → delete):
     *  1. recover: any previous generation whose manifest still lists
     *     existing source dirs is a crashed swap — delete those sources
     *     first (completing it) so their rows can never be read twice;
-    *  2. the HIGHEST non-negative batch id is left untouched: a
-    *     restarting stream may replay exactly that micro-batch (dynamic
-    *     overwrite of its dir), and compacting it away would turn the
-    *     replay into an append of duplicates — it joins the next
-    *     compaction once a newer batch exists;
+    *  2. the HIGHEST non-negative batch id is left untouched: a replayed
+    *     append may rewrite exactly that batch (dynamic overwrite of its
+    *     dir), and compacting it away would turn the replay into an
+    *     append of duplicates — it joins the next compaction once a newer
+    *     batch exists;
     *  3. every other `batch_id` dir (including prior generations) is read
     *     in one pass, repartitioned to ceil(bytes / targetFileBytes)
     *     writers, and written to a dot-prefixed temp dir (invisible to
     *     readers) together with the manifest;
     *  4. ONE atomic rename publishes the temp dir as `batch_id=<gen>`
     *     (gen = −1, −2, … so generations can never collide with real
-    *     micro-batch ids and the long-typed partition column parses
+    *     batch ids and the long-typed partition column parses
     *     unchanged); the replaced dirs are then deleted.
     *
     * A reader concurrently listing the root between steps 4 and the final
     * deletes can observe rows twice (never lose any); a crash in that
-    * window is healed by step 1 on the next run. `lang` pruning is
-    * untouched — compaction only ever rewrites below one lang dir.
-    */
-  def compactShards(spark: org.apache.spark.sql.SparkSession, outDir: String,
-      lang: String, targetFileBytes: Long = 128L * 1024 * 1024,
-      maxRecordsPerFile: Long = 1000000L,
-      sortCols: Seq[String] = Seq("doc_id")): CompactionStats =
-    compactShardsInternal(spark, outDir, lang, targetFileBytes,
-      maxRecordsPerFile, sortCols, crashBeforeDelete = false)
-
-  /** Compact every `lang=*` partition under the shard root — the periodic
-    * maintenance call a long-running ingest deployment schedules between
-    * (not during) compaction-eligible windows.
-    */
-  def compactAllLangs(spark: org.apache.spark.sql.SparkSession,
-      outDir: String): Seq[CompactionStats] = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(outDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).filter(_.isDirectory)
-      .map(_.getPath.getName).filter(_.startsWith("lang="))
-      .map(d => compactShards(spark, outDir, d.stripPrefix("lang="))).toSeq
-  }
-
-  /** `crashBeforeDelete` stops after the publishing rename, leaving the
-    * source dirs in place — the spec's simulated crash inside the swap
-    * window; the next regular call must heal it.
-    */
-  private[graft] def compactShardsInternal(
-      spark: org.apache.spark.sql.SparkSession, outDir: String, lang: String,
-      targetFileBytes: Long, maxRecordsPerFile: Long, sortCols: Seq[String],
-      crashBeforeDelete: Boolean): CompactionStats =
-    compactPartitionInternal(spark, outDir, s"lang=$lang",
-      Seq("lang", "batch_id"), targetFileBytes, maxRecordsPerFile, sortCols,
-      crashBeforeDelete).copy(lang = lang)
-
-  /** The generalized batch-dir compaction protocol: any hive partition dir
-    * (`lang=en`, `cell_id=3`, …) whose children are `batch_id=<n>` commit
-    * dirs — the streaming.Ingest shard layout AND the stream-maintained
-    * ANN code table (operators/AnnIndexIO) share this shape, so they share
-    * one write-new → swap → delete recovery path.
+    * window is healed by step 1 on the next run. Pruning on the partition
+    * column is untouched — compaction only ever rewrites below one
+    * partition dir. `dropCols` names the partition columns the read picks
+    * up from the path, so the rewritten data files stay partition-free.
+    * `crashBeforeDelete` stops after the publishing rename, leaving the
+    * source dirs in place — a simulated crash inside the swap window
+    * that the next regular call must heal.
     */
   private[graft] def compactPartitionInternal(
       spark: org.apache.spark.sql.SparkSession, outDir: String,
@@ -139,11 +105,11 @@ object Writers {
       targetFileBytes: Long, maxRecordsPerFile: Long, sortCols: Seq[String],
       crashBeforeDelete: Boolean): CompactionStats = {
     import org.apache.hadoop.fs.Path
-    val langPath = new Path(outDir, partitionDir)
-    val fs = langPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(langPath), s"no such partition dir: $langPath")
+    val partPath = new Path(outDir, partitionDir)
+    val fs = partPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    require(fs.exists(partPath), s"no such partition dir: $partPath")
 
-    def batchDirs = fs.listStatus(langPath).filter(_.isDirectory)
+    def batchDirs = fs.listStatus(partPath).filter(_.isDirectory)
       .map(_.getPath).filter(_.getName.startsWith("batch_id="))
     def idOf(p: Path): Long = p.getName.stripPrefix("batch_id=").toLong
     def parquetFiles(p: Path): Array[Path] =
@@ -158,7 +124,7 @@ object Writers {
         val in = fs.open(mf)
         val listed = try scala.io.Source.fromInputStream(in).getLines().toList
                      finally in.close()
-        listed.map(new Path(langPath, _)).filter(fs.exists)
+        listed.map(new Path(partPath, _)).filter(fs.exists)
           .foreach(p => fs.delete(p, true))
         fs.delete(mf, false)
       }
@@ -177,8 +143,8 @@ object Writers {
     val bytes = included.map(fs.getContentSummary(_).getLength).sum
     val nOut = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
 
-    // 3. one pass over the included dirs; basePath keeps lang/batch_id as
-    // partition columns (dropped → data files stay partition-free)
+    // 3. one pass over the included dirs; basePath keeps the partition
+    // columns (dropped → data files stay partition-free)
     val df0 = spark.read.option("basePath", outDir)
       .parquet(included.map(_.toString): _*)
       .drop(dropCols: _*)
@@ -195,7 +161,7 @@ object Writers {
     finally mfOut.close()
 
     // 4. publish atomically, then retire the replaced dirs
-    val genDir = new Path(langPath, s"batch_id=$gen")
+    val genDir = new Path(partPath, s"batch_id=$gen")
     require(fs.rename(tmp, genDir), s"publish rename failed: $tmp -> $genDir")
     if (!crashBeforeDelete) {
       included.foreach(p => fs.delete(p, true))
@@ -233,7 +199,7 @@ object Writers {
     *    survivors ∪ delta is re-sharded like [[writeShards]].
     *
     * Publish protocol (write-new → commit → swap → delete, same posture as
-    * [[compactShards]]): the merged rows stage under `.upsert_stage`
+    * [[compactPartitionInternal]]): the merged rows stage under `.upsert_stage`
     * (dot-prefixed → invisible to readers), a `_graft_upsert_commit`
     * marker lands ONLY once staging is complete, then PER PARTITION the
     * live dir renames to a retire name and the staged dir renames live;

@@ -25,8 +25,9 @@ import graft.model.FraudConstants._
   * is set, so `file:` checkpoints are written without forking.
   *
   * Usage: sbt "runMain graft.streaming.Main [--variant v1|v2]
-  *   [--brokers host:port] [--topic transactions] [--offsets latest|earliest]
-  *   [--sink console|kafka] [--checkpoint dir] [--rapid-count n] [--dry-run]"
+  *   [--source kafka|synthetic] [--brokers host:port] [--topic transactions]
+  *   [--offsets latest|earliest] [--sink console|kafka] [--checkpoint dir]
+  *   [--rapid-count n] [--dry-run]"
   */
 object Main {
 
@@ -75,7 +76,15 @@ object Main {
       dead.select(to_json(struct(col("raw"), col("rejected_at"))).as("value")))
   }
 
+  /** Parses the usage above. A value outside a flag's documented set, or
+    * a `--rapid-count` that is not a positive integer, throws an
+    * IllegalArgumentException naming the flag instead of falling back to
+    * a default.
+    */
   def parseArgs(args: Array[String]): Config = {
+    def positive(flag: String, v: String): Int = v.toIntOption.filter(_ > 0)
+      .getOrElse(throw new IllegalArgumentException(
+        s"$flag must be a positive integer, got '$v'"))
     @annotation.tailrec
     def loop(rest: List[String], c: Config): Config = rest match {
       case "--variant" :: v :: t        => loop(t, c.copy(variant = v))
@@ -85,7 +94,7 @@ object Main {
       case "--offsets" :: v :: t        => loop(t, c.copy(offsets = v))
       case "--sink" :: v :: t           => loop(t, c.copy(sink = v))
       case "--checkpoint" :: v :: t     => loop(t, c.copy(checkpointDir = v))
-      case "--rapid-count" :: v :: t    => loop(t, c.copy(rapidCount = v.toInt))
+      case "--rapid-count" :: v :: t    => loop(t, c.copy(rapidCount = positive("--rapid-count", v)))
       case "--out-topic" :: v :: t      => loop(t, c.copy(outTopic = v))
       case "--alerts-topic" :: v :: t   => loop(t, c.copy(alertsTopic = v))
       case "--audit-topic" :: v :: t    => loop(t, c.copy(auditTopic = v))
@@ -94,7 +103,15 @@ object Main {
       case Nil                          => c
       case other :: _ => throw new IllegalArgumentException(s"unknown arg: $other")
     }
-    loop(args.toList, Config())
+    val c = loop(args.toList, Config())
+    def oneOf(flag: String, v: String, allowed: String*): Unit =
+      if (!allowed.contains(v)) throw new IllegalArgumentException(
+        s"$flag must be one of ${allowed.map(a => s"'$a'").mkString(", ")}, got '$v'")
+    oneOf("--variant", c.variant, "v1", "v2")
+    oneOf("--source", c.source, "kafka", "synthetic")
+    oneOf("--offsets", c.offsets, "", "latest", "earliest")
+    oneOf("--sink", c.sink, "console", "kafka")
+    c
   }
 
   /** Kafka-shaped synthetic source: the paced TxGen stream projected to

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -93,7 +94,7 @@ class AnnIndexIOSpec extends AnyFunSuite {
       b.result().toSet
     }
     val after1 = codeFiles
-    // a replayed build/append (the Ingest retry idiom) must be a no-op
+    // a replayed build/append must be a no-op
     val root2 = AnnIndexIO.ensureIncrBuilt(spark, sf)
     assert(root2 == root)
     assert(codeFiles == after1, "replay must not rewrite or duplicate code files")
@@ -121,11 +122,13 @@ class AnnIndexIOSpec extends AnyFunSuite {
       .filter(col("vec_id").isin(qids: _*))
       .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).toMap
-    val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[graft.streaming.AnnServe.AnnQuery]
-    in.addData(qids.map(id => graft.streaming.AnnServe.AnnQuery(id, vecs(id))))
+    val in = MemoryStream[(Long, Array[Double])]
+    in.addData(qids.map(id => id -> vecs(id)))
     val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Int, Long, Double)]
-    val q = graft.streaming.AnnServe.serve(in.toDS(), root, (df, _) =>
-      got ++= df.collect().map(key))
+    val q = StreamDrive.foreachBatch(in.toDS()) { (batch, _) =>
+      val qs = batch.collect().toSeq
+      if (qs.nonEmpty) got ++= AnnIndexIO.serveVectors(spark, root, qs).collect().map(key)
+    }
     try q.processAllAvailable() finally q.stop()
     val expect = SparkEntry.queries("ann_ivfpq_topk")(spark, sf)
       .filter(col("query_id").isin(qids: _*)).collect().map(key)
@@ -142,18 +145,20 @@ class AnnIndexIOSpec extends AnyFunSuite {
     val incrRoot = AnnIndexIO.ensureIncrBuilt(spark, sf)
     val expect = AnnIndexIO.serveAll(spark, sf, incrRoot).collect().map(key).toSet
 
-    // stream variant: same base build, delta arrives as two micro-batches
+    // stream variant: same base build, delta arrives as two micro-batches,
+    // each appended under its own micro-batch id
     val streamRoot = AnnIndexIO.ensureBaseBuilt(spark, sf, "stream")
     val delta = spark.read.parquet(s"$sf/embeddings.parquet")
       .filter(col("vec_id") % AnnIndexIO.DeltaMod === 0)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
-      .collect()
-      .map(r => graft.streaming.AnnServe.AnnInsert(r.getLong(0), r.getSeq[Double](1).toArray))
-    val (d1, d2) = delta.partition(_.vec_id % 2 == 0)
-    val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[graft.streaming.AnnServe.AnnInsert]
+      .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+    val (d1, d2) = delta.partition(_._1 % 2 == 0)
+    val in = MemoryStream[(Long, Array[Double])]
     val cp = java.nio.file.Files.createTempDirectory("ann_maintain_cp").toString
     in.addData(d1.toSeq)
-    val q = graft.streaming.AnnServe.maintain(in.toDS(), streamRoot, cp)
+    val q = StreamDrive.foreachBatch(in.toDS(), Some(cp)) { (batch, batchId) =>
+      AnnIndexIO.appendBatch(spark, streamRoot, batch.toDF("vec_id", "emb"), batchId)
+    }
     try {
       q.processAllAvailable()
       in.addData(d2.toSeq)

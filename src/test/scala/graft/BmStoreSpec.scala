@@ -12,8 +12,7 @@ import org.apache.spark.sql.expressions.Window
   * table, with the postings scan statically pruned to the query
   * vocabulary's buckets; growth must be exactly-once per batch and leave
   * base files untouched; and the frozen statistics drawn from the store
-  * must equal the full-recompute freeze (which makes the streaming
-  * percolator's store-served parity transitive through PercolateSpec).
+  * must equal the full-recompute freeze.
   */
 class BmStoreSpec extends AnyFunSuite {
 
@@ -342,8 +341,8 @@ class BmStoreSpec extends AnyFunSuite {
 
   test("verdict convergence: a homogeneous wide workload stops probing after agreeing verdicts") {
     assume(TestSpark.fixturesPresent, TestSpark.fixturesHint)
-    // BmServe's shape: every batch freezes a DIFFERENT standing set
-    // (new fingerprint each time). On this flat-vocab corpus every wide
+    // Every batch freezes a DIFFERENT standing set (new fingerprint each
+    // time). On this flat-vocab corpus every wide
     // batch's probe returns docvec — after VerdictStickyAfter agreeing
     // probes, later unseen fingerprints must adopt it probe-free.
     // precheck=off: the flat-vocab free verdict (tested separately

@@ -103,4 +103,21 @@ class MainSpec extends AnyFunSuite {
       o.sink == "kafka")
     intercept[IllegalArgumentException](Main.parseArgs(Array("--nope")))
   }
+
+  test("arg parsing: a value outside a flag's set fails loudly, naming the flag") {
+    def rejects(flag: String, args: String*): Unit = {
+      val e = intercept[IllegalArgumentException](Main.parseArgs(args.toArray))
+      assert(e.getMessage.contains(flag), e.getMessage)
+    }
+    rejects("--variant", "--variant", "v3", "--dry-run")
+    rejects("--source", "--source", "kafak")
+    rejects("--sink", "--sink", "kafak")
+    rejects("--offsets", "--offsets", "newest")
+    rejects("--rapid-count", "--rapid-count", "0")
+    rejects("--rapid-count", "--rapid-count", "-1")
+    rejects("--rapid-count", "--rapid-count", "three")
+    val ok = Main.parseArgs(Array("--source", "synthetic", "--offsets", "earliest",
+      "--sink", "console"))
+    assert(ok.source == "synthetic" && ok.effectiveOffsets == "earliest")
+  }
 }

@@ -5,15 +5,31 @@ import java.nio.file.Files
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+
 import graft.operators.SigStore
-import graft.streaming.SigStream
-import graft.streaming.SigStream.DocInsert
+
+/** One newly ingested base document. */
+final case class DocInsert(doc_id: Long, text: String)
 
 /** Stream-grown signature store ≡ one-shot build over the same corpus,
-  * and a replayed append is a no-op on the served answers.
+  * and a replayed append is a no-op on the served answers. The stream
+  * commits each micro-batch with `SigStore.appendBatch` (or
+  * `absorbComponents`) under its micro-batch id, then runs the store's
+  * `maintenanceTick` at its default batch-directory bound.
   */
 class SigStreamSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
+
+  private def maintain(docs: Dataset[DocInsert], root: String,
+      checkpointDir: String, trigger: Trigger,
+      components: Boolean = false): StreamingQuery =
+    StreamDrive.foreachBatch(docs, Some(checkpointDir), trigger) { (batch, batchId) =>
+      if (components) SigStore.absorbComponents(spark, root, batch.toDF(), batchId)
+      else SigStore.appendBatch(spark, root, batch.toDF(), batchId)
+      SigStore.maintenanceTick(spark, root): Unit
+    }
 
   // deterministic doc text: dup pairs share a body, novel docs are unique
   private def docText(i: Long, dupOf: Option[Long]): String = {
@@ -40,8 +56,7 @@ class SigStreamSpec extends AnyFunSuite {
     SigStore.buildFrom(spark, grownRoot, spark.createDataset(baseA).toDF())
     val ms = MemoryStream[DocInsert]
     val ckpt = Files.createTempDirectory("sig_ckpt").toString
-    val q = SigStream.maintain(ms.toDS(), grownRoot, ckpt,
-      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+    val q = maintain(ms.toDS(), grownRoot, ckpt, Trigger.ProcessingTime(0))
     try {
       ms.addData(lateB.take(15)); q.processAllAvailable()
       ms.addData(lateB.drop(15)); q.processAllAvailable()
@@ -62,8 +77,7 @@ class SigStreamSpec extends AnyFunSuite {
     // overwrite rewrites exactly the same dirs; answers unchanged
     val ms2 = MemoryStream[DocInsert]
     val ckpt2 = Files.createTempDirectory("sig_ckpt2").toString
-    val q2 = SigStream.maintain(ms2.toDS(), grownRoot, ckpt2,
-      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+    val q2 = maintain(ms2.toDS(), grownRoot, ckpt2, Trigger.ProcessingTime(0))
     try {
       ms2.addData(lateB.take(15)); q2.processAllAvailable()
       ms2.addData(lateB.drop(15)); q2.processAllAvailable()
@@ -104,8 +118,8 @@ class SigStreamSpec extends AnyFunSuite {
     SigStore.buildLabels(spark, grownRoot)
     val ms = MemoryStream[DocInsert]
     val ckpt = Files.createTempDirectory("cc_ckpt").toString
-    val q = SigStream.maintainComponents(ms.toDS(), grownRoot, ckpt,
-      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+    val q = maintain(ms.toDS(), grownRoot, ckpt, Trigger.ProcessingTime(0),
+      components = true)
     try {
       ms.addData(lateB.take(15)); q.processAllAvailable()
       ms.addData(lateB.drop(15)); q.processAllAvailable()
@@ -126,8 +140,8 @@ class SigStreamSpec extends AnyFunSuite {
     // must come out byte-identical in content
     val ms2 = MemoryStream[DocInsert]
     val ckpt2 = Files.createTempDirectory("cc_ckpt2").toString
-    val q2 = SigStream.maintainComponents(ms2.toDS(), grownRoot, ckpt2,
-      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+    val q2 = maintain(ms2.toDS(), grownRoot, ckpt2, Trigger.ProcessingTime(0),
+      components = true)
     try {
       ms2.addData(lateB.take(15)); q2.processAllAvailable()
       ms2.addData(lateB.drop(15)); q2.processAllAvailable()
@@ -151,8 +165,7 @@ class SigStreamSpec extends AnyFunSuite {
     val ms = MemoryStream[DocInsert]
 
     def runOnce(): Unit = {
-      val q = SigStream.maintain(ms.toDS(), root, ckpt,
-        trigger = org.apache.spark.sql.streaming.Trigger.Once())
+      val q = maintain(ms.toDS(), root, ckpt, Trigger.Once())
       q.awaitTermination(120000); q.stop()
     }
     ms.addData(docsA); runOnce()  // run 1 commits batch 0, then "crashes"

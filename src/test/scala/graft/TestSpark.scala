@@ -29,7 +29,7 @@ object TestSpark {
     s"testdata not found at $sf0001 — point GRAFT_TESTDATA (or -Dgraft.testdata) at the fixture root"
 
   /** AQE-aware executed-plan traversal shared by the plan-shape specs
-    * (BmStoreSpec / BmServeSpec / PlanShapeSpec): AdaptiveSparkPlanExec
+    * (BmStoreSpec / PlanShapeSpec): AdaptiveSparkPlanExec
     * and QueryStageExec hide their inner plan from a plain `collect`, so
     * any future traversal fix lands once here instead of silently
     * diverging across suites (self-review r12).

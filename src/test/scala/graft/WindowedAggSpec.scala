@@ -3,48 +3,40 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
-
-import graft.streaming.WindowedAgg
 
 final case class TsEvent(ts: Timestamp, event_type: String, user_id: Long, value: Double)
 
-/** Streaming windowed aggregation ≡ the same window expression on the
-  * equivalent batch frame.
+/** Windowed aggregation over the events table: the `kmv_distinct` sketch
+  * gives the same hourly distinct-user estimates streamed (partial
+  * sketches merged through the state store) as in one batch pass, and
+  * Spark's native session window agrees with the lag/cum-sum
+  * `q_sessionize` query.
   */
 class WindowedAggSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  private def loadEvents(): Seq[TsEvent] = {
-    import org.apache.spark.sql.functions.col
+  private def loadEvents(): Seq[TsEvent] =
     graft.sources.Tables.eventsNormalized(spark, TestSpark.sf0001)
       .select(col("ts").cast("timestamp"), col("event_type"), col("user_id"), col("value"))
       .collect()
       .map(r => TsEvent(r.getTimestamp(0), r.getString(1), r.getLong(2), r.getDouble(3)))
       .toSeq
-  }
 
-  test("streaming tumbling window == batch tumbling window") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val events = loadEvents()
-    val ms = MemoryStream[TsEvent]
-    ms.addData(events)
-    val q = WindowedAgg.tumbling(ms.toDF())
-      .writeStream.format("memory").queryName("tumbling_stream")
-      .outputMode(OutputMode.Complete())
-      .trigger(Trigger.Once())
-      .option("checkpointLocation", Files.createTempDirectory("wm").toString)
-      .start()
-    q.awaitTermination(120000); q.stop()
-    def key(r: org.apache.spark.sql.Row) =
-      (r.getTimestamp(0).getTime, r.getString(2), r.getLong(3), r.getDouble(4))
-    val streamed = spark.table("tumbling_stream").collect().map(key).toSet
-    val batch = WindowedAgg.tumbling(spark.createDataset(events).toDF())
-      .collect().map(key).toSet
-    assert(streamed.nonEmpty && streamed == batch)
+  /** Hourly (win_start, approx_users, n) with the KMV distinct sketch. */
+  private def hourlyDistinct(events: DataFrame): DataFrame = {
+    graft.functions.GraftFunctions.register(events.sparkSession)
+    val withWm =
+      if (events.isStreaming) events.withWatermark("ts", "10 minutes") else events
+    withWm
+      .groupBy(window(col("ts"), "1 hour").as("win"))
+      .agg(expr("kmv_distinct(cast(user_id as string))").as("approx_users"),
+        count(lit(1)).as("n"))
+      .select(col("win.start").as("win_start"), col("approx_users"), col("n"))
   }
 
   test("streaming KMV windowed distinct == batch exactly (sketch state round-trips the store)") {
@@ -58,7 +50,7 @@ class WindowedAggSpec extends AnyFunSuite {
     val (first, second) = events.splitAt(events.size / 2)
     ms.addData(first)
     ms.addData(second)
-    val q = WindowedAgg.tumblingDistinct(ms.toDF())
+    val q = hourlyDistinct(ms.toDF())
       .writeStream.format("memory").queryName("kmv_stream")
       .outputMode(OutputMode.Complete())
       .option("checkpointLocation", Files.createTempDirectory("wmk").toString)
@@ -66,7 +58,7 @@ class WindowedAggSpec extends AnyFunSuite {
     q.processAllAvailable(); q.stop()
     def key(r: org.apache.spark.sql.Row) = (r.getTimestamp(0).getTime, r.getLong(1), r.getLong(2))
     val streamed = spark.table("kmv_stream").collect().map(key).toSet
-    val batch = WindowedAgg.tumblingDistinct(spark.createDataset(events).toDF())
+    val batch = hourlyDistinct(spark.createDataset(events).toDF())
       .collect().map(key).toSet
     // merge-order invariance ⇒ EQUALITY, not approximation
     assert(streamed.nonEmpty && streamed == batch,
@@ -75,9 +67,12 @@ class WindowedAggSpec extends AnyFunSuite {
 
   test("native session window agrees with lag/cum-sum sessionization counts") {
     import spark.implicits._
-    val events = loadEvents()
-    val native = WindowedAgg.sessions(spark.createDataset(events).toDF())
-      .collect().map(r => (r.getLong(0), r.getTimestamp(1).getTime, r.getLong(3))).toSet
+    // (user_id, sess_start, n_events) per 30-minute-gap session
+    val native = spark.createDataset(loadEvents()).toDF()
+      .groupBy(session_window(col("ts"), "30 minutes").as("win"), col("user_id"))
+      .agg(count(lit(1)).as("n_events"))
+      .select(col("user_id"), col("win.start"), col("n_events"))
+      .collect().map(r => (r.getLong(0), r.getTimestamp(1).getTime, r.getLong(2))).toSet
     val lagBased = graft.operators.Analytics.queries("q_sessionize")(spark, TestSpark.sf0001)
       .collect().map(r => (r.getLong(0), r.getLong(2), r.getLong(4))).toSet
     assert(native.nonEmpty && native == lagBased,
