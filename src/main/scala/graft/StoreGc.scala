@@ -3,11 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Garbage collector for the persisted store families under the system
-  * temp dir (r20, VERDICT r19 #5). Stores have publish/compact/maintain
-  * policies but had no reaper: superseded format generations (the
-  * aggstate v1 → v2 bump), pre-canonicalization orphans (the r19
-  * relative-path-keyed semassign stores), and spec-fixture stores keyed
-  * by long-deleted temp datasets accrete forever.
+  * temp dir (r20, VERDICT r19 #5). Stores have publish policies but had
+  * no reaper: superseded format generations (the aggstate v1 → v2
+  * bump), pre-canonicalization orphans (the r19 relative-path-keyed
+  * semassign stores), and spec-fixture stores keyed by long-deleted
+  * temp datasets accrete forever.
   *
   * Liveness is derived the same way the stores are KEYED: for each
   * DECLARED live dataset dir, recompute every family's current store

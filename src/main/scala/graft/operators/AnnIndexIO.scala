@@ -25,9 +25,9 @@ import graft.sources.Tables
   * At 100 TB the same layout holds with more cells — each query touches
   * `nprobe/num_cells` of the corpus *files*, not just rows.
   *
-  * Build/publish is crash-safe in the Writers.compactPartitionInternal
-  * style: write to a `.build_tmp` sibling, then one
-  * atomic rename publishes the whole index; a torn build is invisible.
+  * Build/publish is crash-safe: write to a `.build_tmp` sibling, then
+  * one atomic rename publishes the whole index; a torn build is
+  * invisible.
   *
   * Incremental maintenance (`ann_ivfpq_incremental`): the model is FROZEN
   * from a hash-sample of the BASE corpus, so appending a delta batch never
@@ -304,27 +304,6 @@ object AnnIndexIO {
       partitionCols = Seq("cell_id", "batch_id"),
       sortCols = Seq("vec_id"), mode = SaveMode.Overwrite,
       options = Map("partitionOverwriteMode" -> "dynamic"))
-  }
-
-  /** Maintenance for a long-running stream-maintained index: each cell
-    * accretes one `batch_id=<n>` dir per streamed micro-batch; compaction
-    * folds every cold batch dir of a cell into one generation of
-    * bounded-size files via the shared crash-safe protocol
-    * (sources/Writers.compactPartitionInternal — the hottest batch stays
-    * protected so an in-flight replay remains idempotent). Serving is
-    * unaffected: the generation dir is just another batch_id partition.
-    */
-  private[graft] def compactCells(s: SparkSession, root: String)
-      : Seq[graft.sources.Writers.CompactionStats] = {
-    val codes = new Path(root, "codes.parquet")
-    val f = fs(s, codes)
-    if (!f.exists(codes)) Seq.empty
-    else f.listStatus(codes).filter(_.isDirectory)
-      .map(_.getPath.getName).filter(_.startsWith("cell_id="))
-      .map(cell => graft.sources.Writers.compactPartitionInternal(
-        s, codes.toString, cell, dropCols = Seq("cell_id", "batch_id"),
-        targetFileBytes = 128L * 1024 * 1024, maxRecordsPerFile = 1000000L,
-        sortCols = Seq("vec_id"), crashBeforeDelete = false)).toSeq
   }
 
   /** Incremental variant: base index + the delta appended as one batch

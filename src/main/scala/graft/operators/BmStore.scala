@@ -70,10 +70,6 @@ import graft.sources.Tables
   * oracle mirrors the contract literally: postings over the full corpus,
   * dfq/st over the base split only.
   *
-  * [[compactBuckets]] folds a long-grown store's per-batch dirs into
-  * bounded-file generations via the shared crash-safe protocol
-  * (Writers.compactPartitionInternal), same as AnnIndexIO.compactCells.
-  *
   * Publish is crash-safe in the SigStore style: build to a `.build_tmp`
   * sibling, one atomic rename; a torn build is invisible.
   *
@@ -131,7 +127,6 @@ object BmStore {
       metaCache.remove(storeRoot(s, d, v))
       planCache.keySet.filter(_._1 == storeRoot(s, d, v))
         .foreach(planCache.remove)
-      verdictHistory.remove(storeRoot(s, d, v))
     }
 
   private def tokBucket(c: Column): Column =
@@ -286,37 +281,6 @@ object BmStore {
       sortCols = Seq("doc_id"), mode = SaveMode.Overwrite,
       options = Map("partitionOverwriteMode" -> "dynamic"))
     Materialize.drop(tf)
-  }
-
-  /** Fold a long-streamed store's cold per-batch dirs into bounded-file
-    * generations, one bucket at a time (the shared crash-safe protocol;
-    * the hottest batch dir stays protected so an in-flight replay
-    * remains idempotent).
-    */
-  private[graft] def compactBuckets(s: SparkSession, root: String)
-      : Seq[graft.sources.Writers.CompactionStats] = {
-    val postings = new Path(root, "postings.parquet")
-    val f = fs(s, postings)
-    if (!f.exists(postings)) Seq.empty
-    else {
-      val bucketStats = f.listStatus(postings).filter(_.isDirectory)
-        .map(_.getPath.getName).filter(_.startsWith("tok_bucket="))
-        .map(b => graft.sources.Writers.compactPartitionInternal(
-          s, postings.toString, b, dropCols = Seq("tok_bucket", "batch_id"),
-          targetFileBytes = 128L * 1024 * 1024, maxRecordsPerFile = 1000000L,
-          sortCols = Seq("token", "doc_id"), crashBeforeDelete = false)).toSeq
-      // the docvec layout accumulates the same per-batch dirs — fold it
-      // with the identical crash-safe protocol (it is itself a
-      // batch_id=N-partitioned dir, so the generic compactor applies)
-      val dv = new Path(root, "docvec.parquet")
-      val dvStats =
-        if (!f.exists(dv)) Seq.empty
-        else Seq(graft.sources.Writers.compactPartitionInternal(
-          s, root, "docvec.parquet", dropCols = Seq("batch_id"),
-          targetFileBytes = 128L * 1024 * 1024, maxRecordsPerFile = 1000000L,
-          sortCols = Seq("doc_id"), crashBeforeDelete = false))
-      bucketStats ++ dvStats
-    }
   }
 
   /** One frozen-stats collect per store root per JVM — refreshed by
@@ -522,15 +486,12 @@ object BmStore {
   private val planCache =
     scala.collection.concurrent.TrieMap.empty[(String, String), String]
 
-  /** Driver-memory bound for [[planCache]] (ADVICE r14): a serving
-    * caller that freezes a new standing set per call mints a NEW
-    * fingerprint every time, so unbounded putIfAbsent is a slow driver
-    * leak on a long-running server.
-    * Two defenses: converged adoptions are no longer cached at all (the
-    * per-root [[verdictHistory]] answers them in O(1) without a per-
-    * fingerprint entry), and real probed verdicts evict an arbitrary
-    * entry once the map is full — an evicted verdict costs at most one
-    * re-probe (bounded sample) or a job-free precheck, never wrongness.
+  /** Driver-memory bound for [[planCache]] (ADVICE r14): a caller that
+    * freezes a new standing set per call mints a NEW fingerprint every
+    * time, so unbounded putIfAbsent would be a slow driver leak. Once
+    * the map is full a new verdict evicts an arbitrary entry — an
+    * evicted verdict costs at most one re-probe (bounded sample) or a
+    * job-free precheck, never wrongness.
     */
   private[graft] val PlanCacheMaxEntries = 1024
 
@@ -540,32 +501,13 @@ object BmStore {
     planCache.putIfAbsent(key, verdict)
   }
 
-  /** PROBED verdict history per store root, newest first (bounded at
-    * [[VerdictStickyAfter]]) — the convergence cache behind
-    * [[wideServed]]: a serving caller whose batches carry DIFFERENT
-    * standing sets each batch (per-batch freeze ⇒ per-batch
-    * fingerprint) would otherwise pay a θ probe every batch
-    * just to rediscover the docvec verdict its workload always gets.
-    * Once the last [[VerdictStickyAfter]] probed verdicts agree, later
-    * unseen fingerprints adopt that verdict probe-free; a workload
-    * whose verdicts genuinely vary never converges and keeps probing
-    * (the ADVICE r13 behavior). Note the asymmetry: a WAND-routed batch
-    * loses nothing by probing (wandScored needs the per-query θs
-    * anyway), so stickiness only saves the docvec-routed probe.
-    */
-  private val verdictHistory =
-    scala.collection.concurrent.TrieMap.empty[String, List[String]]
-
-  private[graft] val VerdictStickyAfter = 3
-
   /** Query-sample bound for the VERDICT probe: the essential-volume
     * ratio is a workload-SHAPE measurement (how prunable is this kind
     * of query against this corpus), not a per-query computation, so a
     * bounded deterministic sample measures it at bounded cost — a
     * whole-batch probe over a 100-wide-query serving batch costs
     * nearly a full serve on exactly the flat corpora that route to
-    * docvec (measured: 2× serve cpu while the convergence window
-    * fills). When WAND wins, the full wandScored recomputes θs for
+    * docvec. When WAND wins, the full wandScored recomputes θs for
     * every query anyway (the probe is part of that plan), so sampling
     * loses nothing there either.
     */
@@ -573,7 +515,7 @@ object BmStore {
 
   /** θ-probe executions in this JVM — the spec seam proving a mixed
     * serve call probes once per wide class, a repeat serve probes zero
-    * times, and a converged workload stops probing.
+    * times, and a flat vocabulary verdicts without probing.
     */
   private[graft] val wandProbeCount =
     new java.util.concurrent.atomic.AtomicLong
@@ -646,8 +588,7 @@ object BmStore {
     * cost nearly a full serve (every term's postings are corpus-sized);
     * on prunable (skewed) vocabularies the bound passes and the real
     * probe runs against rare-term postings — cheap there by the same
-    * skew. Overridable for the stickiness specs via
-    * `-Dgraft.bm.serve.precheck=off`.
+    * skew.
     */
   private[graft] def minEssentialRatio(frozen: FrozenIndexStats): Double = {
     val ubOf: Map[(Long, String), Long] = frozen.queries.flatMap(q =>
@@ -812,11 +753,10 @@ object BmStore {
     * plus — when WAND wins and the probe's plan covered the whole set —
     * the probe DataFrame, reusable as the serve plan so a cold verdict
     * never costs a second plan build. Resolution order, cheapest first:
-    * (1) cached verdict per (root, class fingerprint); (2) converged
-    * per-root history adopted probe-free; (3) the job-free
+    * (1) cached verdict per (root, class fingerprint); (2) the job-free
     * [[minEssentialRatio]] bound — a vocabulary that cannot prune below
     * the gate even under an optimistic θ verdicts docvec with zero
-    * Spark work; (4) the measured θ probe over a bounded query sample.
+    * Spark work; (3) the measured θ probe over a bounded query sample.
     */
   private def wideVerdictPlan(s: SparkSession, root: String,
       frozen: FrozenIndexStats, k: Int): (String, Option[DataFrame]) = {
@@ -824,35 +764,21 @@ object BmStore {
     planCache.get(key) match {
       case Some(v) => (v, None)
       case None =>
-        val hist = verdictHistory.getOrElse(root, Nil)
-        val converged = hist.size >= VerdictStickyAfter && hist.distinct.size == 1
-        if (converged) {
-          // adopt the converged verdict probe-free (not recorded in the
-          // history — only real probes vote on convergence). Deliberately
-          // NOT cached per fingerprint: a serving stream mints a new
-          // fingerprint per batch, and the history already answers these
-          // lookups in O(1) (ADVICE r14 — unbounded planCache growth).
-          (hist.head, None)
+        val probeFrozen =
+          if (frozen.queries.size <= ProbeSampleQueries) frozen
+          else subsetFrozen(frozen,
+            frozen.queries.take(ProbeSampleQueries).map(_.query_id).toSet)
+        if (minEssentialRatio(probeFrozen) > WandMaxEssRatio) {
+          planCachePut(key, "docvec")
+          ("docvec", None)
         } else {
-          val probeFrozen =
-            if (frozen.queries.size <= ProbeSampleQueries) frozen
-            else subsetFrozen(frozen,
-              frozen.queries.take(ProbeSampleQueries).map(_.query_id).toSet)
-          val precheckOn = !sys.props.get("graft.bm.serve.precheck").contains("off")
-          if (precheckOn && minEssentialRatio(probeFrozen) > WandMaxEssRatio) {
-            planCachePut(key, "docvec")
-            verdictHistory.put(root, ("docvec" :: hist).take(VerdictStickyAfter))
-            ("docvec", None)
-          } else {
-            wandProbeCount.incrementAndGet()
-            val (wandProbe, ratio) = wandScoredWithRatio(s, root, probeFrozen, k)
-            val verdict = if (ratio <= WandMaxEssRatio) "wand" else "docvec"
-            planCachePut(key, verdict)
-            verdictHistory.put(root, (verdict :: hist).take(VerdictStickyAfter))
-            (verdict,
-              if (verdict == "wand" && (probeFrozen eq frozen)) Some(wandProbe)
-              else None)
-          }
+          wandProbeCount.incrementAndGet()
+          val (wandProbe, ratio) = wandScoredWithRatio(s, root, probeFrozen, k)
+          val verdict = if (ratio <= WandMaxEssRatio) "wand" else "docvec"
+          planCachePut(key, verdict)
+          (verdict,
+            if (verdict == "wand" && (probeFrozen eq frozen)) Some(wandProbe)
+            else None)
         }
     }
   }
@@ -870,56 +796,55 @@ object BmStore {
     * query at zero marginal cost per query. Every plan is exact
     * — the Jaccard-family auto-select discipline — so the routing is
     * invisible to the oracle. The wide verdict caches per (root,
-    * standing-set fingerprint): a steady-state serving stream pays the
-    * probe on its first batch only, while a DIFFERENT standing set
-    * against the same root re-probes (ADVICE r13). Overridable for A/B
-    * and specs via `-Dgraft.bm.serve.plan=exhaustive|wand|docvec`.
+    * standing-set fingerprint): a repeat serve of one standing set pays
+    * the probe once, while a DIFFERENT standing set against the same
+    * root re-probes (ADVICE r13).
     */
   private[graft] def servedRanked(s: SparkSession, root: String,
       frozen: FrozenIndexStats, k: Int): DataFrame = {
-    val planOverride = sys.props.get("graft.bm.serve.plan")
-    val (scored, armLabel) = planOverride match {
-      case Some("wand") => (wandScored(s, root, frozen, k), "wand")
-      case Some("docvec") => (servedDocVec(s, root, frozen), "docvec")
-      case Some("exhaustive") => (servedScored(s, root, frozen), "exhaustive")
-      case _ =>
-        val (wide, short) =
-          frozen.queries.partition(_.terms.size > WideQueryMinTerms)
-        if (wide.isEmpty) (servedScored(s, root, frozen), "exhaustive")
-        else {
-          val wideFrozen =
-            if (short.isEmpty) frozen
-            else subsetFrozen(frozen, wide.map(_.query_id).toSet)
-          wideVerdictPlan(s, root, wideFrozen, k) match {
-            // docvec scores every standing query in the SAME single
-            // forward-index pass (exact at any width), so a mixed
-            // batch's short class rides along at zero marginal cost —
-            // a separate exhaustive sub-plan + union would only add a
-            // second postings job per batch (measured 2× serve cpu on
-            // the whole-document serving row)
-            case ("docvec", _) => (servedDocVec(s, root, frozen), "docvec")
-            case (_, reused) =>
-              val widePlan = reused.getOrElse(wandScored(s, root, wideFrozen, k))
-              (if (short.isEmpty) widePlan
-               else servedScored(s, root,
-                   subsetFrozen(frozen, short.map(_.query_id).toSet))
-                 .unionByName(widePlan),
-                "wand")
-          }
+    val (wide, short) =
+      frozen.queries.partition(_.terms.size > WideQueryMinTerms)
+    val (scored, armLabel) =
+      if (wide.isEmpty) (servedScored(s, root, frozen), "exhaustive")
+      else {
+        val wideFrozen =
+          if (short.isEmpty) frozen
+          else subsetFrozen(frozen, wide.map(_.query_id).toSet)
+        wideVerdictPlan(s, root, wideFrozen, k) match {
+          // docvec scores every standing query in the SAME single
+          // forward-index pass (exact at any width), so a mixed
+          // batch's short class rides along at zero marginal cost —
+          // a separate exhaustive sub-plan + union would only add a
+          // second postings job per batch (measured 2× serve cpu on
+          // the whole-document serving row)
+          case ("docvec", _) => (servedDocVec(s, root, frozen), "docvec")
+          case (_, reused) =>
+            val widePlan = reused.getOrElse(wandScored(s, root, wideFrozen, k))
+            (if (short.isEmpty) widePlan
+             else servedScored(s, root,
+                 subsetFrozen(frozen, short.map(_.query_id).toSet))
+               .unionByName(widePlan),
+              "wand")
         }
-    }
+      }
     // counter-tripwire seam (graft.PlanVolume, VERDICT r14 #9): under
     // -Dgraft.bm.probe=volume the EXECUTED arm reports its scored-row
     // volume, so a spec can assert the verdict boundary's arms differ
     // observably (a silently inverted verdict survives output-equality
-    // and wall-clock checks; it cannot survive a volume counter). The
-    // arm label is the ROUTED one — override runs report the override.
+    // and wall-clock checks; it cannot survive a volume counter).
     if (sys.props.get("graft.bm.probe").contains("volume"))
       graft.PlanVolume.record("bm.serve", armLabel, scored.count())
+    rankTopK(scored, k)
+  }
+
+  /** Scored (query_id, doc_id, n_terms, sum_q) pairs ranked per query to
+    * depth k by `sum_q` desc, then `doc_id` — the one ranking every
+    * serve plan shares.
+    */
+  private[graft] def rankTopK(scored: DataFrame, k: Int): DataFrame =
     Similarity.twoStageTopKBy(scored, k,
       col("query_id"), xxhash64(col("doc_id")),
       Seq(col("sum_q").desc, col("doc_id")))
-  }
 
   /** Ranked results in the text_bm25_topk display shape (integer-space
     * HALF_UP score).

@@ -118,60 +118,6 @@ object SigStore {
       sortCols = Seq("band_bits"), mode = SaveMode.Overwrite,
       options = Map("partitionOverwriteMode" -> "dynamic"))
 
-  /** Maintenance for a long-streamed store: every band partition accretes
-    * one `batch_id=<n>` dir per micro-batch; fold the cold ones into a
-    * bounded-file generation via the shared crash-safe protocol
-    * (write-new generation → swap → manifest-healed delete; the hottest
-    * batch dir stays protected so an in-flight replay remains
-    * idempotent) — the same code path as AnnIndexIO.compactCells and
-    * BmStore.compactBuckets.
-    */
-  private[graft] def compactBands(s: SparkSession, root: String)
-      : Seq[graft.sources.Writers.CompactionStats] = {
-    val sigs = new Path(root, "sigs.parquet")
-    val f = fs(s, sigs)
-    if (!f.exists(sigs)) Seq.empty
-    else f.listStatus(sigs).filter(_.isDirectory)
-      .map(_.getPath.getName).filter(_.startsWith("band_id="))
-      .map(band => graft.sources.Writers.compactPartitionInternal(
-        s, sigs.toString, band, dropCols = Seq("band_id", "batch_id"),
-        targetFileBytes = 128L * 1024 * 1024, maxRecordsPerFile = 1000000L,
-        sortCols = Seq("band_bits"), crashBeforeDelete = false)).toSeq
-  }
-
-  /** The policy's conservative default bound (r20, VERDICT r19 #6). */
-  private[graft] val DefaultMaxBatchDirs = 16
-
-  /** The store's OWN maintenance policy (r19, VERDICT r18 #6): compact
-    * bands + labels once any band partition has accreted more than
-    * `maxBatchDirs` per-batch generations. Long-running growth otherwise
-    * holds one `batch_id=<n>` dir per batch forever — file counts, the
-    * node-patch pile, and the remap all grow with the absorb horizon,
-    * and each is only reset by an explicit compaction. A caller invokes
-    * this after absorbs; it is a no-op until the policy trips, so the
-    * amortized cost is one fold per `maxBatchDirs` batches. Returns
-    * whether a compaction ran. Only specs call it today.
-    */
-  private[graft] def maintenanceTick(s: SparkSession, root: String,
-      maxBatchDirs: Int = DefaultMaxBatchDirs): Boolean = {
-    val sigs = new Path(root, "sigs.parquet")
-    val f = fs(s, sigs)
-    if (!f.exists(sigs)) false
-    else {
-      val worstBand = f.listStatus(sigs).filter(_.isDirectory)
-        .filter(_.getPath.getName.startsWith("band_id="))
-        .map(b => f.listStatus(b.getPath).count(st => st.isDirectory &&
-          st.getPath.getName.startsWith("batch_id=")))
-        .foldLeft(0)(math.max)
-      if (worstBand <= maxBatchDirs) false
-      else {
-        compactBands(s, root): Unit
-        if (f.exists(new Path(root, "_LABELS_READY"))) compactLabels(s, root)
-        true
-      }
-    }
-  }
-
   /** Build (once per dataset, crash-safe) the banded signature store over
     * the BASE split (`doc_id % 10 =!= 0`, mirroring dedup_incremental).
     */
@@ -371,7 +317,7 @@ object SigStore {
     * [[absorbComponents]]'s composition, so one hop resolves any label.
     *
     * PATCHES WIN over the base generation (anti-join on the patch node
-    * set, bounded by absorbed-batch volume and reset by compactLabels):
+    * set, bounded by absorbed-batch volume):
     * after a crash mid-absorb, the self-heal refixpoint may fold the
     * torn batch's partially-appended sigs into a new BASE generation,
     * and the replayed absorb then re-lands the same docs as a patch —
@@ -416,8 +362,8 @@ object SigStore {
     *   4. the POST-remap label looks up `size_override.parquet` — the
     *      latest recomputed size of every cluster any absorb ever
     *      touched (|Σ delta|-bounded like the node patches, pruned of
-    *      merged-away labels each absorb, reset by [[compactLabels]]) —
-    *      and coalesces over the generation size.
+    *      merged-away labels each absorb) — and coalesces over the
+    *      generation size.
     *
     * Correct because a cluster's size changes ONLY when an absorb
     * touches it (a delta doc joins, or a merge lands on it), and every
@@ -918,9 +864,9 @@ object SigStore {
     * before r19 either lacks the cluster_size column on its generation
     * rows, or carries node patches from absorbs that predate the
     * override file — both fold into a fresh sized generation via
-    * [[publishLabels]] (the compactLabels path), paid at most once per
-    * legacy store. New-code absorbs ALWAYS publish the override (even
-    * empty), so patches-without-override can only mean legacy state.
+    * [[publishLabels]], paid at most once per legacy store. New-code
+    * absorbs ALWAYS publish the override (even empty), so
+    * patches-without-override can only mean legacy state.
     */
   private def ensureSized(s: SparkSession, root: String): Unit = synchronized {
     val f = fs(s, new Path(root))
@@ -932,20 +878,6 @@ object SigStore {
       graft.ColdBuilds.record("sig_labels_size_upgrade")
       publishLabels(s, root, effectiveLabels(s, root))
     }
-  }
-
-  /** Fold node patches and the remap into a fresh base generation (the
-    * label analog of [[compactBands]]): reads effective labels once,
-    * publishes them as the new `labels.parquet`, drops the patch state.
-    * Serving answers are unchanged; the remap hop disappears.
-    */
-  private[graft] def compactLabels(s: SparkSession, root: String): Unit = {
-    val f = fs(s, new Path(root))
-    require(f.exists(new Path(root, "_LABELS_READY")),
-      s"no published labels to compact: $root")
-    // publishLabels materializes internally (its size bake reads the
-    // frame twice) — no caller-side checkpoint needed
-    publishLabels(s, root, effectiveLabels(s, root))
   }
 
   /** Build-absorb-serve, end to end, as a pure function of the dataset

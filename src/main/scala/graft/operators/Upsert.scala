@@ -11,8 +11,7 @@ import graft.sources.{Tables, Writers}
   * operator a slowly-changing 100 TB corpus needs (document re-crawls,
   * label fixes, late batches) when no transaction-log table format is in
   * play. The PyFlink reference has no table-maintenance surface at all;
-  * this rounds out the ingest/compaction/upsert lifecycle with the third
-  * leg.
+  * this adds the upsert leg beside the shard writer.
   *
   * The query materializes `documents` as a lang-partitioned layout, merges
   * a deterministic delta (updates to every 7th doc, inserts cloned from

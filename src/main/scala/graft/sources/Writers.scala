@@ -38,139 +38,6 @@ object Writers {
       .parquet(outDir)
   }
 
-  /** Read a shard layout whose batches were written under EVOLVING
-    * schemas — a 100 TB ingest outlives any fixed schema (new quality /
-    * provenance columns appear mid-stream). `mergeSchema` unions the
-    * footer schemas of every file; rows from pre-evolution files surface
-    * the later-added columns as null. Directory-level partition pruning
-    * is unaffected (it reads the layout, not the footers). The contract
-    * is ADD-ONLY: changing an existing column's type makes the merge
-    * fail loudly rather than coerce — enforce renames/retypes as new
-    * columns upstream.
-    */
-  def readShardsEvolved(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame =
-    spark.read.option("mergeSchema", "true").parquet(dir)
-
-  /** One partition-dir compaction outcome. `generation` is the negative
-    * batch_id the compacted files were published under (0 = no-op).
-    */
-  final case class CompactionStats(partition: String, dirsCompacted: Int,
-      filesBefore: Int, filesAfter: Int, generation: Long)
-
-  /** Name of the per-generation manifest listing the source dirs a
-    * compaction replaced. Underscore-prefixed → invisible to Spark's
-    * partition discovery, like _SUCCESS.
-    */
-  private val ManifestFile = "_graft_compaction_sources"
-
-  /** Compact one dir (`cell_id=3`, `band_id=7`, `tok_bucket=12`,
-    * `docvec.parquet`, …) whose children are `batch_id=<n>` commit dirs — the
-    * layout the AnnIndexIO, SigStore and BmStore appends write (one dir
-    * per committed batch; a long-running append accretes thousands, each
-    * with few small files). The dirs are rewritten into ONE new
-    * generation dir of bounded-size files, and the old dirs are retired.
-    *
-    * Protocol (write-new → swap → delete):
-    *  1. recover: any previous generation whose manifest still lists
-    *     existing source dirs is a crashed swap — delete those sources
-    *     first (completing it) so their rows can never be read twice;
-    *  2. the HIGHEST non-negative batch id is left untouched: a replayed
-    *     append may rewrite exactly that batch (dynamic overwrite of its
-    *     dir), and compacting it away would turn the replay into an
-    *     append of duplicates — it joins the next compaction once a newer
-    *     batch exists;
-    *  3. every other `batch_id` dir (including prior generations) is read
-    *     in one pass, repartitioned to ceil(bytes / targetFileBytes)
-    *     writers, and written to a dot-prefixed temp dir (invisible to
-    *     readers) together with the manifest;
-    *  4. ONE atomic rename publishes the temp dir as `batch_id=<gen>`
-    *     (gen = −1, −2, … so generations can never collide with real
-    *     batch ids and the long-typed partition column parses
-    *     unchanged); the replaced dirs are then deleted.
-    *
-    * A reader concurrently listing the root between steps 4 and the final
-    * deletes can observe rows twice (never lose any); a crash in that
-    * window is healed by step 1 on the next run. Pruning on the partition
-    * column is untouched — compaction only ever rewrites below one
-    * partition dir. `dropCols` names the partition columns the read picks
-    * up from the path, so the rewritten data files stay partition-free.
-    * `crashBeforeDelete` stops after the publishing rename, leaving the
-    * source dirs in place — a simulated crash inside the swap window
-    * that the next regular call must heal.
-    */
-  private[graft] def compactPartitionInternal(
-      spark: org.apache.spark.sql.SparkSession, outDir: String,
-      partitionDir: String, dropCols: Seq[String],
-      targetFileBytes: Long, maxRecordsPerFile: Long, sortCols: Seq[String],
-      crashBeforeDelete: Boolean): CompactionStats = {
-    import org.apache.hadoop.fs.Path
-    val partPath = new Path(outDir, partitionDir)
-    val fs = partPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(partPath), s"no such partition dir: $partPath")
-
-    def batchDirs = fs.listStatus(partPath).filter(_.isDirectory)
-      .map(_.getPath).filter(_.getName.startsWith("batch_id="))
-    def idOf(p: Path): Long = p.getName.stripPrefix("batch_id=").toLong
-    def parquetFiles(p: Path): Array[Path] =
-      fs.listStatus(p).map(_.getPath).filter(_.getName.endsWith(".parquet"))
-
-    // 1. heal a crashed swap: a generation's manifest lists the dirs it
-    // replaced; any still on disk hold rows ALSO present in the
-    // generation — finish their deletion before reading anything
-    for (g <- batchDirs if idOf(g) < 0) {
-      val mf = new Path(g, ManifestFile)
-      if (fs.exists(mf)) {
-        val in = fs.open(mf)
-        val listed = try scala.io.Source.fromInputStream(in).getLines().toList
-                     finally in.close()
-        listed.map(new Path(partPath, _)).filter(fs.exists)
-          .foreach(p => fs.delete(p, true))
-        fs.delete(mf, false)
-      }
-    }
-
-    val dirs = batchDirs
-    val hot = dirs.filter(idOf(_) >= 0).sortBy(idOf).lastOption
-    val included = dirs.filterNot(p => hot.exists(_.getName == p.getName))
-    val filesBefore = dirs.map(parquetFiles(_).length).sum
-    // nothing to merge: no candidates, or just one dir that IS already a
-    // compacted generation (re-rolling it forever would churn bytes)
-    if (included.isEmpty || (included.length == 1 && idOf(included.head) < 0))
-      return CompactionStats(partitionDir, 0, filesBefore, filesBefore, 0L)
-
-    val gen = (included.map(idOf).filter(_ < 0) :+ 0L).min - 1
-    val bytes = included.map(fs.getContentSummary(_).getLength).sum
-    val nOut = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-
-    // 3. one pass over the included dirs; basePath keeps the partition
-    // columns (dropped → data files stay partition-free)
-    val df0 = spark.read.option("basePath", outDir)
-      .parquet(included.map(_.toString): _*)
-      .drop(dropCols: _*)
-      .repartition(nOut)
-    val df = if (sortCols.nonEmpty && sortCols.forall(df0.columns.contains))
-      df0.sortWithinPartitions(sortCols.map(col): _*) else df0
-    val tmp = new Path(outDir, s".compact_tmp_$partitionDir")
-    fs.delete(tmp, true)
-    df.write.mode(SaveMode.Overwrite)
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .parquet(tmp.toString)
-    val mfOut = fs.create(new Path(tmp, ManifestFile), true)
-    try mfOut.write(included.map(_.getName).mkString("\n").getBytes("UTF-8"))
-    finally mfOut.close()
-
-    // 4. publish atomically, then retire the replaced dirs
-    val genDir = new Path(partPath, s"batch_id=$gen")
-    require(fs.rename(tmp, genDir), s"publish rename failed: $tmp -> $genDir")
-    if (!crashBeforeDelete) {
-      included.foreach(p => fs.delete(p, true))
-      fs.delete(new Path(genDir, ManifestFile), false)
-    }
-    val filesAfter = batchDirs.map(parquetFiles(_).length).sum
-    CompactionStats(partitionDir, included.length, filesBefore, filesAfter, gen)
-  }
-
   /** Outcome of one [[mergeUpsert]] call. `updated` = delta rows whose key
     * existed in the base (replaced in place); `inserted` = delta rows with
     * new keys; `kept` = untouched base rows *within the rewritten
@@ -198,12 +65,12 @@ object Writers {
     *    join on the key (broadcast when the delta is small), then
     *    survivors ∪ delta is re-sharded like [[writeShards]].
     *
-    * Publish protocol (write-new → commit → swap → delete, same posture as
-    * [[compactPartitionInternal]]): the merged rows stage under `.upsert_stage`
-    * (dot-prefixed → invisible to readers), a `_graft_upsert_commit`
-    * marker lands ONLY once staging is complete, then PER PARTITION the
-    * live dir renames to a retire name and the staged dir renames live;
-    * retires and the stage dir are deleted last. The marker is the commit
+    * Publish protocol (write-new → commit → swap → delete): the merged
+    * rows stage under `.upsert_stage` (dot-prefixed → invisible to
+    * readers), a `_graft_upsert_commit` marker lands ONLY once staging
+    * is complete, then PER PARTITION the live dir renames to a retire
+    * name and the staged dir renames live; retires and the stage dir are
+    * deleted last. The marker is the commit
     * point: [[healUpserts]] (run on entry) rolls an interrupted merge
     * FORWARD when the marker exists (every staged partition publishes) and
     * BACK when it doesn't (stage discarded, any retires restored) — a

@@ -1,12 +1,9 @@
 package graft.streaming
 
-import java.time.format.DateTimeFormatter
-import java.time.{LocalDateTime, ZoneOffset}
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 
 import graft.model.FraudConstants._
 import graft.model.{CardState, Transaction}
@@ -90,15 +87,6 @@ object FraudScoring {
 
     (score, reasons, CardState(history, Some(location), Some(eventMillis)))
   }
-
-  /** ISO-8601 `Z`-suffixed timestamp → epoch millis, the reference's naive
-    * parse pinned to UTC (flink/fraud_detection.py:85, SURVEY.md §1.2).
-    */
-  def parseMillis(ts: String): Long =
-    LocalDateTime
-      .parse(ts.replace("Z", ""), DateTimeFormatter.ISO_LOCAL_DATE_TIME)
-      .toInstant(ZoneOffset.UTC)
-      .toEpochMilli
 }
 
 /** Structured Streaming replication of the reference jobs: Kafka JSON in,
@@ -141,6 +129,17 @@ object FraudStream {
       .option("startingOffsets", startingOffsets)
       .load()
 
+  /** Event time of a `timestamp` string: the reference's parse
+    * (flink/fraud_detection.py:85, SURVEY.md §1.2) as in
+    * `FraudRules.withEventMillis` — strip the `Z`, Spark's ISO cast, the
+    * session TZ pinned to UTC — but null where the string does not parse
+    * instead of failing the query. The watermark, the dead-letter split
+    * and the fold's event time all read it, so a row the split admits
+    * always has the event time the fold scores it at.
+    */
+  private def eventTime(ts: Column): Column =
+    try_to_timestamp(regexp_replace(ts, "Z$", ""))
+
   /** JSON deserialization (S2) + 5 s watermark (S3): value bytes →
     * name-matched 13-field row; event time from the `timestamp` string.
     */
@@ -156,8 +155,7 @@ object FraudStream {
     import parsed.sparkSession.implicits._
     parsed
       .select("tx.*")
-      .withColumn("event_time",
-        to_timestamp(regexp_replace(col("timestamp"), "Z$", "")))
+      .withColumn("event_time", eventTime(col("timestamp")))
       .withWatermark("event_time", "5 seconds")
       .drop("event_time")
       .as[Transaction]
@@ -169,10 +167,12 @@ object FraudStream {
   /** [[parse]] with a dead-letter channel: the reference's
     * `JsonRowDeserializationSchema` fails the task on malformed JSON; at
     * 100 TB/day a poison record must not kill the job. PERMISSIVE
-    * `from_json` nulls the struct on parse failure; rows whose struct is
-    * null (or that lack the two fields scoring cannot proceed without)
-    * route to a dead-letter frame carrying the raw payload for replay.
-    * Returns (good, dead) — same upstream scan, two filtered views.
+    * `from_json` nulls the struct on parse failure and a field on a type
+    * mismatch. Every row the fold cannot score — no struct, no
+    * `card_id`, no numeric `amount`, or a `timestamp` that [[eventTime]]
+    * cannot parse — routes to a dead-letter frame carrying the raw
+    * payload for replay. Returns (good, dead) — same upstream scan, two
+    * filtered views.
     *
     * `rejected_at` is each row's own rejection time, a timestamp. It is
     * not `current_timestamp()`: streaming replaces that with a per-batch
@@ -184,16 +184,18 @@ object FraudStream {
     val parsed = kafka
       .select(col("value").cast("string").as("raw"),
         from_json(col("value").cast("string"), txSchema).as("tx"))
-    val bad = parsed.filter(
-      col("tx").isNull || col("tx.card_id").isNull || col("tx.timestamp").isNull)
+    // never null: a null struct makes every field test false
+    val scorable = col("tx.card_id").isNotNull && col("tx.amount").isNotNull &&
+      eventTime(col("tx.timestamp")).isNotNull
+    val bad = parsed.filter(!scorable)
       .select(col("raw"), rejectionTime().as("rejected_at"))
-    val good = watermarked(parsed.filter(
-      col("tx").isNotNull && col("tx.card_id").isNotNull && col("tx.timestamp").isNotNull))
-    (good, bad)
+    (watermarked(parsed.filter(scorable)), bad)
   }
 
   /** Keyed stateful scoring (P1 + P2): shuffle by card_id, fold each
-    * group's events in event-time order through [[FraudScoring.scoreOne]].
+    * group's events in event-time order ([[eventTime]]; an unparseable
+    * `timestamp` fails the query, so route such rows away first with
+    * [[parseWithDeadLetter]]) through [[FraudScoring.scoreOne]].
     * State carries [[CardState]] with a 10-minute processing-time timeout
     * renewed on every write — Flink's OnCreateAndWrite TTL (§1.4).
     *
@@ -205,11 +207,16 @@ object FraudStream {
       rapidCount: Int = RapidTxCountV1
   ): Dataset[ScoredEvent] = {
     import txs.sparkSession.implicits._
+    val fields = Encoders.product[Transaction].schema.fieldNames.map(col)
     txs
-      .groupByKey(_.card_id)
+      .select(struct(fields: _*).as("_1"),
+        unix_millis(eventTime(col("timestamp"))).as("_2"))
+      .as[(Transaction, Long)]
+      .groupByKey(_._1.card_id)
       .flatMapGroupsWithState[CardState, ScoredEvent](
         OutputMode.Append, GroupStateTimeout.ProcessingTimeTimeout) {
-        (cardId: String, events: Iterator[Transaction], state: GroupState[CardState]) =>
+        (cardId: String, events: Iterator[(Transaction, Long)],
+         state: GroupState[CardState]) =>
           if (state.hasTimedOut) {
             // TTL expiry: drop the card's state, nothing to emit.
             state.remove()
@@ -217,9 +224,8 @@ object FraudStream {
           } else {
             var st = state.getOption.getOrElse(CardState(Nil, None, None))
             val out = events.toSeq
-              .map(t => (FraudScoring.parseMillis(t.timestamp), t))
-              .sortBy { case (ms, t) => (ms, t.event_id) }
-              .map { case (ms, t) =>
+              .sortBy { case (t, ms) => (ms, t.event_id) }
+              .map { case (t, ms) =>
                 val (score, reasons, next) =
                   FraudScoring.scoreOne(st, t.amount, t.location, ms, rapidCount)
                 st = next

@@ -178,47 +178,4 @@ class AnnIndexIOSpec extends AnyFunSuite {
     val got = AnnIndexIO.serveAll(spark, sf, streamRoot).collect().map(key).toSet
     assert(got == expect)
   }
-
-  test("compactCells folds streamed batch dirs without changing served answers") {
-    import spark.implicits._
-    AnnIndexIO.deleteIndex(spark, sf)
-    val root = AnnIndexIO.ensureBaseBuilt(spark, sf, "stream")
-    // 8 streamed micro-batches (delta split round-robin)
-    val delta = spark.read.parquet(s"$sf/embeddings.parquet")
-      .filter(col("vec_id") % AnnIndexIO.DeltaMod === 0)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
-      .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-    (0 until 8).foreach { b =>
-      val rows = delta.filter(_._1 % 8 == b).toSeq
-      if (rows.nonEmpty)
-        AnnIndexIO.appendBatch(spark, root, rows.toDF("vec_id", "emb"), b.toLong)
-    }
-    val before = AnnIndexIO.serveAll(spark, sf, root).collect().map(key).toSet
-    def files = {
-      val it = new java.io.File(s"$root/codes.parquet").listFiles()
-      def rec(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) f.listFiles().toSeq.flatMap(rec) else Seq(f)
-      it.toSeq.flatMap(rec).filter(_.getName.endsWith(".parquet"))
-    }
-    val nBefore = files.size
-    // the hottest streamed batch dir must survive compaction (replay stays
-    // idempotent): capture which cells carry batch_id=7 BEFORE, compare after
-    def cellsWithHotBatch = new java.io.File(s"$root/codes.parquet").listFiles()
-      .filter(_.isDirectory)
-      .filter(c => c.listFiles().exists(_.getName == "batch_id=7"))
-      .map(_.getName).toSet
-    val hotBefore = cellsWithHotBatch
-    assert(hotBefore.nonEmpty, "fixture must stream rows into batch 7")
-    val stats = AnnIndexIO.compactCells(spark, root)
-    assert(stats.nonEmpty && stats.exists(_.dirsCompacted > 0))
-    assert(files.size < nBefore, s"${files.size} !< $nBefore")
-    assert(cellsWithHotBatch == hotBefore,
-      s"hottest batch dirs changed: before=$hotBefore after=$cellsWithHotBatch")
-    val after = AnnIndexIO.serveAll(spark, sf, root).collect().map(key).toSet
-    assert(after == before, "compaction must not change served answers")
-    val codes = spark.read.parquet(s"$root/codes.parquet")
-    val total = spark.read.parquet(s"$sf/embeddings.parquet").count()
-    assert(codes.count() == total)
-    assert(codes.select("vec_id").distinct().count() == total)
-  }
 }

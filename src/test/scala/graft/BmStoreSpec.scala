@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{BmStore, Retrieval}
+import graft.operators.Retrieval.FrozenIndexStats
 import org.apache.spark.sql.expressions.Window
 
 /** The persisted BM25 postings store must serve bit-identical rankings to
@@ -18,6 +19,13 @@ class BmStoreSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
   private val sf = TestSpark.sf0001
+
+  /** The exhaustive plan's scored pairs through the ranking every serve
+    * plan shares — the reference a routed serve must equal.
+    */
+  private def exhaustiveRanked(root: String, frozen: FrozenIndexStats, k: Int) =
+    BmStore.rankTopK(BmStore.servedScored(spark, root, frozen), k)
+      .collect().map(_.toSeq).sortBy(_.toString)
 
   test("served top-k == the in-memory text_bm25_topk, exactly") {
     assume(TestSpark.fixturesPresent, TestSpark.fixturesHint)
@@ -137,22 +145,6 @@ class BmStoreSpec extends AnyFunSuite {
       scans.exists(_.contains("codes.parquet")))
   }
 
-  test("compaction folds batch dirs without changing served answers") {
-    assume(TestSpark.fixturesPresent, TestSpark.fixturesHint)
-    val root = java.nio.file.Files.createTempDirectory("bm_cmp").toString + "/store"
-    val docs = spark.read.parquet(s"$sf/documents.parquet")
-    BmStore.buildFrom(spark, root, docs.filter(col("doc_id") % 10 =!= 0))
-    BmStore.appendBatch(spark, root, docs.filter(col("doc_id") % 10 === 0), 0L)
-    val frozen = BmStore.frozenStats(spark, root, sf)
-    val before = BmStore.servedRanked(spark, root, frozen, Retrieval.BmTopK)
-      .collect().map(_.toSeq).sortBy(_.toString)
-    val stats = BmStore.compactBuckets(spark, root)
-    assert(stats.nonEmpty)
-    val after = BmStore.servedRanked(spark, root, frozen, Retrieval.BmTopK)
-      .collect().map(_.toSeq).sortBy(_.toString)
-    assert(after.toSeq === before.toSeq)
-  }
-
   test("doc-vector serving == exhaustive serving, full frame, and auto-select picks it here") {
     assume(TestSpark.fixturesPresent, TestSpark.fixturesHint)
     val root = BmStore.ensureFullBuilt(spark, sf)
@@ -230,7 +222,7 @@ class BmStoreSpec extends AnyFunSuite {
     // output equality (which an inverted gate preserves). Here the
     // ROUTER's executed arm reports its scored-row volume; on the
     // skewed corpus the auto route must be wand AND must process
-    // strictly fewer rows than the docvec arm forced over the same
+    // strictly fewer rows than the docvec arm computes over the same
     // standing set — an inverted verdict fails BOTH assertions.
     val common = (0 until 10).map(i => s"common$i")
     val docs = (0L until 400L).map { i =>
@@ -248,18 +240,13 @@ class BmStoreSpec extends AnyFunSuite {
     val k = Retrieval.BmTopK
     graft.PlanVolume.reset()
     sys.props("graft.bm.probe") = "volume"
-    try {
-      BmStore.servedRanked(spark, root, frozen, k).count() // auto route
-      sys.props("graft.bm.serve.plan") = "docvec"
-      try BmStore.servedRanked(spark, root, frozen, k).count()
-      finally sys.props.remove("graft.bm.serve.plan")
-    } finally sys.props.remove("graft.bm.probe")
+    try BmStore.servedRanked(spark, root, frozen, k).count() // auto route
+    finally sys.props.remove("graft.bm.probe")
     val recs = graft.PlanVolume.records("bm.serve")
-    assert(recs.size === 2, s"expected 2 probe records, got $recs")
+    assert(recs.size === 1, s"expected 1 probe record, got $recs")
     val (autoArm, autoRows) = recs(0)
-    val (dvArm, dvRows) = recs(1)
+    val dvRows = BmStore.servedDocVec(spark, root, frozen).count()
     assert(autoArm === "wand", s"skewed wide set must route to wand ($recs)")
-    assert(dvArm === "docvec")
     assert(autoRows < dvRows / 2,
       s"routed wand arm must prune observably: $autoRows vs docvec $dvRows")
   }
@@ -311,11 +298,8 @@ class BmStoreSpec extends AnyFunSuite {
     val got = ranked.collect().map(_.toSeq).sortBy(_.toString)
     // exactly ONE θ probe: the wide class's; the short class never probes
     assert(BmStore.wandProbeCount.get() === p0 + 1)
-    // exactness: identical to the exhaustive-forced plan over the whole batch
-    sys.props("graft.bm.serve.plan") = "exhaustive"
-    val want = try BmStore.servedRanked(spark, root, frozen, k)
-        .collect().map(_.toSeq).sortBy(_.toString)
-      finally sys.props.remove("graft.bm.serve.plan")
+    // exactness: identical to the exhaustive plan over the whole batch
+    val want = exhaustiveRanked(root, frozen, k)
     assert(got.nonEmpty && got.toSeq === want.toSeq)
     // both sub-plans ran: the wide class's WAND DAG reads postings twice,
     // the short class's exhaustive read adds a third
@@ -337,45 +321,6 @@ class BmStoreSpec extends AnyFunSuite {
     BmStore.servedRanked(spark, root, frozen2, k)
     assert(BmStore.wandProbeCount.get() === p1 + 1,
       "a changed standing set did not re-probe (stale per-root verdict)")
-  }
-
-  test("verdict convergence: a homogeneous wide workload stops probing after agreeing verdicts") {
-    assume(TestSpark.fixturesPresent, TestSpark.fixturesHint)
-    // Every batch freezes a DIFFERENT standing set (new fingerprint each
-    // time). On this flat-vocab corpus every wide
-    // batch's probe returns docvec — after VerdictStickyAfter agreeing
-    // probes, later unseen fingerprints must adopt it probe-free.
-    // precheck=off: the flat-vocab free verdict (tested separately
-    // below) would otherwise answer every batch before the stickiness
-    // machinery this spec exists to exercise.
-    sys.props("graft.bm.serve.precheck") = "off"
-    try {
-    val dir = java.nio.file.Files.createTempDirectory("bm_conv").toString
-    val root = dir + "/store"
-    val docsDf = spark.read.parquet(s"$sf/documents.parquet")
-    BmStore.buildFrom(spark, root, docsDf)
-    val wideDocs = docsDf.select("doc_id", "text").collect()
-      .map(r => (r.getLong(0), r.getString(1).split(" ").toSeq))
-      .filter(_._2.distinct.size > BmStore.WideQueryMinTerms + 4)
-    assert(wideDocs.length >= 20, "fixture lacks wide documents for this spec")
-    val p0 = BmStore.wandProbeCount.get()
-    val frozens = (0 until 5).map { i =>
-      val qs = wideDocs.slice(i * 4, i * 4 + 4).toSeq
-        .map { case (id, ts) => (1000000L * (i + 1) + id, ts) }
-      BmStore.frozenStatsForQueries(spark, root, qs)
-    }
-    frozens.foreach(f => BmStore.servedRanked(spark, root, f, Retrieval.BmTopK))
-    assert(BmStore.wandProbeCount.get() - p0 === BmStore.VerdictStickyAfter.toLong,
-      "probe count != VerdictStickyAfter: convergence cache not engaged")
-    // the adopted-verdict serve is still exact
-    sys.props("graft.bm.serve.plan") = "exhaustive"
-    val want = try BmStore.servedRanked(spark, root, frozens.last, Retrieval.BmTopK)
-        .collect().map(_.toSeq).sortBy(_.toString)
-      finally sys.props.remove("graft.bm.serve.plan")
-    val got = BmStore.servedRanked(spark, root, frozens.last, Retrieval.BmTopK)
-      .collect().map(_.toSeq).sortBy(_.toString)
-    assert(got.nonEmpty && got.toSeq === want.toSeq)
-    } finally sys.props.remove("graft.bm.serve.precheck")
   }
 
   test("flat-vocab wide class verdicts docvec JOB-FREE; a mixed batch rides one forward-index pass") {
@@ -412,11 +357,8 @@ class BmStoreSpec extends AnyFunSuite {
     assert(scans.forall(p =>
       !p.contains("postings.parquet") && !p.contains("documents.parquet")),
       s"mixed flat batch still runs a postings sub-plan: $scans")
-    // and it is exact vs the exhaustive-forced plan
-    sys.props("graft.bm.serve.plan") = "exhaustive"
-    val want = try BmStore.servedRanked(spark, root, frozen, Retrieval.BmTopK)
-        .collect().map(_.toSeq).sortBy(_.toString)
-      finally sys.props.remove("graft.bm.serve.plan")
+    // and it is exact vs the exhaustive plan
+    val want = exhaustiveRanked(root, frozen, Retrieval.BmTopK)
     assert(got.nonEmpty && got.toSeq === want.toSeq)
   }
 

@@ -20,8 +20,6 @@ class KnobInventorySpec extends AnyFunSuite {
     "graft.ann.prod.bound",
     "graft.banded.probe",
     "graft.bm.probe",
-    "graft.bm.serve.plan",
-    "graft.bm.serve.precheck",
     "graft.cc.sigdedup",
     "graft.jaccard.prefix.ratio")
 

@@ -5,14 +5,12 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.SigStore
 
 /** Long-horizon store lifecycle (r19, VERDICT r18 #6): the flat-remap
-  * invariant, patch reset, and compaction bounds are each unit-pinned,
-  * but nothing drove them TOGETHER over a long absorb horizon. This
-  * drives 50 micro-batch absorbs through the store's own maintenance
-  * policy ([[SigStore.maintenanceTick]]) and asserts, at the end:
-  * bounded per-band batch-dir counts, a flat remap (ran ∩ dom = ∅),
-  * label+size identity vs a from-scratch build over the same corpus,
-  * and a final serve that did not degrade pathologically vs an early
-  * one.
+  * invariant and the size override are each unit-pinned, but nothing
+  * drove them TOGETHER over a long absorb horizon. This drives 50
+  * micro-batch absorbs (and a replay of the last) and asserts, at the
+  * end: a flat remap (ran ∩ dom = ∅), label+size identity vs a
+  * from-scratch build over the same corpus, and the size of the cluster
+  * a mid-horizon doc bridged.
   */
 class SigLifecycleSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -45,10 +43,9 @@ class SigLifecycleSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
       .toSet
 
-  test("50-batch absorb horizon: policy compactions, flat remap, bounded files, identity vs from-scratch") {
+  test("50-batch absorb horizon: flat remap, identity vs from-scratch") {
     val rng = new scala.util.Random(19L)
     val root = java.nio.file.Files.createTempDirectory("cc_life").toString + "/store"
-    val MaxBatchDirs = 8
 
     val base = Seq(1L -> tB, 2L -> tB, 3L -> tC, 5L -> singleton(rng))
     SigStore.buildFrom(spark, root, docsOf(base))
@@ -56,8 +53,6 @@ class SigLifecycleSpec extends AnyFunSuite {
 
     val all = scala.collection.mutable.ArrayBuffer.empty[(Long, String)]
     all ++= base
-    var compactions = 0
-    var earlyServeSec = -1.0
     var lastBatch: Seq[(Long, String)] = Nil
     for (b <- 1 to 50) {
       val docs = scala.collection.mutable.ArrayBuffer.empty[(Long, String)]
@@ -69,37 +64,17 @@ class SigLifecycleSpec extends AnyFunSuite {
       SigStore.absorbComponents(spark, root, docsOf(docs.toSeq), batchId = b.toLong)
       all ++= docs
       lastBatch = docs.toSeq
-      if (SigStore.maintenanceTick(spark, root, MaxBatchDirs)) compactions += 1
-      if (b == 5) {
-        val t0 = System.nanoTime()
-        served(root): Unit
-        earlyServeSec = (System.nanoTime() - t0) / 1e9
-      }
     }
     // structured-streaming recovery: the LAST batch replays verbatim
     SigStore.absorbComponents(spark, root, docsOf(lastBatch), batchId = 50L)
 
-    // the policy actually fired — 50 batches against an 8-dir bound
-    assert(compactions >= 3, s"expected ≥3 policy compactions, got $compactions")
-
-    // bounded per-band batch dirs: growth since the LAST compaction only
-    val sigDir = new java.io.File(s"$root/sigs.parquet")
-    val bandDirCounts = sigDir.listFiles().filter(_.isDirectory)
-      .filter(_.getName.startsWith("band_id="))
-      .map(_.listFiles().count(f => f.isDirectory && f.getName.startsWith("batch_id=")))
-    assert(bandDirCounts.nonEmpty && bandDirCounts.max <= MaxBatchDirs + 1,
-      s"batch dirs unbounded: max ${bandDirCounts.max} vs policy $MaxBatchDirs")
-
-    // flat remap: ran ∩ dom = ∅ (one hop resolves any label), if any
-    // remap survived the last compaction
-    val remapFile = new java.io.File(s"$root/label_remap.parquet")
-    if (remapFile.exists()) {
-      val remap = spark.read.parquet(remapFile.toString)
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
-      val dom = remap.map(_._1).toSet
-      val ran = remap.map(_._2).toSet
-      assert((dom & ran).isEmpty, s"remap not flat: ${dom & ran}")
-    }
+    // flat remap: ran ∩ dom = ∅ (one hop resolves any label); the
+    // mid-horizon merge guarantees the remap is non-empty
+    val remap = spark.read.parquet(s"$root/label_remap.parquet")
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    val dom = remap.map(_._1).toSet
+    val ran = remap.map(_._2).toSet
+    assert(remap.nonEmpty && (dom & ran).isEmpty, s"remap not flat: ${dom & ran}")
 
     // label identity + size identity vs a from-scratch build over the
     // identical corpus — the maintained store IS the one-shot clustering
@@ -116,13 +91,5 @@ class SigLifecycleSpec extends AnyFunSuite {
     val bSize = maintained.find(_._1 == 1L).get._3
     assert(bSize == all.count(d => d._2 == tB || d._2 == tC || d._2 == tE),
       s"bridged mega-cluster size wrong: $bSize")
-
-    // serve cost did not degrade pathologically across the horizon
-    val t0 = System.nanoTime()
-    served(root): Unit
-    val lateServeSec = (System.nanoTime() - t0) / 1e9
-    System.err.println(f"[lifecycle] serve wall: batch5 $earlyServeSec%.2fs batch50 $lateServeSec%.2fs, $compactions compactions")
-    assert(lateServeSec <= earlyServeSec * 10 + 2.0,
-      f"serve degraded across the horizon: $earlyServeSec%.2fs -> $lateServeSec%.2fs")
   }
 }

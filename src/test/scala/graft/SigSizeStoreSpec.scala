@@ -74,7 +74,7 @@ class SigSizeStoreSpec extends AnyFunSuite {
       (5L, 5L, 1L, true), (20L, 20L, 1L, true)))
   }
 
-  test("override tracks sizes across merging absorbs and replays; compaction folds it away") {
+  test("override tracks sizes across merging absorbs and replays") {
     val root = freshAbsorbedStore()
     // second batch: 11 replays nothing but joins the merged cluster; 30 new isolate
     val t30 = "five two six ten zero one eight nine thirteen four eleven seven"
@@ -88,11 +88,6 @@ class SigSizeStoreSpec extends AnyFunSuite {
     // replay of the last batch: override recomposes to itself
     SigStore.absorbComponents(spark, root, docsOf(11L -> tE, 30L -> t30), 1L)
     assert(served(root) == expected, "absorb replay must leave sizes unchanged")
-    // compaction bakes the sizes into a fresh generation and drops the override
-    SigStore.compactLabels(spark, root)
-    assert(!new java.io.File(s"$root/size_override.parquet").exists(),
-      "compaction must fold the size override into the generation")
-    assert(served(root) == expected)
   }
 
   test("legacy store without the cluster_size column self-upgrades exactly once") {
@@ -190,7 +185,7 @@ class SigSizeStoreSpec extends AnyFunSuite {
     assert(rows.nonEmpty, "fraud ML scoring must survive a prior observed serve")
   }
 
-  test("served plan never aggregates the corpus label table; compacted serve is a bare scan") {
+  test("served plan never aggregates the corpus label table") {
     val root = freshAbsorbedStore()
     def scansLabels(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan) =
       p.collectLeaves().exists {
@@ -216,13 +211,5 @@ class SigSizeStoreSpec extends AnyFunSuite {
     // detector sees
     assert(aggregatesOverLabels(aggregated(root)).nonEmpty,
       "probe: the per-serve aggregate must show the corpus aggregate")
-    // compacted store: no patches, no remap, no override — the serve is a
-    // single generation scan with zero aggregates and zero joins
-    SigStore.compactLabels(spark, root)
-    val plan = SigStore.serveComponentsStored(spark, root).queryExecution.optimizedPlan
-    assert(plan.collect {
-      case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a
-      case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
-    }.isEmpty, s"compacted serve must be a bare scan:\n$plan")
   }
 }

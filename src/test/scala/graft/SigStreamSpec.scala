@@ -16,8 +16,7 @@ final case class DocInsert(doc_id: Long, text: String)
 /** Stream-grown signature store ≡ one-shot build over the same corpus,
   * and a replayed append is a no-op on the served answers. The stream
   * commits each micro-batch with `SigStore.appendBatch` (or
-  * `absorbComponents`) under its micro-batch id, then runs the store's
-  * `maintenanceTick` at its default batch-directory bound.
+  * `absorbComponents`) under its micro-batch id.
   */
 class SigStreamSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -28,7 +27,6 @@ class SigStreamSpec extends AnyFunSuite {
     StreamDrive.foreachBatch(docs, Some(checkpointDir), trigger) { (batch, batchId) =>
       if (components) SigStore.absorbComponents(spark, root, batch.toDF(), batchId)
       else SigStore.appendBatch(spark, root, batch.toDF(), batchId)
-      SigStore.maintenanceTick(spark, root): Unit
     }
 
   // deterministic doc text: dup pairs share a body, novel docs are unique
@@ -83,21 +81,6 @@ class SigStreamSpec extends AnyFunSuite {
       ms2.addData(lateB.drop(15)); q2.processAllAvailable()
     } finally q2.stop()
     assert(canon(SigStore.serveAgainst(spark, grownRoot, deltaDf)) == streamed)
-
-    // compaction: batch dirs fold into a generation, answers unchanged,
-    // strictly fewer files
-    def files(root: String) = {
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) f.listFiles.toSeq.flatMap(walk) else Seq(f)
-      walk(new java.io.File(root, "sigs.parquet"))
-        .filter(_.getName.endsWith(".parquet"))
-    }
-    val before = files(grownRoot).size
-    val stats = SigStore.compactBands(spark, grownRoot)
-    assert(stats.nonEmpty && stats.exists(_.dirsCompacted > 0))
-    assert(files(grownRoot).size < before)
-    assert(canon(SigStore.serveAgainst(spark, grownRoot, deltaDf)) == streamed,
-      "compaction must not change served answers")
   }
 
   test("streamed component absorption == one-shot clustering; replay is a no-op") {

@@ -2,38 +2,21 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.Skew
 import graft.sources.{Tables, Writers}
 
-/** Skew utilities produce results identical to their naive forms; the
-  * shard writer produces a prunable hive layout; the batch-dir compaction
-  * protocol keeps rows, pruning and replay safety; the jdbc sinks
-  * round-trip; AQE splits a skewed join partition.
+/** AQE splits a skewed join partition; the shard writer produces a
+  * prunable hive layout; an add-only schema evolution merges on read; the
+  * jdbc sinks round-trip.
   */
 class SkewWritersSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val sf = TestSpark.sf0001
 
-  test("salted join == plain join on an extreme-skew key (3 distinct values)") {
-    val li = Tables.lineitem(spark, sf)
-    val dim = Tables.lineitem(spark, sf)
-      .select("l_returnflag").distinct()
-      .withColumn("flag_code", expr("ascii(l_returnflag)"))
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.groupBy("l_returnflag", "flag_code").count()
-        .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2))).toSet
-    val plain = canon(li.join(dim, Seq("l_returnflag")))
-    val salted = canon(Skew.saltedJoin(li, dim, Seq("l_returnflag"), 8))
-    assert(salted == plain && plain.nonEmpty)
-  }
-
-  // saltedJoin is the manual lever; AQE skew-join is the automatic one the
-  // operator docs defer to ("otherwise prefer AQE skew-join",
-  // dedup_components' label-skew residual). Prove it actually fires: a
+  // AQE skew-join is the skew lever the operators rely on
+  // (dedup_components' label-skew residual). Prove it actually fires: a
   // 95%-one-key join, thresholds scaled to test data, and the FINAL
   // adaptive plan must show the skewed partition was split (skew=true).
   test("AQE splits the skewed partition of a sort-merge join (skew=true)") {
@@ -69,16 +52,6 @@ class SkewWritersSpec extends AnyFunSuite {
     }
   }
 
-  test("two-stage distinct count == countDistinct") {
-    val li = Tables.lineitem(spark, sf)
-    val naive = li.groupBy("l_returnflag")
-      .agg(countDistinct("l_partkey").as("n_distinct"))
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSet
-    val staged = Skew.twoStageDistinctCount(li, "l_returnflag", "l_partkey")
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSet
-    assert(staged == naive && naive.nonEmpty)
-  }
-
   test("shard writer: hive layout, pruned read matches, shard size capped") {
     val out = Files.createTempDirectory("shards").toString
     val orders = Tables.orders(spark, sf)
@@ -106,7 +79,8 @@ class SkewWritersSpec extends AnyFunSuite {
       .toDF("doc_id", "lang", "score", "quality")
       .write.mode("append").partitionBy("lang").parquet(out)
 
-    val back = Writers.readShardsEvolved(spark, out)
+    def evolved() = spark.read.option("mergeSchema", "true").parquet(out)
+    val back = evolved()
     assert(back.columns.toSet == Set("doc_id", "lang", "score", "quality"))
     val rows = back.select("doc_id", "quality").collect()
       .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getDouble(1))))
@@ -125,108 +99,8 @@ class SkewWritersSpec extends AnyFunSuite {
       .toDF("doc_id", "lang", "score", "quality")
       .write.mode("append").partitionBy("lang").parquet(out)
     intercept[Throwable] {
-      Writers.readShardsEvolved(spark, out).collect()
+      evolved().collect()
     }
-  }
-
-  private def parquetFilesUnder(dir: String): Seq[java.io.File] = {
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
-    walk(new java.io.File(dir)).filter(_.getName.endsWith(".parquet"))
-  }
-
-  /** Commit batch `i` under its own `batch_id=<i>` dirs below each lang
-    * partition — dynamic overwrite, so replaying an id rewrites exactly
-    * that batch: the layout the store appends write.
-    */
-  private def commitBatch(out: String, i: Int): Unit = {
-    import spark.implicits._
-    val batch = Seq(
-      (i * 10L, s"alpha doc $i body", "en", "s1"),
-      (i * 10L + 1, s"beta doc $i body", "en", "s2"),
-      (i * 10L + 2, s"gamma doc $i body", "es", "s1"))
-      .toDF("doc_id", "text", "lang", "source")
-    Writers.writeShards(batch.withColumn("batch_id", lit(i.toLong)), out,
-      partitionCols = Seq("lang", "batch_id"), sortCols = Seq("doc_id"),
-      mode = SaveMode.Overwrite,
-      options = Map("partitionOverwriteMode" -> "dynamic"))
-  }
-
-  private def compact(out: String, lang: String,
-      crashBeforeDelete: Boolean = false): Writers.CompactionStats =
-    Writers.compactPartitionInternal(spark, out, s"lang=$lang",
-      dropCols = Seq("lang", "batch_id"), targetFileBytes = 128L * 1024 * 1024,
-      maxRecordsPerFile = 1000000L, sortCols = Seq("doc_id"), crashBeforeDelete)
-
-  test("compaction: 20 batch dirs fold into one generation; rows and pruning kept") {
-    val out = Files.createTempDirectory("compact").toString
-    (0 until 20).foreach(commitBatch(out, _))
-    def rows() = spark.read.parquet(out)
-      .select("doc_id", "text", "lang", "source")
-      .collect().map(_.toString).sorted.toSeq
-    val before = rows()
-    val filesBefore = parquetFilesUnder(out).size
-
-    val statsEn = compact(out, "en")
-    val statsEs = compact(out, "es")
-    // the hot (highest) batch dir stays out of the merge; everything else
-    // (19 dirs per lang) folds into one generation dir
-    assert(statsEn.dirsCompacted == 19 && statsEs.dirsCompacted == 19)
-    assert(statsEn.generation == -1L)
-    assert(rows() == before, "compaction must not change the row set")
-    val filesAfter = parquetFilesUnder(out).size
-    assert(filesAfter < filesBefore, s"$filesAfter !< $filesBefore")
-    assert(new java.io.File(s"$out/lang=en/batch_id=-1").isDirectory)
-    assert(new java.io.File(s"$out/lang=en/batch_id=19").isDirectory)
-
-    // lang pruning survives: the physical scan's partition pruning (not
-    // inputFiles, which reports the unpruned relation) selects only this
-    // lang's dirs
-    val pruned = spark.read.parquet(out).filter("lang = 'es'")
-    assert(pruned.count() == 20)
-    val scanned = pruned.queryExecution.executedPlan.collect {
-      case s: org.apache.spark.sql.execution.FileSourceScanExec =>
-        s.selectedPartitions.toPartitionArray
-          .map(_.filePath.toPath.toString).toSeq
-    }.flatten
-    assert(scanned.nonEmpty && scanned.forall(_.contains("lang=es")), scanned)
-
-    // the protected hot batch replays idempotently post-compaction
-    commitBatch(out, 19)
-    assert(rows() == before)
-
-    // a second compaction with no new batches is a no-op (the lone
-    // generation is not re-rolled; the hot dir stays protected)
-    assert(compact(out, "en").dirsCompacted == 0)
-
-    // after one MORE batch, the old hot dir becomes compactable and folds
-    // together with generation -1 into generation -2
-    commitBatch(out, 20)
-    val again = compact(out, "en")
-    assert(again.dirsCompacted == 2 && again.generation == -2L)
-    assert(spark.read.parquet(out).filter("lang = 'en'").count() == 42)
-  }
-
-  test("compaction heals a crash inside the swap window (no duplicate rows)") {
-    val out = Files.createTempDirectory("compact_crash").toString
-    (0 until 5).foreach(commitBatch(out, _))
-    def enRows() = spark.read.parquet(out).filter("lang = 'en'")
-      .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
-    val before = enRows()
-
-    // crash simulation: generation -1 is published but the replaced dirs
-    // were never deleted — rows exist TWICE on disk, manifest still present
-    compact(out, "en", crashBeforeDelete = true)
-    assert(new java.io.File(s"$out/lang=en/batch_id=-1").isDirectory)
-    assert(new java.io.File(s"$out/lang=en/batch_id=0").isDirectory)
-    assert(enRows() != before, "crash window should expose duplicates")
-
-    // next regular run heals: replaced dirs deleted first, then a normal
-    // compaction — the row set is exactly the original again
-    val healed = compact(out, "en")
-    assert(healed.partition == "lang=en")
-    assert(enRows() == before)
-    assert(!new java.io.File(s"$out/lang=en/batch_id=0").exists)
   }
 
   // The reference ships flink-connector-jdbc + postgresql jars (latent,

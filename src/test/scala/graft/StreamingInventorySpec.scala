@@ -14,12 +14,6 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class StreamingInventorySpec extends AnyFunSuite {
 
-  /** Uncalled objects still waiting for deletion (ROADMAP item 5). The
-    * list only shrinks: a name leaves it once the object is deleted or
-    * gains a caller, and no new uncalled object may join it.
-    */
-  private val Pending = Set("Cep")
-
   private val MainRoot = Paths.get("src/main/scala")
   private val StreamingDir = MainRoot.resolve("graft/streaming")
 
@@ -75,11 +69,8 @@ class StreamingInventorySpec extends AnyFunSuite {
       }
       hasMain || called
     }
-    val unlisted = uncalled.filterNot { case (_, n) => Pending(n) }
-    assert(unlisted.isEmpty,
-      s"${unlisted.size} streaming objects without a main or a caller: " +
-        unlisted.map { case (f, n) => s"$n (${f.getFileName})" }.mkString(", "))
-    val resolved = Pending -- uncalled.map(_._2)
-    assert(resolved.isEmpty, s"drop from Pending, now deleted or called: $resolved")
+    assert(uncalled.isEmpty,
+      s"${uncalled.size} streaming objects without a main or a caller: " +
+        uncalled.map { case (f, n) => s"$n (${f.getFileName})" }.mkString(", "))
   }
 }

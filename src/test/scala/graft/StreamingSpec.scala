@@ -125,14 +125,25 @@ class StreamingSpec extends AnyFunSuite {
         |"merchant_category":"POS","amount":10.0,"currency":"USD",
         |"location":"NY","ip_address":"1.2.3.4","event_type":"NORMAL",
         |"timestamp":"2024-01-01T00:00:00Z"}""".stripMargin.replace("\n", "")
+    def variant(card: String, from: String, to: String) =
+      valid.replace("card_1", card).replace(from, to)
     val kafkaLike = Seq(
       valid,
+      // Spark's timestamp cast takes a space for the `T`; so must the fold
+      variant("card_2", "2024-01-01T00:00:00Z", "2024-01-01 00:00:00Z"),
       "not json at all",
       """{"card_id":"c9"}""", // parses but no timestamp
-      "{\"truncated\":").toDF("value")
+      "{\"truncated\":",
+      """{"card_id":"c1","timestamp":"2024-01-01T00:00:00Z"}""", // no amount
+      variant("c2", "10.0", "\"abc\""),                   // amount not a number
+      variant("c3", "2024-01-01T00:00:00Z", "yesterday") // timestamp unparseable
+    ).toDF("value")
     val (good, dead) = FraudStream.parseWithDeadLetter(kafkaLike)
-    assert(good.collect().map(_.card_id).toSeq == Seq("card_1"))
-    assert(dead.count() == 3)
+    // every admitted row scores, at the event time the split parsed
+    val scored = FraudStream.score(good).collect()
+      .map(e => e.card_id -> e.event_millis).toMap
+    assert(scored == Map("card_1" -> 1704067200000L, "card_2" -> 1704067200000L))
+    assert(dead.count() == 6)
     assert(dead.columns.contains("raw"))
   }
 

@@ -4,7 +4,6 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.gen.TxGen
 import graft.model.GenDims
-import graft.streaming.FraudScoring
 
 /** Generator semantics (producer/transaction-kafka-producer.py:52-100):
   * determinism, per-card monotonic time, fraud-type shaping, dims.
@@ -13,6 +12,9 @@ class TxGenSpec extends AnyFunSuite {
 
   private lazy val txs = TxGen.generate(5000)
 
+  /** Epoch millis of the generator's `yyyy-MM-ddTHH:mm:ssZ` timestamps. */
+  private def parseMillis(ts: String): Long = java.time.Instant.parse(ts).toEpochMilli
+
   test("seeded generation is deterministic; different seeds diverge") {
     assert(TxGen.generate(200) == TxGen.generate(200))
     assert(TxGen.generate(200, seed = 7) != TxGen.generate(200, seed = 8))
@@ -20,7 +22,7 @@ class TxGenSpec extends AnyFunSuite {
 
   test("per-card event time is strictly monotonic") {
     txs.groupBy(_.card_id).foreach { case (_, ts) =>
-      val millis = ts.map(t => FraudScoring.parseMillis(t.timestamp))
+      val millis = ts.map(t => parseMillis(t.timestamp))
       assert(millis == millis.sorted)
       assert(millis.distinct.size == millis.size)
     }
@@ -49,7 +51,7 @@ class TxGenSpec extends AnyFunSuite {
     val rows = ds.collect()
     assert(rows.length == 8 * 200)
     rows.groupBy(_.card_id).foreach { case (_, ts) =>
-      val millis = ts.map(t => FraudScoring.parseMillis(t.timestamp))
+      val millis = ts.map(t => parseMillis(t.timestamp))
       assert(millis.sorted.sameElements(millis))
     }
   }
@@ -101,21 +103,21 @@ class TxGenSpec extends AnyFunSuite {
 
     // G1a in stream mode: strictly monotonic per-card event time
     rows.groupBy(_.card_id).foreach { case (_, ts) =>
-      val millis = ts.map(t => FraudScoring.parseMillis(t.timestamp)).sorted
+      val millis = ts.map(t => parseMillis(t.timestamp)).sorted
       assert(millis.distinct.size == millis.size)
     }
 
     // G1b in stream mode: IMPOSSIBLE_TRAVEL events are +90 s at a forced
     // different location (producer:70-77), so the travel rule really fires
     val byCard = rows.groupBy(_.card_id).view.mapValues(
-      _.sortBy(t => FraudScoring.parseMillis(t.timestamp)))
+      _.sortBy(t => parseMillis(t.timestamp)))
     var shaped = 0
     byCard.foreach { case (_, ts) =>
       ts.toSeq.sliding(2).foreach {
         case Seq(prev, cur) if cur.event_type == "IMPOSSIBLE_TRAVEL" =>
           assert(cur.location != prev.location)
-          assert(FraudScoring.parseMillis(cur.timestamp) -
-            FraudScoring.parseMillis(prev.timestamp) == 90000L)
+          assert(parseMillis(cur.timestamp) -
+            parseMillis(prev.timestamp) == 90000L)
           shaped += 1
         case _ => ()
       }
