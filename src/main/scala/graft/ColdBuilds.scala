@@ -2,10 +2,11 @@ package graft
 
 /** JVM-wide registry of COLD CACHE BUILDS — every per-JVM / per-content
   * cache helper (Lloyd k-means trainer, ANN index train sample, BM25
-  * store build / frozen-stats collect, jaccard df-histogram probe, …)
-  * records a named event when it actually executes its BUILDING branch
-  * (a cache hit records nothing). Bench snapshots the registry around
-  * each timed query and emits the cold builds that fired inside that
+  * store build / frozen-stats collect, the jaccard postings count behind
+  * the prefix screen's broadcast gate, …) records a named event when it
+  * actually executes its BUILDING branch (a cache hit records nothing;
+  * [[JvmCache.getOrBuild]] records the tag on a miss). Bench snapshots
+  * the registry around each timed query and emits the cold builds that fired inside that
   * timer into the artifact row, and WarmServe gates on it (VERDICT r13 #2/#7): a
   * cached-helper query whose first invocation pays a one-time build can
   * then never book that build into its own serve cost unnoticed — the

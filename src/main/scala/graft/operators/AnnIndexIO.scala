@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 import graft.functions.GraftFunctions
-import graft.sources.Tables
+import graft.sources.{Datasets, Tables}
 
 /** Build-once / serve-many persistence for the IVF×PQ index — the missing
   * half of the 100 TB ANN story (VERDICT r5 §3: "a real 100 TB deployment
@@ -50,16 +50,10 @@ object AnnIndexIO {
     */
   private[graft] val DeltaMod = 5
 
-  private def md5hex(sIn: String): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    md.digest(sIn.getBytes("UTF-8")).map("%02x".format(_)).mkString
-  }
-
   /** Index roots live under java.io.tmpdir keyed by (canonical dataset
     * dir, variant): stable across invocations inside a round, disposable
     * across rounds. A dataset dir whose CONTENT is rewritten in place
-    * (temp-dir specs) must [[deleteIndex]] first — same caveat as
-    * `Similarity.clearAnnIndexCache`.
+    * (temp-dir specs) must [[deleteIndex]] first.
     */
   /** On-disk layout version, folded into every index root digest: bumping
     * it on any change to the code/model file shapes (e.g. the v2 addition
@@ -68,34 +62,26 @@ object AnnIndexIO {
     */
   private val FormatVersion = 2
 
-  private[graft] def indexRoot(d: String, variant: String): String = {
-    StoreRegistry.note(d)
-    val canon = try new java.io.File(d).getCanonicalPath catch {
-      case _: java.io.IOException => d
-    }
-    val base = new java.io.File(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_ann_index")
-    new java.io.File(base,
-      variant + "_" + md5hex(s"v$FormatVersion:$canon")).toString
-  }
+  private[graft] def indexRoot(d: String, variant: String): String =
+    Datasets.storeRoot("graft_ann_index", variant, d, FormatVersion)
 
   private def fs(s: SparkSession, p: Path) =
     p.getFileSystem(s.sparkContext.hadoopConfiguration)
 
   private[graft] def deleteIndex(s: SparkSession, d: String): Unit =
     Seq("full", "incr", "stream").foreach { v =>
-      val root = new Path(indexRoot(d, v))
-      val f = fs(s, root)
-      if (f.exists(root)) f.delete(root, true)
-      modelCache.remove(root.toString)
-      modelCache.remove(indexRoot(d, v))
+      val root = indexRoot(d, v)
+      val p = new Path(root)
+      val f = fs(s, p)
+      if (f.exists(p)) f.delete(p, true)
+      modelCache.remove(root)
     }
 
   /** O(model) per root — re-reading the tiny model parquet every streamed
     * micro-batch would add a driver job per batch for constant data.
     */
-  private val modelCache = scala.collection.concurrent.TrieMap
-    .empty[String, (Array[Array[Double]], Array[Array[Array[Double]]])]
+  private val modelCache =
+    new graft.JvmCache[String, (Array[Array[Double]], Array[Array[Array[Double]]])]
 
   /** One corpus pass emits the partitioned code table; the model rows are
     * O(model) driver values written as one tiny file. Publish = atomic
@@ -144,7 +130,7 @@ object AnnIndexIO {
     */
   private[graft] def readModel(s: SparkSession, root: String)
       : (Array[Array[Double]], Array[Array[Array[Double]]]) =
-    modelCache.getOrElseUpdate(root, readModelUncached(s, root))
+    modelCache.getOrElseUpdate(root)(readModelUncached(s, root))
 
   private def readModelUncached(s: SparkSession, root: String)
       : (Array[Array[Double]], Array[Array[Array[Double]]]) = {

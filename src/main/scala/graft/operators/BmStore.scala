@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 
 import graft.operators.Retrieval.FrozenIndexStats
-import graft.sources.Tables
+import graft.sources.{Datasets, Tables}
 
 /** Persisted POSTINGS store for lexical (BM25) retrieval — the retrieval
   * family's build-once/serve-many index, completing the lifecycle
@@ -93,10 +93,6 @@ object BmStore {
   // layout
   private val FormatVersion = 3
 
-  private def md5hex(sIn: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(sIn.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-
   /** Keyed by canonical dataset path AND the documents table's content
     * fingerprint (ADVICE r12): a dataset dir rewritten IN PLACE now maps
     * to a fresh store root naturally — across JVMs too — instead of
@@ -105,28 +101,21 @@ object BmStore {
     * every caller goes through ensure*Built, so the probe runs once per
     * query invocation.
     */
-  private[graft] def storeRoot(s: SparkSession, d: String, variant: String): String = {
-    StoreRegistry.note(d)
-    val canon = try new java.io.File(d).getCanonicalPath catch {
-      case _: java.io.IOException => d
-    }
-    val fp = Tables.fingerprint(s, Tables.path(d, "documents"))
-    new java.io.File(new java.io.File(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_bmstore"),
-      variant + "_" + md5hex(s"$canon:$fp:v$FormatVersion")).toString
-  }
+  private[graft] def storeRoot(s: SparkSession, d: String, variant: String): String =
+    Datasets.storeRoot("graft_bmstore", variant, d, FormatVersion,
+      Datasets.fingerprint(s, d, "documents"))
 
   private def fs(s: SparkSession, p: Path) =
     p.getFileSystem(s.sparkContext.hadoopConfiguration)
 
   private[graft] def deleteStore(s: SparkSession, d: String): Unit =
     Seq("full", "incr").foreach { v =>
-      val p = new Path(storeRoot(s, d, v))
+      val root = storeRoot(s, d, v)
+      val p = new Path(root)
       fs(s, p).delete(p, true)
-      frozenCache.remove(storeRoot(s, d, v))
-      metaCache.remove(storeRoot(s, d, v))
-      planCache.keySet.filter(_._1 == storeRoot(s, d, v))
-        .foreach(planCache.remove)
+      frozenCache.remove(root)
+      metaCache.remove(root)
+      planCache.removeKeys(_._1 == root)
     }
 
   private def tokBucket(c: Column): Column =
@@ -164,7 +153,7 @@ object BmStore {
     * must not silently adopt the stale store).
     */
   private def inputFingerprint(baseDocs: DataFrame): String =
-    md5hex(baseDocs.queryExecution.analyzed.canonicalized.toString)
+    Datasets.md5hex(baseDocs.queryExecution.analyzed.canonicalized.toString)
 
   private def readMarker(f: org.apache.hadoop.fs.FileSystem, p: Path): String = {
     val in = f.open(p)
@@ -288,22 +277,19 @@ object BmStore {
     * change frozen statistics BY CONTRACT, so the cache stays valid
     * across growth).
     */
-  private val frozenCache =
-    scala.collection.concurrent.TrieMap.empty[String, FrozenIndexStats]
+  private val frozenCache = new graft.JvmCache[String, FrozenIndexStats]
 
   /** (n_docs, sum_dl) per store root — frozen for the store's lifetime
     * by contract, so the one-row meta read happens once per JVM instead
-    * of once per [[frozenStatsForQueries]] call.
+    * of once per freeze.
     */
-  private val metaCache =
-    scala.collection.concurrent.TrieMap.empty[String, (Long, Long)]
+  private val metaCache = new graft.JvmCache[String, (Long, Long)]
 
   private[graft] def storeMeta(s: SparkSession, root: String): (Long, Long) =
-    metaCache.getOrElseUpdate(root, {
-      graft.ColdBuilds.record("bm_meta")
+    metaCache.getOrBuild(root, "bm_meta") {
       val m = Tables.parquet(s, new Path(root, "meta.parquet").toString).head()
       (m.getLong(0), m.getLong(1))
-    })
+    }
 
   /** Materialize the standing-query statistics FROM the store: per-term
     * df from `df.parquet` (bucket-pruned lookup), scalars from
@@ -315,8 +301,7 @@ object BmStore {
     * counts over the same tf definition) — spec-asserted.
     */
   private[graft] def frozenStats(s: SparkSession, root: String, d: String): FrozenIndexStats =
-    frozenCache.getOrElseUpdate(root, {
-      graft.ColdBuilds.record("bm_frozen_stats")
+    frozenCache.getOrBuild(root, "bm_frozen_stats") {
       val qt = Tables.documents(s, d)
         .filter(Retrieval.isQueryDoc(col("doc_id")))
         .select(col("doc_id").as("query_id"),
@@ -329,46 +314,7 @@ object BmStore {
         .map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
       val (nDocs, sumDl) = storeMeta(s, root)
       Retrieval.assembleFrozen(rows, nDocs, sumDl)
-    })
-
-  /** Freeze statistics for an ARBITRARY standing-query set (query_id →
-    * term list) against the store — the prospective-search registration
-    * path: user-authored standing queries, not corpus docs. Terms absent
-    * from the index vocabulary are dropped (unknown terms score nothing,
-    * the percolator convention). One O(standing-vocab) df lookup; no
-    * corpus access at all.
-    */
-  private[graft] def frozenStatsForQueries(s: SparkSession, root: String,
-      queries: Seq[(Long, Seq[String])]): FrozenIndexStats = {
-    import s.implicits._
-    val qdf = queries
-      .flatMap { case (id, ts) => ts.distinct.map(t => (id, t)) }
-      .toDF("query_id", "token")
-    val dfT = Tables.parquet(s, new Path(root, "df.parquet").toString)
-      .select("token", "df")
-    val rows = qdf.join(dfT, "token")
-      .select("query_id", "token", "df").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
-    val (nDocs, sumDl) = storeMeta(s, root)
-    Retrieval.assembleFrozen(rows, nDocs, sumDl)
-  }
-
-  /** Deterministic synthetic standing queries drawn from the store's
-    * vocabulary — a spec fixture for the WAND gate.
-    * floorMod, not abs: abs(Int.MinValue) is negative.
-    */
-  private[graft] def syntheticStandingQueries(s: SparkSession, root: String,
-      prefix: String, n: Int, termsPerQuery: Int = 8,
-      idBase: Long = 1000000L): Seq[(Long, Seq[String])] = {
-    val vocab = Tables.parquet(s, new Path(root, "df.parquet").toString)
-      .select("token").collect().map(_.getString(0)).sorted
-    (0 until n).map { qid =>
-      val terms = (0 until termsPerQuery).map(j => vocab(
-        math.floorMod(scala.util.hashing.MurmurHash3.stringHash(s"$prefix$qid:$j"),
-          vocab.length)))
-      (idBase + qid, terms.distinct.toSeq)
     }
-  }
 
   /** (query_id, doc_id, n_terms, sum_q) scored purely from the store:
     * the standing-query terms ride in as a broadcast LOCAL RELATION
@@ -481,25 +427,13 @@ object BmStore {
   private[graft] val WandMaxEssRatio = 0.3
 
   /** wand-vs-docvec verdicts per (store root, standing-set fingerprint)
-    * (see [[WandMaxEssRatio]]); cleared per root by [[deleteStore]].
-    */
-  private val planCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
-
-  /** Driver-memory bound for [[planCache]] (ADVICE r14): a caller that
-    * freezes a new standing set per call mints a NEW fingerprint every
-    * time, so unbounded putIfAbsent would be a slow driver leak. Once
-    * the map is full a new verdict evicts an arbitrary entry — an
-    * evicted verdict costs at most one re-probe (bounded sample) or a
+    * (see [[WandMaxEssRatio]]); cleared per root by [[deleteStore]]. A
+    * caller that freezes a new standing set per call mints a new
+    * fingerprint every time; the cache's bound evicts the least recently
+    * used verdict, which costs at most one re-probe (bounded sample) or a
     * job-free precheck, never wrongness.
     */
-  private[graft] val PlanCacheMaxEntries = 1024
-
-  private def planCachePut(key: (String, String), verdict: String): Unit = {
-    if (planCache.size >= PlanCacheMaxEntries)
-      planCache.keysIterator.take(1).foreach(planCache.remove)
-    planCache.putIfAbsent(key, verdict)
-  }
+  private val planCache = new graft.JvmCache[(String, String), String]
 
   /** Query-sample bound for the VERDICT probe: the essential-volume
     * ratio is a workload-SHAPE measurement (how prunable is this kind
@@ -524,7 +458,7 @@ object BmStore {
     * per-query sorted terms (df rides with the root, so it adds nothing).
     */
   private[graft] def queryFingerprint(frozen: FrozenIndexStats): String =
-    md5hex(frozen.queries.map(q =>
+    Datasets.md5hex(frozen.queries.map(q =>
       s"${q.query_id}:${q.terms.map(_.term).mkString(",")}").mkString("\n"))
 
   /** The subset of `frozen` covering `qids` only, with the union
@@ -769,13 +703,13 @@ object BmStore {
           else subsetFrozen(frozen,
             frozen.queries.take(ProbeSampleQueries).map(_.query_id).toSet)
         if (minEssentialRatio(probeFrozen) > WandMaxEssRatio) {
-          planCachePut(key, "docvec")
+          planCache.put(key, "docvec")
           ("docvec", None)
         } else {
           wandProbeCount.incrementAndGet()
           val (wandProbe, ratio) = wandScoredWithRatio(s, root, probeFrozen, k)
           val verdict = if (ratio <= WandMaxEssRatio) "wand" else "docvec"
-          planCachePut(key, verdict)
+          planCache.put(key, verdict)
           (verdict,
             if (verdict == "wand" && (probeFrozen eq frozen)) Some(wandProbe)
             else None)
@@ -1027,22 +961,15 @@ object BmStore {
     * content-keyed (an in-place rewrite refreshes), cold-build
     * attributed, O(Q × dims) driver memory.
     */
-  private val queryEmbCache = scala.collection.concurrent.TrieMap
-    .empty[String, Seq[(Long, Array[Double])]]
+  private val queryEmbCache = new graft.JvmCache[String, Seq[(Long, Array[Double])]]
 
   private def queryEmbs(s: SparkSession, d: String): Seq[(Long, Array[Double])] =
-    queryEmbCache.getOrElseUpdate({
-      val canon = try new java.io.File(d).getCanonicalPath catch {
-        case _: java.io.IOException => d
-      }
-      s"$canon@${Tables.fingerprint(s, Tables.path(d, "embeddings"))}"
-    }, {
-      graft.ColdBuilds.record("hybrid_query_embs")
+    queryEmbCache.getOrBuild(Datasets.key(s, d, "embeddings"), "hybrid_query_embs") {
       Similarity.withEmb(s, d)
         .filter(Retrieval.isQueryDoc(col("vec_id")))
         .select("vec_id", "emb").collect()
         .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
-    })
+    }
 
   /** ANN candidate depth feeding the exact re-rank: 8× the fusion depth.
     * The retrieve-deep/re-rank-shallow ratio is deliberately generous

@@ -4,7 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.sources.Tables
+import graft.sources.{Datasets, Tables}
 
 /** Deduplication operators over the `documents` / `embeddings` tables —
   * the LLM-data-pipeline surface (north_star): exact dedup, MinHash
@@ -203,83 +203,24 @@ object Dedup {
     */
   private[graft] val ScreenBytesPerPosting = 20L
 
-  /** Plan-override seam for dedup_ngram_jaccard_prefix — the RETIRED
-    * auto-select gate (r14). The r10 gate ran the prefix pipeline only
-    * when Σ df·(df−1)/2 exceeded `ratio`×postings, calibrated on the r10
-    * sf0.1 corpus where the then-current prefix pipeline lost (5.6 s vs
-    * ~3 s direct). That calibration went stale as the pipeline improved
-    * (r13 two-stage fingerprint verify, r14 PPJoin filters): re-measured
-    * r14 across four scales, the prefix plan now wins EVERYWHERE —
-    * sf0.001 1.3 vs 7.8 s, sf0.01 1.2 vs 7.2 s, sf0.1 3.2 vs 9.8 s, sf1
-    * 7.5 vs 24.5 s, sf10 26.1 vs 172.9 s (6.6×; identical 25,916-row
-    * output) — while the stale gate was silently routing EVERY fixture,
-    * sf10 included, to the direct join (its Σ df·(df−1) ≈ 2.3×postings
-    * sat far under the 32× threshold). So the DEFAULT is now the prefix
-    * pipeline unconditionally, with no df-stats probe job at all.
-    * The override (system property `graft.jaccard.prefix.ratio`):
-    * negative → prefix (explicit);
-    * a positive value re-enables the legacy stats-based comparison —
-    * the spec/A-B seam that forces the direct branch (huge ratio) and
-    * exercises the stats path. Direct stays in-tree as the parity
-    * baseline and the right plan for sub-fixture corpora embedded in
-    * unit specs.
-    */
-  private[graft] def prefixRatioOverride: Option[Long] =
-    sys.props.get("graft.jaccard.prefix.ratio")
-      .flatMap { v =>
-        val parsed = scala.util.Try(v.toLong).toOption
-        if (parsed.isEmpty)
-          System.err.println(
-            s"[graft] ignoring malformed jaccard prefix ratio override '$v' (not a long); defaulting to the prefix plan")
-        parsed
-      }
-
   private[graft] def requireAllPairsSafe(n: Long): Unit =
     require(n <= EmbTopkMaxRows,
       s"dedup_embedding_topk is the O(n^2) all-pairs CORRECTNESS BASELINE, fenced to" +
         s" <= $EmbTopkMaxRows vectors (input has $n); use dedup_embedding_lsh" +
         " (hyperplane-LSH buckets -> exact re-rank) at scale")
 
-  /** Row counts behind the all-pairs fence, one count job per dataset dir
-    * per JVM — repeat invocations (Verify runs the query right after the
-    * bench) skip the extra Spark job entirely.
+  /** Row counts behind the all-pairs fence, one count job per dataset
+    * content version per JVM — repeat invocations (Verify runs the query
+    * right after the bench) skip the extra Spark job entirely.
     */
-  private val fenceCounts =
-    scala.collection.concurrent.TrieMap.empty[String, Long]
+  private val fenceCounts = new graft.JvmCache[String, Long]
 
-  /** (postings, doubled-candidate-volume Σ df·(df−1)) decision scalars
-    * for the prefix plan auto-select, cached per dataset dir like
-    * [[fenceCounts]] — the df histogram of a static corpus doesn't change
-    * between invocations, so the one tiny aggregate job runs once per
-    * JVM, not once per call (the bench alone invokes the builder 3×).
-    * The candidate side is BigDecimal: it is quadratic in df and a long
-    * wraps silently at web scale (self-review r10).
+  /** Postings count of a corpus, the dedup_ngram_jaccard_prefix screen's
+    * broadcast gate, cached per documents content version like
+    * [[fenceCounts]]: the one tiny aggregate job runs once per JVM, not
+    * once per call (the bench alone invokes the builder 3×).
     */
-  private val prefixPlanStats =
-    scala.collection.concurrent.TrieMap.empty[String, (Long, BigDecimal)]
-
-  /** Invalidation seam matching [[Similarity.clearAnnIndexCache]]: a dir
-    * whose documents change IN PLACE (long-running JVM, tests reusing a
-    * path) must clear, or the prefix-vs-direct gate keeps deciding on the
-    * old corpus's df histogram — output stays exact either way (both
-    * plans are), but a corpus that moved into the high-df regime would
-    * keep the detonating direct join.
-    */
-  private[graft] def clearPlanStatsCache(): Unit = {
-    prefixPlanStats.clear()
-    fenceCounts.clear()
-  }
-
-  /** Content-keyed cache keys (ADVICE r10): like
-    * [[Similarity]]'s caches, the plan-decision scalars key on
-    * dir@fingerprint of the table they were measured on, so an in-place
-    * fixture rewrite re-measures instead of serving a stale df histogram;
-    * [[clearPlanStatsCache]] stays as the test seam.
-    */
-  private def embKey(s: SparkSession, d: String): String =
-    s"$d@${Tables.fingerprint(s, Tables.path(d, "embeddings"))}"
-  private def docKey(s: SparkSession, d: String): String =
-    s"$d@${Tables.fingerprint(s, Tables.path(d, "documents"))}"
+  private val corpusPostings = new graft.JvmCache[String, Long]
 
   private def embPairs(s: SparkSession, d: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
@@ -290,7 +231,8 @@ object Dedup {
     // runtime fence, not just a doc comment: one count on the frame
     // already in hand (column-pruned to zero columns → parquet footer
     // row counts), cached per dir so the fence costs one job ever
-    requireAllPairsSafe(fenceCounts.getOrElseUpdate(embKey(s, d), e.count()))
+    requireAllPairsSafe(
+      fenceCounts.getOrElseUpdate(Datasets.key(s, d, "embeddings"))(e.count()))
     val a = e.select(col("vec_id").as("id1"), col("emb").as("e1"))
     val b = e.select(col("vec_id").as("id2"), col("emb").as("e2"))
     a.join(b, col("id1") < col("id2"))
@@ -643,18 +585,14 @@ object Dedup {
     * reaches the output: the result is EXACTLY the pairs with
     * jaccard > t (strict, round-to-4).
     *
-    * PLAN SELECTION (r10 auto-gate, RETIRED r14): the r10 gate read
-    * the df histogram and picked direct below a candidate-volume
-    * ratio, calibrated when the prefix pipeline still paid string-
-    * array verification. After the r13 fingerprint screen and the
-    * r14 PPJoin filters, re-measurement across sf0.001→sf10 found the
-    * prefix plan winning at EVERY scale (up to 6.6× at sf10) while
-    * the stale gate routed every fixture to direct — see
-    * [[prefixRatioOverride]] for the numbers. Default is now prefix;
-    * the direct postings self-join + aggregate stays reachable via
-    * the positive-ratio override as the parity baseline. Both plans
-    * are EXACT at the same threshold — one oracle covers either
-    * choice.
+    * PLAN SELECTION: r14 re-measured this prefix plan against the
+    * direct postings self-join + aggregate (the dedup_ngram_jaccard
+    * shape) across four scales, and the prefix plan won everywhere —
+    * sf0.001 1.3 vs 7.8 s, sf0.01 1.2 vs 7.2 s, sf0.1 3.2 vs 9.8 s, sf1
+    * 7.5 vs 24.5 s, sf10 26.1 vs 172.9 s (identical 25,916-row output).
+    * The r10 df-histogram gate that picked between them, and the direct
+    * branch itself, are gone; its parity checks compare this plan with
+    * dedup_ngram_jaccard filtered to jaccard > t.
     */
   private[graft] def jaccardPrefixPairs(s: SparkSession, d: String,
       t: Double): DataFrame = {
@@ -666,7 +604,7 @@ object Dedup {
       .select(col("doc_id"), col("sh"), size(col("sh")).as("n_sh"))
       .transform(Materialize.once) // feeds the postings build AND the verify join
     // Three consumers read the postings (df aggregate + both self-join
-    // sides in whichever branch wins): materialize the explode once —
+    // sides): materialize the explode once —
     // narrow (doc_id, n_sh, s) rows, the same reasoning as the sibling
     // queries' checkpointed `ex` (self-review r10: the first cut
     // re-exploded from `sh` per consumer).
@@ -675,196 +613,133 @@ object Dedup {
     // df via map-side-combined aggregate + join back (not a window over
     // the skewed shingle key — same reasoning as the capped twin).
     val df = ex0.groupBy("s").agg(count(lit(1)).as("df"))
-    // Default plan: PREFIX, unconditionally — the df-stats probe job
-    // runs only when a positive ratio override re-enables the legacy
-    // stats gate (see [[prefixRatioOverride]] for the r14 retirement
-    // measurements). The stats themselves stay cached per corpus.
-    def corpusStats(): (Long, BigDecimal) =
-      prefixPlanStats.getOrElseUpdate(docKey(s, d), {
-      graft.ColdBuilds.record("jaccard_df_stats")
-      val statsRow = df
-        // The DOUBLED candidate sum Σ df·(df−1) aggregates as
-        // DECIMAL(38,0): a single shingle with df > ~4.3e9 overflows
-        // df·(df−1) in a long, and Spark's non-ANSI long sum wraps
-        // SILENTLY — a wrapped negative would select the direct plan in
-        // exactly the ultra-high-df regime the gate exists to route
-        // away from it. (The doubled form avoids decimal division's
-        // fractional result scale; the comparison below doubles the
-        // other side instead.) Postings is bounded by total row count
-        // and stays long.
-        .agg(sum(col("df")).as("postings"),
-          sum(expr("cast(df as decimal(38,0)) * (df - 1)")).as("cand2"))
-        .head()
-      val p = if (statsRow.isNullAt(0)) 0L else statsRow.getLong(0)
-      // A NULL candidate sum with nonzero postings is decimal(38,0)
-      // OVERFLOW (Spark's non-ANSI decimal sum nulls out past 10^38),
-      // which only a cataclysmically high-df corpus can produce —
-      // treat it as +infinity so the gate picks the prefix plan, not
-      // as the empty-corpus 0 that would pick the direct join in
-      // exactly that regime (second self-review pass).
-      val cand2 =
-        if (statsRow.isNullAt(1))
-          if (p > 0L) BigDecimal(10).pow(39) else BigDecimal(0)
-        else BigDecimal(statsRow.getDecimal(1))
-      (p, cand2)
-    })
-    // Overflow-safe comparison of candVolume ≤ ratio·postings (both
-    // sides doubled): ratio × postings can wrap a long for large
-    // overrides (self-review r10 — Long.MaxValue × even postings wraps
-    // NEGATIVE and silently flips the plan choice, which also made the
-    // branch-parity spec vacuous). BigDecimal on both sides; a NEGATIVE
-    // ratio force-selects the prefix pipeline (the candidate sum is
-    // never negative), the test hook's counterpart to huge-ratio
-    // force-direct. No override (the deployment default) → prefix
-    // with no stats job on the DECISION path (the verify screen's
-    // broadcast gate still reads the cached stats once per corpus).
-    val usePrefix = prefixRatioOverride.forall { r =>
-      r < 0 || {
-        val (postings, candVolume2x) = corpusStats()
-        candVolume2x > BigDecimal(2) * BigDecimal(r) * BigDecimal(postings)
+    val byDocCanonical =
+      Window.partitionBy(col("doc_id")).orderBy(col("df"), col("s"))
+    // materialized: BOTH self-join sides read it, and the window sort
+    // over the full postings is the one stage worth paying once. The
+    // prefix rows CARRY (n_sh, rk) so the join below can apply
+    // PPJoin's positional + length filters (r14, VERDICT r13 #2).
+    val prefix = ex0.join(df, Seq("s"))
+      .withColumn("rk", row_number().over(byDocCanonical))
+      .filter(col("rk") <= col("n_sh") - floor(col("n_sh") * lit(t)))
+      .select("doc_id", "n_sh", "rk", "s")
+      .transform(Materialize.once)
+    // PPJoin filters on top of the prefix filter (Xiao et al. WWW'08
+    // via the Vernica et al. SIGMOD'10 distributed form) — both are
+    // LOSSLESS at threshold t, derived from jaccard > t ⟺
+    // inter > t/(1+t)·(n1+n2):
+    //  - LENGTH: inter ≤ min(n1,n2), so a qualifying pair needs
+    //    min(n1,n2) > t·max(n1,n2) — size-mismatched pairs drop
+    //    before the distinct shuffle.
+    //  - POSITIONAL: for the pair's globally-SMALLEST shared shingle
+    //    (present in both prefixes by the prefix property), every
+    //    other intersection member orders after it on both sides, so
+    //    inter ≤ 1 + min(n1−rk1, n2−rk2); a row failing that bound
+    //    for the required inter cannot be the first match of a
+    //    qualifying pair, and the first-match row of every
+    //    qualifying pair provably survives — distinct() still sees
+    //    it. (Deep-prefix matches of big docs drop: the quadratic
+    //    boilerplate keys the prefix filter alone lets through.)
+    // The 1e-9 relative slack keeps the double-valued bound from
+    // clipping an exactly-boundary pair (t/(1+t) is not exactly
+    // representable); it loosens, never tightens, the filter.
+    //
+    // FALSIFIED REFINEMENT (r14, kept out deliberately): PPJoin's
+    // asymmetric INDEXING prefix — orienting pairs by (n_sh, doc_id)
+    // and joining the smaller side from its first n − ⌊2t/(1+t)·n⌋
+    // positions (0.25·n at t=0.6 vs the 0.4·n probe prefix) — is
+    // lossless (inter > 2t/(1+t)·n1 and every intersection member
+    // orders ≥ the first shared shingle) and shrinks the JOIN INPUT,
+    // which the post-join filters cannot. Measured interleaved at
+    // sf10 it LOST ~6-10% cpu vs this form (2280-2428 vs 2120-2165
+    // cpu-s; plain AllPairs baseline in between), both plans two
+    // full Exchange+Sort sides with no ReusedExchange either way —
+    // the smaller sort does not pay for the orientation disjunction
+    // and the lost symmetric-side uniformity on this corpus. The
+    // boundary spec for its bound (DedupSimilaritySpec "indexing
+    // prefix ... AT the bound") is kept as an output-correctness
+    // pin. Re-try only if the join input itself becomes the
+    // measured bottleneck on a skewed-df corpus.
+    val posBound = lit(t) / (lit(1.0) + lit(t)) *
+      (col("cn1") + col("cn2")) * (lit(1.0) - lit(1e-9))
+    val cand = prefix.select(col("doc_id").as("d1"), col("n_sh").as("cn1"),
+        col("rk").as("rk1"), col("s"))
+      .join(prefix.select(col("doc_id").as("d2"), col("n_sh").as("cn2"),
+        col("rk").as("rk2"), col("s")), Seq("s"))
+      .filter(col("d1") < col("d2"))
+      .filter(least(col("cn1"), col("cn2")).cast("double") >
+        lit(t) * greatest(col("cn1"), col("cn2")) * (lit(1.0) - lit(1e-9)))
+      .filter((lit(1) + least(col("cn1") - col("rk1"),
+        col("cn2") - col("rk2"))).cast("double") > posBound)
+      .select("d1", "d2")
+      .distinct()
+    // TWO-STAGE VERIFY (r13, sf10-profiled): candidate volume at the
+    // 0.6 threshold is tens of millions of pairs, and verifying each
+    // against the STRING shingle arrays is ~100 UTF8 comparisons per
+    // pair whichever way the intersection is computed — measured
+    // 212 s of a 330 s sf10 run (array_intersect's per-row hash set)
+    // and 189 s even as a sorted linear merge: the string compares
+    // themselves dominate. So pairs are screened first against
+    // per-doc SORTED 60-bit shingle-fingerprint arrays (8 bytes and
+    // one long compare per element; [[graft.functions.SortedInterCount]]
+    // is the zero-allocation merge kernel). The screen is a provable
+    // SUPERSET filter: a hash collision can only INFLATE the count
+    // (each shared shingle contributes min-multiplicity ≥ 1 on both
+    // sides), so hash-jaccard ≥ true jaccard and no true pair is
+    // dropped. The survivors — output-sized, ~0.1% of candidates —
+    // then re-verify EXACTLY on the string arrays, so the emitted
+    // rows are bit-identical to the single-stage form and the
+    // oracle is untouched. Per-doc work (fp hashing, two
+    // array_sorts) happens once per doc, per-pair work is the long
+    // merge. Measured at sf10: verify 212 s → ~10 s.
+    graft.functions.GraftFunctions.register(s)
+    // the screen side is (doc_id, n_sh, sorted 8-byte fingerprints) —
+    // ~postings×8 bytes in toto. BROADCAST it (both pair sides probe
+    // it map-side, so the candidate stream never shuffles) when the
+    // driver-resident postings count bounds it under the gate;
+    // past the gate it joins as a plain shuffle — candidate-sized
+    // exchanges, still never string-array-sized.
+    // one-loop native array hash (r21): the transform lambda never
+    // enters whole-stage codegen (interpreted per ELEMENT — the
+    // WinnowFps lesson), and each element paid the md5 hex-string
+    // round-trip; md5_prefix15_array is the bit-identical twin of the
+    // lambda form, which stays the oracle SQL
+    val shh = sh.select(col("doc_id"), col("n_sh"),
+      array_sort(expr("md5_prefix15_array(sh)")).as("shh"))
+      .transform(Materialize.once) // the screen joins it twice
+    // the postings count gates the broadcast: one cheap
+    // map-side-combined job per corpus version per JVM
+    val postings =
+      corpusPostings.getOrBuild(Datasets.key(s, d, "documents"), "jaccard_df_stats") {
+        val r = df.agg(sum(col("df"))).head()
+        if (r.isNullAt(0)) 0L else r.getLong(0)
       }
-    }
-    if (!usePrefix) {
-      // Low-df regime: the exact inverted-index aggregate (the
-      // dedup_ngram_jaccard shape) at the high-confidence threshold.
-      val a = ex0.select(col("doc_id").as("d1"), col("n_sh").as("n1"), col("s"))
-      val b = ex0.select(col("doc_id").as("d2"), col("n_sh").as("n2"), col("s"))
-      a.join(b, Seq("s"))
-        .filter(col("d1") < col("d2"))
-        .groupBy("d1", "d2", "n1", "n2")
-        .agg(count(lit(1)).as("inter"))
-        .withColumn("j4", ExactRound.round4Int(col("inter"),
-          col("n1") + col("n2") - col("inter")))
-        .filter(col("j4") > math.round(t * 10000))
-        .withColumn("jaccard", col("j4") / lit(10000.0))
-        .select("d1", "d2", "jaccard")
-    } else {
-      val byDocCanonical =
-        Window.partitionBy(col("doc_id")).orderBy(col("df"), col("s"))
-      // materialized: BOTH self-join sides read it, and the window sort
-      // over the full postings is the one stage worth paying once. The
-      // prefix rows CARRY (n_sh, rk) so the join below can apply
-      // PPJoin's positional + length filters (r14, VERDICT r13 #2).
-      val prefix = ex0.join(df, Seq("s"))
-        .withColumn("rk", row_number().over(byDocCanonical))
-        .filter(col("rk") <= col("n_sh") - floor(col("n_sh") * lit(t)))
-        .select("doc_id", "n_sh", "rk", "s")
-        .transform(Materialize.once)
-      // PPJoin filters on top of the prefix filter (Xiao et al. WWW'08
-      // via the Vernica et al. SIGMOD'10 distributed form) — both are
-      // LOSSLESS at threshold t, derived from jaccard > t ⟺
-      // inter > t/(1+t)·(n1+n2):
-      //  - LENGTH: inter ≤ min(n1,n2), so a qualifying pair needs
-      //    min(n1,n2) > t·max(n1,n2) — size-mismatched pairs drop
-      //    before the distinct shuffle.
-      //  - POSITIONAL: for the pair's globally-SMALLEST shared shingle
-      //    (present in both prefixes by the prefix property), every
-      //    other intersection member orders after it on both sides, so
-      //    inter ≤ 1 + min(n1−rk1, n2−rk2); a row failing that bound
-      //    for the required inter cannot be the first match of a
-      //    qualifying pair, and the first-match row of every
-      //    qualifying pair provably survives — distinct() still sees
-      //    it. (Deep-prefix matches of big docs drop: the quadratic
-      //    boilerplate keys the prefix filter alone lets through.)
-      // The 1e-9 relative slack keeps the double-valued bound from
-      // clipping an exactly-boundary pair (t/(1+t) is not exactly
-      // representable); it loosens, never tightens, the filter.
-      //
-      // FALSIFIED REFINEMENT (r14, kept out deliberately): PPJoin's
-      // asymmetric INDEXING prefix — orienting pairs by (n_sh, doc_id)
-      // and joining the smaller side from its first n − ⌊2t/(1+t)·n⌋
-      // positions (0.25·n at t=0.6 vs the 0.4·n probe prefix) — is
-      // lossless (inter > 2t/(1+t)·n1 and every intersection member
-      // orders ≥ the first shared shingle) and shrinks the JOIN INPUT,
-      // which the post-join filters cannot. Measured interleaved at
-      // sf10 it LOST ~6-10% cpu vs this form (2280-2428 vs 2120-2165
-      // cpu-s; plain AllPairs baseline in between), both plans two
-      // full Exchange+Sort sides with no ReusedExchange either way —
-      // the smaller sort does not pay for the orientation disjunction
-      // and the lost symmetric-side uniformity on this corpus. The
-      // boundary spec for its bound (DedupSimilaritySpec "indexing
-      // prefix ... AT the bound") is kept as an output-correctness
-      // pin. Re-try only if the join input itself becomes the
-      // measured bottleneck on a skewed-df corpus.
-      val posBound = lit(t) / (lit(1.0) + lit(t)) *
-        (col("cn1") + col("cn2")) * (lit(1.0) - lit(1e-9))
-      val cand = prefix.select(col("doc_id").as("d1"), col("n_sh").as("cn1"),
-          col("rk").as("rk1"), col("s"))
-        .join(prefix.select(col("doc_id").as("d2"), col("n_sh").as("cn2"),
-          col("rk").as("rk2"), col("s")), Seq("s"))
-        .filter(col("d1") < col("d2"))
-        .filter(least(col("cn1"), col("cn2")).cast("double") >
-          lit(t) * greatest(col("cn1"), col("cn2")) * (lit(1.0) - lit(1e-9)))
-        .filter((lit(1) + least(col("cn1") - col("rk1"),
-          col("cn2") - col("rk2"))).cast("double") > posBound)
-        .select("d1", "d2")
-        .distinct()
-      // TWO-STAGE VERIFY (r13, sf10-profiled): candidate volume at the
-      // 0.6 threshold is tens of millions of pairs, and verifying each
-      // against the STRING shingle arrays is ~100 UTF8 comparisons per
-      // pair whichever way the intersection is computed — measured
-      // 212 s of a 330 s sf10 run (array_intersect's per-row hash set)
-      // and 189 s even as a sorted linear merge: the string compares
-      // themselves dominate. So pairs are screened first against
-      // per-doc SORTED 60-bit shingle-fingerprint arrays (8 bytes and
-      // one long compare per element; [[graft.functions.SortedInterCount]]
-      // is the zero-allocation merge kernel). The screen is a provable
-      // SUPERSET filter: a hash collision can only INFLATE the count
-      // (each shared shingle contributes min-multiplicity ≥ 1 on both
-      // sides), so hash-jaccard ≥ true jaccard and no true pair is
-      // dropped. The survivors — output-sized, ~0.1% of candidates —
-      // then re-verify EXACTLY on the string arrays, so the emitted
-      // rows are bit-identical to the single-stage form and the
-      // oracle is untouched. Per-doc work (fp hashing, two
-      // array_sorts) happens once per doc, per-pair work is the long
-      // merge. Measured at sf10: verify 212 s → ~10 s.
-      graft.functions.GraftFunctions.register(s)
-      // the screen side is (doc_id, n_sh, sorted 8-byte fingerprints) —
-      // ~postings×8 bytes in toto. BROADCAST it (both pair sides probe
-      // it map-side, so the candidate stream never shuffles) when the
-      // driver-resident postings count bounds it under the gate;
-      // past the gate it joins as a plain shuffle — candidate-sized
-      // exchanges, still never string-array-sized.
-      // one-loop native array hash (r21): the transform lambda never
-      // enters whole-stage codegen (interpreted per ELEMENT — the
-      // WinnowFps lesson), and each element paid the md5 hex-string
-      // round-trip; md5_prefix15_array is the bit-identical twin of the
-      // lambda form, which stays the oracle SQL
-      val shh = sh.select(col("doc_id"), col("n_sh"),
-        array_sort(expr("md5_prefix15_array(sh)")).as("shh"))
-        .transform(Materialize.once) // the screen joins it twice
-      // corpusStats (cached per corpus) still backs THIS gate — the
-      // one remaining consumer of the df-stats aggregate now that the
-      // plan gate is retired; one cheap map-side-combined job per
-      // corpus per JVM
-      def gated(d: DataFrame): DataFrame =
-        if (corpusStats()._1 * ScreenBytesPerPosting <= ScreenBroadcastBytes)
-          broadcast(d)
-        else d
-      val screened = cand
-        .join(gated(shh.select(col("doc_id").as("d1"), col("shh").as("h1"),
-          col("n_sh").as("n1"))), Seq("d1"))
-        .join(gated(shh.select(col("doc_id").as("d2"), col("shh").as("h2"),
-          col("n_sh").as("n2"))), Seq("d2"))
-        .withColumn("ih", expr("sorted_inter_count(h1, h2)"))
-        .filter(ExactRound.round4Int(col("ih"),
-          col("n1") + col("n2") - col("ih")) > math.round(t * 10000))
-        .select("d1", "d2")
-      // exact confirm on the output-sized survivors, against the
-      // ORIGINAL string arrays — identical rows to the single-stage
-      // verify, so the oracle is untouched
-      screened
-        .join(sh.select(col("doc_id").as("d1"), col("sh").as("sh1"),
-          col("n_sh").as("n1")), Seq("d1"))
-        .join(sh.select(col("doc_id").as("d2"), col("sh").as("sh2"),
-          col("n_sh").as("n2")), Seq("d2"))
-        .withColumn("inter", size(array_intersect(col("sh1"), col("sh2"))))
-        .withColumn("j4", ExactRound.round4Int(col("inter"),
-          col("n1") + col("n2") - col("inter")))
-        .filter(col("j4") > math.round(t * 10000))
-        .withColumn("jaccard", col("j4") / lit(10000.0))
-        .select("d1", "d2", "jaccard")
-    }
+    def gated(d: DataFrame): DataFrame =
+      if (postings * ScreenBytesPerPosting <= ScreenBroadcastBytes) broadcast(d)
+      else d
+    val screened = cand
+      .join(gated(shh.select(col("doc_id").as("d1"), col("shh").as("h1"),
+        col("n_sh").as("n1"))), Seq("d1"))
+      .join(gated(shh.select(col("doc_id").as("d2"), col("shh").as("h2"),
+        col("n_sh").as("n2"))), Seq("d2"))
+      .withColumn("ih", expr("sorted_inter_count(h1, h2)"))
+      .filter(ExactRound.round4Int(col("ih"),
+        col("n1") + col("n2") - col("ih")) > math.round(t * 10000))
+      .select("d1", "d2")
+    // exact confirm on the output-sized survivors, against the
+    // ORIGINAL string arrays — identical rows to the single-stage
+    // verify, so the oracle is untouched
+    screened
+      .join(sh.select(col("doc_id").as("d1"), col("sh").as("sh1"),
+        col("n_sh").as("n1")), Seq("d1"))
+      .join(sh.select(col("doc_id").as("d2"), col("sh").as("sh2"),
+        col("n_sh").as("n2")), Seq("d2"))
+      .withColumn("inter", size(array_intersect(col("sh1"), col("sh2"))))
+      .withColumn("j4", ExactRound.round4Int(col("inter"),
+        col("n1") + col("n2") - col("inter")))
+      .filter(col("j4") > math.round(t * 10000))
+      .withColumn("jaccard", col("j4") / lit(10000.0))
+      .select("d1", "d2", "jaccard")
   }
 
   /** The narrow (doc_id, text_hash) projection dedup_exact hashes — split

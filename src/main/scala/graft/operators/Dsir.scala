@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.sources.Tables
+import graft.sources.{Datasets, Tables}
 
 /** Data Selection via Importance Resampling (DSIR — Xie et al. 2023,
   * arXiv:2302.03169): select raw-corpus documents that look like a small
@@ -100,12 +100,10 @@ object Dsir {
     * dsir_logratio and the weights join, so without the cache each
     * consumer re-paid the full token-stream aggregation.
     */
-  private val modelCache =
-    scala.collection.concurrent.TrieMap.empty[String, Array[(Long, Long, Long, Long)]]
+  private val modelCache = new graft.JvmCache[String, Array[(Long, Long, Long, Long)]]
 
   private def modelRows(s: SparkSession, d: String): Array[(Long, Long, Long, Long)] =
-    modelCache.getOrElseUpdate(s"$d@${Tables.fingerprint(s, Tables.path(d, "documents"))}", {
-      graft.ColdBuilds.record("dsir_model")
+    modelCache.getOrBuild(Datasets.key(s, d, "documents"), "dsir_model") {
       val counts = occ(s, d).groupBy("bucket").agg(
         sum(when(col("is_target"), 1L).otherwise(0L)).as("ct"),
         sum(when(col("is_target"), 0L).otherwise(1L)).as("cr"))
@@ -125,7 +123,7 @@ object Dsir {
         .collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
         .sortBy(_._1)
-    })
+    }
 
   /** Full-domain bucket model frame: target/raw occurrence counts and
     * the 1e-6-quantized smoothed log-ratio. Exactly [[Buckets]] rows,

@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
-import graft.sources.Tables
+import graft.sources.{Datasets, Tables}
 
 /** Incremental aggregate maintenance — the materialized-view analog of
   * the repo's other incremental lifecycles (dedup_incremental's signature
@@ -37,19 +37,8 @@ object IncrementalStats {
     */
   private[graft] val DeltaMod = 5
 
-  private def md5hex(sIn: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(sIn.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-
-  private[graft] def stateRoot(d: String): String = {
-    StoreRegistry.note(d)
-    val canon = try new java.io.File(d).getCanonicalPath catch {
-      case _: java.io.IOException => d
-    }
-    new java.io.File(new java.io.File(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_aggstate"),
-      md5hex(s"$canon:v$FormatVersion")).toString
-  }
+  private[graft] def stateRoot(d: String): String =
+    Datasets.storeRoot("graft_aggstate", "", d, FormatVersion)
 
   private def fs(s: SparkSession, p: Path) =
     p.getFileSystem(s.sparkContext.hadoopConfiguration)

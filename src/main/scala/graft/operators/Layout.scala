@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, SaveMode, SparkSession}
 
-import graft.sources.Tables
+import graft.sources.{Datasets, Tables}
 
 /** Storage-layout operators: co-located (bucketed) joins — the 100 TB
   * answer to "this join shuffles both fact tables every night". Writing
@@ -24,13 +24,11 @@ object Layout {
   private[graft] val Buckets = 8
   private[graft] val SortedFiles = 8
 
-  private def digest(d: String): String = {
-    val canon = try new java.io.File(d).getCanonicalPath catch {
-      case _: java.io.IOException => d
-    }
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(canon.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-  }
+  /** Bump on any change to a copy's layout. */
+  private val FormatVersion = 1
+
+  private def copyRoot(family: String, d: String): String =
+    Datasets.storeRoot(family, "", d, FormatVersion)
 
   /** Create (once per JVM+dataset) the bucketed external copies of orders
     * and lineitem, both CLUSTERED BY their orderkey INTO [[Buckets]]
@@ -38,11 +36,9 @@ object Layout {
     */
   private[graft] def ensureBucketed(s: SparkSession, d: String): (String, String) =
     synchronized {
-      val t = digest(d)
-      val ordT = s"graft_ord_b$t"
-      val liT = s"graft_li_b$t"
-      val base = new java.io.File(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"), s"graft_bucketed/$t")
+      val base = new java.io.File(copyRoot("graft_bucketed", d))
+      val ordT = s"graft_ord_b${base.getName}"
+      val liT = s"graft_li_b${base.getName}"
       if (!s.catalog.tableExists(ordT))
         Tables.orders(s, d).write
           .bucketBy(Buckets, "o_orderkey").sortBy("o_orderkey")
@@ -70,9 +66,7 @@ object Layout {
     */
   private[graft] def ensureSorted(s: SparkSession, d: String): String =
     synchronized {
-      val dir = new java.io.File(new java.io.File(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_sorted"),
-        digest(d)).toString
+      val dir = copyRoot("graft_sorted", d)
       if (!new java.io.File(dir, "_SUCCESS").exists())
         Tables.lineitem(s, d)
           .repartitionByRange(SortedFiles, col("l_shipdate"))
@@ -122,9 +116,7 @@ object Layout {
     */
   private[graft] def ensureZordered(s: SparkSession, d: String): String =
     synchronized {
-      val dir = new java.io.File(new java.io.File(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_zorder"),
-        digest(d)).toString
+      val dir = copyRoot("graft_zorder", d)
       if (!new java.io.File(dir, "_SUCCESS").exists()) {
         val li = Tables.lineitem(s, d)
         val r = li.agg(

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.sources.Tables
+import graft.sources.{Datasets, Tables}
 
 /** Full-text retrieval over the `documents` table: BM25 top-k and a
   * hybrid lexical+vector ranker fused with reciprocal-rank fusion — the
@@ -124,24 +124,15 @@ object Retrieval {
     * instead of token occurrences. Cold-build attributed; content-keyed
     * like Similarity's model caches, so an in-place rewrite refreshes.
     */
-  private val standingQtCache = scala.collection.concurrent.TrieMap
-    .empty[String, Array[(Long, String)]]
-
-  private def qtCacheKey(s: SparkSession, d: String): String = {
-    val canon = try new java.io.File(d).getCanonicalPath catch {
-      case _: java.io.IOException => d
-    }
-    s"$canon@${Tables.fingerprint(s, Tables.path(d, "documents"))}"
-  }
+  private val standingQtCache = new graft.JvmCache[String, Array[(Long, String)]]
 
   private[graft] def standingQt(s: SparkSession, d: String): Array[(Long, String)] =
-    standingQtCache.getOrElseUpdate(qtCacheKey(s, d), {
-      graft.ColdBuilds.record("bm25_standing_queries")
+    standingQtCache.getOrBuild(Datasets.key(s, d, "documents"), "bm25_standing_queries") {
       Tables.documents(s, d).filter(isQueryDoc(col("doc_id")))
         .select(col("doc_id").as("query_id"),
           explode(split(col("text"), " ")).as("token")).distinct()
         .collect().map(r => (r.getLong(0), r.getString(1)))
-    })
+    }
 
   def frozenStats(s: SparkSession, d: String): FrozenIndexStats = {
     val docs = Tables.documents(s, d)

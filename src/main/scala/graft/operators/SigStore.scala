@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
-import graft.sources.Tables
+import graft.sources.{Datasets, Tables}
 
 /** Persisted SIGNATURE store for incremental dedup — the dedup analog of
   * [[AnnIndexIO]]'s build-once/serve-many index: `dedup_incremental`
@@ -40,19 +40,8 @@ object SigStore {
     */
   private val FormatVersion = 2
 
-  private def md5hex(sIn: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(sIn.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-
-  private[graft] def storeRoot(d: String): String = {
-    StoreRegistry.note(d)
-    val canon = try new java.io.File(d).getCanonicalPath catch {
-      case _: java.io.IOException => d
-    }
-    new java.io.File(new java.io.File(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_sigstore"),
-      md5hex(s"$canon:v$FormatVersion")).toString
-  }
+  private[graft] def storeRoot(d: String): String =
+    Datasets.storeRoot("graft_sigstore", "", d, FormatVersion)
 
   private def fs(s: SparkSession, p: Path) =
     p.getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -67,7 +56,7 @@ object SigStore {
   /** Banded (band_id, band_bits, doc_id, simhash) rows for a documents
     * frame — the store's row shape.
     */
-  private def bandedSigs(docs: DataFrame): DataFrame =
+  private[graft] def bandedSigs(docs: DataFrame): DataFrame =
     Dedup.banded7(Dedup.simhash(docs))
       .select(col("band_id"), col("band_bits"), col("doc_id"), col("simhash"))
 
@@ -94,22 +83,14 @@ object SigStore {
     require(f.rename(tmp, rootPath), s"atomic publish failed: $root")
   }
 
-  /** Grow a published store by one batch of NEW base documents: the
-    * batch's signature rows land under their own `batch_id=<n>` sub-dirs
-    * inside the band partitions via dynamic partition overwrite, so a
-    * replayed batch rewrites exactly its own dirs — the same idiom as
-    * AnnIndexIO.appendBatch. Growth costs one simhash pass over the
-    * batch: O(|batch|), never O(|store|). Only specs call it, as a
-    * fixture; [[absorbComponents]] appends through [[appendSigRows]].
+  /** Grow a published store by one batch of banded signature rows: they
+    * land under their own `batch_id=<n>` sub-dirs inside the band
+    * partitions via dynamic partition overwrite, so a replayed batch
+    * rewrites exactly its own dirs — the same idiom as
+    * AnnIndexIO.appendBatch. [[absorbComponents]] appends the rows its
+    * contraction already computed.
     */
-  private[graft] def appendBatch(s: SparkSession, root: String,
-      docsBatch: DataFrame, batchId: Long): Unit =
-    appendSigRows(s, root, bandedSigs(docsBatch), batchId)
-
-  /** [[appendBatch]] for already-computed banded signature rows — lets
-    * absorb reuse the simhash pass its contraction already paid for.
-    */
-  private def appendSigRows(s: SparkSession, root: String,
+  private[graft] def appendSigRows(s: SparkSession, root: String,
       sigRows: DataFrame, batchId: Long): Unit =
     graft.sources.Writers.writeShards(
       sigRows.withColumn("batch_id", lit(batchId)),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.sources.Tables
+import graft.sources.{Datasets, Tables}
 
 /** Approximate-nearest-neighbor search over the `embeddings` table
   * (64-dim float vectors, FIXTURES.md §B).
@@ -114,49 +114,29 @@ object Similarity {
   private[operators] def semanticBroadcastBytes(n: Long, dims: Int): Long =
     n * (dims.toLong * 8L + 80L)
 
-  /** Embedding row counts and dimensionality per dataset-dir content key
-    * (one tiny job each per content version per JVM): the count derives
-    * the k-means K and gates the dedup_semantic broadcast; the dims turn
-    * the row count into broadcast bytes. Cleared by
-    * [[clearAnnIndexCache]] with the other per-dir caches.
+  /** Embedding row counts and dimensionality per dataset content version
+    * ([[graft.sources.Datasets.key]]; one tiny job each per version per
+    * JVM): the count derives the k-means K and gates the dedup_semantic
+    * broadcast; the dims turn the row count into broadcast bytes.
     */
-  private val embCounts =
-    scala.collection.concurrent.TrieMap.empty[String, Long]
-  private val embDims =
-    scala.collection.concurrent.TrieMap.empty[String, Int]
+  private val embCounts = new graft.JvmCache[String, Long]
+  private val embDims = new graft.JvmCache[String, Int]
 
-  /** Content-keyed cache key (ADVICE r10/r11): the bare dir path keyed
-    * every per-dir model cache, so a dir REWRITTEN IN PLACE kept serving
-    * stale centroids/counts until the manual test seam ran. Keying on
-    * dir@fingerprint (part-file names/sizes/mtimes) makes the refresh
-    * automatic; the seam remains for same-mtime edge cases in tests.
+  /** Every model cache below keys on the embeddings table's content
+    * version, so a dir rewritten in place retrains on its next use.
     */
-  /** Canonicalized (r19): the raw `d` string let a relative and an
-    * absolute spelling of the SAME dataset dir key two separate
-    * assignment stores — found in the wild when ScaleSmoke
-    * (`target/sf10`) and WarmServe (`/root/repo/target/sf10`) each
-    * built a 79 MB store for one corpus. Every other store root
-    * (SigStore, BmStore, AnnIndexIO, Upsert, IncrementalStats) already
-    * canonicalizes; this was the one straggler.
-    */
-  private def cacheKey(s: SparkSession, d: String): String = {
-    val canon = try new java.io.File(d).getCanonicalPath catch {
-      case _: java.io.IOException => d
-    }
-    s"$canon@${Tables.fingerprint(s, Tables.path(d, "embeddings"))}"
-  }
+  private def cacheKey(s: SparkSession, d: String): String =
+    Datasets.key(s, d, "embeddings")
 
   private def embCount(s: SparkSession, d: String): Long =
-    embCounts.getOrElseUpdate(cacheKey(s, d), {
-      graft.ColdBuilds.record("emb_count")
+    embCounts.getOrBuild(cacheKey(s, d), "emb_count") {
       Tables.embeddings(s, d).select("vec_id").count()
-    })
+    }
 
   private def embDim(s: SparkSession, d: String): Int =
-    embDims.getOrElseUpdate(cacheKey(s, d), {
-      graft.ColdBuilds.record("emb_dim")
+    embDims.getOrBuild(cacheKey(s, d), "emb_dim") {
       Tables.embeddings(s, d).select(size(col("embedding"))).head.getInt(0)
-    })
+    }
 
   /** Metadata predicate for ann_ivfpq_filtered_topk: labels 0-9 are
     * ~uniform, so `label < 3` keeps ~30% of the corpus — selective enough
@@ -282,12 +262,10 @@ object Similarity {
     * keeps its previous centroid (defined in both engines via LEFT JOIN +
     * coalesce).
     */
-  private val kmeansCents =
-    scala.collection.concurrent.TrieMap.empty[String, Array[Array[Double]]]
+  private val kmeansCents = new graft.JvmCache[String, Array[Array[Double]]]
 
   private def trainedCentroids(s: SparkSession, d: String): Array[Array[Double]] =
-    kmeansCents.getOrElseUpdate(cacheKey(s, d), {
-      graft.ColdBuilds.record("kmeans_trainer")
+    kmeansCents.getOrBuild(cacheKey(s, d), "kmeans_trainer") {
       val e = withEmb(s, d)
       val k = kmeansKFor(embCount(s, d))
       // k-means init = k-prefix of the deterministic hash order (for
@@ -329,7 +307,7 @@ object Similarity {
       }
       Materialize.drop(train)
       cents
-    })
+    }
 
   /** Content-keyed root + FileSystem of the persisted assignment store
     * (assign.parquet + centroids.parquet under one `_READY`).
@@ -339,24 +317,21 @@ object Similarity {
   // root — tearing every root under the shared tmp dir (the pre-r18
   // idiom) invalidated the sf10 store on every suite run, turning later
   // warm-restart captures into silent full rebuilds (58 s / 419 cpu-s).
+  private[graft] def semStoreRoot(s: SparkSession, d: String)
+      : (org.apache.hadoop.fs.Path, org.apache.hadoop.fs.FileSystem) = {
+    val root = new org.apache.hadoop.fs.Path(Datasets.storeRoot("graft_semassign",
+      "", d, SemStoreFormatVersion, Datasets.fingerprint(s, d, "embeddings")))
+    (root, root.getFileSystem(s.sparkContext.hadoopConfiguration))
+  }
+
+  /** Bump when the assignment store's layout changes. */
+  private val SemStoreFormatVersion = 1
+
   /** The semassign family's dir name for a dataset — exposed for
     * [[graft.StoreGc]]'s liveness derivation (r20, VERDICT r19 #5).
     */
-  private[graft] def semStoreKey(s: SparkSession, d: String): String = {
-    StoreRegistry.note(d)
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(cacheKey(s, d).getBytes("UTF-8")).map("%02x".format(_))
-      .mkString.take(12)
-  }
-
-  private[graft] def semStoreRoot(s: SparkSession, d: String)
-      : (org.apache.hadoop.fs.Path, org.apache.hadoop.fs.FileSystem) = {
-    val key = semStoreKey(s, d)
-    val root = new org.apache.hadoop.fs.Path(new java.io.File(
-      new java.io.File(sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-        "graft_semassign"), key).toString)
-    (root, root.getFileSystem(s.sparkContext.hadoopConfiguration))
-  }
+  private[graft] def semStoreKey(s: SparkSession, d: String): String =
+    semStoreRoot(s, d)._1.getName
 
   private def centroidsPath(root: org.apache.hadoop.fs.Path) =
     new org.apache.hadoop.fs.Path(root, "centroids.parquet")
@@ -392,17 +367,18 @@ object Similarity {
     * existed fall back to the trainer.
     */
   private def storedCentroids(s: SparkSession, d: String): Array[Array[Double]] =
-    kmeansCents.getOrElseUpdate(cacheKey(s, d), {
+    kmeansCents.get(cacheKey(s, d)).getOrElse {
       val (root, f) = semStoreRoot(s, d)
       val cdst = centroidsPath(root)
       val published = f.exists(new org.apache.hadoop.fs.Path(root, "_READY"))
-      if (published && f.exists(cdst)) {
-        graft.ColdBuilds.record("kmeans_centroids_load")
-        val rows = Tables.parquet(s, cdst.toString)
-          .orderBy("cluster_id").collect()
-        require(rows.nonEmpty, s"published centroid store is empty: $cdst")
-        rows.map(_.getSeq[Double](1).toArray)
-      } else {
+      if (published && f.exists(cdst))
+        kmeansCents.getOrBuild(cacheKey(s, d), "kmeans_centroids_load") {
+          val rows = Tables.parquet(s, cdst.toString)
+            .orderBy("cluster_id").collect()
+          require(rows.nonEmpty, s"published centroid store is empty: $cdst")
+          rows.map(_.getSeq[Double](1).toArray)
+        }
+      else {
         val cents = trainedCentroids(s, d)
         // a store published BEFORE centroids existed self-upgrades: write
         // the trained values beside it (atomic tmp→rename; assign.parquet
@@ -429,7 +405,7 @@ object Similarity {
         }
         cents
       }
-    })
+    }
 
   /** Trained-index artifacts shared by the ANN family: the 8-vector
     * hash-ordered sample (IVF centroids; its 4-prefix is the PQ codeword
@@ -446,50 +422,23 @@ object Similarity {
     lazy val codebooks: Array[Array[Array[Double]]] = pqCodebooks(sample8.take(4))
   }
 
-  /** Index cache keyed by dataset dir: a real 100 TB deployment trains an
-    * ANN index once and serves many queries from it; before this seam each
-    * of ann_ivf/ann_pq/ann_ivfpq re-ran the sample pass (4 corpus passes
-    * per session, VERDICT r5 §3). One JVM-wide build per content version
-    * per dir; the cache holds O(model) doubles (8×64 + 50×64), never
-    * data. Keyed by dir@content-fingerprint (see [[cacheKey]]), so a dir
-    * whose content changes in-place retrains automatically;
-    * [[clearAnnIndexCache]] remains the belt-and-braces test seam.
+  /** Index cache keyed by dataset content version: a real 100 TB
+    * deployment trains an ANN index once and serves many queries from it;
+    * before this seam each of ann_ivf/ann_pq/ann_ivfpq re-ran the sample
+    * pass (4 corpus passes per session, VERDICT r5 §3). One JVM-wide
+    * build per content version; the cache holds O(model) doubles
+    * (8×64 + 50×64), never data.
     */
-  private val annIndexCache =
-    scala.collection.concurrent.TrieMap.empty[String, AnnIndex]
-
-  /** Train-step builds per dataset dir — the spec's single-scan-reuse
-    * probe (expected: 1 per dir however many ANN queries run).
-    */
-  private[graft] val annTrainBuilds =
-    scala.collection.concurrent.TrieMap.empty[String, Long]
-
-  private[graft] def clearAnnIndexCache(): Unit = {
-    annIndexCache.clear()
-    annTrainBuilds.clear()
-    // the trained kmeans centroids and the embedding counts derive from
-    // the same per-dir content and must drop with the index cache — a dir
-    // overwritten in place would otherwise keep assigning clusters from
-    // stale centroids while the DuckDB oracle retrains on the current
-    // data (self-review r10)
-    kmeansCents.clear()
-    embCounts.clear()
-    embDims.clear()
-  }
+  private val annIndexCache = new graft.JvmCache[String, AnnIndex]
 
   private[operators] def annIndex(e: DataFrame, d: String): AnnIndex =
-    annIndexCache.getOrElseUpdate(cacheKey(e.sparkSession, d), {
-      // the build probe stays keyed by the BARE dir: a content refresh
-      // that legitimately retrains should count as a second build there
-
-      graft.ColdBuilds.record("ann_index_train")
-      annTrainBuilds.put(d, annTrainBuilds.getOrElse(d, 0L) + 1L)
+    annIndexCache.getOrBuild(cacheKey(e.sparkSession, d), "ann_index_train") {
       val sample8 = hashSample(e, 8)
       // query-vector fetch: IN-pushed parquet scan, O(K) rows collected
       val qrows = e.filter(isQueryId(col("vec_id"))).select("vec_id", "emb")
         .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
       AnnIndex(sample8, qrows)
-    })
+    }
 
   /** PQ geometry: M=8 subspaces × 8 dims, 4 codewords per subspace (from
     * the 4-vector hash sample).
@@ -644,13 +593,12 @@ object Similarity {
     * ([[ProdPqCodewords]] codewords over the sample's slices). Cached per
     * content version like [[annIndexCache]]; cold-build attributed.
     */
-  private val prodIndexCache = scala.collection.concurrent.TrieMap
-    .empty[String, (Array[Array[Double]], Array[Array[Array[Double]]])]
+  private val prodIndexCache =
+    new graft.JvmCache[String, (Array[Array[Double]], Array[Array[Array[Double]]])]
 
   private def prodIndex(s: SparkSession, d: String)
       : (Array[Array[Double]], Array[Array[Array[Double]]]) =
-    prodIndexCache.getOrElseUpdate(cacheKey(s, d), {
-      graft.ColdBuilds.record("ann_prod_train")
+    prodIndexCache.getOrBuild(cacheKey(s, d), "ann_prod_train") {
       // train on NORMALIZED vectors: the production index ranks by ADC-L2
       // but the ground truth (and the user's intent) is cosine; on unit
       // vectors ||a−b||² = 2−2cos, so L2 order IS cosine order — without
@@ -664,7 +612,7 @@ object Similarity {
         lloyd(slices, math.min(ProdPqCodewords, slices.length), ProdLloydIters)
       }
       (cents, books)
-    })
+    }
 
   private[operators] def normalize(v: Array[Double]): Array[Double] = {
     var acc = 0.0

@@ -7,7 +7,8 @@ package graft.operators
   * hand-typed list omitted `target/sf1` — the documented footgun firing
   * in practice. The fix derives what the caller was being asked to
   * remember: every store-root RESOLUTION already knows its dataset dir,
-  * so each of the five family resolvers records it here, and the reaper
+  * so the one store-root resolver
+  * ([[graft.sources.Datasets.storeRoot]]) records it here, and the reaper
   * treats "a dataset that ever resolved a store and still exists on
   * disk" as live alongside the declared list. Deleting a dataset dir
   * (spec fixtures, calibration copies) kills its registry entries'
@@ -34,12 +35,9 @@ private[graft] object StoreRegistry {
     new java.io.File(tmpRoot,
       s"graft_store_registry_${sys.props.getOrElse("user.name", "anon")}.tsv")
 
-  def note(datasetDir: String): Unit = {
-    val canon = try new java.io.File(datasetDir).getCanonicalPath catch {
-      case _: java.io.IOException => datasetDir
-    }
-    if (seen.add(canon)) appendLine(canon)
-  }
+  /** Record a canonical dataset dir (see [[graft.sources.Datasets]]). */
+  def note(canonicalDir: String): Unit =
+    if (seen.add(canonicalDir)) appendLine(canonicalDir)
 
   private def appendLine(line: String): Unit = synchronized {
     try {

@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.sources.{Tables, Writers}
+import graft.sources.{Datasets, Tables, Writers}
 
 /** Registered surface for the copy-on-write MERGE primitive
   * ([[graft.sources.Writers.mergeUpsert]]) — the lakehouse maintenance
@@ -23,23 +23,14 @@ import graft.sources.{Tables, Writers}
   */
 object Upsert {
 
-  private def md5hex(sIn: String): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    md.digest(sIn.getBytes("UTF-8")).map("%02x".format(_)).mkString
-  }
-
   /** Layout version folded into the root digest — bump on layout change. */
-  private val LayoutVersion = "v2"
+  private val LayoutVersion = 2
 
   /** Base-layout root under tmpdir keyed by canonical dataset dir: stable
     * within a round, disposable across rounds (AnnIndexIO convention).
     */
-  private[graft] def layoutRoot(d: String): String = {
-    val canon = new java.io.File(d).getCanonicalPath
-    new java.io.File(
-      new java.io.File(sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_merge"),
-      md5hex(s"$LayoutVersion|$canon")).toString
-  }
+  private[graft] def layoutRoot(d: String): String =
+    Datasets.storeRoot("graft_merge", "", d, LayoutVersion)
 
   /** Deterministic delta against `documents`: every 7th doc updated
     * (source re-stamped, n_chars + 1), every 11th cloned as an insert

@@ -34,31 +34,24 @@ object Tables {
     * before it reads, and the two settings infer different types.
     */
   def parquet(spark: SparkSession, path: String): DataFrame =
-    schemas.read(spark, path)
+    parquetVia(schemas, spark, path)
 
-  /** A bounded LRU of inferred schemas; see [[parquet]]. */
-  private[graft] final class SchemaCache(bound: Int) {
-    private type Key = (String, String, Map[String, String])
-    private val lru = new java.util.LinkedHashMap[Key, StructType](16, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[Key, StructType]): Boolean =
-        this.size() > bound
-    }
+  private[graft] type SchemaKey = (String, String, Map[String, String])
 
-    def size: Int = lru.synchronized(lru.size())
+  private val schemas = new graft.JvmCache[SchemaKey, StructType]
 
-    def read(spark: SparkSession, path: String): DataFrame = {
-      val key = (path, fingerprint(spark, path), inferenceConfs(spark))
-      lru.synchronized(Option(lru.get(key))) match {
-        case Some(schema) => spark.read.schema(schema).parquet(path)
-        case None =>
-          val df = spark.read.parquet(path)
-          lru.synchronized(lru.put(key, df.schema))
-          df
-      }
+  /** [[parquet]] through the given schema cache. */
+  private[graft] def parquetVia(cache: graft.JvmCache[SchemaKey, StructType],
+      spark: SparkSession, path: String): DataFrame = {
+    val key = (path, fingerprint(spark, path), inferenceConfs(spark))
+    cache.get(key) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None =>
+        val df = spark.read.parquet(path)
+        cache.put(key, df.schema)
+        df
     }
   }
-
-  private val schemas = new SchemaCache(256)
 
   private val InferencePrefixes = Seq("spark.sql.parquet.", "spark.sql.legacy.parquet.")
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{AnnIndexIO, Similarity}
+import graft.operators.AnnIndexIO
 
 /** Persisted IVF×PQ index: build-once / serve-many correctness, the
   * zero-corpus-pass serving plan, static partition pruning on the
@@ -20,10 +20,10 @@ class AnnIndexIOSpec extends AnyFunSuite {
 
   test("served top-k from the on-disk index equals the in-memory ivfpq pipeline") {
     AnnIndexIO.deleteIndex(spark, sf)
-    Similarity.clearAnnIndexCache()
+    JvmCache.clearAll()
     val expect = SparkEntry.queries("ann_ivfpq_topk")(spark, sf).collect().map(key).toSet
     // simulate a fresh serving JVM: in-memory train cache gone, index on disk
-    Similarity.clearAnnIndexCache()
+    JvmCache.clearAll()
     val got = SparkEntry.queries("ann_ivfpq_served_topk")(spark, sf).collect().map(key).toSet
     assert(got == expect)
     // sf0.001 carries 10 of the 50 fixed query ids; 5 ranks each

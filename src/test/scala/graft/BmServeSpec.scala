@@ -9,7 +9,7 @@ import graft.operators.{BmStore, Retrieval}
 
 /** Online BM25 serving from the persisted postings store must agree
   * exactly with the batch ranker: a corpus-member query doc streamed as
-  * query text, frozen per micro-batch with `BmStore.frozenStatsForQueries`
+  * query text, frozen per micro-batch with `StoreFixtures.frozenStatsForQueries`
   * and answered by `BmStore.serveDisplay`, returns its text_bm25_topk
   * rows bit-for-bit, and an out-of-vocabulary query returns nothing
   * (unknown terms score nothing).
@@ -27,7 +27,7 @@ class BmServeSpec extends AnyFunSuite {
     StreamDrive.foreachBatch(in.toDS()) { (batch, _) =>
       val qs = batch.collect().map { case (id, t) => (id, t.split(" ", -1).toSeq) }.toSeq
       if (qs.nonEmpty) {
-        val frozen = BmStore.frozenStatsForQueries(spark, root, qs)
+        val frozen = StoreFixtures.frozenStatsForQueries(spark, root, qs)
         sink(BmStore.serveDisplay(spark, root, frozen, Retrieval.BmTopK))
       }
     }

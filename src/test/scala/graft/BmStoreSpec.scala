@@ -188,7 +188,7 @@ class BmStoreSpec extends AnyFunSuite {
       (5000L + q, common ++ (0 until 8).map(j => s"rare_${(q * 7 + j) % 50}") ++
         (0 until 4).map(j => s"rare_${(q * 5 + j) % 50}_b"))
     }
-    val frozen = BmStore.frozenStatsForQueries(spark, root, standing)
+    val frozen = StoreFixtures.frozenStatsForQueries(spark, root, standing)
     assert(frozen.queries.map(_.terms.size).max > BmStore.WideQueryMinTerms)
     val k = Retrieval.BmTopK
     def topk(df: org.apache.spark.sql.DataFrame) = df
@@ -236,7 +236,7 @@ class BmStoreSpec extends AnyFunSuite {
       (7000L + q, common ++ (0 until 8).map(j => s"rare_${(q * 7 + j) % 50}") ++
         (0 until 4).map(j => s"rare_${(q * 5 + j) % 50}_b"))
     }
-    val frozen = BmStore.frozenStatsForQueries(spark, root, standing)
+    val frozen = StoreFixtures.frozenStatsForQueries(spark, root, standing)
     val k = Retrieval.BmTopK
     graft.PlanVolume.reset()
     sys.props("graft.bm.probe") = "volume"
@@ -291,7 +291,7 @@ class BmStoreSpec extends AnyFunSuite {
     val short = (0 until 3).map { q =>
       (6000L + q, Seq(s"rare_${q * 3}", s"rare_${(q * 3 + 1) % 50}", s"common$q"))
     }
-    val frozen = BmStore.frozenStatsForQueries(spark, root, short ++ wide)
+    val frozen = StoreFixtures.frozenStatsForQueries(spark, root, short ++ wide)
     val k = Retrieval.BmTopK
     val p0 = BmStore.wandProbeCount.get()
     val ranked = BmStore.servedRanked(spark, root, frozen, k)
@@ -317,7 +317,7 @@ class BmStoreSpec extends AnyFunSuite {
     val wide2 = (0 until 4).map { q =>
       (7000L + q, common ++ (0 until 9).map(j => s"rare_${(q * 11 + j) % 50}"))
     }
-    val frozen2 = BmStore.frozenStatsForQueries(spark, root, wide2)
+    val frozen2 = StoreFixtures.frozenStatsForQueries(spark, root, wide2)
     BmStore.servedRanked(spark, root, frozen2, k)
     assert(BmStore.wandProbeCount.get() === p1 + 1,
       "a changed standing set did not re-probe (stale per-root verdict)")
@@ -342,7 +342,7 @@ class BmStoreSpec extends AnyFunSuite {
       "fixture lacks a mixed width profile for this spec")
     val mixed = (short.take(3) ++ wide.take(12)).toSeq
       .map { case (id, ts) => (7000000L + id, ts) }
-    val frozen = BmStore.frozenStatsForQueries(spark, root, mixed)
+    val frozen = StoreFixtures.frozenStatsForQueries(spark, root, mixed)
     val p0 = BmStore.wandProbeCount.get()
     val ranked = BmStore.servedRanked(spark, root, frozen, Retrieval.BmTopK)
     val got = ranked.collect().map(_.toSeq).sortBy(_.toString)
@@ -422,8 +422,8 @@ class BmStoreSpec extends AnyFunSuite {
     assert(wand.toSeq === exhaustive.toSeq)
     // a narrow standing set (synthetic 5-term queries) must take the
     // exhaustive plan: ONE postings scan, no percolation expression
-    val short = BmStore.frozenStatsForQueries(spark, root,
-      BmStore.syntheticStandingQueries(spark, root, "wandgate", 5, termsPerQuery = 5))
+    val short = StoreFixtures.frozenStatsForQueries(spark, root,
+      StoreFixtures.syntheticStandingQueries(spark, root, "wandgate", 5, termsPerQuery = 5))
     val ranked = BmStore.servedRanked(spark, root, short, Retrieval.BmTopK)
     val shortScans = TestSpark.executedScans(ranked)
       .map(_.relation.location.rootPaths.mkString(","))

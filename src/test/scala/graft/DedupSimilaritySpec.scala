@@ -92,11 +92,12 @@ class DedupSimilaritySpec extends AnyFunSuite {
   test("ANN index trains ONCE per dataset dir across ivf/pq/ivfpq/kmeans") {
     // the r5 design note: a real 100 TB deployment builds the index once
     // and serves from it — 4 queries must share 1 train-step corpus pass
-    Similarity.clearAnnIndexCache()
+    JvmCache.clearAll()
+    val m = ColdBuilds.mark()
     Seq("ann_ivf_topk", "ann_pq_topk", "ann_ivfpq_topk", "embedding_kmeans")
       .foreach(q => Similarity.queries(q)(spark, sf).count())
-    assert(Similarity.annTrainBuilds.get(sf).contains(1L),
-      s"train builds per dir: ${Similarity.annTrainBuilds.toMap}")
+    val cold = ColdBuilds.since(m)
+    assert(cold.count(_ == "ann_index_train") == 1, s"cold builds: $cold")
   }
 
   test("ann_recall: one row per method, recall in (0,1], deterministic") {
@@ -658,72 +659,46 @@ class DedupSimilaritySpec extends AnyFunSuite {
       .withColumn("n_chars",
         org.apache.spark.sql.functions.length(org.apache.spark.sql.functions.col("text")))
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    def run(): Set[(Long, Long, Double)] =
-      Dedup.queries("dedup_ngram_jaccard_prefix")(spark, dir)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val key = "graft.jaccard.prefix.ratio"
-    val old = sys.props.get(key)
-    try {
-      sys.props(key) = "-1" // force the prefix + PPJoin pipeline
-      val viaPrefix = run()
-      sys.props(key) = Long.MaxValue.toString // force the direct aggregate
-      val viaDirect = run()
-      assert(viaPrefix === viaDirect,
-        s"PPJoin filters changed output: prefixOnly=${viaPrefix.diff(viaDirect)}" +
-          s" directOnly=${viaDirect.diff(viaPrefix)}")
-      assert(viaPrefix.exists(p => p._1 == 1L && p._2 == 2L),
-        "boundary pair (1,2) at jaccard .6053 lost by a filter")
-      assert(!viaPrefix.exists(p => p._1 == 1L && p._2 == 3L),
-        "sub-threshold pair (1,3) at jaccard .5897 leaked through")
-      assert(!viaPrefix.exists(p => Set(p._1, p._2) == Set(4L, 5L)))
-    } finally {
-      old match {
-        case Some(v) => sys.props(key) = v
-        case None => sys.props.remove(key)
-      }
-    }
+    val viaPrefix = pairsOf(Dedup.queries("dedup_ngram_jaccard_prefix")(spark, dir))
+    val viaIndex = invertedIndexAboveThreshold(dir)
+    assert(viaPrefix === viaIndex,
+      s"PPJoin filters changed output: prefixOnly=${viaPrefix.diff(viaIndex)}" +
+        s" indexOnly=${viaIndex.diff(viaPrefix)}")
+    assert(viaPrefix.exists(p => p._1 == 1L && p._2 == 2L),
+      "boundary pair (1,2) at jaccard .6053 lost by a filter")
+    assert(!viaPrefix.exists(p => p._1 == 1L && p._2 == 3L),
+      "sub-threshold pair (1,3) at jaccard .5897 leaked through")
+    assert(!viaPrefix.exists(p => Set(p._1, p._2) == Set(4L, 5L)))
   }
 
+  private def pairsOf(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+
+  /** The prefix plan's reference: dedup_ngram_jaccard (the exact
+    * inverted-index aggregate, oracle-checked at its 0.1 threshold)
+    * restricted to jaccard > [[Dedup.JaccardPrefixThreshold]].
+    */
+  private def invertedIndexAboveThreshold(dir: String): Set[(Long, Long, Double)] =
+    pairsOf(Dedup.queries("dedup_ngram_jaccard")(spark, dir))
+      .filter(_._3 > Dedup.JaccardPrefixThreshold)
+
   test("prefix auto-select: both plan branches produce identical output") {
-    // r10: the operator picks direct-aggregate vs prefix-pipeline from the
-    // df histogram (Dedup.prefixRatioOverride legacy stats gate). Force each branch via the
-    // system-property override and require bit-identical results — the
-    // plan choice must never be observable in the output.
-    def build() = Dedup.queries("dedup_ngram_jaccard_prefix")(spark, sf)
-    def collectPairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double)] =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    // the prefix pipeline is the only branch with a row_number window —
-    // assert each leg actually took its branch, so a gate bug that routes
-    // both legs the same way fails HERE instead of vacuously passing the
-    // equality below (exactly what the pre-BigDecimal overflow did:
-    // Long.MaxValue × even postings wrapped negative and both legs ran
-    // prefix, self-review r10)
-    // the prefix pipeline's window now hides behind its checkpoint, but
-    // its two-stage verify's fingerprint screen (sorted_inter_count) is
-    // in the returned plan; the direct aggregate has neither
-    def isPrefixPlan(df: org.apache.spark.sql.DataFrame): Boolean =
-      df.queryExecution.optimizedPlan.toString.contains("sorted_inter_count")
-    val key = "graft.jaccard.prefix.ratio"
-    val old = sys.props.get(key)
-    try {
-      // NEGATIVE ratio → comparison always false → prefix pipeline; a huge
-      // ratio forces direct (the gate compares in BigDecimal so
-      // Long.MaxValue cannot wrap).
-      sys.props(key) = "-1"
-      val prefixDf = build()
-      assert(isPrefixPlan(prefixDf), "ratio=-1 leg did not take the prefix pipeline")
-      val viaPrefix = collectPairs(prefixDf)
-      sys.props(key) = Long.MaxValue.toString // → direct aggregate
-      val directDf = build()
-      assert(!isPrefixPlan(directDf), "huge-ratio leg did not take the direct plan")
-      val viaDirect = collectPairs(directDf)
-      assert(viaPrefix.nonEmpty, "fixture should contain high-confidence pairs")
-      assert(viaPrefix == viaDirect,
-        s"plan branches diverge: prefixOnly=${viaPrefix.diff(viaDirect).take(3)}" +
-          s" directOnly=${viaDirect.diff(viaPrefix).take(3)}")
-    } finally {
-      old match { case Some(v) => sys.props(key) = v; case None => sys.props -= key }
-    }
+    // r10 picked direct-aggregate vs prefix-pipeline from the df
+    // histogram; r14 retired the gate and the direct branch is gone. The
+    // prefix plan must still equal that branch's shape: the inverted-index
+    // aggregate (dedup_ngram_jaccard) at the same threshold.
+    val prefixDf = Dedup.queries("dedup_ngram_jaccard_prefix")(spark, sf)
+    // the prefix pipeline's window hides behind its checkpoint, but its
+    // two-stage verify's fingerprint screen (sorted_inter_count) is in
+    // the returned plan
+    assert(prefixDf.queryExecution.optimizedPlan.toString.contains("sorted_inter_count"),
+      "dedup_ngram_jaccard_prefix did not take the prefix pipeline")
+    val viaPrefix = pairsOf(prefixDf)
+    val viaIndex = invertedIndexAboveThreshold(sf)
+    assert(viaPrefix.nonEmpty, "fixture should contain high-confidence pairs")
+    assert(viaPrefix == viaIndex,
+      s"plans diverge: prefixOnly=${viaPrefix.diff(viaIndex).take(3)}" +
+        s" indexOnly=${viaIndex.diff(viaPrefix).take(3)}")
   }
 
   test("asymmetric indexing prefix keeps a pair whose first shared shingle sits AT the bound (r14)") {
@@ -747,17 +722,9 @@ class DedupSimilaritySpec extends AnyFunSuite {
       .withColumn("n_chars",
         org.apache.spark.sql.functions.length(org.apache.spark.sql.functions.col("text")))
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val key = "graft.jaccard.prefix.ratio"
-    val old = sys.props.get(key)
-    try {
-      sys.props(key) = "-1" // force the prefix + PPJoin pipeline
-      val out = Dedup.queries("dedup_ngram_jaccard_prefix")(spark, dir)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      assert(out == Set((6L, 7L, 0.619)),
-        s"boundary-rank pair lost or distorted by the indexing prefix: $out")
-    } finally {
-      old match { case Some(v) => sys.props(key) = v; case None => sys.props -= key }
-    }
+    val out = pairsOf(Dedup.queries("dedup_ngram_jaccard_prefix")(spark, dir))
+    assert(out == Set((6L, 7L, 0.619)),
+      s"boundary-rank pair lost or distorted by the indexing prefix: $out")
   }
 
   test("substring dedup finds planted verbatim spans, content-defined (alignment-free)") {

@@ -20,8 +20,7 @@ class KnobInventorySpec extends AnyFunSuite {
     "graft.ann.prod.bound",
     "graft.banded.probe",
     "graft.bm.probe",
-    "graft.cc.sigdedup",
-    "graft.jaccard.prefix.ratio")
+    "graft.cc.sigdedup")
 
   private val ExpectedEnv = Set(
     "GRAFT_BENCH_DETAIL",

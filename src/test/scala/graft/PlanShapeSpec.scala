@@ -169,24 +169,17 @@ class PlanShapeSpec extends AnyFunSuite {
     // r14: the r10 df-ratio auto-gate had silently routed every fixture
     // to the direct join for two rounds after the prefix pipeline
     // improved past its calibration (interleaved sf10 cost of that
-    // mis-route: 6.1x wall / 6.8x cpu — AB_r14.json). The retired-gate
-    // default must stay prefix; the two-stage verify's fingerprint
-    // screen (sorted_inter_count) appears ONLY in the prefix branch, so
-    // its presence in the default (no-override) optimized plan IS the
-    // branch assertion. If a future gate reappears, this fails until
-    // the new gate proves itself at every scale the way r14 had to.
+    // mis-route: 6.1x wall / 6.8x cpu — AB_r14.json). The gate and the
+    // direct branch are gone; the two-stage verify's fingerprint screen
+    // (sorted_inter_count) belongs to the prefix pipeline, so its
+    // presence in the optimized plan IS the branch assertion. If a
+    // future gate reappears, this fails until the new gate proves itself
+    // at every scale the way r14 had to.
     assume(TestSpark.fixturesPresent, TestSpark.fixturesHint)
-    val key = "graft.jaccard.prefix.ratio"
-    val old = sys.props.get(key)
-    try {
-      sys.props.remove(key)
-      val plan = graft.operators.Dedup.queries("dedup_ngram_jaccard_prefix")(
-        spark, TestSpark.sf0001).queryExecution.optimizedPlan.toString
-      assert(plan.contains("sorted_inter_count"),
-        "default plan is not the prefix pipeline — the retired auto-gate grew back")
-    } finally {
-      old match { case Some(v) => sys.props(key) = v; case None => () }
-    }
+    val plan = graft.operators.Dedup.queries("dedup_ngram_jaccard_prefix")(
+      spark, TestSpark.sf0001).queryExecution.optimizedPlan.toString
+    assert(plan.contains("sorted_inter_count"),
+      "default plan is not the prefix pipeline — the retired auto-gate grew back")
   }
 
   test("rule 6: no single-key window on the dedup output stages (r18, VERDICT r17 #6)") {

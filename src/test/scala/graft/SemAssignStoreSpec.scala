@@ -70,7 +70,7 @@ class SemAssignStoreSpec extends AnyFunSuite {
     val viaTrainer = rows("embedding_prototypicality") // publishes the store
     // simulate a fresh JVM against the published store: drop every
     // in-memory model cache but keep the persisted root
-    Similarity.clearAnnIndexCache()
+    JvmCache.clearAll()
     val mark = graft.ColdBuilds.mark()
     val viaStore = rows("embedding_prototypicality")
     val builds = graft.ColdBuilds.since(mark)
@@ -86,7 +86,7 @@ class SemAssignStoreSpec extends AnyFunSuite {
     val legacy = publishedOwnRoot("centroids.parquet")
     assert(legacy.nonEmpty, "expected a published store with centroids")
     legacy.foreach(r => rmTree(new java.io.File(r, "centroids.parquet")))
-    Similarity.clearAnnIndexCache()
+    JvmCache.clearAll()
     val mark2 = graft.ColdBuilds.mark()
     val viaFallback = rows("embedding_prototypicality")
     assert(graft.ColdBuilds.since(mark2).contains("kmeans_trainer"),

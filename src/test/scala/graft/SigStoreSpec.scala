@@ -257,7 +257,7 @@ class SigStoreSpec extends AnyFunSuite {
     SigStore.buildLabels(spark, root)
     // simulate the torn absorb of batch 0 = {10 -> t1 (dup of 1)}: sigs
     // appended, marker down, NO patch/remap written
-    SigStore.appendBatch(spark, root, docsOf(10L -> t1), 0L)
+    StoreFixtures.appendSigBatch(spark, root, docsOf(10L -> t1), 0L)
     assert(new java.io.File(s"$root/_LABELS_READY").delete())
     // the streaming replay
     SigStore.absorbComponents(spark, root, docsOf(10L -> t1), batchId = 0L)

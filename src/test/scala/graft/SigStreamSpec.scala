@@ -15,7 +15,7 @@ final case class DocInsert(doc_id: Long, text: String)
 
 /** Stream-grown signature store ≡ one-shot build over the same corpus,
   * and a replayed append is a no-op on the served answers. The stream
-  * commits each micro-batch with `SigStore.appendBatch` (or
+  * commits each micro-batch with `StoreFixtures.appendSigBatch` (or
   * `absorbComponents`) under its micro-batch id.
   */
 class SigStreamSpec extends AnyFunSuite {
@@ -26,7 +26,7 @@ class SigStreamSpec extends AnyFunSuite {
       components: Boolean = false): StreamingQuery =
     StreamDrive.foreachBatch(docs, Some(checkpointDir), trigger) { (batch, batchId) =>
       if (components) SigStore.absorbComponents(spark, root, batch.toDF(), batchId)
-      else SigStore.appendBatch(spark, root, batch.toDF(), batchId)
+      else StoreFixtures.appendSigBatch(spark, root, batch.toDF(), batchId)
     }
 
   // deterministic doc text: dup pairs share a body, novel docs are unique

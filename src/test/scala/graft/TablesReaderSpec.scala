@@ -88,16 +88,17 @@ class TablesReaderSpec extends AnyFunSuite {
   }
 
   test("the cache evicts its least recently used schema past its bound") {
-    val cache = new Tables.SchemaCache(2)
+    val cache = new JvmCache[Tables.SchemaKey, org.apache.spark.sql.types.StructType](2)
+    def read(p: String) = Tables.parquetVia(cache, spark, p)
     val paths = Seq.fill(3)(tmpTable())
     paths.zipWithIndex.foreach { case (p, i) => spark.range(i + 1).toDF("a").write.parquet(p) }
-    paths.foreach(cache.read(spark, _))
+    paths.foreach(read)
     assert(cache.size == 2)
-    assert(jobsDuring(cache.read(spark, paths(2)))._2 == 0)
-    assert(jobsDuring(cache.read(spark, paths(0)))._2 == 1)
+    assert(jobsDuring(read(paths(2)))._2 == 0)
+    assert(jobsDuring(read(paths(0)))._2 == 1)
     assert(cache.size == 2)
     // paths(1) was the least recently used when paths(0) came back
-    assert(jobsDuring(cache.read(spark, paths(2)))._2 == 0)
-    assert(jobsDuring(cache.read(spark, paths(1)))._2 == 1)
+    assert(jobsDuring(read(paths(2)))._2 == 0)
+    assert(jobsDuring(read(paths(1)))._2 == 1)
   }
 }

@@ -122,7 +122,7 @@ class WarmServeSpec extends AnyFunSuite {
     val (root, _) = graft.operators.Similarity.semStoreRoot(spark, sf)
     val marker = new java.io.File(root.toString, "_READY")
     assert(marker.exists() && marker.delete(), s"fixture marker tear failed: $marker")
-    graft.operators.Similarity.clearAnnIndexCache()
+    graft.JvmCache.clearAll()
     val torn = WarmServe.serveOnce(spark, sf, Seq("dedup_semantic"))
     val flagged = torn.flatMap(r => WarmServe.violations(r._2))
     assert(flagged.exists(_.startsWith("sem_assign_build")),
