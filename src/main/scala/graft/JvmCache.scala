@@ -24,10 +24,6 @@ final class JvmCache[K, V](bound: Int = JvmCache.MaxEntries) {
 
   def put(key: K, value: V): Unit = lru.synchronized(lru.put(key, value)): Unit
 
-  def remove(key: K): Unit = lru.synchronized(lru.remove(key)): Unit
-
-  def removeKeys(p: K => Boolean): Unit = lru.synchronized(lru.keySet.removeIf(k => p(k))): Unit
-
   def clear(): Unit = lru.synchronized(lru.clear())
 
   /** The value for `key`, built on a miss with no cold-build record. */

@@ -145,23 +145,21 @@ object WarmServe {
   private[graft] def calibOrder(all: Set[String]): Seq[String] =
     (all -- Served).toSeq.sorted ++ Served.filter(all)
 
-  /** One calibration sweep: every query's BUILD-CLASS tags (load-class
-    * filtered out by the same classifier the serve gate uses).
-    */
-  private[graft] def buildTagsByQuery(spark: SparkSession, sfDir: String,
-      qs: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] =
-        SparkEntry.queries): Map[String, Seq[String]] =
-    serveOnce(spark, sfDir, calibOrder(qs.keySet), qs)
-      .map { case (n, tags) => n -> violations(tags) }.toMap
-
   /** One calibration sweep with RAW tags (load-class included) — calib-b
-    * derives both builders (build tags) and readers (load tags) from the
-    * same single pass; a second pass would observe pre-warmed caches.
+    * derives both builders ([[buildTagsByQuery]]) and readers (load tags)
+    * from the same single pass; a second pass would observe pre-warmed
+    * caches.
     */
   private[graft] def rawTagsByQuery(spark: SparkSession, sfDir: String,
       qs: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] =
         SparkEntry.queries): Map[String, Seq[String]] =
     serveOnce(spark, sfDir, calibOrder(qs.keySet), qs).toMap
+
+  /** A sweep's BUILD-CLASS tags per query (load-class filtered out by the
+    * same classifier the serve gate uses).
+    */
+  private[graft] def buildTagsByQuery(raw: Map[String, Seq[String]]): Map[String, Seq[String]] =
+    raw.map { case (n, tags) => n -> violations(tags) }
 
   /** Queries whose builds PERSISTED across the JVM boundary: build tags
     * in sweep A, silent in fresh-JVM sweep B.
@@ -297,7 +295,7 @@ object WarmServe {
       } else require(java.nio.file.Files.isDirectory(dataPath),
         s"calib-b needs calib-a's dataset copy at $dataDir — run calib-a first")
       val raw = rawTagsByQuery(spark, dataDir)
-      val tags = raw.map { case (n, ts) => n -> violations(ts) }
+      val tags = buildTagsByQuery(raw)
       if (mode == "calib-a") {
         writeTagsTsv(out, dataDir, tags)
         val builders = tags.collect { case (n, ts) if ts.nonEmpty => n }.toSeq.sorted
@@ -306,15 +304,14 @@ object WarmServe {
         val a = readTagsTsv(out)
         val persisted = persistedBuilders(a, tags)
         val readers = freshReaders(raw)
-        val dodged = persisted.filterNot(Served.contains)
-        val readerDodged = readers.filterNot(Served.contains)
         val perJvm = tags.collect { case (n, ts) if ts.nonEmpty => n }.toSeq.sorted
-        val gate = if (dodged.isEmpty && readerDodged.isEmpty) "pass" else "fail"
-        println(s"""{"metric":"warmserve_calib","gate":"$gate","queries":${tags.size},"persisted_builders":${persisted.map("\"" + _ + "\"").mkString("[", ",", "]")},"fresh_readers":${readers.map("\"" + _ + "\"").mkString("[", ",", "]")},"per_jvm_anchors":${perJvm.map("\"" + _ + "\"").mkString("[", ",", "]")},"dodged":${dodged.map("\"" + _ + "\"").mkString("[", ",", "]")},"reader_dodged":${readerDodged.map("\"" + _ + "\"").mkString("[", ",", "]")},"sf":"$sfDir"}""")
+        val guard = scala.util.Try(calibrationGuard(persisted, readers))
+        val gate = if (guard.isSuccess) "pass" else "fail"
+        println(s"""{"metric":"warmserve_calib","gate":"$gate","queries":${tags.size},"persisted_builders":${persisted.map("\"" + _ + "\"").mkString("[", ",", "]")},"fresh_readers":${readers.map("\"" + _ + "\"").mkString("[", ",", "]")},"per_jvm_anchors":${perJvm.map("\"" + _ + "\"").mkString("[", ",", "]")},"sf":"$sfDir"}""")
         deleteDir(dataPath)
         try spark.stop() catch { case _: Throwable => }
-        if (dodged.nonEmpty || readerDodged.nonEmpty) {
-          System.err.println(s"[warmserve] CALIB FAIL — outside Served: builders=$dodged readers=$readerDodged")
+        guard.failed.foreach { e =>
+          System.err.println(s"[warmserve] CALIB FAIL — ${e.getMessage}")
           sys.exit(1)
         }
       }

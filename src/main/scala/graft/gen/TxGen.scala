@@ -33,7 +33,7 @@ object TxGen {
     DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss'Z'").withZone(ZoneOffset.UTC)
 
   /** Sequential, exactly-ordered generation (driver-side). Good up to a few
-    * million rows; use [[distributed]] for the scale path.
+    * million rows.
     */
   def generate(n: Int, seed: Long = 42L): Seq[Transaction] = {
     val rnd = new Random(seed)
@@ -46,13 +46,10 @@ object TxGen {
     */
   private def next(
       rnd: Random,
-      lastActivity: mutable.Map[String, (String, Instant)],
-      forcedCard: Option[String] = None
+      lastActivity: mutable.Map[String, (String, Instant)]
   ): Transaction = {
-    val cardId = forcedCard.getOrElse {
-      val (_, cards) = GenDims.Customers(rnd.nextInt(GenDims.Customers.size))
-      cards(rnd.nextInt(cards.size))
-    }
+    val (_, cards) = GenDims.Customers(rnd.nextInt(GenDims.Customers.size))
+    val cardId = cards(rnd.nextInt(cards.size))
     val customer = GenDims.CardToCustomer(cardId)
     val fraudType = weightedChoice(rnd, GenDims.FraudTypeWeights)
 
@@ -102,46 +99,22 @@ object TxGen {
     spark.createDataset(generate(n, seed))
   }
 
-  /** Scale-path generator: each card's monotonic event stream is generated
-    * independently in its own task (per-card state never crosses partitions),
-    * so generation parallelizes across the 8 cards — and across any number of
-    * cards if the dim table grows. Event-time ordering per card is preserved;
-    * the global interleaving (which the rules never depend on — all scoring
-    * is per-card) differs from [[generate]].
-    */
-  def distributed(spark: SparkSession, perCard: Int, seed: Long = 42L): Dataset[Transaction] = {
-    import spark.implicits._
-    val cards = GenDims.CardToCustomer.keys.toSeq.sorted
-    spark
-      .createDataset(cards)
-      .repartition(cards.size)
-      .flatMap { cardId =>
-        val rnd = new Random(seed ^ cardId.hashCode.toLong)
-        val lastActivity = mutable.Map[String, (String, Instant)]()
-        Iterator.range(0, perCard).map(_ => next(rnd, lastActivity, Some(cardId)))
-      }
-  }
-
   /** Streaming analogue of the reference's paced infinite producer
     * (SURVEY.md §2 G1; producer/transaction-kafka-producer.py:110-144):
     * the built-in `rate` source paces ticks, each tick maps statelessly
     * and deterministically (seeded by the tick number) to one shaped
-    * transaction. Event time anchors on the tick's wall-clock timestamp,
-    * matching the reference's `datetime.now` anchoring (producer:40,48);
-    * the IMPOSSIBLE_TRAVEL branch labels intent without reading per-card
-    * state (stateless map — detection downstream is what reconstructs
-    * travel from history, exactly as in the reference pipeline).
-    */
-  def stream(spark: SparkSession, rowsPerSecond: Int = 10, seed: Long = 42L): Dataset[Transaction] = {
-    import spark.implicits._
-    streamTicked(spark, rowsPerSecond, seed).map(_._2)
-  }
-
-  /** [[stream]] with the rate-source tick retained. The tick is the
-    * natural monotonic offset for kafka-shaped projections — streaming
-    * plans reject `monotonically_increasing_id()` (Spark's
-    * UnsupportedOperationChecker), so any "offset" column must derive
-    * from source data like this tick, never from a batch-only expression.
+    * transaction, returned beside its tick. Event time anchors on the
+    * tick's wall-clock timestamp, matching the reference's `datetime.now`
+    * anchoring (producer:40,48); the IMPOSSIBLE_TRAVEL branch labels
+    * intent without reading per-card state (detection downstream is what
+    * reconstructs travel from history, exactly as in the reference
+    * pipeline).
+    *
+    * The tick is the natural monotonic offset for kafka-shaped
+    * projections — streaming plans reject `monotonically_increasing_id()`
+    * (Spark's UnsupportedOperationChecker), so any "offset" column must
+    * derive from source data like this tick, never from a batch-only
+    * expression.
     */
   def streamTicked(spark: SparkSession, rowsPerSecond: Int = 10,
       seed: Long = 42L): Dataset[(Long, Transaction)] = {
@@ -152,13 +125,13 @@ object TxGen {
       .map { case (ts, tick) => (tick, fromTick(ts.toInstant, tick, seed)) }
   }
 
-  /** One stateless, tick-deterministic transaction (used by [[stream]]). */
+  /** One stateless, tick-deterministic transaction (used by [[streamTicked]]). */
   def fromTick(time: Instant, tick: Long, seed: Long = 42L): Transaction = {
     val rnd = new Random(seed ^ tick)
     val (_, cards) = GenDims.Customers(rnd.nextInt(GenDims.Customers.size))
     val cardId = cards(rnd.nextInt(cards.size))
     val fraudType = weightedChoice(rnd, GenDims.FraudTypeWeights)
-    var location = FraudConstants.Locations(rnd.nextInt(FraudConstants.Locations.size))
+    val location = FraudConstants.Locations(rnd.nextInt(FraudConstants.Locations.size))
     var amount = round2(20 + rnd.nextDouble() * 280)
     val (category, merchants) =
       GenDims.MerchantCategories(rnd.nextInt(GenDims.MerchantCategories.size))
@@ -184,119 +157,6 @@ object TxGen {
       event_type = fraudType,
       timestamp = IsoFmt.format(secs)
     )
-  }
-
-  /** Per-card generator state for [[statefulStream]]: the same
-    * last-location/last-time memory the reference producer keeps in
-    * `card_last_activity` (producer/transaction-kafka-producer.py:35-40),
-    * plus a velocity flag for the 0.15 s-after-VELOCITY pacing
-    * (producer:142, mapped to a 1 s event-time gap at our second
-    * precision).
-    */
-  final case class GenCardState(
-      lastLoc: String,
-      lastTimeMillis: Long,
-      lastWasVelocity: Boolean
-  )
-
-  /** One rate-source tick routed to its card (key) with its wall-clock
-    * anchor — the keyed input of [[statefulStream]].
-    */
-  final case class Tick(cardId: String, tick: Long, wallMillis: Long)
-
-  /** Stateful streaming generator with FULL reference-producer parity
-    * (SURVEY.md §2 G1a/G1b in stream mode, unlike the stateless
-    * [[stream]]): per-card state in `flatMapGroupsWithState` maintains
-    * last location/time so
-    *
-    *  - event time is per-card monotonic (+1..5 s; producer:95-98),
-    *  - IMPOSSIBLE_TRAVEL events are *shaped*, not just labeled: +90 s
-    *    after the previous event at a forced different location
-    *    (producer:70-77) — so the downstream travel rule actually fires,
-    *  - the event after a VELOCITY burst follows at the minimum +1 s gap
-    *    (the producer's 0.15 s pacing, producer:142, at our second
-    *    precision).
-    *
-    * Card state is 8 keys today but the operator is keyed, so the same
-    * plan holds for millions of cards across executors. Tick-seeded
-    * randomness keeps the corpus deterministic given a tick sequence.
-    */
-  def statefulStream(spark: SparkSession, rowsPerSecond: Int = 10, seed: Long = 42L): Dataset[Transaction] = {
-    import spark.implicits._
-    val ticks = spark.readStream.format("rate")
-      .option("rowsPerSecond", rowsPerSecond).load()
-      .as[(java.sql.Timestamp, Long)]
-      .map { case (ts, tick) => routeTick(ts.toInstant, tick, seed) }
-    statefulShape(ticks, seed)
-  }
-
-  /** Deterministic tick → card routing (same customer/card selection as
-    * [[fromTick]]).
-    */
-  def routeTick(wall: Instant, tick: Long, seed: Long = 42L): Tick = {
-    val rnd = new Random(seed ^ tick)
-    val (_, cards) = GenDims.Customers(rnd.nextInt(GenDims.Customers.size))
-    Tick(cards(rnd.nextInt(cards.size)), tick, wall.toEpochMilli)
-  }
-
-  /** The keyed state machine behind [[statefulStream]], factored over any
-    * tick source so tests can drive it through MemoryStream.
-    */
-  def statefulShape(ticks: Dataset[Tick], seed: Long = 42L): Dataset[Transaction] = {
-    import ticks.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    ticks
-      .groupByKey(_.cardId)
-      .flatMapGroupsWithState[GenCardState, Transaction](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (cardId: String, it: Iterator[Tick], state: GroupState[GenCardState]) =>
-          var st = state.getOption.orNull
-          val out = it.toSeq.sortBy(_.tick).map { t =>
-            val rnd = new Random(seed ^ t.tick)
-            // replay routeTick's two draws so the rest of the RNG stream
-            // stays aligned with the stateless fromTick variant
-            val (_, cards) = GenDims.Customers(rnd.nextInt(GenDims.Customers.size))
-            rnd.nextInt(cards.size)
-            val fraudType = weightedChoice(rnd, GenDims.FraudTypeWeights)
-            var location = FraudConstants.Locations(rnd.nextInt(FraudConstants.Locations.size))
-            var amount = round2(20 + rnd.nextDouble() * 280)
-            val (category, merchants) =
-              GenDims.MerchantCategories(rnd.nextInt(GenDims.MerchantCategories.size))
-            val merchant = merchants(rnd.nextInt(merchants.size))
-            var time = st match {
-              case null => Instant.ofEpochSecond(t.wallMillis / 1000)
-              case s if s.lastWasVelocity => Instant.ofEpochMilli(s.lastTimeMillis).plusSeconds(1)
-              case s => Instant.ofEpochMilli(s.lastTimeMillis).plusSeconds(1L + rnd.nextInt(5))
-            }
-            fraudType match {
-              case "CARD_TESTING" => amount = round2(1 + rnd.nextDouble() * 4)
-              case "VELOCITY"     => amount = round2(80 + rnd.nextDouble() * 120)
-              case "IMPOSSIBLE_TRAVEL" if st != null =>
-                val others = FraudConstants.Locations.filter(_ != st.lastLoc)
-                location = others(rnd.nextInt(others.size))
-                time = Instant.ofEpochMilli(st.lastTimeMillis).plusSeconds(90)
-              case _ => ()
-            }
-            st = GenCardState(location, time.toEpochMilli, fraudType == "VELOCITY")
-            Transaction(
-              schema_version = "1.0",
-              event_id = s"evt-${time.toEpochMilli}-${hex6(rnd)}",
-              transaction_id = new UUID(rnd.nextLong(), rnd.nextLong()).toString,
-              customer_id = GenDims.CardToCustomer(cardId),
-              card_id = cardId,
-              merchant_id = merchant.replace(" ", "_").toLowerCase,
-              merchant_category = category,
-              amount = amount,
-              currency = "USD",
-              location = location,
-              ip_address = Seq.fill(4)(1 + rnd.nextInt(245)).mkString("."),
-              event_type = fraudType,
-              timestamp = IsoFmt.format(time)
-            )
-          }
-          if (st != null) state.update(st)
-          out.iterator
-      }
   }
 
   private def weightedChoice(rnd: Random, weighted: Seq[(String, Int)]): String = {

@@ -50,11 +50,6 @@ object AnnIndexIO {
     */
   private[graft] val DeltaMod = 5
 
-  /** Index roots live under java.io.tmpdir keyed by (canonical dataset
-    * dir, variant): stable across invocations inside a round, disposable
-    * across rounds. A dataset dir whose CONTENT is rewritten in place
-    * (temp-dir specs) must [[deleteIndex]] first.
-    */
   /** On-disk layout version, folded into every index root digest: bumping
     * it on any change to the code/model file shapes (e.g. the v2 addition
     * of the batch_id partition level) makes an index persisted by older
@@ -62,20 +57,16 @@ object AnnIndexIO {
     */
   private val FormatVersion = 2
 
+  /** Index roots live under java.io.tmpdir keyed by (canonical dataset
+    * dir, variant): stable across invocations, disposable. A dataset dir
+    * whose CONTENT is rewritten in place (temp-dir specs) must have its
+    * roots deleted first.
+    */
   private[graft] def indexRoot(d: String, variant: String): String =
     Datasets.storeRoot("graft_ann_index", variant, d, FormatVersion)
 
   private def fs(s: SparkSession, p: Path) =
     p.getFileSystem(s.sparkContext.hadoopConfiguration)
-
-  private[graft] def deleteIndex(s: SparkSession, d: String): Unit =
-    Seq("full", "incr", "stream").foreach { v =>
-      val root = indexRoot(d, v)
-      val p = new Path(root)
-      val f = fs(s, p)
-      if (f.exists(p)) f.delete(p, true)
-      modelCache.remove(root)
-    }
 
   /** O(model) per root — re-reading the tiny model parquet every streamed
     * micro-batch would add a driver job per batch for constant data.
@@ -215,25 +206,6 @@ object AnnIndexIO {
     Similarity.twoStageTopK(scored, 5, col("approx_dist"))
       .select(col("query_id"), col("rank"), col("vec_id"),
         round(col("approx_dist"), 4).as("approx_dist"))
-  }
-
-  /** Single-query routing — the point-lookup serving shape: cell probing
-    * is pure driver arithmetic over the loaded centroids (no Spark job),
-    * and the literal `cell_id IN (…)` filter statically prunes the
-    * partitioned code table to nprobe directories. Returns the scan's
-    * DataFrame so the spec can assert the pruned plan.
-    */
-  private[graft] def routeOne(s: SparkSession, root: String,
-      q: Array[Double], nprobe: Int): DataFrame = {
-    val (cents, cbs) = readModel(s, root)
-    val probed = probeCells(cents, q, nprobe)
-    val lut = Similarity.pqLuts(Seq((-1L, q)), cbs).head._2
-    codesDf(s, root)
-      .filter(col("cell_id").isin(probed: _*))
-      .withColumn("lut", typedLit(lut))
-      .withColumn("approx_dist", expr(Similarity.adcExpr))
-      .orderBy(col("approx_dist"), col("vec_id")).limit(5)
-      .select("vec_id", "approx_dist")
   }
 
   /** Build the full-corpus index (model = the shared `annIndex` train

@@ -49,9 +49,10 @@ import graft.sources.{Datasets, Tables}
   * [[frozenStats]] materializes the standing-query statistics from the
   * STORE — per-term df from `df.parquet`, corpus scalars from
   * `meta.parquet` — one O(query-vocab) driver collect at index-refresh
-  * time, identical in role (and in type: [[FrozenIndexStats]]) to the
-  * batch [[Retrieval.frozenStats]]. Batch serve and incremental serve
-  * score against one statistics snapshot.
+  * time, identical in type ([[FrozenIndexStats]]) and in value to a
+  * full recompute over the documents table (the reference BmStoreSpec
+  * compares it with). Batch serve and incremental serve score against
+  * one statistics snapshot.
   *
   * == Incremental growth ==
   *
@@ -96,8 +97,7 @@ object BmStore {
   /** Keyed by canonical dataset path AND the documents table's content
     * fingerprint (ADVICE r12): a dataset dir rewritten IN PLACE now maps
     * to a fresh store root naturally — across JVMs too — instead of
-    * serving stale postings/df/meta until a manual [[deleteStore]].
-    * Fingerprinting lists a handful of part files (microseconds), and
+    * serving stale postings/df/meta. Fingerprinting lists a handful of part files (microseconds), and
     * every caller goes through ensure*Built, so the probe runs once per
     * query invocation.
     */
@@ -107,16 +107,6 @@ object BmStore {
 
   private def fs(s: SparkSession, p: Path) =
     p.getFileSystem(s.sparkContext.hadoopConfiguration)
-
-  private[graft] def deleteStore(s: SparkSession, d: String): Unit =
-    Seq("full", "incr").foreach { v =>
-      val root = storeRoot(s, d, v)
-      val p = new Path(root)
-      fs(s, p).delete(p, true)
-      frozenCache.remove(root)
-      metaCache.remove(root)
-      planCache.removeKeys(_._1 == root)
-    }
 
   private def tokBucket(c: Column): Column =
     pmod(xxhash64(c), lit(NumBuckets.toLong)).cast("int")
@@ -251,8 +241,8 @@ object BmStore {
     * dynamic partition overwrite (replay rewrites exactly its own dirs).
     * df/meta are NOT touched — the frozen-statistics contract above.
     */
-  private[graft] def appendBatch(s: SparkSession, root: String,
-      docsBatch: DataFrame, batchId: Long): Unit = {
+  private[graft] def appendBatch(root: String, docsBatch: DataFrame,
+      batchId: Long): Unit = {
     val tf = tfRows(docsBatch).transform(Materialize.once)
     graft.sources.Writers.writeShards(
       tf.withColumn("tok_bucket", tokBucket(col("token")))
@@ -272,10 +262,10 @@ object BmStore {
     Materialize.drop(tf)
   }
 
-  /** One frozen-stats collect per store root per JVM — refreshed by
-    * [[deleteStore]] (a rebuilt store gets a new freeze; appends don't
-    * change frozen statistics BY CONTRACT, so the cache stays valid
-    * across growth).
+  /** One frozen-stats collect per store root per JVM. A rebuilt store
+    * has a new root (content-fingerprinted, [[storeRoot]]) and so a new
+    * freeze; appends don't change frozen statistics BY CONTRACT, so the
+    * cache stays valid across growth.
     */
   private val frozenCache = new graft.JvmCache[String, FrozenIndexStats]
 
@@ -296,9 +286,9 @@ object BmStore {
     * `meta.parquet`. The only documents access is the O(Q) IN-pushed
     * read of the 20 query docs' text (the AnnIndexIO
     * read-the-query-vectors idiom) — it happens HERE, at freeze time,
-    * never in a serving plan. df values equal the batch
-    * [[Retrieval.frozenStats]]'s by construction (both are distinct-doc
-    * counts over the same tf definition) — spec-asserted.
+    * never in a serving plan. df values equal a full recompute's by
+    * construction (both are distinct-doc counts over the same tf
+    * definition) — spec-asserted.
     */
   private[graft] def frozenStats(s: SparkSession, root: String, d: String): FrozenIndexStats =
     frozenCache.getOrBuild(root, "bm_frozen_stats") {
@@ -427,7 +417,8 @@ object BmStore {
   private[graft] val WandMaxEssRatio = 0.3
 
   /** wand-vs-docvec verdicts per (store root, standing-set fingerprint)
-    * (see [[WandMaxEssRatio]]); cleared per root by [[deleteStore]]. A
+    * (see [[WandMaxEssRatio]]); a rebuilt store is a new root, so its
+    * verdicts start fresh. A
     * caller that freezes a new standing set per call mints a new
     * fingerprint every time; the cache's bound evicts the least recently
     * used verdict, which costs at most one re-probe (bounded sample) or a
@@ -814,7 +805,7 @@ object BmStore {
           Tables.documents(s, d).filter(col("doc_id") % 10 =!= 0))
       val marker = new Path(root, "_DELTA_APPENDED")
       if (!f.exists(marker)) {
-        appendBatch(s, root,
+        appendBatch(root,
           Tables.documents(s, d).filter(col("doc_id") % 10 === 0), 0L)
         f.create(marker).close()
       }

@@ -32,8 +32,8 @@ private[operators] object ExactRound {
   import org.apache.spark.sql.Column
   import org.apache.spark.sql.functions.{call_function, lit}
 
-  /** Column form of [[spark4Int]]: `div` (IntegralDivide, the same
-    * operator the SQL form uses) over DECIMAL(38,0) operands.
+  /** round-half-up(num/den, 4) ×10⁴ as a BIGINT Column: `div`
+    * (IntegralDivide) over DECIMAL(38,0) operands.
     *
     * r20 (ADVICE r19): the previous form computed the quotient as
     * `(a − a mod b)/b` in IEEE doubles, exact only while
@@ -84,15 +84,9 @@ private[operators] object ExactRound {
   // 2.26e-3, pinned by TieProbeSpec. Revisit only if a constant changes
   // the domain (the spec freezes the enumeration's answer).
 
-  /** Spark SQL round-half-up(num/den, 4) as DOUBLE; num ≥ 0, den > 0. */
-  def spark4(num: String, den: String): String =
-    s"(${spark4Int(num, den)}) / cast(10000 as double)"
-
-  /** Spark SQL: the rounded value ×10⁴ as BIGINT — for exact filters. */
-  def spark4Int(num: String, den: String): String =
-    s"((20000 * cast(($num) as bigint) + cast(($den) as bigint)) div (2 * cast(($den) as bigint)))"
-
-  /** DuckDB twins of the above (`//` is integer floor division). */
+  /** DuckDB twins (`//` is integer floor division): the rounded value as
+    * DOUBLE, and ×10⁴ as BIGINT.
+    */
   def duck4(num: String, den: String): String =
     s"(${duck4Int(num, den)}) / 10000::DOUBLE"
 

@@ -43,11 +43,6 @@ object IncrementalStats {
   private def fs(s: SparkSession, p: Path) =
     p.getFileSystem(s.sparkContext.hadoopConfiguration)
 
-  private[graft] def deleteState(s: SparkSession, d: String): Unit = {
-    val p = new Path(stateRoot(d))
-    fs(s, p).delete(p, true)
-  }
-
   /** Per-lang algebraic partials of a documents frame — one
     * map-side-combined aggregation, O(|langs|) rows out.
     */
@@ -104,20 +99,6 @@ object IncrementalStats {
   private[graft] def readState(s: SparkSession, root: String): DataFrame = {
     graft.ColdBuilds.record("aggstate_load")
     Tables.parquet(s, new Path(root, "state.parquet").toString)
-  }
-
-  /** Advance the persisted state by one delta batch: one pass over the
-    * delta, one O(|langs|) merge, one atomic re-publish. The maintenance
-    * cycle a long-lived corpus runs per ingest batch.
-    */
-  private[graft] def advance(s: SparkSession, root: String,
-      delta: DataFrame): Unit = {
-    // materialize BEFORE the publish deletes the old state out from under
-    // the lazy plan (O(|langs|) rows — a driver-side copy is free)
-    val merged = mergePartials(readState(s, root), partials(delta))
-    val rows = merged.collect().toSeq
-    publish(s, root, s.createDataFrame(
-      s.sparkContext.parallelize(rows, 1), merged.schema))
   }
 
   /** Build (once per dataset, crash-safe) the base state over

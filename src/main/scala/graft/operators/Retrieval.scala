@@ -91,7 +91,7 @@ object Retrieval {
     * the stats passes whose only need is the length (r20; the token
     * stream itself still pays split once, for the generator).
     */
-  private def docLen(text: org.apache.spark.sql.Column) =
+  private[graft] def docLen(text: org.apache.spark.sql.Column) =
     (length(text) - length(replace(text, lit(" "), lit(""))) + 1).cast("long")
 
   /** Per-term document frequency of the standing queries' terms, plus
@@ -106,16 +106,11 @@ object Retrieval {
   final case class FrozenIndexStats(nDocs: Long, sumDl: Long,
       unionTerms: Seq[String], queries: Seq[QueryTerms])
 
-  /** Collect the frozen index statistics for the standing query set: the
-    * one O(query-vocab) driver materialization performed at
-    * index-refresh time. df here is the SAME df [[bmScored]] computes
-    * (distinct docs containing the token), so served scores are
-    * bit-identical to batch scores against the same corpus snapshot.
-    */
   /** The standing query set's (query_id, term) pairs, collected once per
     * dataset content version per JVM (r21). This is the SAME bounded
-    * O(query-vocab) driver materialization [[frozenStats]] performs —
-    * hoisted into a shared content-keyed cache so the batch scorer can
+    * O(query-vocab) driver materialization [[BmStore.frozenStats]]'s
+    * full-recompute reference performs — hoisted into a shared
+    * content-keyed cache so the batch scorer can
     * bind the vocabulary into a
     * [[graft.functions.StandingTf]] expression: per-doc term frequencies
     * then compute in ONE codegen loop per row, the occurrence-level
@@ -134,37 +129,9 @@ object Retrieval {
         .collect().map(r => (r.getLong(0), r.getString(1)))
     }
 
-  def frozenStats(s: SparkSession, d: String): FrozenIndexStats = {
-    val docs = Tables.documents(s, d)
-    val qtRows = standingQt(s, d)
-    val st = docs
-      .select(docLen(col("text")).as("dl"))
-      .agg(count(lit(1)).as("n_docs"), sum("dl").as("sum_dl"))
-      .head()
-    if (qtRows.isEmpty) return assembleFrozen(Array.empty, st.getLong(0), st.getLong(1))
-    // df via the frozen-vocab tf expression (r21): one codegen loop per
-    // doc replaces the occurrence explode + broadcast semi-join + double
-    // distinct; a term's df = #docs whose tf against the union vocabulary
-    // is positive — the identical count.
-    val union = qtRows.map(_._2).distinct.sorted.toSeq
-    val tfFn = graft.functions.GraftFunctions.registerStandingTf(s, union)
-    val dfByIdx = Materialize.spreadScan(docs)
-      .select(posexplode(expr(s"$tfFn(split(text, ' '))")))
-      .filter(col("col") > 0)
-      .groupBy("pos").agg(count(lit(1)).as("df"))
-      .collect().map(r => (r.getInt(0), r.getLong(1))).toMap
-    val idxOf = union.zipWithIndex.toMap
-    // a query term absent from every doc (df 0) never appeared in the old
-    // dfq inner join either — drop it the same way
-    val rows = qtRows.flatMap { case (qid, term) =>
-      dfByIdx.get(idxOf(term)).map(df => (qid, term, df))
-    }
-    assembleFrozen(rows, st.getLong(0), st.getLong(1))
-  }
-
   /** Assemble [[FrozenIndexStats]] from collected (query_id, term, df)
-    * rows — shared by the full-recompute [[frozenStats]] and the
-    * postings-store freeze ([[BmStore.frozenStats]]), so both construct
+    * rows — shared by the full-recompute freeze specs compare against and
+    * the postings-store freeze ([[BmStore.frozenStats]]), so both construct
     * the identical deduplicated-vocabulary layout.
     */
   private[graft] def assembleFrozen(rows: Array[(Long, String, Long)],
@@ -223,8 +190,8 @@ object Retrieval {
     // is gone outright (guide §2.4); what remains shuffles nothing until
     // the per-(query, doc) aggregate over candidate postings. dl rides
     // the same split (size(ws), unchanged since r20). The standing
-    // vocabulary is the SAME bounded driver materialization frozenStats
-    // collects, shared via [[standingQt]]'s content-keyed cache.
+    // vocabulary is the SAME bounded driver materialization the standing
+    // freeze collects, shared via [[standingQt]]'s content-keyed cache.
     val union = qtRows.map(_._2).distinct.sorted.toSeq
     val idxOf = union.zipWithIndex.toMap
     val tfFn = graft.functions.GraftFunctions.registerStandingTf(s, union)

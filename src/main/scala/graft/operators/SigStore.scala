@@ -46,13 +46,6 @@ object SigStore {
   private def fs(s: SparkSession, p: Path) =
     p.getFileSystem(s.sparkContext.hadoopConfiguration)
 
-  private[graft] def deleteStore(s: SparkSession, d: String): Unit = {
-    val p = new Path(storeRoot(d))
-    fs(s, p).delete(p, true)
-    val pa = new Path(storeRoot(d) + "_absorbed")
-    fs(s, pa).delete(pa, true)
-  }
-
   /** Banded (band_id, band_bits, doc_id, simhash) rows for a documents
     * frame — the store's row shape.
     */
@@ -90,8 +83,8 @@ object SigStore {
     * AnnIndexIO.appendBatch. [[absorbComponents]] appends the rows its
     * contraction already computed.
     */
-  private[graft] def appendSigRows(s: SparkSession, root: String,
-      sigRows: DataFrame, batchId: Long): Unit =
+  private[graft] def appendSigRows(root: String, sigRows: DataFrame,
+      batchId: Long): Unit =
     graft.sources.Writers.writeShards(
       sigRows.withColumn("batch_id", lit(batchId)),
       new Path(root, "sigs.parquet").toString,
@@ -449,7 +442,7 @@ object SigStore {
     */
   private def contractDeltaSh(s: SparkSession, root: String,
       deltaSh: DataFrame,
-      shStats: () => Option[(Long, Long)] = () => None): (DataFrame, DataFrame) = {
+      shStats: () => Option[(Long, Long)]): (DataFrame, DataFrame) = {
     val baseLabels = effectiveLabels(s, root)
     val store = Tables.parquet(s, s"$root/sigs.parquet")
       .select(col("doc_id").as("base_id"), col("simhash").as("bs"),
@@ -484,8 +477,7 @@ object SigStore {
       case None =>
         // measured stats ride the checkpoint pass when the caller
         // materialized via [[materializeShWithStats]] (r19 — zero-job
-        // routing); a miss (or a legacy caller) pays the explicit
-        // aggregate exactly as before
+        // routing); a miss pays the explicit aggregate
         val (n, nSig) = shStats().getOrElse {
           val row = deltaSh.agg(count(lit(1)),
             approx_count_distinct(col("simhash"))).head()
@@ -754,7 +746,7 @@ object SigStore {
     // recovery to the full refixpoint, never leave stale labels looking
     // authoritative over a store that already holds the delta's sigs
     f.delete(ready, false)
-    appendSigRows(s, root,
+    appendSigRows(root,
       Dedup.banded7(deltaSh)
         .select(col("band_id"), col("band_bits"), col("doc_id"), col("simhash")),
       batchId)

@@ -128,12 +128,12 @@ object Similarity {
   private def cacheKey(s: SparkSession, d: String): String =
     Datasets.key(s, d, "embeddings")
 
-  private def embCount(s: SparkSession, d: String): Long =
+  private[graft] def embCount(s: SparkSession, d: String): Long =
     embCounts.getOrBuild(cacheKey(s, d), "emb_count") {
       Tables.embeddings(s, d).select("vec_id").count()
     }
 
-  private def embDim(s: SparkSession, d: String): Int =
+  private[graft] def embDim(s: SparkSession, d: String): Int =
     embDims.getOrBuild(cacheKey(s, d), "emb_dim") {
       Tables.embeddings(s, d).select(size(col("embedding"))).head.getInt(0)
     }
@@ -289,7 +289,7 @@ object Similarity {
         .select("vec_id", "emb")
         .repartition(s.sparkContext.defaultParallelism)
         .transform(Materialize.once)
-      for (it <- 1 to KmeansIters) {
+      for (_ <- 1 to KmeansIters) {
         val fn = graft.functions.GraftFunctions.registerIvf(s, cents, 1)
         val sums = train
           .select(expr(s"element_at($fn(emb), 1)").as("cell"),
@@ -947,7 +947,7 @@ object Similarity {
       val cents = storedCentroids(s, d)
       // the stored assignedFrame path never touches withEmb, so the
       // session functions (dot_double below) must register here
-      // explicitly — same latent crash semanticPairs already guards:
+      // explicitly — same latent crash pairsFromAssigned already guards:
       // a warm trainer cache + a fresh SparkSession would otherwise
       // skip every registration site
       registerFns(s)
@@ -1361,7 +1361,7 @@ object Similarity {
     * writes rebuild: the _READY marker is created only after the parquet
     * commit.
     */
-  private def assignedFrame(s: SparkSession, d: String): DataFrame =
+  private[graft] def assignedFrame(s: SparkSession, d: String): DataFrame =
     synchronized {
       // EVERY store operation — marker check/create, write, rename,
       // delete, read — goes through the SAME Hadoop FileSystem resolved
@@ -1426,7 +1426,8 @@ object Similarity {
         f.create(ready).close()
       }
       // a BARE parquet scan (ADVICE r15, low): only dedup_semantic's
-      // self-join has two consumers — it materializes in semanticPairs;
+      // self-join has two consumers, and the pair-head build above
+      // materializes the frame before joining;
       // embedding_kmeans / embedding_prototypicality each consume the
       // frame once, and localCheckpointing the full (emb, nrm) payload
       // for a single narrow scan contradicts the store's whole point.
@@ -1444,21 +1445,12 @@ object Similarity {
         col("emb"), sqrt(expr("dot_double(emb, emb)")).as("nrm"))
   }
 
-  private[graft] def semanticPairs(s: SparkSession, d: String): DataFrame = {
-    // BOTH self-join sides consume the assignment pass: materialize it
-    // once HERE (the self-join caller), not inside assignedFrame — the
-    // single-consumer riders (kmeans, prototypicality) read the bare
-    // store scan (ADVICE r15)
-    val assigned = assignedFrame(s, d).transform(Materialize.once)
-    pairsFromAssigned(s, assigned, embCount(s, d), embDim(s, d))
-  }
-
   /** The intra-cluster pair join over an already-materialized (or
-    * store-scanned) assignment frame — shared by the in-plan
-    * [[semanticPairs]] and the build/self-upgrade paths of the persisted
-    * pair head, so the persisted rows come from the byte-identical plan.
+    * store-scanned) assignment frame — shared by the build/self-upgrade
+    * paths of the persisted pair head and the in-plan pair enumeration
+    * specs compare it with, so both come from the byte-identical plan.
     */
-  private def pairsFromAssigned(s: SparkSession, assigned: DataFrame,
+  private[graft] def pairsFromAssigned(s: SparkSession, assigned: DataFrame,
       nVec: Long, dims: Int): DataFrame = {
     // the stored assignedFrame path never touches withEmb, so the session
     // functions (dot_double below) must register here explicitly

@@ -80,7 +80,6 @@ object Winnow {
     */
   val DecontamGramLen = 32
   val DecontamWinSize = 9
-  val DecontamMinLen: Int = DecontamGramLen + DecontamWinSize - 1
 
   /** Any frame with (doc_id, text) → its winnowed fingerprint arrays
     * (doc_id, fps); docs below [[MinLen]] chars have no window and drop
@@ -158,7 +157,7 @@ object Winnow {
       // docs sharing ANY fingerprint with the eval set, at the
       // decontamination-grade [[DecontamGramLen]]/[[DecontamWinSize]]
       // parameters. Because winnowing guarantees a shared fingerprint
-      // for every common substring of >= DecontamMinLen chars, this
+      // for every common substring of >= GramLen + WinSize - 1 chars, this
       // catches CHARACTER-level contamination (reflowed punctuation,
       // glued tokens) that the word-shingle decontam_overlap can miss,
       // with a proven no-false-negative bound at 40-char spans. Same

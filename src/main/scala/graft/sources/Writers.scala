@@ -1,7 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Output side of the training-data pipeline: write a frame as a
@@ -223,44 +222,4 @@ object Writers {
       }
     }
   }
-
-  /** Batch JDBC sink — the reference ships flink-connector-jdbc +
-    * postgresql driver jars as a latent capability (DockerFile:17,
-    * custom_lib/; SURVEY.md §2 X2). Spark's built-in JDBC relation writes
-    * partition-parallel batched INSERTs; `numPartitions` caps the
-    * connection fan-in so a 1000-executor job doesn't open 1000
-    * connections against one database.
-    */
-  def writeJdbc(df: DataFrame, url: String, table: String,
-      properties: java.util.Properties = new java.util.Properties(),
-      mode: SaveMode = SaveMode.Append, numPartitions: Int = 8): Unit = {
-    // repartition, not coalesce: coalesce would collapse the whole
-    // upstream computation (joins, scoring) into ≤ numPartitions tasks,
-    // trading all upstream parallelism for one saved shuffle. One shuffle
-    // of the final rows is the right price for a bounded connection fan-in.
-    // Unconditional: inspecting df.rdd.getNumPartitions to skip the shuffle
-    // would itself materialize every upstream stage under AQE, and the
-    // write re-executes them (no exchange reuse across actions) — upstream
-    // would run twice per call, including per micro-batch via streamToJdbc.
-    df.repartition(numPartitions).write
-      .mode(mode)
-      .jdbc(url, table, properties)
-  }
-
-  /** Streaming JDBC sink via foreachBatch (Structured Streaming has no
-    * first-party jdbc format) — per micro-batch, one partition-parallel
-    * batched append; at-least-once like the reference's Flink JDBC sink in
-    * non-XA mode.
-    */
-  def streamToJdbc(ds: Dataset[_], url: String, table: String,
-      checkpointDir: String,
-      properties: java.util.Properties = new java.util.Properties(),
-      numPartitions: Int = 8): StreamingQuery =
-    ds.toDF().writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        writeJdbc(batch, url, table, properties, SaveMode.Append, numPartitions)
-      }
-      .start()
 }

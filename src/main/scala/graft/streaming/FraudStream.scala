@@ -298,19 +298,4 @@ object FraudStream {
     scored.toDF().select(to_json(struct(
       col("card_id"), col("score"), col("reasons").as("rules_triggered"),
       col("event_time"))).as("value"))
-
-  /** Kafka sink in the producer's wire format (K3): key = card_id, value =
-    * result JSON, headers event_type/schema_version.
-    */
-  def toKafkaFrame(scored: Dataset[ScoredEvent]): DataFrame =
-    scored.toDF().select(
-      col("card_id").as("key"),
-      to_json(struct(col("event_id"), col("card_id"), col("amount"),
-        col("location"), col("ip_address"), col("score"), col("status"),
-        col("severity"), col("event_time"))).as("value"),
-      array(
-        struct(lit("event_type").as("key"), col("status").cast("binary").as("value")),
-        struct(lit("schema_version").as("key"), lit("1.0").cast("binary").as("value"))
-      ).as("headers")
-    )
 }

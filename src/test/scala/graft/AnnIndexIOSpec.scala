@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -8,8 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.AnnIndexIO
 
 /** Persisted IVF×PQ index: build-once / serve-many correctness, the
-  * zero-corpus-pass serving plan, static partition pruning on the
-  * cell-partitioned code table, and idempotent incremental append.
+  * zero-corpus-pass serving plan, and idempotent incremental append.
   */
 class AnnIndexIOSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -19,8 +17,7 @@ class AnnIndexIOSpec extends AnyFunSuite {
     (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))
 
   test("served top-k from the on-disk index equals the in-memory ivfpq pipeline") {
-    AnnIndexIO.deleteIndex(spark, sf)
-    JvmCache.clearAll()
+    StoreFixtures.deleteAnnIndex(spark, sf)
     val expect = SparkEntry.queries("ann_ivfpq_topk")(spark, sf).collect().map(key).toSet
     // simulate a fresh serving JVM: in-memory train cache gone, index on disk
     JvmCache.clearAll()
@@ -46,40 +43,8 @@ class AnnIndexIOSpec extends AnyFunSuite {
     assert(embBlocks.forall(_.contains("In(vec_id")), plan)
   }
 
-  test("single-query routing statically prunes the code table to nprobe cells") {
-    val root = AnnIndexIO.ensureFullBuilt(spark, sf)
-    val q = spark.read.parquet(s"$sf/embeddings.parquet")
-      .filter(col("vec_id") === 0L)
-      .select(col("embedding").cast("array<double>").as("emb"))
-      .head().getSeq[Double](0).toArray
-    val routed = AnnIndexIO.routeOne(spark, root, q, 2)
-    val rows = routed.collect()
-    assert(rows.length == 5)
-    val scan = routed.queryExecution.executedPlan.collectFirst {
-      case sc: FileSourceScanExec
-        if sc.relation.location.rootPaths.exists(_.toString.contains("codes.parquet")) => sc
-    }.get
-    // 8 cells on disk; the literal IN filter leaves exactly 2 partitions
-    val partitions = scan.relation.location.listFiles(
-      scan.partitionFilters, scan.dataFilters)
-    assert(partitions.length == 2,
-      s"expected nprobe=2 pruned partitions, got ${partitions.length}")
-    // routed results really live in the probed cells
-    val (cents, _) = AnnIndexIO.readModel(spark, root)
-    def cos(a: Array[Double], b: Array[Double]): Double = {
-      var d = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < a.length) { d += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
-      d / (math.sqrt(na) * math.sqrt(nb))
-    }
-    val probed = cents.indices.sortBy(i => (-cos(q, cents(i)), -i)).take(2).toSet
-    val cellOf = spark.read.parquet(s"$root/codes.parquet")
-      .select("vec_id", "cell_id").collect()
-      .map(r => r.getLong(0) -> r.getInt(1)).toMap
-    assert(rows.forall(r => probed.contains(cellOf(r.getLong(0)))))
-  }
-
   test("incremental append is idempotent and leaves base codes untouched") {
-    AnnIndexIO.deleteIndex(spark, sf)
+    StoreFixtures.deleteAnnIndex(spark, sf)
     val root = AnnIndexIO.ensureIncrBuilt(spark, sf)
     val fsys = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -140,7 +105,7 @@ class AnnIndexIOSpec extends AnyFunSuite {
   test("stream-maintained index equals the batch incremental build") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    AnnIndexIO.deleteIndex(spark, sf)
+    StoreFixtures.deleteAnnIndex(spark, sf)
     // batch reference: base build + delta appended in one batch
     val incrRoot = AnnIndexIO.ensureIncrBuilt(spark, sf)
     val expect = AnnIndexIO.serveAll(spark, sf, incrRoot).collect().map(key).toSet

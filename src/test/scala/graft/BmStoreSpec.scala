@@ -78,7 +78,7 @@ class BmStoreSpec extends AnyFunSuite {
     assume(TestSpark.fixturesPresent, TestSpark.fixturesHint)
     val root = BmStore.ensureFullBuilt(spark, sf)
     val fromStore = BmStore.frozenStats(spark, root, sf)
-    val recompute = Retrieval.frozenStats(spark, sf)
+    val recompute = StoreFixtures.frozenStats(spark, sf)
     assert(fromStore.nDocs === recompute.nDocs)
     assert(fromStore.sumDl === recompute.sumDl)
     assert(fromStore.unionTerms === recompute.unionTerms)
@@ -109,14 +109,14 @@ class BmStoreSpec extends AnyFunSuite {
     val base = listing()
     assert(base.nonEmpty && base.forall(_._1.contains("batch_id=-1")))
     val delta = docs.filter(col("doc_id") % 10 === 0)
-    BmStore.appendBatch(spark, root, delta, 7L)
+    BmStore.appendBatch(root, delta, 7L)
     val grown = listing()
     // base generation byte-identical; new files all under batch_id=7
     assert(grown.filter(_._1.contains("batch_id=-1")) === base)
     assert(grown.exists(_._1.contains("batch_id=7")))
     // replaying the same batch rewrites exactly its own dirs -> the same
     // (directory, size) SET (part files re-land under fresh UUID names)
-    BmStore.appendBatch(spark, root, delta, 7L)
+    BmStore.appendBatch(root, delta, 7L)
     val replayed = listing()
     def dirSizes(l: Seq[(String, Long, Long)]) =
       l.map(t => (t._1.substring(0, t._1.lastIndexOf('/')), t._2)).sorted
@@ -325,7 +325,6 @@ class BmStoreSpec extends AnyFunSuite {
 
   test("flat-vocab wide class verdicts docvec JOB-FREE; a mixed batch rides one forward-index pass") {
     assume(TestSpark.fixturesPresent, TestSpark.fixturesHint)
-    import spark.implicits._
     // the driver-side minEssentialRatio bound: on a flat vocabulary no
     // θ can prune the essential volume below the WAND gate, so the
     // verdict must cost ZERO θ-probe jobs — the probe used to cost

@@ -23,6 +23,12 @@ class ExactRoundSpec extends AnyFunSuite {
   private def refInt(num: BigInt, den: BigInt, pow10: Long): BigInt =
     (2 * pow10 * num + den) / (2 * den)
 
+  /** The Spark SQL BIGINT twin of `round4Int` (the shape the DuckDB
+    * `duck4Int` has): round-half-up(num/den, 4) ×10⁴.
+    */
+  private def spark4Int(num: String, den: String): String =
+    s"((20000 * cast(($num) as bigint) + cast(($den) as bigint)) div (2 * cast(($den) as bigint)))"
+
   test("round4Int matches BigInt half-up past 2^53 (the old double-division envelope)") {
     // num ~ 2e7 quantized log-units per token: the ADVICE counterexample
     // region is n_tokens ≈ 20k–30k, i.e. a = 20000*num + den in
@@ -67,7 +73,7 @@ class ExactRoundSpec extends AnyFunSuite {
       col("num"), col("den"),
       ExactRound.round4Int(col("num"), col("den")).as("col_q4"),
       org.apache.spark.sql.functions
-        .expr(ExactRound.spark4Int("num", "den")).as("sql_q4"),
+        .expr(spark4Int("num", "den")).as("sql_q4"),
       ExactRound.round6(col("num"), col("den")).as("col_r6"))
     both.collect().foreach { r =>
       val (n, d) = (r.getLong(0), r.getLong(1))

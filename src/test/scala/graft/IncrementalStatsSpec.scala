@@ -5,9 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.IncrementalStats
 
-/** The incremental-view-maintenance contract: advancing persisted partials
-  * batch-by-batch converges to the one-pass recompute, the serving plan
-  * never re-aggregates the base corpus, and a torn state publish recovers.
+/** The incremental-view-maintenance contract: merging partials batch by
+  * batch equals the one-pass recompute, the serving plan never
+  * re-aggregates the base corpus, and a torn state publish recovers.
   */
 class IncrementalStatsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -20,8 +20,7 @@ class IncrementalStatsSpec extends AnyFunSuite {
   private def finalized(df: org.apache.spark.sql.DataFrame): Set[String] =
     IncrementalStats.finalizeStats(df).collect().map(_.toString).toSet
 
-  test("advance(delta) twice == one-pass partials over the union") {
-    val root = java.nio.file.Files.createTempDirectory("aggstate").toString + "/s"
+  test("mergePartials, either order, == one-pass partials over the union") {
     val base = docs(
       (1L, "the quick brown fox jumps over the lazy dog today", "en", "s1", 49L),
       (2L, "ein kleiner text mit ein paar worten drin heute", "de", "s1", 47L))
@@ -30,24 +29,22 @@ class IncrementalStatsSpec extends AnyFunSuite {
     val d2 = docs(
       (4L, "yet another english text that arrives much later on", "en", "s3", 51L),
       (5L, "noch ein deutscher text der viel spaeter ankommt hier", "de", "s3", 53L))
-
-    IncrementalStats.publish(spark, root, IncrementalStats.partials(base))
-    IncrementalStats.advance(spark, root, d1)
-    IncrementalStats.advance(spark, root, d2)
-
-    val incremental = finalized(IncrementalStats.readState(spark, root))
+    val Seq(pb, p1, p2) = Seq(base, d1, d2).map(IncrementalStats.partials)
     val onePass = finalized(IncrementalStats.partials(
       base.unionByName(d1).unionByName(d2)))
-    assert(incremental == onePass)
-    // extrema and counts really folded across batches
-    val en = IncrementalStats.readState(spark, root)
-      .filter(col("lang") === "en").head()
-    assert(en.getAs[Long]("n_docs") == 3L)
-    assert(en.getAs[Long]("min_chars") == 49L && en.getAs[Long]("max_chars") == 51L)
+    import IncrementalStats.mergePartials
+    for (merged <- Seq(mergePartials(mergePartials(pb, p1), p2),
+        mergePartials(p2, mergePartials(p1, pb)))) {
+      assert(finalized(merged) == onePass)
+      // extrema and counts really folded across batches
+      val en = merged.filter(col("lang") === "en").head()
+      assert(en.getAs[Long]("n_docs") == 3L)
+      assert(en.getAs[Long]("min_chars") == 49L && en.getAs[Long]("max_chars") == 51L)
+    }
   }
 
   test("serving plan reads state + delta only — exactly one documents scan") {
-    IncrementalStats.deleteState(spark, sf)
+    StoreFixtures.deleteIncrementalState(spark, sf)
     IncrementalStats.ensureBuilt(spark, sf)
     val plan = IncrementalStats.serveIncremental(spark, sf)
       .queryExecution.executedPlan.toString
@@ -58,7 +55,7 @@ class IncrementalStatsSpec extends AnyFunSuite {
   }
 
   test("incremental mixture serves from state + delta — exactly one documents scan") {
-    IncrementalStats.deleteState(spark, sf)
+    StoreFixtures.deleteIncrementalState(spark, sf)
     IncrementalStats.ensureBuilt(spark, sf)
     val df = IncrementalStats.queries("corpus_mixture_incremental")(spark, sf)
     val plan = df.queryExecution.executedPlan.toString
@@ -72,7 +69,7 @@ class IncrementalStatsSpec extends AnyFunSuite {
 
   test("a torn publish (no _STATE_READY) is rebuilt, not served") {
     val root = IncrementalStats.stateRoot(sf)
-    IncrementalStats.deleteState(spark, sf)
+    StoreFixtures.deleteIncrementalState(spark, sf)
     // torn state: dir exists, marker missing
     new java.io.File(root).mkdirs()
     IncrementalStats.ensureBuilt(spark, sf)

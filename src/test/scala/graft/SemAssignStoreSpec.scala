@@ -25,7 +25,7 @@ class SemAssignStoreSpec extends AnyFunSuite {
     */
   private def composedHead(): Seq[String] = {
     import org.apache.spark.sql.functions.col
-    Similarity.topPairsHead(Similarity.semanticPairs(spark, sf))
+    Similarity.topPairsHead(StoreFixtures.semanticPairs(spark, sf))
       .withColumn("is_dup", col("cosine") >= Similarity.SemanticDupThreshold)
       .select("cluster_id", "rank", "id1", "id2", "cosine", "is_dup")
       .collect().map(_.toString).sorted.toSeq

@@ -20,7 +20,7 @@ class SigStoreSpec extends AnyFunSuite {
   }
 
   test("stored incremental == recomputed incremental; store reused, not rebuilt") {
-    SigStore.deleteStore(spark, sf)
+    StoreFixtures.deleteSigStore(spark, sf)
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getBoolean(3))).toSet
 
@@ -37,7 +37,7 @@ class SigStoreSpec extends AnyFunSuite {
   }
 
   test("incremental components == one-shot components; base labels untouched by absorb") {
-    SigStore.deleteStore(spark, sf)
+    StoreFixtures.deleteSigStore(spark, sf)
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3))).toSet
 
@@ -71,7 +71,7 @@ class SigStoreSpec extends AnyFunSuite {
     docs.map { case (id, t) => (id, t, "en", "crawl", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    SigStore.deleteStore(spark, dir)
+    StoreFixtures.deleteSigStore(spark, dir)
 
     def run(legacy: Boolean): (Set[(Long, Long, Long, Boolean)], Long) = {
       // pin the arm explicitly (r18: unset now routes on the measured
@@ -80,7 +80,7 @@ class SigStoreSpec extends AnyFunSuite {
       sys.props("graft.banded.probe") = "volume"
       graft.PlanVolume.reset()
       try {
-        SigStore.deleteStore(spark, dir) // fresh store per arm: same work
+        StoreFixtures.deleteSigStore(spark, dir) // fresh store per arm: same work
         val out = SigStore.queries("dedup_components_incremental")(spark, dir)
           .collect()
           .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
@@ -127,7 +127,7 @@ class SigStoreSpec extends AnyFunSuite {
       sys.props("graft.banded.probe") = "volume"
       graft.PlanVolume.reset()
       try {
-        SigStore.deleteStore(spark, dir)
+        StoreFixtures.deleteSigStore(spark, dir)
         val out = SigStore.queries("dedup_components_incremental")(spark, dir)
           .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
         (out, graft.PlanVolume.records("cc.sigdedup.route"))
@@ -168,7 +168,7 @@ class SigStoreSpec extends AnyFunSuite {
       (20L, tI2, "en", "crawl", tI2.length.toLong))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    SigStore.deleteStore(spark, dir)
+    StoreFixtures.deleteSigStore(spark, dir)
 
     val got = SigStore.queries("dedup_components_incremental")(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
@@ -257,7 +257,7 @@ class SigStoreSpec extends AnyFunSuite {
     SigStore.buildLabels(spark, root)
     // simulate the torn absorb of batch 0 = {10 -> t1 (dup of 1)}: sigs
     // appended, marker down, NO patch/remap written
-    StoreFixtures.appendSigBatch(spark, root, docsOf(10L -> t1), 0L)
+    StoreFixtures.appendSigBatch(root, docsOf(10L -> t1), 0L)
     assert(new java.io.File(s"$root/_LABELS_READY").delete())
     // the streaming replay
     SigStore.absorbComponents(spark, root, docsOf(10L -> t1), batchId = 0L)
@@ -271,7 +271,7 @@ class SigStoreSpec extends AnyFunSuite {
   }
 
   test("dedup_components_stored warm serve reads persisted labels only") {
-    SigStore.deleteStore(spark, sf)
+    StoreFixtures.deleteSigStore(spark, sf)
     // first call builds base + absorbs the delta split; the second call's
     // plan must be a pure label-state read — no document scan, no sigs
     assert(SigStore.queries("dedup_components_stored")(spark, sf).count() > 0)

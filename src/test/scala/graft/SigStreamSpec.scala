@@ -26,7 +26,7 @@ class SigStreamSpec extends AnyFunSuite {
       components: Boolean = false): StreamingQuery =
     StreamDrive.foreachBatch(docs, Some(checkpointDir), trigger) { (batch, batchId) =>
       if (components) SigStore.absorbComponents(spark, root, batch.toDF(), batchId)
-      else StoreFixtures.appendSigBatch(spark, root, batch.toDF(), batchId)
+      else StoreFixtures.appendSigBatch(root, batch.toDF(), batchId)
     }
 
   // deterministic doc text: dup pairs share a body, novel docs are unique

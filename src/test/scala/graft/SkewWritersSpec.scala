@@ -8,8 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.{Tables, Writers}
 
 /** AQE splits a skewed join partition; the shard writer produces a
-  * prunable hive layout; an add-only schema evolution merges on read; the
-  * jdbc sinks round-trip.
+  * prunable hive layout; an add-only schema evolution merges on read.
   */
 class SkewWritersSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -101,46 +100,5 @@ class SkewWritersSpec extends AnyFunSuite {
     intercept[Throwable] {
       evolved().collect()
     }
-  }
-
-  // The reference ships flink-connector-jdbc + postgresql jars (latent,
-  // never wired). No DB server exists in this environment, so the spec
-  // drives the sink against embedded Derby (on Spark's own classpath).
-  private val jdbcUrl = "jdbc:derby:memory:graftjdbc;create=true"
-  private def jdbcProps = {
-    val p = new java.util.Properties()
-    p.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")
-    p
-  }
-
-  test("jdbc sink: batch write + read-back round trip (embedded Derby)") {
-    val scored = graft.operators.FraudRules
-      .scoreTransactions(graft.gen.TxGen.dataset(spark, 300).toDF())
-      .select(col("event_id"), col("card_id"), col("amount"), col("score"))
-    Writers.writeJdbc(scored, jdbcUrl, "scored_batch", jdbcProps,
-      numPartitions = 2)
-    val back = spark.read.jdbc(jdbcUrl, "scored_batch", jdbcProps)
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getString(0), r.getString(1),
-        r.getDouble(2), r.getInt(3))).toSet
-    assert(canon(back) == canon(scored) && back.count() == 300)
-  }
-
-  test("jdbc sink: streaming foreachBatch append (embedded Derby)") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.Trigger
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val in = MemoryStream[(String, Double)]
-    in.addData(("e1", 10.0), ("e2", 250.0), ("e3", 42.5))
-    val ckpt = Files.createTempDirectory("jdbc_ckpt").toString
-    val q = Writers.streamToJdbc(
-      in.toDS().toDF("event_id", "amount"),
-      jdbcUrl, "scored_stream", ckpt, jdbcProps, numPartitions = 1)
-    q.processAllAvailable()
-    q.stop()
-    val back = spark.read.jdbc(jdbcUrl, "scored_stream", jdbcProps)
-    assert(back.collect().map(r => (r.getString(0), r.getDouble(1))).toSet ==
-      Set(("e1", 10.0), ("e2", 250.0), ("e3", 42.5)))
   }
 }

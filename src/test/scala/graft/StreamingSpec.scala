@@ -105,18 +105,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(diffs.isEmpty, s"first diffs: ${diffs.take(5)}")
   }
 
-  test("kafka sink frame carries key/value/headers wire format") {
-    import spark.implicits._
-    val scored = FraudStream.score(
-      spark.createDataset(Seq(tx("c1", "2024-01-01T00:00:00Z", 250, "NY", "a"))),
-      FraudConstants.RapidTxCountV1)
-    val row = FraudStream.toKafkaFrame(scored).collect().head
-    assert(row.getAs[String]("key") == "c1")
-    assert(row.getAs[String]("value").contains("\"status\":\"FRAUD\""))
-    assert(row.getSeq[org.apache.spark.sql.Row](row.fieldIndex("headers"))
-      .map(_.getString(0)).toSeq == Seq("event_type", "schema_version"))
-  }
-
   test("malformed JSON routes to the dead-letter frame, valid rows parse") {
     import spark.implicits._
     val valid =

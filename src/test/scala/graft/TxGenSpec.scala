@@ -1,9 +1,11 @@
 package graft
 
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.gen.TxGen
 import graft.model.GenDims
+import graft.streaming.{FraudStream, Main}
 
 /** Generator semantics (producer/transaction-kafka-producer.py:52-100):
   * determinism, per-card monotonic time, fraud-type shaping, dims.
@@ -46,16 +48,6 @@ class TxGenSpec extends AnyFunSuite {
     }
   }
 
-  test("distributed generator preserves per-card monotonicity") {
-    val ds = TxGen.distributed(TestSpark.spark, perCard = 200)
-    val rows = ds.collect()
-    assert(rows.length == 8 * 200)
-    rows.groupBy(_.card_id).foreach { case (_, ts) =>
-      val millis = ts.map(t => parseMillis(t.timestamp))
-      assert(millis.sorted.sameElements(millis))
-    }
-  }
-
   test("tick generator is deterministic and shaped; rate stream produces rows") {
     val now = java.time.Instant.parse("2024-06-01T12:00:00Z")
     val a = (0L until 2000L).map(TxGen.fromTick(now, _))
@@ -65,8 +57,10 @@ class TxGenSpec extends AnyFunSuite {
     assert(byType.keySet == Set("NORMAL", "CARD_TESTING", "VELOCITY", "IMPOSSIBLE_TRAVEL"))
     a.filter(_.event_type == "CARD_TESTING").foreach(t => assert(t.amount >= 1 && t.amount <= 5))
 
+    // the path `--source synthetic` runs: the kafka-shaped rate stream,
+    // parsed back the way a broker's records are
     val spark = TestSpark.spark
-    val q = TxGen.stream(spark, rowsPerSecond = 100)
+    val q = FraudStream.parse(Main.kafkaShapedSynthetic(spark, rowsPerSecond = 100))
       .writeStream.format("memory").queryName("txgen_stream")
       .option("checkpointLocation",
         java.nio.file.Files.createTempDirectory("txgen").toString)
@@ -79,61 +73,11 @@ class TxGenSpec extends AnyFunSuite {
         n = spark.table("txgen_stream").count()
       }
       assert(n > 0, "rate stream produced no rows in 30 s")
+      val fields = FraudStream.txSchema.fieldNames
+      assert(fields.length == 13)
+      val rows = spark.table("txgen_stream").select(fields.map(col).toSeq: _*).collect()
+      assert(rows.forall(r => fields.indices.forall(!r.isNullAt(_))),
+        s"a field parsed null: ${rows.find(r => fields.indices.exists(r.isNullAt))}")
     } finally q.stop()
-  }
-
-  test("stateful stream generator: monotonic per-card time, shaped travel, fraud mix") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.Trigger
-    val spark = TestSpark.spark
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val wall = java.time.Instant.parse("2024-06-01T12:00:00Z")
-    val in = MemoryStream[TxGen.Tick]
-    in.addData((0L until 4000L).map(TxGen.routeTick(wall, _)))
-    val q = TxGen.statefulShape(in.toDS())
-      .writeStream.format("memory").queryName("txgen_stateful")
-      .outputMode("append").trigger(Trigger.Once())
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("txgen_sf").toString)
-      .start()
-    q.awaitTermination()
-    val rows = spark.table("txgen_stateful").as[graft.model.Transaction].collect()
-    assert(rows.length == 4000)
-
-    // G1a in stream mode: strictly monotonic per-card event time
-    rows.groupBy(_.card_id).foreach { case (_, ts) =>
-      val millis = ts.map(t => parseMillis(t.timestamp)).sorted
-      assert(millis.distinct.size == millis.size)
-    }
-
-    // G1b in stream mode: IMPOSSIBLE_TRAVEL events are +90 s at a forced
-    // different location (producer:70-77), so the travel rule really fires
-    val byCard = rows.groupBy(_.card_id).view.mapValues(
-      _.sortBy(t => parseMillis(t.timestamp)))
-    var shaped = 0
-    byCard.foreach { case (_, ts) =>
-      ts.toSeq.sliding(2).foreach {
-        case Seq(prev, cur) if cur.event_type == "IMPOSSIBLE_TRAVEL" =>
-          assert(cur.location != prev.location)
-          assert(parseMillis(cur.timestamp) -
-            parseMillis(prev.timestamp) == 90000L)
-          shaped += 1
-        case _ => ()
-      }
-    }
-    assert(shaped > 20, s"expected a meaningful shaped-travel population, got $shaped")
-
-    // end-to-end: the batch rule engine detects travel on the shaped corpus
-    val scored = graft.operators.FraudRules.scoreTransactions(rows.toSeq.toDF())
-      .filter(org.apache.spark.sql.functions.col("reasons")
-        .contains("IMPOSSIBLE_TRAVEL"))
-    assert(scored.count() >= shaped,
-      "every shaped travel event must trigger the travel rule")
-
-    // fraud mix still approximates 80/8/6/6
-    val byType = rows.groupBy(_.event_type).view.mapValues(_.size).toMap
-    assert(byType("NORMAL").toDouble / rows.length > 0.7)
-    assert(byType.keySet == Set("NORMAL", "CARD_TESTING", "VELOCITY", "IMPOSSIBLE_TRAVEL"))
   }
 }

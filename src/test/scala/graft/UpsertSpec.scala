@@ -4,7 +4,6 @@ import java.io.File
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SaveMode
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.Writers

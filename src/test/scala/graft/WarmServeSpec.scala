@@ -63,8 +63,9 @@ class WarmServeSpec extends AnyFunSuite {
       "my_plainly_named_query" -> plainStoreQuery,
       "my_anchor_query" -> perJvmAnchor,
       "my_pure_query" -> servedLike)
-    val sweepA = WarmServe.buildTagsByQuery(spark, "unused", qs)
-    val sweepB = WarmServe.buildTagsByQuery(spark, "unused", qs) // "fresh JVM": marker persists
+    val sweepA = WarmServe.buildTagsByQuery(WarmServe.rawTagsByQuery(spark, "unused", qs))
+    // "fresh JVM": marker persists
+    val sweepB = WarmServe.buildTagsByQuery(WarmServe.rawTagsByQuery(spark, "unused", qs))
     val persisted = WarmServe.persistedBuilders(sweepA, sweepB)
     assert(persisted == Seq("my_plainly_named_query"),
       s"derivation must flag exactly the persisted builder, got $persisted")

@@ -3,8 +3,6 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model.{FraudConstants, Transaction}
