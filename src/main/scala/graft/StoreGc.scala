@@ -50,15 +50,15 @@ object StoreGc {
     */
   private[graft] def liveNames(s: SparkSession, d: String): Map[String, Set[String]] = Map(
     "graft_sigstore" -> {
-      val k = base(graft.operators.SigStore.storeRoot(d))
+      val k = base(graft.operators.SigStore.storeRoot(s, d))
       Set(k, k + "_absorbed")
     },
     "graft_aggstate" ->
-      Set(base(graft.operators.IncrementalStats.stateRoot(d))),
+      Set(base(graft.operators.IncrementalStats.stateRoot(s, d))),
     "graft_bmstore" -> Set("full", "incr")
       .map(v => base(graft.operators.BmStore.storeRoot(s, d, v))),
     "graft_ann_index" -> Set("full", "incr", "stream")
-      .map(v => base(graft.operators.AnnIndexIO.indexRoot(d, v))),
+      .map(v => base(graft.operators.AnnIndexIO.indexRoot(s, d, v))),
     "graft_semassign" ->
       Set(graft.operators.Similarity.semStoreKey(s, d)))
 

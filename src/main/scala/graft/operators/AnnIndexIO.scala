@@ -58,12 +58,11 @@ object AnnIndexIO {
   private val FormatVersion = 2
 
   /** Index roots live under java.io.tmpdir keyed by (canonical dataset
-    * dir, variant): stable across invocations, disposable. A dataset dir
-    * whose CONTENT is rewritten in place (temp-dir specs) must have its
-    * roots deleted first.
+    * dir, embeddings fingerprint, variant): stable across invocations,
+    * disposable, and unbuilt again once the embeddings are rewritten.
     */
-  private[graft] def indexRoot(d: String, variant: String): String =
-    Datasets.storeRoot("graft_ann_index", variant, d, FormatVersion)
+  private[graft] def indexRoot(s: SparkSession, d: String, variant: String): String =
+    Datasets.storeRoot(s, "graft_ann_index", variant, d, FormatVersion, Seq("embeddings"))
 
   private def fs(s: SparkSession, p: Path) =
     p.getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -215,7 +214,7 @@ object AnnIndexIO {
     */
   private[graft] def ensureFullBuilt(s: SparkSession, d: String): String =
     synchronized {
-      val root = indexRoot(d, "full")
+      val root = indexRoot(s, d, "full")
       val f = fs(s, new Path(root))
       if (!f.exists(new Path(root))) {
         graft.ColdBuilds.record("ann_store_build")
@@ -231,7 +230,7 @@ object AnnIndexIO {
     */
   private[graft] def ensureBaseBuilt(s: SparkSession, d: String,
       variant: String): String = synchronized {
-    val root = indexRoot(d, variant)
+    val root = indexRoot(s, d, variant)
     val f = fs(s, new Path(root))
     if (!f.exists(new Path(root))) {
       val base = Similarity.withEmb(s, d)

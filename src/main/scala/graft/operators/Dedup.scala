@@ -301,34 +301,10 @@ object Dedup {
     * The cap SCALES DOWN with the actual heap (ADVICE r8: a 1 GB driver
     * would OOM collecting 3 M edges where the distributed fixpoint kept
     * only scalars): a third of `Runtime.maxMemory` at ~350 B/edge, never
-    * above 3 M. `GRAFT_CC_DRIVER_MAX_EDGES` overrides for tuning (0
-    * forces the distributed path).
+    * above 3 M.
     */
-  /** The raw env override, exposed so [[SigStore]]'s small-graph gate can
-    * honor an operator-set bound (any value, not just the 0
-    * force-distributed sentinel) while sizing its default from its own
-    * footprint (self-review r10).
-    */
-  private[graft] val CcDriverMaxEdgesEnv: Option[Long] =
-    sys.env.get("GRAFT_CC_DRIVER_MAX_EDGES")
-      // Tolerate a malformed override: this runs in object init, so a bare
-      // .toLong would surface as an opaque ExceptionInInitializerError on
-      // ANY Dedup use, far from the env var that caused it. Warn rather
-      // than swallow (self-review r10): an operator who typo'd the cap
-      // they set to BOUND a driver collect must not silently get the
-      // unbounded-feeling default back.
-      .flatMap { v =>
-        val parsed = scala.util.Try(v.toLong).toOption
-        if (parsed.isEmpty)
-          System.err.println(
-            s"[graft] ignoring malformed GRAFT_CC_DRIVER_MAX_EDGES='$v' (not a long); using heap-scaled default")
-        parsed
-      }
-
   private[graft] val CcDriverMaxEdges: Long =
-    CcDriverMaxEdgesEnv.getOrElse {
-      math.min(3000000L, Runtime.getRuntime.maxMemory / 3 / 350)
-    }
+    math.min(3000000L, Runtime.getRuntime.maxMemory / 3 / 350)
 
   /** Minimum measured collapse factor (docs per distinct 48-bit simhash)
     * at which the signature-contraction rep arm routes ON (r18, VERDICT
@@ -358,6 +334,33 @@ object Dedup {
     */
   private[graft] val CcSigDedupMinCollapse = 1.1
 
+  /** The contraction router, shared by the one-shot `dedup_components` and
+    * the maintain path ([[SigStore]]): `arm` "rep" or "all" pins that arm
+    * without measuring; "route" evaluates `measure` — (docs, distinct
+    * signature estimate) — and takes the rep arm when the collapse factor
+    * reaches [[CcSigDedupMinCollapse]]. An empty input (no signatures)
+    * takes the all-docs arm. Returns the decision (true = rep arm) and
+    * what was measured, if anything.
+    */
+  private[graft] def contractionArm(arm: String, measure: => (Long, Long))
+      : (Boolean, Option[(Long, Long)]) = arm match {
+    case "rep" => (true, None)
+    case "all" => (false, None)
+    case "route" =>
+      val (n, nSig) = measure
+      (nSig > 0 && n.toDouble / nSig >= CcSigDedupMinCollapse, Some((n, nSig)))
+    case other =>
+      throw new IllegalArgumentException(s"arm must be route, rep or all: $other")
+  }
+
+  /** What one contraction-routed components run did: the arm that ran
+    * ("rep" or "all"), the (docs, distinct signatures) the router measured
+    * (None when the arm was pinned), and the edge count fed to connected
+    * components — strictly smaller on the rep arm of a dup-heavy input.
+    */
+  private[graft] final case class ContractionRun(arm: String,
+      measured: Option[(Long, Long)], ccEdges: Long)
+
   /** Frontier size below which the per-round pointer-jump self-join is
     * skipped (r15, VERDICT r14 #2): the jump is a |touched|-sized shuffle
     * whose only purpose is collapsing long label chains fast; once the
@@ -375,34 +378,21 @@ object Dedup {
     */
   private[graft] val CcBroadcastMaxFrontier = 4000000L
 
-  /** Per-round fixpoint observability — the counter-tripwire seam the r14
-    * stale-gate postmortem mandated for every plan router (VERDICT r14
-    * #9): each distributed-fixpoint round records (message_sources,
-    * changed) — message_sources is the frontier row count actually fed
-    * into the round's message join, or -1 when the join fed ALL touched
-    * nodes (round 1). A spec asserts the late rounds' sources are
-    * measured and ≪ touched. Reset before a measured run; single-JVM
-    * test seam.
+  /** Labels from a [[connectedComponents]] run with what it measured:
+    * the edge count it was fed, and per distributed-fixpoint round
+    * (message_sources, changed) — message_sources is the frontier row
+    * count fed into the round's message join, or -1 when the join fed ALL
+    * touched nodes (round 1). `rounds` is empty on the driver union-find
+    * path.
     */
-  private[graft] object CcProbe {
-    // bounded (ADVICE-r14 planCache lesson applied preemptively): a
-    // long-running maintainComponents stream records rounds forever, so
-    // keep only the newest 1024 — far more than any spec reads, zero
-    // driver growth in production. [[graft.BoundedRing]] (VERDICT r15
-    // #8): O(1) eviction, so raising the cap later can't inherit
-    // ArrayBuffer.remove(0)'s O(n) shift-per-record.
-    private val buf = new graft.BoundedRing[(Long, Long)](1024)
-    def reset(): Unit = synchronized(buf.clear())
-    def record(frontier: Long, changed: Long): Unit =
-      synchronized(buf.add((frontier, changed)))
-    def rounds: Seq[(Long, Long)] = synchronized(buf.toSeq)
-  }
+  private[graft] final case class CcRun(labels: DataFrame, edges: Long,
+      rounds: Seq[(Long, Long)])
 
   def connectedComponents(nodes: DataFrame, edges: DataFrame): DataFrame =
-    connectedComponents(nodes, edges, CcDriverMaxEdges)
+    connectedComponents(nodes, edges, CcDriverMaxEdges).labels
 
   private[graft] def connectedComponents(nodes: DataFrame, edges: DataFrame,
-      driverMaxEdges: Long): DataFrame = {
+      driverMaxEdges: Long): CcRun = {
     // materialize the (possibly expensive) edge pipeline ONCE before the
     // symmetric union references it twice
     val e = edges.transform(Materialize.once)
@@ -414,7 +404,8 @@ object Dedup {
     // construction (root = component min). Count-guarded: past the cap
     // the distributed loop below runs instead — the collect is bounded
     // by the guard, never O(corpus).
-    if (e.count() <= driverMaxEdges) {
+    val nEdges = e.count()
+    if (nEdges <= driverMaxEdges) {
       val edgeArr = e.collect().map(r => (r.getLong(0), r.getLong(1)))
       // edges are fully collected; the returned plan reads only the
       // broadcast local labels — free the edge checkpoint now
@@ -425,8 +416,9 @@ object Dedup {
       import s.implicits._
       val touchedLabels =
         touched.map(n => (n, find(n))).toSeq.toDF("node", "label")
-      return nodes.join(broadcast(touchedLabels), Seq("node"), "left")
-        .select(col("node"), coalesce(col("label"), col("node")).as("label"))
+      return CcRun(nodes.join(broadcast(touchedLabels), Seq("node"), "left")
+        .select(col("node"), coalesce(col("label"), col("node")).as("label")),
+        nEdges, Seq.empty)
     }
     val sym = e.select(col("d1").as("u"), col("d2").as("v"))
       .union(e.select(col("d2").as("u"), col("d1").as("v")))
@@ -460,6 +452,7 @@ object Dedup {
     var frontier = labels // round 1: all touched nodes (seed labels)
     var frontSize = Long.MaxValue // unknown until the first changed-count
     var changed = 1L
+    val rounds = Seq.newBuilder[(Long, Long)]
     while (changed > 0) {
       // Pointer jumping (label <- label(label)) collapses chains
       // exponentially but costs a |touched|-sized self-join shuffle per
@@ -504,14 +497,15 @@ object Dedup {
       // next round's message sources: exactly the nodes that changed
       // (filter over the checkpointed frame — no extra job)
       frontier = next.filter(col("label") < col("prev")).select("node", "label")
-      CcProbe.record(if (frontSize == Long.MaxValue) -1L else frontSize, changed)
+      rounds += ((if (frontSize == Long.MaxValue) -1L else frontSize, changed))
       frontSize = changed
     }
     // the returned plan reads only `labels` (backed by the final round's
     // checkpoint, kept) and `nodes`
     Materialize.drop(sym)
-    nodes.join(labels, Seq("node"), "left")
-      .select(col("node"), coalesce(col("label"), col("node")).as("label"))
+    CcRun(nodes.join(labels, Seq("node"), "left")
+      .select(col("node"), coalesce(col("label"), col("node")).as("label")),
+      nEdges, rounds.result())
   }
 
   /** Shared core of decontam_neardup and TrainingPipeline's
@@ -770,156 +764,129 @@ object Dedup {
       .select("doc_id", "text_hash", "dup_count", "is_canonical")
   }
 
+  /** `dedup_components` with its contraction arm: "route" (the registered
+    * query) measures the collapse factor, "rep" / "all" pin an arm. Returns
+    * the rows and what ran ([[ContractionRun]]).
+    */
+  private[graft] def components(s: SparkSession, d: String,
+      arm: String): (DataFrame, ContractionRun) = {
+    // pairs (pigeonhole simhash, hamming <= 6) -> canonical clusters.
+    //
+    // SIGNATURE CONTRACTION (r17, the VERDICT r16 #1 maintain-path win
+    // extended to the one-shot): docs with IDENTICAL simhash are
+    // interchangeable in every hamming test (sig(a)=sig(rep) ⇒
+    // hamming(a,x)=hamming(rep,x) for all x), so connectivity runs over
+    // one REPRESENTATIVE per distinct signature (min doc_id) and every
+    // member inherits its rep's component label through a signature
+    // equi-join — no star edges even needed in the one-shot, because the
+    // member ISN'T a fixpoint node: its label is definitionally its
+    // rep's. EXACT: full-graph components are unions of signature
+    // groups whose reps are adjacent (distinct sigs can't be hamming-0,
+    // so intra-group edges only ever connect docs the shared rep already
+    // unifies), and the component label — the min doc_id — is preserved
+    // because rep = min per group, so min over the rep component = min
+    // over the full component. On a clique-dense corpus this collapses
+    // the edge set from Σ clique²/2 genuine pairs (sf10: 24.8 M) to the
+    // rep graph, usually small enough for the driver union-find fast
+    // path — the whole distributed fixpoint disappears.
+    val docs = Tables.documents(s, d).select(col("doc_id").as("node"))
+    // spread the leaf (r20): the checkpointed sh otherwise pins the
+    // banded probe side to the scan's one fixture split — the same
+    // serialization the rep arm's explicit repartition (below) was
+    // measured to fix; no-op at real scale
+    val sh = simhash(Materialize.spreadScan(Tables.documents(s, d)))
+      .transform(Materialize.once)
+    // ROUTING (r18, VERDICT r17 #1): measure this corpus's collapse
+    // factor from the checkpointed signature pass — one map-side
+    // count+HLL job, never a cached constant (the r14 stale-gate
+    // lesson) — and take the contraction only when it buys real node
+    // reduction. Both arms below share the materialized sh, which is
+    // where the r17 "sf10 contraction win" actually lived (see
+    // CcSigDedupMinCollapse).
+    val (sigDedup, measured) = contractionArm(arm, {
+      val row = sh.agg(count(lit(1)),
+        approx_count_distinct(col("simhash"))).head()
+      (row.getLong(0), row.getLong(1))
+    })
+    val (labels, ccEdges) =
+      if (!sigDedup) {
+        // all-docs arm: the SAME banded true-pairs plan as
+        // dedup_simhash_pairs, fed from the checkpointed sh (one
+        // simhash pass total — the materialization the rep arm proved
+        // out at sf10), no contraction machinery. CC has fully
+        // consumed sh by return time (its edge materialization is
+        // eager), so the checkpoint is freed here, not leaked.
+        val cc = connectedComponents(docs,
+          bandedTruePairs(sh).select("d1", "d2"), CcDriverMaxEdges)
+        Materialize.drop(sh)
+        (cc.labels, cc.edges)
+      } else {
+        // repartition INSIDE the materialization (measured, sf1
+        // interleaved A/B): AQE coalesces this small groupBy to ONE
+        // partition, and below the broadcast threshold the band
+        // self-join keeps the probe side's source partitioning — the
+        // whole candidate enumeration then ran on a single task (rep
+        // arm 61-63 s wall vs all-docs 10.4-10.8 at sf1, CPU equal:
+        // pure serialization; sf10 was immune — shuffle join either
+        // way). Spreading the LEAF stores parallelism once for every
+        // consumer; a per-consumer spreadScan re-runs its shuffle per
+        // consumer (measured +20% cpu on the maintain row's analogous
+        // site, SigStore.scala).
+        val repSh = sh.groupBy("simhash").agg(min("doc_id").as("doc_id"))
+          .select("doc_id", "simhash")
+          .repartition(s.sparkContext.defaultParallelism)
+          .transform(Materialize.once)
+        // rep pairs: the SHARED banded true-pairs plan over reps only —
+        // repSh's leaf is already spread, so the probe side is parallel
+        val repCc = connectedComponents(repSh.select(col("doc_id").as("node")),
+          bandedTruePairs(repSh).select("d1", "d2"), CcDriverMaxEdges)
+        val memberLabels = sh
+          .join(repSh.select(col("doc_id").as("rep_id"), col("simhash")),
+            Seq("simhash"))
+          .join(repCc.labels.select(col("node").as("rep_id"), col("label")),
+            Seq("rep_id"))
+          .select(col("doc_id").as("m_node"), col("label"))
+        // memberLabels covers every doc (simhash48 is total over text),
+        // but keep the left-join + coalesce convention so the arm stays
+        // output-identical to the all-docs arm BY CONSTRUCTION even if
+        // the signature pipeline ever filters rows.
+        val joined = docs
+          .join(memberLabels, col("node") === col("m_node"), "left")
+          .select(col("node"),
+            coalesce(col("label"), col("node")).as("label"))
+          // materialize the final (node, label) frame — a narrow
+          // 2-column corpus-sized write — so the corpus-sized sh and
+          // repSh checkpoints can be reclaimed NOW instead of leaking
+          // for the application lifetime (self-review r17: the maintain
+          // path drops repSh once its consumers are materialized; the
+          // first cut here left both alive because the returned plan
+          // read them lazily)
+          .transform(Materialize.once)
+        Materialize.drop(sh)
+        Materialize.drop(repSh)
+        (joined, repCc.edges)
+      }
+    // cluster_size via groupBy-count + equi-join back, NOT a
+    // `count over (partition by cluster_id)` window (r18, VERDICT r17
+    // #6): both are parallel across clusters, but a window forces a
+    // mega-cluster's every row through ONE task's partition, while the
+    // join's skewed probe partitions are split by AQE skew-join — the
+    // map-side-combined count is |clusters|-sized either way. No
+    // broadcast hint: |clusters| ≈ |docs| on a mostly-distinct corpus,
+    // and the checkpoint-backed/aggregated sides give AQE honest stats
+    // to pick broadcast exactly when the size table fits.
+    val out = labels
+      .select(col("node").as("doc_id"), col("label").as("cluster_id"))
+    val sizes = out.groupBy("cluster_id")
+      .agg(count(lit(1)).as("cluster_size"))
+    (out.join(sizes, Seq("cluster_id"))
+      .withColumn("is_canonical", col("doc_id") === col("cluster_id"))
+      .select("doc_id", "cluster_id", "cluster_size", "is_canonical"),
+      ContractionRun(if (sigDedup) "rep" else "all", measured, ccEdges))
+  }
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dedup_components" -> ((s, d) => {
-      // pairs (pigeonhole simhash, hamming <= 6) -> canonical clusters.
-      //
-      // SIGNATURE CONTRACTION (r17, the VERDICT r16 #1 maintain-path win
-      // extended to the one-shot): docs with IDENTICAL simhash are
-      // interchangeable in every hamming test (sig(a)=sig(rep) ⇒
-      // hamming(a,x)=hamming(rep,x) for all x), so connectivity runs over
-      // one REPRESENTATIVE per distinct signature (min doc_id) and every
-      // member inherits its rep's component label through a signature
-      // equi-join — no star edges even needed in the one-shot, because the
-      // member ISN'T a fixpoint node: its label is definitionally its
-      // rep's. EXACT: full-graph components are unions of signature
-      // groups whose reps are adjacent (distinct sigs can't be hamming-0,
-      // so intra-group edges only ever connect docs the shared rep already
-      // unifies), and the component label — the min doc_id — is preserved
-      // because rep = min per group, so min over the rep component = min
-      // over the full component. On a clique-dense corpus this collapses
-      // the edge set from Σ clique²/2 genuine pairs (sf10: 24.8 M) to the
-      // rep graph, usually small enough for the driver union-find fast
-      // path — the whole distributed fixpoint disappears.
-      // `-Dgraft.cc.sigdedup`: "off" pins the all-docs arm, "on" the
-      // contraction (the same seam as the maintain path); UNSET routes
-      // on the measured collapse factor (r18, VERDICT r17 #1) — see
-      // CcSigDedupMinCollapse. Under `-Dgraft.banded.probe=volume` each
-      // arm records its CC edge-input count into PlanVolume
-      // ("cc.sigdedup.oneshot") — spec-pinned label-identical with strict
-      // volume inequality on a dup-heavy fixture.
-      val docs = Tables.documents(s, d).select(col("doc_id").as("node"))
-      val mode = sys.props.get("graft.cc.sigdedup")
-      val probeVol = sys.props.get("graft.banded.probe").contains("volume")
-      // probe mode (test-only): count the CHECKPOINTED frame so the
-      // tripwire doesn't re-run the edge pipeline for its count — the
-      // SigStore discipline (self-review r17: counting the lazy frame
-      // re-ran the banded join once per arm, 2-3× the query's most
-      // expensive stage in every probe-mode spec run). The probe's own
-      // checkpoint is FREED after the count and the ORIGINAL lazy frame
-      // handed on (ADVICE r17, low: the previous shape passed the
-      // materialized frame into connectedComponents, which checkpointed
-      // the same edges a second time — one leaked checkpoint and one
-      // double-write per probe-mode arm); CC re-runs the pipeline for
-      // its own materialization, an acceptable test-only cost.
-      def probeCounted(edges: DataFrame, arm: String): DataFrame =
-        if (!probeVol) edges
-        else {
-          val m = edges.transform(Materialize.once)
-          graft.PlanVolume.record("cc.sigdedup.oneshot", arm, m.count())
-          Materialize.drop(m)
-          edges
-        }
-      // spread the leaf (r20): the checkpointed sh otherwise pins the
-      // banded probe side to the scan's one fixture split — the same
-      // serialization the rep arm's explicit repartition (below) was
-      // measured to fix; no-op at real scale
-      val sh = simhash(Materialize.spreadScan(Tables.documents(s, d)))
-        .transform(Materialize.once)
-      // ROUTING (r18, VERDICT r17 #1): measure this corpus's collapse
-      // factor from the checkpointed signature pass — one map-side
-      // count+HLL job, never a cached constant (the r14 stale-gate
-      // lesson) — and take the contraction only when it buys real node
-      // reduction. Both arms below share the materialized sh, which is
-      // where the r17 "sf10 contraction win" actually lived (see
-      // CcSigDedupMinCollapse).
-      val sigDedup = !mode.contains("off") && (mode.contains("on") || {
-        val row = sh.agg(count(lit(1)),
-          approx_count_distinct(col("simhash"))).head()
-        val (n, nSig) = (row.getLong(0), row.getLong(1))
-        val rep = nSig > 0 && n.toDouble / nSig >= CcSigDedupMinCollapse
-        if (probeVol)
-          graft.PlanVolume.record("cc.sigdedup.route",
-            if (rep) "rep" else "all", nSig)
-        rep
-      })
-      val labels =
-        if (!sigDedup) {
-          // all-docs arm: the SAME banded true-pairs plan as
-          // dedup_simhash_pairs, fed from the checkpointed sh (one
-          // simhash pass total — the materialization the rep arm proved
-          // out at sf10), no contraction machinery. CC has fully
-          // consumed sh by return time (its edge materialization is
-          // eager), so the checkpoint is freed here, not leaked.
-          val pairs = probeCounted(bandedTruePairs(sh).select("d1", "d2"), "all")
-          val cc = connectedComponents(docs, pairs)
-          Materialize.drop(sh)
-          cc
-        } else {
-          // repartition INSIDE the materialization (measured, sf1
-          // interleaved A/B): AQE coalesces this small groupBy to ONE
-          // partition, and below the broadcast threshold the band
-          // self-join keeps the probe side's source partitioning — the
-          // whole candidate enumeration then ran on a single task (rep
-          // arm 61-63 s wall vs all-docs 10.4-10.8 at sf1, CPU equal:
-          // pure serialization; sf10 was immune — shuffle join either
-          // way). Spreading the LEAF stores parallelism once for every
-          // consumer; a per-consumer spreadScan re-runs its shuffle per
-          // consumer (measured +20% cpu on the maintain row's analogous
-          // site, SigStore.scala).
-          val repSh = sh.groupBy("simhash").agg(min("doc_id").as("doc_id"))
-            .select("doc_id", "simhash")
-            .repartition(s.sparkContext.defaultParallelism)
-            .transform(Materialize.once)
-          // rep pairs: the SHARED banded true-pairs plan over reps only —
-          // repSh's leaf is already spread, so the probe side is parallel
-          val repPairs = probeCounted(
-            bandedTruePairs(repSh).select("d1", "d2"), "rep")
-          val repLabels = connectedComponents(
-            repSh.select(col("doc_id").as("node")), repPairs)
-          val memberLabels = sh
-            .join(repSh.select(col("doc_id").as("rep_id"), col("simhash")),
-              Seq("simhash"))
-            .join(repLabels.select(col("node").as("rep_id"), col("label")),
-              Seq("rep_id"))
-            .select(col("doc_id").as("m_node"), col("label"))
-          // memberLabels covers every doc (simhash48 is total over text),
-          // but keep the left-join + coalesce convention so the arm stays
-          // output-identical to the all-docs arm BY CONSTRUCTION even if
-          // the signature pipeline ever filters rows.
-          val joined = docs
-            .join(memberLabels, col("node") === col("m_node"), "left")
-            .select(col("node"),
-              coalesce(col("label"), col("node")).as("label"))
-            // materialize the final (node, label) frame — a narrow
-            // 2-column corpus-sized write — so the corpus-sized sh and
-            // repSh checkpoints can be reclaimed NOW instead of leaking
-            // for the application lifetime (self-review r17: the maintain
-            // path drops repSh once its consumers are materialized; the
-            // first cut here left both alive because the returned plan
-            // read them lazily)
-            .transform(Materialize.once)
-          Materialize.drop(sh)
-          Materialize.drop(repSh)
-          joined
-        }
-      // cluster_size via groupBy-count + equi-join back, NOT a
-      // `count over (partition by cluster_id)` window (r18, VERDICT r17
-      // #6): both are parallel across clusters, but a window forces a
-      // mega-cluster's every row through ONE task's partition, while the
-      // join's skewed probe partitions are split by AQE skew-join — the
-      // map-side-combined count is |clusters|-sized either way. No
-      // broadcast hint: |clusters| ≈ |docs| on a mostly-distinct corpus,
-      // and the checkpoint-backed/aggregated sides give AQE honest stats
-      // to pick broadcast exactly when the size table fits.
-      val out = labels
-        .select(col("node").as("doc_id"), col("label").as("cluster_id"))
-      val sizes = out.groupBy("cluster_id")
-        .agg(count(lit(1)).as("cluster_size"))
-      out.join(sizes, Seq("cluster_id"))
-        .withColumn("is_canonical", col("doc_id") === col("cluster_id"))
-        .select("doc_id", "cluster_id", "cluster_size", "is_canonical")
-    }),
+    "dedup_components" -> ((s, d) => components(s, d, "route")._1),
     "dedup_exact" -> ((s, d) => exactDedup(s, d)),
     "dedup_ngram_jaccard" -> ((s, d) => {
       // Exact Jaccard via an inverted shingle index instead of all-pairs:

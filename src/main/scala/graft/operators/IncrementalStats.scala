@@ -37,8 +37,8 @@ object IncrementalStats {
     */
   private[graft] val DeltaMod = 5
 
-  private[graft] def stateRoot(d: String): String =
-    Datasets.storeRoot("graft_aggstate", "", d, FormatVersion)
+  private[graft] def stateRoot(s: SparkSession, d: String): String =
+    Datasets.storeRoot(s, "graft_aggstate", "", d, FormatVersion, Seq("documents"))
 
   private def fs(s: SparkSession, p: Path) =
     p.getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -106,7 +106,7 @@ object IncrementalStats {
     */
   private[graft] def ensureBuilt(s: SparkSession, d: String): String =
     synchronized {
-      val root = stateRoot(d)
+      val root = stateRoot(s, d)
       // ColdBuilds-tagged (r20): the v1→v2 format bump re-keyed the state
       // root and SCALE10's corpus_mixture_incremental row silently booked
       // the one-time base rebuild into its serve cost (2.5→25.6 cpu-s at

@@ -27,8 +27,9 @@ object Layout {
   /** Bump on any change to a copy's layout. */
   private val FormatVersion = 1
 
-  private def copyRoot(family: String, d: String): String =
-    Datasets.storeRoot(family, "", d, FormatVersion)
+  private def copyRoot(s: SparkSession, family: String, d: String,
+      tables: String*): String =
+    Datasets.storeRoot(s, family, "", d, FormatVersion, tables)
 
   /** Create (once per JVM+dataset) the bucketed external copies of orders
     * and lineitem, both CLUSTERED BY their orderkey INTO [[Buckets]]
@@ -36,7 +37,7 @@ object Layout {
     */
   private[graft] def ensureBucketed(s: SparkSession, d: String): (String, String) =
     synchronized {
-      val base = new java.io.File(copyRoot("graft_bucketed", d))
+      val base = new java.io.File(copyRoot(s, "graft_bucketed", d, "orders", "lineitem"))
       val ordT = s"graft_ord_b${base.getName}"
       val liT = s"graft_li_b${base.getName}"
       if (!s.catalog.tableExists(ordT))
@@ -66,7 +67,7 @@ object Layout {
     */
   private[graft] def ensureSorted(s: SparkSession, d: String): String =
     synchronized {
-      val dir = copyRoot("graft_sorted", d)
+      val dir = copyRoot(s, "graft_sorted", d, "lineitem")
       if (!new java.io.File(dir, "_SUCCESS").exists())
         Tables.lineitem(s, d)
           .repartitionByRange(SortedFiles, col("l_shipdate"))
@@ -116,7 +117,7 @@ object Layout {
     */
   private[graft] def ensureZordered(s: SparkSession, d: String): String =
     synchronized {
-      val dir = copyRoot("graft_zorder", d)
+      val dir = copyRoot(s, "graft_zorder", d, "lineitem")
       if (!new java.io.File(dir, "_SUCCESS").exists()) {
         val li = Tables.lineitem(s, d)
         val r = li.agg(

@@ -40,8 +40,8 @@ object SigStore {
     */
   private val FormatVersion = 2
 
-  private[graft] def storeRoot(d: String): String =
-    Datasets.storeRoot("graft_sigstore", "", d, FormatVersion)
+  private[graft] def storeRoot(s: SparkSession, d: String): String =
+    Datasets.storeRoot(s, "graft_sigstore", "", d, FormatVersion, Seq("documents"))
 
   private def fs(s: SparkSession, p: Path) =
     p.getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -97,7 +97,7 @@ object SigStore {
     */
   private[graft] def ensureBuilt(s: SparkSession, d: String): String =
     synchronized {
-      val root = storeRoot(d)
+      val root = storeRoot(s, d)
       if (!fs(s, new Path(root)).exists(new Path(root, "_STORE_READY"))) {
         graft.ColdBuilds.record("sig_store_build")
         buildFrom(s, root,
@@ -271,18 +271,10 @@ object SigStore {
     * of settled primitive longs, because the PEAK is the transient
     * `collect()` of boxed 2-field Rows plus the union-find's boxed
     * HashMap entries (self-review r10 caught the 24 B estimate
-    * re-admitting the small-heap OOM the gate exists to prevent). An
-    * operator-set `GRAFT_CC_DRIVER_MAX_EDGES` can only LOWER this gate
-    * (min with the heap cap, second self-review pass): the knob is
-    * calibrated in Dedup's ~350 B/edge units, so a value RAISED to widen
-    * that path's collect must not transitively lift this one past its
-    * own safe budget — 0 still forces the distributed fixpoint
-    * everywhere.
+    * re-admitting the small-heap OOM the gate exists to prevent).
     */
-  private def SmallGraphNodes: Long = {
-    val heapCap = math.min(2000000L, Runtime.getRuntime.maxMemory / 3 / 256)
-    Dedup.CcDriverMaxEdgesEnv.fold(heapCap)(math.min(_, heapCap))
-  }
+  private def SmallGraphNodes: Long =
+    math.min(2000000L, Runtime.getRuntime.maxMemory / 3 / 256)
 
   /** The store's CURRENT effective labels: the immutable base
     * generation, plus per-batch node patches, with every stored label
@@ -387,12 +379,14 @@ object SigStore {
     *
     * A doc present both in the store and the delta (an absorb replay)
     * resolves to its already-stored label, making relabel empty and
-    * deltaOut a rewrite of identical rows.
+    * deltaOut a rewrite of identical rows. `arm` is the contraction arm
+    * ([[Dedup.contractionArm]]); the third value reports what ran.
     */
   private def contractDelta(s: SparkSession, root: String,
-      deltaDocs: DataFrame): (DataFrame, DataFrame) = {
+      deltaDocs: DataFrame, arm: String)
+      : (DataFrame, DataFrame, Dedup.ContractionRun) = {
     val (sh, stats) = materializeShWithStats(Dedup.simhash(deltaDocs))
-    val result = contractDeltaSh(s, root, sh, stats)
+    val result = contractDeltaSh(s, root, sh, stats, arm)
     // both returned frames are self-contained (local relations on the
     // driver fast path, their own checkpoints on the distributed one), so
     // this call-local signature checkpoint is dead — free its files
@@ -441,8 +435,8 @@ object SigStore {
     * the sig-bank write.
     */
   private def contractDeltaSh(s: SparkSession, root: String,
-      deltaSh: DataFrame,
-      shStats: () => Option[(Long, Long)]): (DataFrame, DataFrame) = {
+      deltaSh: DataFrame, shStats: () => Option[(Long, Long)],
+      arm: String): (DataFrame, DataFrame, Dedup.ContractionRun) = {
     val baseLabels = effectiveLabels(s, root)
     val store = Tables.parquet(s, s"$root/sigs.parquet")
       .select(col("doc_id").as("base_id"), col("simhash").as("bs"),
@@ -460,35 +454,25 @@ object SigStore {
     // plus the rep-graph — measured on the 25 k-doc maintain batch:
     // 2.98 M → ~30 k edges, edges-checkpoint 12.8 → sub-second — and
     // at 100 TB byte-identical re-crawls are the COMMON case.
-    // `-Dgraft.cc.sigdedup=off` pins the all-docs arm for
-    // interleaved A/Bs, "on" pins the contraction; UNSET routes on the
-    // DELTA's measured collapse factor (r18, VERDICT r17 #1): one
-    // map-side count+HLL pass over the checkpointed deltaSh decides
-    // per absorb — never a cached constant (the r14 stale-gate lesson).
+    // The arm routes on the DELTA's measured collapse factor (r18,
+    // VERDICT r17 #1): one map-side count+HLL over the checkpointed
+    // deltaSh decides per absorb — never a cached constant (the r14
+    // stale-gate lesson).
     // A mostly-distinct delta (collapse ≈ 1, e.g. a first crawl of new
     // content) skips the groupBy/rep-checkpoint/star-join machinery
     // whose node reduction would be ~zero; a re-crawl-heavy delta (the
     // maintain workload: collapse 50) keeps the 13×-fewer-edges win.
     // Outputs are label-identical on every arm (spec-pinned); threshold
     // + estimator-error argument at [[Dedup.CcSigDedupMinCollapse]].
-    val sigDedup = sys.props.get("graft.cc.sigdedup") match {
-      case Some("off") => false
-      case Some(_) => true
-      case None =>
-        // measured stats ride the checkpoint pass when the caller
-        // materialized via [[materializeShWithStats]] (r19 — zero-job
-        // routing); a miss pays the explicit aggregate
-        val (n, nSig) = shStats().getOrElse {
-          val row = deltaSh.agg(count(lit(1)),
-            approx_count_distinct(col("simhash"))).head()
-          (row.getLong(0), row.getLong(1))
-        }
-        val rep = nSig > 0 && n.toDouble / nSig >= Dedup.CcSigDedupMinCollapse
-        if (sys.props.get("graft.banded.probe").contains("volume"))
-          graft.PlanVolume.record("cc.sigdedup.route",
-            if (rep) "rep" else "all", nSig)
-        rep
-    }
+    val (sigDedup, measured) = Dedup.contractionArm(arm,
+      // measured stats ride the checkpoint pass when the caller
+      // materialized via [[materializeShWithStats]] (r19 — zero-job
+      // routing); a miss pays the explicit aggregate
+      shStats().getOrElse {
+        val row = deltaSh.agg(count(lit(1)),
+          approx_count_distinct(col("simhash"))).head()
+        (row.getLong(0), row.getLong(1))
+      })
     // MATERIALIZED (r17 fix, same round): four consumers read the rep
     // frame (store probe, both self-join sides, the star join) — left
     // as a live aggregate each re-ran the groupBy AND, worse, the
@@ -588,9 +572,6 @@ object SigStore {
           .unionByName(dd.withColumn("from_store", lit(false))))(
         (acc, star) => acc.unionByName(star.withColumn("from_store", lit(false))))
       .transform(Materialize.once)
-    if (sys.props.get("graft.banded.probe").contains("volume"))
-      graft.PlanVolume.record("cc.sigdedup",
-        if (sigDedup) "rep" else "all", edges.count())
     // The contracted graph is |delta|-bounded BY CONSTRUCTION (delta ids
     // + touched labels), so for micro-batch-sized deltas the whole
     // cluster step runs DRIVER-SIDE: one edges collect + one delta-id
@@ -644,15 +625,16 @@ object SigStore {
     Materialize.drop(hitsCk)
     Materialize.drop(edges)
     if (sigDedup) Materialize.drop(repSh)
-    result
+    (result._1, result._2,
+      Dedup.ContractionRun(if (sigDedup) "rep" else "all", measured, nEdges))
   }
 
   /** Merged (doc_id, cluster_id) of effective labels plus a delta
     * documents frame — [[contractDelta]] applied without persisting.
     */
   private def mergedLabels(s: SparkSession, root: String,
-      deltaDocs: DataFrame): DataFrame = {
-    val (relabel, deltaOut) = contractDelta(s, root, deltaDocs)
+      deltaDocs: DataFrame, arm: String): (DataFrame, Dedup.ContractionRun) = {
+    val (relabel, deltaOut, run) = contractDelta(s, root, deltaDocs, arm)
     // relabel is |delta|-shaped, so it BROADCASTS — without the hint
     // Spark sort-merge-joins and shuffles the corpus-sized label table
     // by label per serve (plan-audited)
@@ -660,8 +642,9 @@ object SigStore {
       .join(broadcast(relabel), col("label") === col("old_label"), "left")
       .select(col("node").as("doc_id"),
         coalesce(col("new_label"), col("label")).as("cluster_id"))
-    baseOut.unionByName(
-      deltaOut.select(col("node").as("doc_id"), col("label").as("cluster_id")))
+    (baseOut.unionByName(
+      deltaOut.select(col("node").as("doc_id"), col("label").as("cluster_id"))),
+      run)
   }
 
   /** The dedup_components output shape over a (doc_id, cluster_id)
@@ -678,10 +661,15 @@ object SigStore {
       .select("doc_id", "cluster_id", "cluster_size", "is_canonical")
   }
 
-  private[graft] def serveComponentsIncremental(s: SparkSession, d: String): DataFrame = {
+  /** `dedup_components_incremental` with its contraction arm ("route"
+    * for the registered query, "rep" / "all" to pin one) and what ran.
+    */
+  private[graft] def serveComponentsIncremental(s: SparkSession, d: String,
+      arm: String): (DataFrame, Dedup.ContractionRun) = {
     val root = ensureLabelsBuilt(s, d)
-    withClusterShape(mergedLabels(s, root,
-      Tables.documents(s, d).filter(col("doc_id") % 10 === 0)))
+    val (labels, run) = mergedLabels(s, root,
+      Tables.documents(s, d).filter(col("doc_id") % 10 === 0), arm)
+    (withClusterShape(labels), run)
   }
 
   /** Absorb a delta batch INTO the store at O(|delta|) WRITE cost — the
@@ -723,7 +711,7 @@ object SigStore {
     // r19, VERDICT r18 #2); materialize the contraction BEFORE mutating
     // the state it reads
     val (deltaSh, shStats) = materializeShWithStats(Dedup.simhash(deltaDocs))
-    val (relabel, deltaOut) = contractDeltaSh(s, root, deltaSh, shStats)
+    val (relabel, deltaOut, _) = contractDeltaSh(s, root, deltaSh, shStats, "route")
     val remapPath = new Path(root, "label_remap.parquet")
     val oldRemap =
       if (f.exists(remapPath)) Tables.parquet(s, remapPath.toString)
@@ -864,7 +852,7 @@ object SigStore {
     */
   private[graft] def serveComponentsAbsorbed(s: SparkSession, d: String): DataFrame =
     synchronized {
-      val root = storeRoot(d) + "_absorbed"
+      val root = storeRoot(s, d) + "_absorbed"
       val f = fs(s, new Path(root))
       if (!f.exists(new Path(root, "_ABSORBED"))) {
         // FIRST-TIME INDEX CONSTRUCTION, phase-attributed (VERDICT r15
@@ -904,14 +892,15 @@ object SigStore {
     */
   private[graft] def serveComponentsLabels(s: SparkSession, d: String): DataFrame = {
     serveComponentsAbsorbed(s, d): Unit // ensure the store is built
-    val root = storeRoot(d) + "_absorbed"
+    val root = storeRoot(s, d) + "_absorbed"
     effectiveLabels(s, root)
       .select(col("node").as("doc_id"), col("label").as("cluster_id"))
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "dedup_incremental_stored" -> ((s, d) => serveIncremental(s, d)),
-    "dedup_components_incremental" -> ((s, d) => serveComponentsIncremental(s, d)),
+    "dedup_components_incremental" -> ((s, d) =>
+      serveComponentsIncremental(s, d, "route")._1),
     "dedup_components_stored" -> ((s, d) => serveComponentsAbsorbed(s, d))
   )
 

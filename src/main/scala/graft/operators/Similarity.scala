@@ -319,8 +319,8 @@ object Similarity {
   // warm-restart captures into silent full rebuilds (58 s / 419 cpu-s).
   private[graft] def semStoreRoot(s: SparkSession, d: String)
       : (org.apache.hadoop.fs.Path, org.apache.hadoop.fs.FileSystem) = {
-    val root = new org.apache.hadoop.fs.Path(Datasets.storeRoot("graft_semassign",
-      "", d, SemStoreFormatVersion, Datasets.fingerprint(s, d, "embeddings")))
+    val root = new org.apache.hadoop.fs.Path(Datasets.storeRoot(s, "graft_semassign",
+      "", d, SemStoreFormatVersion, Seq("embeddings")))
     (root, root.getFileSystem(s.sparkContext.hadoopConfiguration))
   }
 
@@ -539,6 +539,62 @@ object Similarity {
     * discipline as [[ProdRecall5Bound]].
     */
   private[graft] val RerankCosRecall5Floor = 0.4
+
+  /** The six (nprobe, reranked) arms ann_recall_production reports:
+    * nprobe ∈ {ProdNprobe/2, ProdNprobe, 2·ProdNprobe}, each ADC-only and
+    * re-ranked.
+    */
+  private val ProdSweepArms: Seq[(Int, Boolean)] = for {
+    np <- Seq(ProdNprobe / 2, ProdNprobe, ProdNprobe * 2)
+    rerank <- Seq(false, true)
+  } yield (np, rerank)
+
+  /** ann_recall_production's rows from its per-arm hit counts `hits`
+    * (np, reranked, hits1, hits5, hits5c over `nQueries` planted queries),
+    * gated in-plan (assert_true, the q_approx_distinct idiom). The counts
+    * are left-joined onto [[ProdSweepArms]], so an arm that graded nothing
+    * reports 0 — and is held to its gate — instead of vanishing from the
+    * output. The id-graded gates bind ONLY the production row (nprobe =
+    * ProdNprobe, re-ranked): [[ProdHitBound]] on planted_hit_at_1 and
+    * [[ProdRecall5Bound]] on both recall columns. The tie-robust
+    * recall_at_5_cos floor [[RerankCosRecall5Floor]] (r17, VERDICT r16
+    * #6) binds EVERY re-ranked row, so a replica-dense corpus that
+    * collapses the id-graded number cannot both false-alarm (cos is
+    * tie-immune) and mask a real recall loss. ADC-only rows are
+    * measurements, not contracts.
+    */
+  private[graft] def gradeProdSweep(hits: DataFrame, nQueries: Int,
+      nCells: Int, nCodewords: Int): DataFrame = {
+    val s = hits.sparkSession
+    import s.implicits._
+    def rate(c: String, per: Double) =
+      round(coalesce(col(c), lit(0L)) / lit(nQueries * per), 4)
+    ProdSweepArms.toDF("np", "reranked")
+      .join(hits, Seq("np", "reranked"), "left")
+      .select(
+        // label reports the TRAINED codeword count (self-review r16:
+        // the ADC stride already uses it — a config string claiming
+        // pq8x64 for an index trained smaller would let cross-round
+        // artifact reads conflate different geometries)
+        concat(lit(s"ivf$nCells.nprobe"), col("np").cast("string"),
+          lit(s".pq${PqM}x$nCodewords."),
+          when(col("reranked"), "rerank").otherwise("adc")).as("config"),
+        col("np").as("nprobe"),
+        col("reranked"),
+        lit(nQueries).as("n_queries"),
+        rate("hits1", 1.0).as("planted_hit_at_1"),
+        rate("hits5", 5.0).as("recall_at_5"),
+        rate("hits5c", 5.0).as("recall_at_5_cos"))
+      .orderBy(col("nprobe"), col("reranked"))
+      .filter(assert_true(
+        col("nprobe") =!= ProdNprobe || !col("reranked") ||
+        (col("planted_hit_at_1") >= ProdHitBound &&
+         col("recall_at_5") >= ProdRecall5Bound &&
+         col("recall_at_5_cos") >= ProdRecall5Bound)).isNull)
+      .filter(assert_true(
+        !col("reranked") ||
+        col("recall_at_5_cos") >= RerankCosRecall5Floor).isNull)
+  }
 
   /** Mix weight for the planted queries: q ∝ w·seed + √(1−w²)·noise, so
     * cos(q, seed) ≈ w in high dimension (noise ⊥ seed w.h.p.).
@@ -1115,28 +1171,18 @@ object Similarity {
       // TUNING CURVE (VERDICT r15 #5): the first knobs a production user
       // turns are nprobe and whether to pay the exact re-rank — emit the
       // whole recall surface from the ONE shared index build, one row
-      // per (nprobe ∈ {4, 8, 16}) × (ADC-only | re-ranked). Quality
-      // gates apply ONLY to the production config row (nprobe=8,
-      // re-ranked); the other rows are measurements, not contracts.
-      // Probe seam `graft.ann.prod.arm=np<N>.<adc|rerank>` restricts the
-      // sweep to one arm so per-arm serve cost is timeable in isolation.
-      val armFilter = sys.props.get("graft.ann.prod.arm")
-      val selected = for {
-        np <- Seq(ProdNprobe / 2, ProdNprobe, ProdNprobe * 2)
-        rerank <- Seq(false, true)
-        if armFilter.forall(_ == s"np$np." + (if (rerank) "rerank" else "adc"))
-      } yield (np, rerank)
-      require(selected.nonEmpty, s"graft.ann.prod.arm=${armFilter.get} matches " +
-        "no arm — expected np{4|8|16}.{adc|rerank} at the current ProdNprobe")
+      // per (nprobe ∈ {4, 8, 16}) × (ADC-only | re-ranked), graded and
+      // gated by [[gradeProdSweep]].
       // ONE probe + corpus join for the WHOLE sweep (r21; was one corpus
       // join per (nprobe, rerank) arm, each then re-evaluated by three
       // separate grading aggregates — JobProf: 65 jobs, 8.75 task-s).
       // IvfTopCells' cell order is TOTAL (cosine desc, id desc on ties),
       // so the np-probe cell set is exactly the first np entries of the
-      // widest selected probe — each arm filters the probe rank instead
+      // widest probe — each arm filters the probe rank instead
       // of re-joining the corpus (guide §2.4: operations keyed the same
       // way share one pass).
-      val maxNp = selected.map(_._1).max
+      val nps = ProdSweepArms.map(_._1).distinct
+      val maxNp = nps.max
       val probeFn = graft.functions.GraftFunctions.registerIvf(s, cents, maxNp)
       val qcells = qvec.select(col("query_id"),
           posexplode(expr(s"$probeFn(qe)")))
@@ -1167,7 +1213,7 @@ object Similarity {
       // nprobe serves both arms, and the exact-cosine join back to the
       // original vectors (the one remaining corpus-sized probe) runs once
       // for the whole sweep over the np-tagged union.
-      val shortAll = selected.map(_._1).distinct.map { np =>
+      val shortAll = nps.map { np =>
         twoStageTopK(scoredAll.filter(col("probe_rank") < np),
             ProdRerankDepth, col("approx_dist"))
           .select(lit(np).as("np"), col("query_id"),
@@ -1185,34 +1231,23 @@ object Similarity {
       // old per-arm topk used, applied per group — the ADC-only top-5 is
       // a rank filter, and the (np, reranked)-tagged union reduces under
       // one groupBy: six aggregate subtrees + two crossJoins each
-      // collapse to one aggregate. Per-group values are identical — the
-      // group keys partition the union exactly as the old per-arm frames
-      // did, and every selected arm is non-empty for any corpus with
-      // ≥ 1 vector (the planted queries always return rank 1). bf
-      // membership is a broadcast LEFT-join marker and the per-query
-      // exact 5th-best floor rides the same row (left join — an absent
-      // floor contributes 0 exactly as the old inner join dropped the
-      // row); count(when(marker, 1)) ≡ the old inner-join count(*).
-      // Competitive-recall slack unchanged: 1.1e-4 covers the 4-dp
-      // rounding of cos5 vs the 1e-6 quantization of cos_q — it can only
-      // loosen, and only at diagnostics precision.
-      val rerankNps = selected.collect { case (np, true) => np }
-      val adcNps = selected.collect { case (np, false) => np }
-      val rerankRows =
-        if (rerankNps.isEmpty) Seq.empty[DataFrame]
-        else Seq(twoStageTopKBy(
-            scoredShort.filter(col("np").isin(rerankNps: _*)).drop("adc_rank"),
-            5, struct(col("np"), col("query_id")), xxhash64(col("vec_id")),
-            Seq(col("cos_q").desc, col("vec_id")))
-          .select(col("np"), lit(true).as("reranked"), col("query_id"),
-            col("rank"), col("vec_id"), col("cos_q")))
-      val adcRows =
-        if (adcNps.isEmpty) Seq.empty[DataFrame]
-        else Seq(scoredShort
-          .filter(col("np").isin(adcNps: _*) && col("adc_rank") <= 5)
-          .select(col("np"), lit(false).as("reranked"), col("query_id"),
-            col("adc_rank").as("rank"), col("vec_id"), col("cos_q")))
-      (rerankRows ++ adcRows).reduce(_ unionByName _)
+      // collapse to one aggregate. bf membership is a broadcast
+      // LEFT-join marker and the per-query exact 5th-best floor rides
+      // the same row (left join — an absent floor contributes 0 exactly
+      // as the old inner join dropped the row); count(when(marker, 1))
+      // ≡ the old inner-join count(*). Competitive-recall slack
+      // unchanged: 1.1e-4 covers the 4-dp rounding of cos5 vs the 1e-6
+      // quantization of cos_q — it can only loosen, and only at
+      // diagnostics precision.
+      val rerankRows = twoStageTopKBy(scoredShort.drop("adc_rank"),
+          5, struct(col("np"), col("query_id")), xxhash64(col("vec_id")),
+          Seq(col("cos_q").desc, col("vec_id")))
+        .select(col("np"), lit(true).as("reranked"), col("query_id"),
+          col("rank"), col("vec_id"), col("cos_q"))
+      val adcRows = scoredShort.filter(col("adc_rank") <= 5)
+        .select(col("np"), lit(false).as("reranked"), col("query_id"),
+          col("adc_rank").as("rank"), col("vec_id"), col("cos_q"))
+      val hits = rerankRows.unionByName(adcRows)
         .join(broadcast(bf.select(col("query_id"), col("vec_id"),
           lit(true).as("in_bf"))), Seq("query_id", "vec_id"), "left")
         .join(broadcast(bfFloor), Seq("query_id"), "left")
@@ -1223,53 +1258,7 @@ object Similarity {
           count(when(col("in_bf"), lit(1))).as("hits5"),
           sum(when(col("cos_q").cast("double") / lit(1e6) >=
             col("cos5") - lit(1.1e-4), 1L).otherwise(0L)).as("hits5c"))
-        .select(
-          // label reports the TRAINED codeword count (self-review r16:
-          // the ADC stride already uses it — a config string claiming
-          // pq8x64 for an index trained smaller would let cross-round
-          // artifact reads conflate different geometries)
-          concat(lit(s"ivf${cents.length}.nprobe"), col("np").cast("string"),
-            lit(s".pq${PqM}x${books.head.length}."),
-            when(col("reranked"), "rerank").otherwise("adc")).as("config"),
-          col("np").as("nprobe"),
-          col("reranked"),
-          lit(seeds.length).as("n_queries"),
-          round(col("hits1") / lit(seeds.length.toDouble), 4)
-            .as("planted_hit_at_1"),
-          round(col("hits5") / lit(seeds.length * 5.0), 4).as("recall_at_5"),
-          round(col("hits5c") / lit(seeds.length * 5.0), 4)
-            .as("recall_at_5_cos"))
-        .orderBy(col("nprobe"), col("reranked"))
-        // probe seam: -Dgraft.ann.prod.bound=-1 disables the gates to
-        // READ the measured numbers while tuning; defaults stand. The
-        // id-graded gate binds ONLY the production row; the tie-robust
-        // recall_at_5_cos floor (r17, VERDICT r16 #6) binds EVERY
-        // re-ranked row — with the production row additionally held to
-        // ProdRecall5Bound on the cos column, so a replica-dense corpus
-        // that collapses the id-graded number cannot both false-alarm
-        // (cos is tie-immune) and mask a real recall loss (the cos
-        // floor still fires).
-        .filter(assert_true(
-          col("nprobe") =!= ProdNprobe || !col("reranked") ||
-          (col("planted_hit_at_1") >= sys.props.get("graft.ann.prod.bound")
-            .map(_.toDouble).getOrElse(ProdHitBound) &&
-           col("recall_at_5") >= sys.props.get("graft.ann.prod.bound")
-            .map(_.toDouble).getOrElse(ProdRecall5Bound) &&
-           col("recall_at_5_cos") >= sys.props.get("graft.ann.prod.bound")
-            .map(_.toDouble).getOrElse(ProdRecall5Bound))).isNull)
-        // the PRODUCTION probe bound can only DISABLE this floor
-        // (negative ⇒ read mode), never raise it: curve rows are
-        // measurements, not contracts (self-review r17 — a prod-gate
-        // sensitivity probe at 0.55 must not abort the whole query on
-        // the healthy np4 row). The floor has its own test seam,
-        // `graft.ann.cos.floor`, so the spec can still prove it fires.
-        .filter(assert_true(
-          !col("reranked") ||
-          col("recall_at_5_cos") >= (
-            if (sys.props.get("graft.ann.prod.bound").exists(_.toDouble < 0))
-              -1.0
-            else sys.props.get("graft.ann.cos.floor")
-              .map(_.toDouble).getOrElse(RerankCosRecall5Floor))).isNull)
+      gradeProdSweep(hits, seeds.length, cents.length, books.head.length)
     }),
     "q_approx_distinct" -> ((s, d) => {
       // HLL sketch vs exact — no oracle (sketch internals differ across

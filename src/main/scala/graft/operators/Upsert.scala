@@ -26,11 +26,12 @@ object Upsert {
   /** Layout version folded into the root digest — bump on layout change. */
   private val LayoutVersion = 2
 
-  /** Base-layout root under tmpdir keyed by canonical dataset dir: stable
-    * within a round, disposable across rounds (AnnIndexIO convention).
+  /** Base-layout root under tmpdir keyed by canonical dataset dir and the
+    * documents fingerprint: stable while documents is unchanged,
+    * disposable (AnnIndexIO convention).
     */
-  private[graft] def layoutRoot(d: String): String =
-    Datasets.storeRoot("graft_merge", "", d, LayoutVersion)
+  private[graft] def layoutRoot(s: SparkSession, d: String): String =
+    Datasets.storeRoot(s, "graft_merge", "", d, LayoutVersion, Seq("documents"))
 
   /** Deterministic delta against `documents`: every 7th doc updated
     * (source re-stamped, n_chars + 1), every 11th cloned as an insert
@@ -57,11 +58,12 @@ object Upsert {
     // IncrementalStats.ensureBuilt (ADVICE r8): two concurrent
     // q_merge_upsert calls in one JVM would otherwise race on the shared
     // base.tmp stage dir and the rename, failing one publish spuriously.
-    val base = new Path(layoutRoot(d), "base")
+    val root = layoutRoot(s, d)
+    val base = new Path(root, "base")
     val fs = base.getFileSystem(s.sparkContext.hadoopConfiguration)
     if (!fs.exists(new Path(base, "_READY"))) {
       fs.delete(base, true)
-      val tmp = new Path(layoutRoot(d), "base.tmp")
+      val tmp = new Path(root, "base.tmp")
       fs.delete(tmp, true)
       Writers.writeShards(Tables.documents(s, d), tmp.toString,
         Seq("lang"), Seq("doc_id"))
@@ -101,7 +103,7 @@ object Upsert {
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_merge_upsert" -> ((s, d) => {
       val base = ensureBase(s, d)
-      val work = new Path(layoutRoot(d), "work").toString
+      val work = new Path(new Path(base).getParent, "work").toString
       val fs = new Path(work).getFileSystem(s.sparkContext.hadoopConfiguration)
       // merge into a fresh clone so the query stays a pure function of the
       // dataset dir without paying a second full-corpus Spark write

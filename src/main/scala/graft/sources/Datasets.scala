@@ -36,18 +36,19 @@ object Datasets {
   def key(s: SparkSession, d: String, table: String): String =
     s"${canonical(d)}@${fingerprint(s, d, table)}"
 
-  /** Root of `family`'s persisted store for dataset `d`:
-    * `<tmpdir>/<family>/[<variant>_]<digest>`, the digest covering the
-    * canonical dir, `formatVersion` and `fingerprint` (a table's
-    * [[fingerprint]] for a store that must rebuild when that table is
-    * rewritten in place, or empty). Notes `d` in `StoreRegistry`, so the
-    * store reaper keeps the stores of every dataset still on disk.
+  /** Root of `family`'s persisted store for dataset `d`, built from
+    * `tables` of `d`: `<tmpdir>/<family>/[<variant>_]<digest>`, the digest
+    * covering the canonical dir, `formatVersion` and each table's
+    * [[fingerprint]], so a table rewritten in place resolves to a new,
+    * unbuilt root. Notes `d` in `StoreRegistry`, so the store reaper keeps
+    * the stores of every dataset still on disk.
     */
-  def storeRoot(family: String, variant: String, d: String, formatVersion: Int,
-      fingerprint: String = ""): String = {
+  def storeRoot(s: SparkSession, family: String, variant: String, d: String,
+      formatVersion: Int, tables: Seq[String]): String = {
     val canon = canonical(d)
     graft.operators.StoreRegistry.note(canon)
-    val digest = md5hex(s"$canon@$fingerprint:v$formatVersion")
+    val fp = tables.map(fingerprint(s, d, _)).mkString(",")
+    val digest = md5hex(s"$canon@$fp:v$formatVersion")
     val tmp = sys.props.getOrElse("java.io.tmpdir", "/tmp")
     new java.io.File(new java.io.File(tmp, family),
       if (variant.isEmpty) digest else s"${variant}_$digest").toString

@@ -216,12 +216,12 @@ class BmStoreSpec extends AnyFunSuite {
   test("verdict-boundary counter-tripwire: the routed arm's volume differs observably from the alternative") {
     assume(TestSpark.fixturesPresent, TestSpark.fixturesHint)
     import spark.implicits._
-    // The PlanVolume idiom (VERDICT r14 #9) demonstrated on the BM25
+    // The counter-tripwire idiom (VERDICT r14 #9) on the BM25
     // wand/docvec verdict boundary: the r14 jaccard gate shipped
     // inverted for four rounds because its arms were only checked for
     // output equality (which an inverted gate preserves). Here the
-    // ROUTER's executed arm reports its scored-row volume; on the
-    // skewed corpus the auto route must be wand AND must process
+    // ROUTER hands back its arm beside the scored pairs; on the
+    // skewed corpus the auto route must be wand AND must score
     // strictly fewer rows than the docvec arm computes over the same
     // standing set — an inverted verdict fails BOTH assertions.
     val common = (0 until 10).map(i => s"common$i")
@@ -238,15 +238,10 @@ class BmStoreSpec extends AnyFunSuite {
     }
     val frozen = StoreFixtures.frozenStatsForQueries(spark, root, standing)
     val k = Retrieval.BmTopK
-    graft.PlanVolume.reset()
-    sys.props("graft.bm.probe") = "volume"
-    try BmStore.servedRanked(spark, root, frozen, k).count() // auto route
-    finally sys.props.remove("graft.bm.probe")
-    val recs = graft.PlanVolume.records("bm.serve")
-    assert(recs.size === 1, s"expected 1 probe record, got $recs")
-    val (autoArm, autoRows) = recs(0)
+    val (scored, autoArm) = BmStore.routedScored(spark, root, frozen, k)
+    val autoRows = scored.count()
     val dvRows = BmStore.servedDocVec(spark, root, frozen).count()
-    assert(autoArm === "wand", s"skewed wide set must route to wand ($recs)")
+    assert(autoArm === "wand", s"skewed wide set must route to wand ($autoArm)")
     assert(autoRows < dvRows / 2,
       s"routed wand arm must prune observably: $autoRows vs docvec $dvRows")
   }

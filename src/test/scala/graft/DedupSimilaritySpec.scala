@@ -15,6 +15,25 @@ class DedupSimilaritySpec extends AnyFunSuite {
     Dedup.queries(name)(spark, sf)
       .select("d1", "d2").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
+  /** Hand-built ann_recall_production hit counts over 10 queries — hits1
+    * of 10, hits5 and hits5c of 50 — with every arm healthy.
+    */
+  private val healthySweep = Seq(4, 8, 16).flatMap(np =>
+    Seq((np, false, 10L, 40L, 40L), (np, true, 10L, 40L, 40L)))
+
+  private def componentRows(df: org.apache.spark.sql.DataFrame)
+      : Set[(Long, Long, Long, Boolean)] =
+    df.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
+      .toSet
+
+  private def gradeSweep(rows: Seq[(Int, Boolean, Long, Long, Long)]) = {
+    import spark.implicits._
+    Similarity.gradeProdSweep(
+      rows.toDF("np", "reranked", "hits1", "hits5", "hits5c"), 10, 64, 64)
+      .collect()
+  }
+
   test("minhash-LSH finds exactly the planted near-dup pairs (vs exact jaccard >= 0.8)") {
     val exact = Dedup.queries("dedup_ngram_jaccard")(spark, sf)
       .filter(org.apache.spark.sql.functions.col("jaccard") >= 0.8)
@@ -126,36 +145,35 @@ class DedupSimilaritySpec extends AnyFunSuite {
       assert(rec5c >= rec5, s"cos-graded recall below id-graded: $r")
       if (rr) assert(rec5c >= Similarity.RerankCosRecall5Floor, s"$r")
     }
-    def withProps[T](props: (String, String)*)(body: => T): T = {
-      props.foreach { case (k, v) => sys.props(k) = v }
-      try body
-      finally props.foreach { case (k, _) => sys.props.remove(k): Unit }
-    }
-    def run(props: (String, String)*) = withProps(props: _*)(
-      Similarity.queries("ann_recall_production")(spark, sf).collect())
-    // a NON-production re-ranked arm alone must trip the floor via its
-    // own seam (the production-row gate can't be the one firing — that
-    // row isn't run)
-    val e = intercept[Exception](run(
-      "graft.ann.prod.arm" -> "np4.rerank",
-      "graft.ann.cos.floor" -> "1.01")) // unreachable: cos ≤ 1
-    assert(e.getMessage != null)
-    // an ADC-only arm is exempt from the cos floor by design — the same
-    // unreachable floor must NOT fire there
-    val adc = run("graft.ann.prod.arm" -> "np4.adc",
-      "graft.ann.cos.floor" -> "1.01")
-    assert(adc.length == 1 && !adc.head.getBoolean(2))
-    // the PRODUCTION probe bound must not RAISE the curve floor
-    // (self-review r17): a prod-gate sensitivity probe on a curve-only
-    // rerank arm passes even at an unreachable prod bound...
-    val curve = run("graft.ann.prod.arm" -> "np4.rerank",
-      "graft.ann.prod.bound" -> "1.01")
-    assert(curve.length == 1 && curve.head.getBoolean(2))
-    // ...and read mode (negative bound) disables the floor too
-    val readMode = run("graft.ann.prod.arm" -> "np4.rerank",
-      "graft.ann.prod.bound" -> "-1",
-      "graft.ann.cos.floor" -> "1.01")
-    assert(readMode.length == 1)
+    // the gates on hand-built counts: one arm at a time pushed under a bound
+    def withArm(np: Int, rr: Boolean, hits: (Long, Long, Long)) =
+      healthySweep.map(r =>
+        if (r._1 == np && r._2 == rr) (np, rr, hits._1, hits._2, hits._3) else r)
+    assert(gradeSweep(healthySweep).length == 6)
+    // a NON-production re-ranked arm under the cos floor trips it...
+    intercept[Exception](gradeSweep(withArm(4, rr = true, (10L, 40L, 10L))))
+    // ...an ADC-only arm is exempt from the cos floor by design...
+    assert(gradeSweep(withArm(4, rr = false, (0L, 0L, 0L))).length == 6)
+    // ...and the production bounds do not bind a curve row: a re-ranked
+    // np4 row at hit@1 0 and id-recall 0 passes while its cos column holds
+    assert(gradeSweep(withArm(4, rr = true, (0L, 0L, 40L))).length == 6)
+    // the production row is held to ProdHitBound and ProdRecall5Bound
+    intercept[Exception](gradeSweep(withArm(8, rr = true, (8L, 40L, 40L))))
+    intercept[Exception](gradeSweep(withArm(8, rr = true, (10L, 20L, 40L))))
+  }
+
+  test("production sweep grading keeps an arm that graded nothing, at 0") {
+    // an arm with no graded rows has no hit-count row: it must still be
+    // reported (at 0) and still be held to its gate, not vanish
+    val noAdc4 = gradeSweep(healthySweep.filterNot(r => r._1 == 4 && !r._2))
+    assert(noAdc4.length == 6)
+    val adc4 = noAdc4.find(r => r.getInt(1) == 4 && !r.getBoolean(2)).get
+    assert(adc4.getString(0) == "ivf64.nprobe4.pq8x64.adc" &&
+      adc4.getDouble(4) == 0.0 && adc4.getDouble(5) == 0.0 &&
+      adc4.getDouble(6) == 0.0, s"$adc4")
+    // an empty re-ranked arm reports recall 0, so the cos floor fires
+    intercept[Exception](
+      gradeSweep(healthySweep.filterNot(r => r._1 == 4 && r._2)))
   }
 
   test("simhash hamming pairs cover the planted near-dups") {
@@ -182,7 +200,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     // VERDICT r14 #2 + #9: the frontier (delta) propagation must be
     // output-identical to an independent reference — the driver-side
     // union-find fast path on the same graph — AND its late rounds must
-    // be seen, through the CcProbe counter seam, to feed shrunken
+    // be seen, through the rounds the run returns, to feed shrunken
     // measured frontiers. driverMaxEdges=0 forces the distributed
     // fixpoint; a diameter-9 chain plus a clique forces multiple rounds
     // so the frontier actually shrinks.
@@ -192,13 +210,15 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val edges = (chain ++ clique).toDF("d1", "d2")
     val nodes = ((0 until 6).map(_.toLong) ++ (100 to 109).map(_.toLong) ++
       Seq(999L)).toDF("node")
-    def labels(driverMaxEdges: Long): Map[Long, Long] =
-      Dedup.connectedComponents(nodes, edges, driverMaxEdges)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    Dedup.CcProbe.reset()
-    val frontLabels = labels(0L)
-    val frontRounds = Dedup.CcProbe.rounds
-    assert(frontLabels == labels(Long.MaxValue))
+    def labels(run: Dedup.CcRun): Map[Long, Long] =
+      run.labels.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    val front = Dedup.connectedComponents(nodes, edges, 0L)
+    val frontLabels = labels(front)
+    val frontRounds = front.rounds
+    val driver = Dedup.connectedComponents(nodes, edges, Long.MaxValue)
+    assert(frontLabels == labels(driver))
+    assert(driver.rounds.isEmpty && front.edges == edges.count() &&
+      driver.edges == front.edges)
     assert(frontLabels(109L) == 100L && frontLabels(5L) == 0L &&
       frontLabels(999L) == 999L)
     // observability: the fixpoint ran multiple rounds, and its message
@@ -312,35 +332,21 @@ class DedupSimilaritySpec extends AnyFunSuite {
     // planted near-dups (rep pairs non-trivial) — full 4-column output
     // must be identical across arms; (b) a dup-heavy temp corpus
     // (identical texts → identical sigs) — identical labels AND the
-    // PlanVolume tripwire proving the rep arm feeds CC strictly fewer
+    // returned edge count proving the rep arm feeds CC strictly fewer
     // edges (the r14 stale-gate mandate: arms must differ observably).
     import spark.implicits._
-    // arm: "on" pins the contraction, "off" the all-docs plan (r18: unset
-    // now ROUTES on the measured collapse factor — the routing has its
-    // own spec below; the A/B here pins both arms explicitly)
+    // arm: "rep" pins the contraction, "all" the all-docs plan (the
+    // routed default has its own spec below)
     def runComponents(dir: String, arm: String)
         : (Set[(Long, Long, Long, Boolean)], Long) = {
-      sys.props("graft.cc.sigdedup") = arm
-      sys.props("graft.banded.probe") = "volume"
-      graft.PlanVolume.reset()
-      try {
-        val out = Dedup.queries("dedup_components")(spark, dir)
-          .collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
-          .toSet
-        val vol = graft.PlanVolume.records("cc.sigdedup.oneshot")
-        assert(vol.nonEmpty &&
-          vol.forall(_._1 == (if (arm == "off") "all" else "rep")),
-          s"volume probe must record the executed arm: $vol")
-        (out, vol.map(_._2).sum)
-      } finally {
-        sys.props.remove("graft.cc.sigdedup")
-        sys.props.remove("graft.banded.probe")
-      }
+      val (df, run) = Dedup.components(spark, dir, arm)
+      assert(run.arm == arm && run.measured.isEmpty,
+        s"a pinned arm runs unmeasured: $run")
+      (componentRows(df), run.ccEdges)
     }
     // (a) real near-dup structure: output identity is the gate
-    val (repSf, _) = runComponents(sf, arm = "on")
-    val (allSf, _) = runComponents(sf, arm = "off")
+    val (repSf, _) = runComponents(sf, arm = "rep")
+    val (allSf, _) = runComponents(sf, arm = "all")
     assert(repSf == allSf && repSf.nonEmpty,
       "contracted one-shot must be row-identical to the all-docs arm on the sf corpus")
     // (b) dup-heavy corpus: 6-member identical-text clique + isolated doc
@@ -351,8 +357,8 @@ class DedupSimilaritySpec extends AnyFunSuite {
       .map { case (id, t) => (id, t, "en", "crawl", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val (repOut, repEdges) = runComponents(dir, arm = "on")
-    val (allOut, allEdges) = runComponents(dir, arm = "off")
+    val (repOut, repEdges) = runComponents(dir, arm = "rep")
+    val (allOut, allEdges) = runComponents(dir, arm = "all")
     assert(repOut == allOut, s"arms disagree: $repOut vs $allOut")
     // the clique labels to its min doc_id; the isolated doc to itself
     assert(repOut == Set(
@@ -379,18 +385,13 @@ class DedupSimilaritySpec extends AnyFunSuite {
         .write.mode("overwrite").parquet(s"$dir/documents.parquet")
       dir
     }
-    // three arms per fixture (r18): pinned contraction ("on"), pinned
-    // all-docs ("off"), and the ROUTED default (unset — takes whichever
+    // three arms per fixture (r18): pinned contraction ("rep"), pinned
+    // all-docs ("all"), and the ROUTED default ("route" — takes whichever
     // arm the measured collapse factor picks, including the degenerate
     // n=0/nSig=0 empty-corpus route)
-    def run(dir: String, arm: Option[String]): Set[(Long, Long, Long, Boolean)] = {
-      arm.foreach(sys.props("graft.cc.sigdedup") = _)
-      try Dedup.queries("dedup_components")(spark, dir).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
-        .toSet
-      finally sys.props.remove("graft.cc.sigdedup")
-    }
-    val arms = Seq(Some("on"), Some("off"), None)
+    def run(dir: String, arm: String): Set[(Long, Long, Long, Boolean)] =
+      componentRows(Dedup.components(spark, dir, arm)._1)
+    val arms = Seq("rep", "all", "route")
     val empty = fixture(Seq.empty)
     arms.foreach(a => assert(run(empty, a).isEmpty, s"arm $a on empty"))
     val single = fixture(Seq((42L, t)))
@@ -402,14 +403,13 @@ class DedupSimilaritySpec extends AnyFunSuite {
   }
 
   test("contraction routing: measured collapse factor picks the arm per run (r18, VERDICT r17 #1)") {
-    // The rep arm is no longer an unconditional default: with
-    // graft.cc.sigdedup UNSET, the one-shot measures docs-per-distinct-
-    // simhash on the corpus at hand and takes the contraction only past
-    // CcSigDedupMinCollapse. Two fixtures pin both routes OBSERVABLY
-    // (the r14 stale-gate mandate — the PlanVolume "cc.sigdedup.route"
-    // channel records the chosen arm and the sig estimate, and the
-    // ".oneshot" edge channel proves which plan actually ran), and each
-    // routed output must equal both pinned arms' output.
+    // The rep arm is no longer an unconditional default: routed, the
+    // one-shot measures docs-per-distinct-simhash on the corpus at hand
+    // and takes the contraction only past CcSigDedupMinCollapse. Two
+    // fixtures pin both routes OBSERVABLY (the r14 stale-gate mandate —
+    // the returned run carries the chosen arm and the measured
+    // statistics, and its CC edge count must match the pinned run of the
+    // same arm), and each routed output must equal both pinned arms'.
     import spark.implicits._
     def fixture(rows: Seq[(Long, String)]): String = {
       val dir = java.nio.file.Files.createTempDirectory("cc_route").toString
@@ -418,30 +418,22 @@ class DedupSimilaritySpec extends AnyFunSuite {
         .write.mode("overwrite").parquet(s"$dir/documents.parquet")
       dir
     }
+    def run(dir: String, arm: String)
+        : (Set[(Long, Long, Long, Boolean)], Dedup.ContractionRun) = {
+      val (df, r) = Dedup.components(spark, dir, arm)
+      (componentRows(df), r)
+    }
     def runRouted(dir: String): (Set[(Long, Long, Long, Boolean)], String) = {
-      sys.props("graft.banded.probe") = "volume"
-      graft.PlanVolume.reset()
-      try {
-        val out = Dedup.queries("dedup_components")(spark, dir).collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
-          .toSet
-        val route = graft.PlanVolume.records("cc.sigdedup.route")
-        val ran = graft.PlanVolume.records("cc.sigdedup.oneshot")
-        assert(route.size == 1, s"route channel must record once: $route")
-        assert(ran.size == 1 && ran.head._1 == route.head._1,
-          s"executed arm must match the routed decision: route=$route ran=$ran")
-        (out, route.head._1)
-      } finally {
-        sys.props.remove("graft.banded.probe")
-      }
+      val (out, r) = run(dir, "route")
+      val measured = r.measured.getOrElse(fail(s"a routed run is measured: $r"))
+      assert(Dedup.contractionArm("route", measured)._1 == (r.arm == "rep"),
+        s"executed arm must match the routed decision: $r")
+      assert(r.ccEdges == run(dir, r.arm)._2.ccEdges,
+        s"routed run must feed CC what the pinned ${r.arm} arm feeds: $r")
+      (out, r.arm)
     }
-    def runPinned(dir: String, arm: String): Set[(Long, Long, Long, Boolean)] = {
-      sys.props("graft.cc.sigdedup") = arm
-      try Dedup.queries("dedup_components")(spark, dir).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
-        .toSet
-      finally sys.props.remove("graft.cc.sigdedup")
-    }
+    def runPinned(dir: String, arm: String): Set[(Long, Long, Long, Boolean)] =
+      run(dir, arm)._1
     // dup-heavy corpus (12 docs, 2 distinct texts → collapse 6): routes REP
     val tA = "alpha bravo charlie delta echo foxtrot golf hotel india juliet kilo lima"
     val tZ = "zulu yankee xray whiskey victor uniform tango sierra romeo quebec papa oscar"
@@ -449,14 +441,28 @@ class DedupSimilaritySpec extends AnyFunSuite {
       (1L to 6L).map(id => (id, tA)) ++ (11L to 16L).map(id => (id, tZ)))
     val (dupOut, dupArm) = runRouted(dupDir)
     assert(dupArm == "rep", s"collapse-6 corpus must route to the rep arm")
-    assert(dupOut == runPinned(dupDir, "on") && dupOut == runPinned(dupDir, "off"))
+    assert(dupOut == runPinned(dupDir, "rep") && dupOut == runPinned(dupDir, "all"))
     // mostly-distinct corpus (disjoint per-doc vocabularies → independent
     // ~uniform 48-bit sigs, collapse ≈ 1): routes ALL
     val distinctDir = fixture((0L until 16L).map(id =>
       (id, (0 until 12).map(j => s"w${id}x$j").mkString(" "))))
     val (dOut, dArm) = runRouted(distinctDir)
     assert(dArm == "all", s"collapse-1 corpus must route to the all-docs arm")
-    assert(dOut == runPinned(distinctDir, "on") && dOut == runPinned(distinctDir, "off"))
+    assert(dOut == runPinned(distinctDir, "rep") && dOut == runPinned(distinctDir, "all"))
+  }
+
+  test("contraction router decides at CcSigDedupMinCollapse: just under, at, and no signatures") {
+    def routes(n: Long, nSig: Long) = Dedup.contractionArm("route", (n, nSig))
+    val nSig = 1000L
+    val at = math.round(nSig * Dedup.CcSigDedupMinCollapse)
+    assert(routes(at - 1, nSig) == ((false, Some((at - 1, nSig)))))
+    assert(routes(at, nSig) == ((true, Some((at, nSig)))))
+    // an empty input has no signatures: all-docs, never a divide by zero
+    assert(routes(0L, 0L) == ((false, Some((0L, 0L)))))
+    // a pinned arm never measures
+    assert(Dedup.contractionArm("rep", fail("pinned arms do not measure")) == ((true, None)))
+    assert(Dedup.contractionArm("all", fail("pinned arms do not measure")) == ((false, None)))
+    intercept[IllegalArgumentException](Dedup.contractionArm("on", (1L, 1L)))
   }
 
   test("sorted-neighborhood pairs are a sound subset of the exact simhash pairs") {

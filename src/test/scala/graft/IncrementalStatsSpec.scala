@@ -68,7 +68,7 @@ class IncrementalStatsSpec extends AnyFunSuite {
   }
 
   test("a torn publish (no _STATE_READY) is rebuilt, not served") {
-    val root = IncrementalStats.stateRoot(sf)
+    val root = IncrementalStats.stateRoot(spark, sf)
     StoreFixtures.deleteIncrementalState(spark, sf)
     // torn state: dir exists, marker missing
     new java.io.File(root).mkdirs()

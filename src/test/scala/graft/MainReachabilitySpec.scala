@@ -143,10 +143,6 @@ class MainReachabilitySpec extends AnyFunSuite {
   private val TestSeams: Map[String, String] = Map(
     "JvmCache.clearAll" ->
       "specs empty every per-JVM cache between cases; main code builds each cache once per JVM",
-    "PlanVolume.reset" ->
-      "specs clear the plan-volume probe before reading it (ROADMAP item 6 replaces the probe)",
-    "PlanVolume.records" ->
-      "specs read the routed arm's row count (ROADMAP item 6 replaces the probe)",
   )
 
   test("every src/main object and object member has a main-code caller") {

@@ -30,10 +30,41 @@ class SigStoreSpec extends AnyFunSuite {
     assert(stored.exists(!_._4), "the sf corpus has duplicate deltas")
 
     // second serve: same answer, store files byte-identical (no rebuild)
-    val before = fileSet(SigStore.storeRoot(sf))
+    val before = fileSet(SigStore.storeRoot(spark, sf))
     assert(canon(SigStore.queries("dedup_incremental_stored")(spark, sf)) == stored)
-    assert(fileSet(SigStore.storeRoot(sf)) == before,
+    assert(fileSet(SigStore.storeRoot(spark, sf)) == before,
       "a second serve must not touch the published store")
+  }
+
+  test("a dataset rewritten in place resolves to a fresh store, with no delete") {
+    // store roots are keyed on the content fingerprint of the table they
+    // are built from, so rewriting documents in place must reach an
+    // unbuilt root — never keep serving the old signatures or partials
+    import graft.operators.{IncrementalStats, SamplingOps}
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("store_rewrite").toString
+    def write(nDocs: Long, text: Long => String): Unit =
+      (1L to nDocs).map { id =>
+        val t = text(id)
+        (id, t, if (id % 3 == 0) "de" else "en", "crawl", t.length.toLong)
+      }.toDF("doc_id", "text", "lang", "source", "n_chars")
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).toSet
+    def check(): (String, String) = {
+      val stored = rows(SigStore.queries("dedup_incremental_stored")(spark, dir))
+      assert(stored == rows(Dedup.queries("dedup_incremental")(spark, dir)))
+      assert(rows(IncrementalStats.queries("corpus_mixture_incremental")(spark, dir)) ==
+        rows(SamplingOps.queries("corpus_mixture")(spark, dir)))
+      (SigStore.storeRoot(spark, dir), IncrementalStats.stateRoot(spark, dir))
+    }
+    // 30 distinct docs, then 40 docs that copy one of two texts
+    write(30L, id => (0 until 12).map(j => s"w${id}x$j").mkString(" "))
+    val before = check()
+    write(40L, id => if (id % 2 == 0) "alpha bravo charlie delta echo foxtrot golf hotel"
+      else "zulu yankee xray whiskey victor uniform tango sierra romeo quebec")
+    val after = check()
+    assert(before._1 != after._1 && before._2 != after._2,
+      s"a rewritten dataset must resolve to new roots: $before vs $after")
   }
 
   test("incremental components == one-shot components; base labels untouched by absorb") {
@@ -48,10 +79,10 @@ class SigStoreSpec extends AnyFunSuite {
     assert(inc.exists(t => t._3 > 1), "the sf corpus has non-trivial clusters")
 
     // absorbing the same delta again must not rewrite the persisted labels
-    val labelsBefore = fileSet(SigStore.storeRoot(sf) + "/labels.parquet")
+    val labelsBefore = fileSet(SigStore.storeRoot(spark, sf) + "/labels.parquet")
     assert(labelsBefore.nonEmpty)
     assert(canon(SigStore.queries("dedup_components_incremental")(spark, sf)) == inc)
-    assert(fileSet(SigStore.storeRoot(sf) + "/labels.parquet") == labelsBefore,
+    assert(fileSet(SigStore.storeRoot(spark, sf) + "/labels.parquet") == labelsBefore,
       "a delta absorb must read stored labels, never rebuild them")
   }
 
@@ -74,25 +105,15 @@ class SigStoreSpec extends AnyFunSuite {
     StoreFixtures.deleteSigStore(spark, dir)
 
     def run(legacy: Boolean): (Set[(Long, Long, Long, Boolean)], Long) = {
-      // pin the arm explicitly (r18: unset now routes on the measured
+      // pin the arm explicitly (r18: "route" decides on the measured
       // collapse factor; this test is the pinned-arm A/B)
-      sys.props("graft.cc.sigdedup") = if (legacy) "off" else "on"
-      sys.props("graft.banded.probe") = "volume"
-      graft.PlanVolume.reset()
-      try {
-        StoreFixtures.deleteSigStore(spark, dir) // fresh store per arm: same work
-        val out = SigStore.queries("dedup_components_incremental")(spark, dir)
-          .collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
-          .toSet
-        val vol = graft.PlanVolume.records("cc.sigdedup")
-        assert(vol.nonEmpty &&
-          vol.forall(_._1 == (if (legacy) "all" else "rep")))
-        (out, vol.map(_._2).sum)
-      } finally {
-        sys.props.remove("graft.cc.sigdedup")
-        sys.props.remove("graft.banded.probe")
-      }
+      val arm = if (legacy) "all" else "rep"
+      StoreFixtures.deleteSigStore(spark, dir) // fresh store per arm: same work
+      val (df, cr) = SigStore.serveComponentsIncremental(spark, dir, arm)
+      assert(cr.arm == arm && cr.measured.isEmpty, s"$cr")
+      (df.collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
+        .toSet, cr.ccEdges)
     }
     val (repOut, repEdges) = run(legacy = false)
     val (allOut, allEdges) = run(legacy = true)
@@ -106,11 +127,11 @@ class SigStoreSpec extends AnyFunSuite {
   }
 
   test("maintain routing: delta collapse factor picks the contraction arm per absorb (r18, VERDICT r17 #1)") {
-    // With graft.cc.sigdedup UNSET, contractDeltaSh measures the DELTA's
+    // Routed, contractDeltaSh measures the DELTA's
     // docs-per-distinct-simhash and contracts only when it pays: the
     // dup-heavy delta (6 docs, 1 sig) must route "rep", a
     // disjoint-vocabulary delta (every sig unique) must route "all" —
-    // both observable on the PlanVolume route channel, both
+    // both observable in the run the serve returns, both
     // label-identical to the pinned arms.
     import spark.implicits._
     def fixture(delta: Seq[(Long, String)]): String = {
@@ -122,30 +143,27 @@ class SigStoreSpec extends AnyFunSuite {
         .write.mode("overwrite").parquet(s"$dir/documents.parquet")
       dir
     }
-    def run(dir: String, arm: Option[String]): (Set[(Long, Long)], Seq[(String, Long)]) = {
-      arm.foreach(sys.props("graft.cc.sigdedup") = _)
-      sys.props("graft.banded.probe") = "volume"
-      graft.PlanVolume.reset()
-      try {
-        StoreFixtures.deleteSigStore(spark, dir)
-        val out = SigStore.queries("dedup_components_incremental")(spark, dir)
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-        (out, graft.PlanVolume.records("cc.sigdedup.route"))
-      } finally {
-        sys.props.remove("graft.cc.sigdedup")
-        sys.props.remove("graft.banded.probe")
-      }
+    def run(dir: String, arm: String): (Set[(Long, Long)], Dedup.ContractionRun) = {
+      StoreFixtures.deleteSigStore(spark, dir)
+      val (df, cr) = SigStore.serveComponentsIncremental(spark, dir, arm)
+      (df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet, cr)
+    }
+    def routed(dir: String): (Set[(Long, Long)], String) = {
+      val (out, r) = run(dir, "route")
+      val measured = r.measured.getOrElse(fail(s"a routed absorb is measured: $r"))
+      assert(Dedup.contractionArm("route", measured)._1 == (r.arm == "rep"), s"$r")
+      (out, r.arm)
     }
     val tA = "zulu yankee xray whiskey victor uniform tango sierra romeo quebec papa oscar"
     val dupDir = fixture((1L to 6L).map(i => (i * 10L, tA)))
-    val (dupOut, dupRoute) = run(dupDir, None)
-    assert(dupRoute.map(_._1) == Seq("rep"), s"dup-heavy delta must route rep: $dupRoute")
-    assert(dupOut == run(dupDir, Some("on"))._1 && dupOut == run(dupDir, Some("off"))._1)
+    val (dupOut, dupRoute) = routed(dupDir)
+    assert(dupRoute == "rep", s"dup-heavy delta must route rep: $dupRoute")
+    assert(dupOut == run(dupDir, "rep")._1 && dupOut == run(dupDir, "all")._1)
     val distinctDir = fixture((1L to 6L).map(i =>
       (i * 10L, (0 until 12).map(j => s"w${i}x$j").mkString(" "))))
-    val (dOut, dRoute) = run(distinctDir, None)
-    assert(dRoute.map(_._1) == Seq("all"), s"distinct delta must route all: $dRoute")
-    assert(dOut == run(distinctDir, Some("on"))._1 && dOut == run(distinctDir, Some("off"))._1)
+    val (dOut, dRoute) = routed(distinctDir)
+    assert(dRoute == "all", s"distinct delta must route all: $dRoute")
+    assert(dOut == run(distinctDir, "rep")._1 && dOut == run(distinctDir, "all")._1)
   }
 
   test("a delta doc MERGES two stored base components into one min label") {

@@ -22,16 +22,16 @@ object StoreFixtures {
 
   /** Delete a dataset's signature store and its absorbed-label twin. */
   def deleteSigStore(s: SparkSession, d: String): Unit =
-    deleteRoots(s, SigStore.storeRoot(d), SigStore.storeRoot(d) + "_absorbed")
+    deleteRoots(s, SigStore.storeRoot(s, d), SigStore.storeRoot(s, d) + "_absorbed")
 
   def deleteIncrementalState(s: SparkSession, d: String): Unit =
-    deleteRoots(s, IncrementalStats.stateRoot(d))
+    deleteRoots(s, IncrementalStats.stateRoot(s, d))
 
   /** Delete a dataset's three ANN index variants, and every per-JVM
     * cache with them (the loaded models are keyed by root).
     */
   def deleteAnnIndex(s: SparkSession, d: String): Unit = {
-    deleteRoots(s, Seq("full", "incr", "stream").map(AnnIndexIO.indexRoot(d, _)): _*)
+    deleteRoots(s, Seq("full", "incr", "stream").map(AnnIndexIO.indexRoot(s, d, _)): _*)
     JvmCache.clearAll()
   }
 

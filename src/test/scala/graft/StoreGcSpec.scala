@@ -29,7 +29,7 @@ class StoreGcSpec extends AnyFunSuite {
     val tmpRoot = java.nio.file.Files.createTempDirectory("gc_tmp").toFile
     val famRoot = new java.io.File(tmpRoot, "graft_sigstore")
     val liveName = new java.io.File(
-      graft.operators.SigStore.storeRoot(sf)).getName
+      graft.operators.SigStore.storeRoot(spark, sf)).getName
     val live = mkStore(famRoot, liveName, ageMs = 10L * 24 * 3600 * 1000)
     val orphanOld = mkStore(famRoot, "deadbeef0000", ageMs = 10L * 24 * 3600 * 1000)
     val orphanYoung = mkStore(famRoot, "deadbeef1111")
@@ -59,7 +59,7 @@ class StoreGcSpec extends AnyFunSuite {
     assert(names.keySet == StoreGc.Families.toSet)
     // spot-pin two derivations against the owning modules
     assert(names("graft_aggstate").head ==
-      new java.io.File(graft.operators.IncrementalStats.stateRoot(sf)).getName)
+      new java.io.File(graft.operators.IncrementalStats.stateRoot(spark, sf)).getName)
     assert(names("graft_semassign").head ==
       graft.operators.Similarity.semStoreKey(spark, sf))
     assert(names("graft_bmstore").exists(_.startsWith("full_")))
@@ -77,8 +77,8 @@ class StoreGcSpec extends AnyFunSuite {
     val famRoot = new java.io.File(tmpRoot, "graft_sigstore")
     val ds = java.nio.file.Files.createTempDirectory("gc_ds").toFile
     val deadDs = java.nio.file.Files.createTempDirectory("gc_dead").toFile
-    val liveName = new java.io.File(graft.operators.SigStore.storeRoot(ds.toString)).getName
-    val deadName = new java.io.File(graft.operators.SigStore.storeRoot(deadDs.toString)).getName
+    val liveName = new java.io.File(graft.operators.SigStore.storeRoot(spark, ds.toString)).getName
+    val deadName = new java.io.File(graft.operators.SigStore.storeRoot(spark, deadDs.toString)).getName
     val live = mkStore(famRoot, liveName, ageMs = 10L * 24 * 3600 * 1000)
     val dead = mkStore(famRoot, deadName, ageMs = 10L * 24 * 3600 * 1000)
     val reg = graft.operators.StoreRegistry.registryFile(tmpRoot.toString)

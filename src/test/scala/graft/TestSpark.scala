@@ -10,12 +10,10 @@ object TestSpark {
   /** Root of the driver-generated parquet fixtures, resolvable on machines
     * where `/root/testdata` doesn't exist (ADVICE r11: the fixture-drift
     * tripwire should CANCEL with a clear message elsewhere, not hard-fail):
-    * `-Dgraft.testdata=...` or `GRAFT_TESTDATA=...` override the default.
+    * `GRAFT_TESTDATA=...` overrides the default.
     */
   val testdataRoot: String =
-    sys.props.get("graft.testdata")
-      .orElse(sys.env.get("GRAFT_TESTDATA"))
-      .getOrElse("/root/testdata")
+    sys.env.getOrElse("GRAFT_TESTDATA", "/root/testdata")
 
   /** The sf0.001 fixture dir every spec reads. */
   val sf0001: String = s"$testdataRoot/sf0.001"
@@ -26,7 +24,7 @@ object TestSpark {
     */
   def fixturesPresent: Boolean = new java.io.File(sf0001).isDirectory
   val fixturesHint: String =
-    s"testdata not found at $sf0001 — point GRAFT_TESTDATA (or -Dgraft.testdata) at the fixture root"
+    s"testdata not found at $sf0001 — point GRAFT_TESTDATA at the fixture root"
 
   /** AQE-aware executed-plan traversal shared by the plan-shape specs
     * (BmStoreSpec / PlanShapeSpec): AdaptiveSparkPlanExec

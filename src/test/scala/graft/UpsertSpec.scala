@@ -170,7 +170,7 @@ class UpsertSpec extends AnyFunSuite {
 
   test("q_merge_upsert builds its base layout once per dataset digest") {
     val sf = TestSpark.sf0001
-    val root = graft.operators.Upsert.layoutRoot(sf)
+    val root = graft.operators.Upsert.layoutRoot(spark, sf)
     org.apache.commons.io.FileUtils.deleteQuietly(new File(root))
     val q = graft.operators.Upsert.queries("q_merge_upsert")
     val first = q(spark, sf).collect().map(_.toString).sorted
